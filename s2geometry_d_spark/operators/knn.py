@@ -1,16 +1,48 @@
-"""Distributed kNN join: closest points to a small query set.
+"""Distributed closest-X joins: the k nearest points, edges or polylines to
+each member of a small driver-side query set (points, edges or cells).
 
-The reference's best-first search over the cell B-tree
-(s2closest_point_query_base.d:372-463) becomes an **iterative ring-expansion
-candidate join** (SURVEY.md §2.4):
+The reference answers every closest-X query with one best-first search
+base parameterised by its distance target (s2closest_edge_query_base.d,
+s2min_distance_targets.d).  Here that base is :func:`_ring_search`, an
+**iterative ring-expansion candidate join** (SURVEY.md §2.4) shared by
+:func:`knn_join`, :func:`knn_edges_join`, :func:`knn_edges_to_edges`,
+:func:`knn_edges_to_cells` and ``polyline_join.nearest_polyline_join``.
+Each variant supplies only its target hooks:
 
-1. per query, a search cap of radius r seeds a covering (driver, tiny);
-2. candidates = broadcast-covering membership probe (one Arrow pass, no
-   fact-table shuffle; see spatial_join.candidate_match_kernel);
-3. exact squared-chord distance fully native (codegen), window top-k;
-4. completeness proof per query: the k-th distance must be <= chord2(r),
-   else the true k-th neighbour could lie outside the ring -> double r and
-   retry only the unresolved queries (a shrinking frontier).
+* ``cover(qid, ring_deg)`` — a covering of everything within ``ring_deg``
+  of the query: a cap for point queries, the buffered segment for edge
+  targets, the ring-expanded circumcap for cell targets;
+* ``probe(coverings)`` — the candidate rows: the broadcast-covering point
+  kernel (one Arrow pass, no fact-table shuffle), or the two-way
+  prefiltered probe of a registered-edge index (:func:`_edge_probe`);
+* ``target`` / ``target_cols`` — the per-query columns the scorer reads,
+  shipped as a broadcast local query frame next to the acceptance ``r2``;
+* ``score(cand)`` — the exact squared-chord ``dist2``, evaluated natively
+  or by a bit-identical numpy twin of the engine's SQL fragment;
+* ``collapse(scored)`` — optional per-group reduction ahead of the top-k
+  window (the polyline variant's per-polyline min).
+
+Each round runs cover -> probe -> join the query frame -> score -> keep
+``dist2 <= r2`` -> window top-k -> ONE collect of the tiny top-k.  A query
+retires once k rows lie inside its ring (the ring bounds the k-th
+distance, so nothing unseen can beat them), or once its ring reaches its
+completion radius — the ``max_distance_deg`` limit, or the far side of a
+``knn_join`` region cap — where fewer than k rows IS the complete answer.
+Otherwise its ring doubles.  A ring clamped at 170 deg with no limit and
+still short of k goes to the one exact brute cross join: points in the
+antipodal gap are never candidates.
+
+Straggler cutover, fail closed: once at most max(2, n/8) queries remain
+they go straight to that brute probe — the same exact answer as more
+rings, minus their fixed job overhead — but only when the caller passed an
+upper bound ``brute_rows`` on the rows the probe scans and it is at most
+``_BRUTE_SCAN_ROWS``.  An unknown size keeps ringing.
+
+Every result frame carries its decision record as ``_s2_ring``: rounds
+run, the ids of the brute-probed queries, whether the cutover fired and
+the ``brute_rows`` it was judged on.  :func:`knn_edges_join_tables` keeps
+its own loop (its pending set is a DataFrame) under the same gate, and
+records the straggler count as ``n_brute`` instead of ids.
 
 Correctness anchor: brute-force cross join comparison, the same oracle the
 reference tests use (s2closest_edge_query_test.d:380-416).
@@ -27,7 +59,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions import kernels
+from ..functions import edgedist, edgepair, kernels
 from ..s2core.regions import Cap, chord2_from_radians
 from .spatial_join import (
     RegionCovering,
@@ -35,6 +67,9 @@ from .spatial_join import (
     candidate_match_kernel,
     compute_coverings,
 )
+
+# the largest table the straggler cutover may scan in full
+_BRUTE_SCAN_ROWS = 10_000_000
 
 
 def _chord2_to_query_expr(lat_col: str, lng_col: str):
@@ -47,6 +82,194 @@ def _chord2_to_query_expr(lat_col: str, lng_col: str):
     dy = py - F.col("qy")
     dz = pz - F.col("qz")
     return dx * dx + dy * dy + dz * dz
+
+
+def _max_ring(max_distance_deg: float | None) -> float:
+    return 170.0 if max_distance_deg is None else min(max_distance_deg, 170.0)
+
+
+def _memo(df: DataFrame, attr: str, value):
+    try:
+        setattr(df, attr, value)
+    except AttributeError:
+        pass
+    return value
+
+
+def _rank(scored: DataFrame, k: int, tie_col: str, collapse=None) -> DataFrame:
+    if collapse is not None:
+        scored = collapse(scored)
+    w = Window.partitionBy("query_id").orderBy(F.col("dist2").asc(), F.col(tie_col).asc())
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _ring_search(
+    spark,
+    ids: list,
+    k: int,
+    radius: dict,
+    *,
+    cover,
+    probe,
+    target: dict,
+    target_cols: list[str],
+    score,
+    tie_col: str,
+    brute_df: DataFrame,
+    brute_rows: int | None,
+    max_rounds: int,
+    max_distance_deg: float | None = None,
+    max_error_deg: float = 0.0,
+    complete: dict | None = None,
+    collapse=None,
+) -> DataFrame | None:
+    """The shared ring search (hooks and rules in the module docstring).
+
+    ``ids``: query ids in input order; ``radius``: initial ring per query
+    (deg); ``complete``: per-query completion radius, tightening the
+    distance limit's.  Returns (query_id, rank, dist2, <candidate
+    columns>) carrying ``_s2_ring``, or None for an empty query list."""
+    max_r = _max_ring(max_distance_deg)
+    limit_r = max_r if max_distance_deg is not None else math.inf
+    complete = complete or {}
+    pending = dict.fromkeys(ids)
+    radius = {q: min(radius[q], max_r) for q in pending}
+    done_rows: list = []
+    topk_schema = None
+    brute: list = []
+    rounds = 0
+    cutover = False
+
+    for _ in range(max_rounds):
+        if not pending:
+            break
+        rounds += 1
+        coverings = [cover(q, min(radius[q], max_r)) for q in pending]
+        # acceptance radius widened by max_error, never past the distance
+        # limit: candidates are only COMPLETE within the ring, but anything
+        # unseen is farther than ring >= accepted kth - max_error, which is
+        # exactly the approximation contract
+        qrows = [
+            (
+                q,
+                *target[q],
+                chord2_from_radians(math.radians(min(radius[q] + max_error_deg, max_r))),
+            )
+            for q in pending
+        ]
+        qdf = local_df(spark, qrows, ["query_id", *target_cols, "r2"])
+        scored = score(probe(coverings).join(F.broadcast(qdf), "query_id"))
+        topk = _rank(
+            scored.filter(F.col("dist2") <= F.col("r2")), k, tie_col, collapse
+        ).drop(*target_cols, "r2")
+
+        # top-k output is tiny (<= |pending| * k): collect it ONCE per round
+        # and assemble the final result driver-side — keeping the lineage
+        # alive instead would re-execute every round's probe+window when the
+        # result is finally consumed.  Completeness: the dist2 <= r2 filter
+        # already bounds the k-th distance by the ring radius, so k results
+        # collected == proof the true top-k lies inside the ring.
+        rows = topk.collect()
+        topk_schema = topk.schema
+        by_q: dict = {}
+        for r in rows:
+            by_q.setdefault(r["query_id"], []).append(r)
+        for q in list(pending):
+            got = by_q.get(q, [])
+            done_r = min(limit_r, complete.get(q, math.inf))
+            if len(got) >= k or radius[q] >= done_r:
+                done_rows.extend(got)
+                del pending[q]
+            elif radius[q] >= max_r:
+                # ring clamped and still short of k: rows in the antipodal
+                # gap are never candidates — brute-force rather than
+                # accept an incomplete top-k
+                brute.append(q)
+                del pending[q]
+            else:
+                # no point growing past the completion radius
+                radius[q] = min(radius[q] * 2.0, done_r)
+        # straggler cutover: a leftover handful is cheaper as one exact
+        # brute probe than as more ring rounds of fixed job overhead (the
+        # brute branch below is the SAME code the post-max_rounds path
+        # runs, so results are identical).  Fail closed: only a KNOWN,
+        # scan-affordable probe size cuts over, so a 100 TB table — or one
+        # whose size nobody stated — keeps ringing.
+        if (
+            pending
+            and brute_rows is not None
+            and brute_rows <= _BRUTE_SCAN_ROWS
+            and len(pending) <= max(2, len(ids) // 8)
+        ):
+            cutover = True
+            brute.extend(pending)
+            pending.clear()
+
+    brute = [*pending, *brute]
+    results = local_df(spark, done_rows, topk_schema) if topk_schema is not None else None
+    if brute:
+        qdf = local_df(spark, [(q, *target[q]) for q in brute], ["query_id", *target_cols])
+        scored = score(brute_df.crossJoin(F.broadcast(qdf)))
+        if max_distance_deg is not None:
+            scored = scored.filter(
+                F.col("dist2") <= F.lit(chord2_from_radians(math.radians(max_distance_deg)))
+            )
+        topk = _rank(scored, k, tie_col, collapse).drop(*target_cols)
+        results = topk if results is None else results.unionByName(topk)
+    if results is not None:
+        _memo(
+            results,
+            "_s2_ring",
+            {"rounds": rounds, "brute": brute, "cutover": cutover, "brute_rows": brute_rows},
+        )
+    return results
+
+
+def _cap_covering(qid, lat: float, lng: float, radius_deg: float) -> RegionCovering:
+    cap = Cap.from_latlng_radius(lat, lng, radius_deg)
+    return compute_coverings([(qid, cap)], max_cells=24)[0]
+
+
+def _edge_probe(registered: DataFrame, edge_id_col: str):
+    """The ``probe`` hook over a registered-edge index: two-way, because
+    registered cells may be coarser or finer than the covering cells."""
+
+    def probe(coverings):
+        # prefilter=True: `ecell` is a stored column of the persisted
+        # registered index, so the coarse-prefix InSet runs native and the
+        # Arrow kernel sees only prefix-matching rows (guide §4.2 — shrink
+        # what crosses the Python boundary)
+        cand = candidate_match_kernel(
+            registered, coverings, cell_col="ecell", two_way=True, prefilter=True
+        ).drop("is_interior", "ecell")
+        # ONE exchange for the whole round: HashPartitioning(query_id)
+        # satisfies the clustered distribution of the (query_id, edge_id)
+        # dedup (subset key), a (query_id, group) collapse and the query_id
+        # window, so none of them adds its own shuffle (the plain
+        # dropDuplicates shuffled on the pair key and the window re-shuffled
+        # on query_id: two exchanges per round over the candidate set)
+        return (
+            cand.withColumnRenamed("region_id", "query_id")
+            .repartition("query_id")
+            .dropDuplicates(["query_id", edge_id_col])
+        )
+
+    return probe
+
+
+def _with_edge_xyz(df: DataFrame) -> DataFrame:
+    """Appends the engine-shared xyz of both edge endpoints (ax..az, bx..bz)."""
+    return df.selectExpr(
+        "*",
+        *edgedist.xyz_exprs("alat", "alng", "a"),
+        *edgedist.xyz_exprs("blat", "blng", "b"),
+    )
+
+
+def _point_edge_dist2(cand: DataFrame) -> DataFrame:
+    """The ``score`` hook for point queries against edges: the closed-form
+    point-to-edge chord^2 from the same expression text the SQL oracle uses."""
+    return edgedist.with_dist2(_with_edge_xyz(cand)).drop("ax", "ay", "az", "bx", "by", "bz")
 
 
 def knn_join(
@@ -75,6 +298,9 @@ def knn_join(
     furthest_points_join to query the exact floating-point negation of the
     original point (the lat/lng stays the seed for the search-cap covering,
     which is inflated by an epsilon to absorb the ulp-level center gap).
+    ``n_points_hint``: row count of ``points_df``; it sizes the first ring
+    and, as the brute probe's scan bound, gates the straggler cutover
+    (absent, the search keeps ringing).
 
     Options parity with S2ClosestPointQuery
     (s2closest_point_query.d:58-111 setMaxDistance/setMaxError, the same
@@ -94,7 +320,7 @@ def knn_join(
     spark = points_df.sparkSession
     tie_col = tie_col or cell_col
     queries_xyz = queries_xyz or {}
-    max_r = 170.0 if max_distance_deg is None else min(170.0, max_distance_deg)
+    max_r = _max_ring(max_distance_deg)
     if region is not None:
         from .spatial_join import points_in_regions
 
@@ -112,8 +338,8 @@ def knn_join(
             .localCheckpoint(eager=True)
         )
 
-    def q_xyz(qid, lat, lng):
-        return queries_xyz.get(qid) or _xyz(lat, lng)
+    geo = {qid: (lat, lng) for qid, lat, lng in queries}
+    xyz = {qid: queries_xyz.get(qid) or _xyz(lat, lng) for qid, (lat, lng) in geo.items()}
 
     # covering-cap inflation: only ever ADDS candidates (acceptance is the
     # exact dist2 <= r2 filter), so completeness survives an xyz override
@@ -121,13 +347,8 @@ def knn_join(
     cap_pad = 1e-7 if queries_xyz else 0.0
 
     if initial_radius_deg is None:
-        # expected radius containing ~4k points under uniform density
-        n = n_points_hint or 100_000
-        frac = min(1.0, 4.0 * k / max(n, 1))
-        initial_radius_deg = max(0.2, math.degrees(2.0 * math.asin(math.sqrt(frac))))
-
-    pending = {qid: (lat, lng) for qid, lat, lng in queries}
-    radius = {qid: initial_radius_deg for qid in pending}
+        initial_radius_deg = _seed_deg(n_points_hint or 100_000, k, 0.2)
+    radius = dict.fromkeys(geo, initial_radius_deg)
 
     # region-aware ring seeding (Cap regions): every result lies inside the
     # cap, so rings smaller than dist(query, cap) provably find nothing —
@@ -137,18 +358,16 @@ def knn_join(
     # WHOLE cap (radius >= dist(query, center) + cap angle, so by the
     # triangle inequality every in-region point is a candidate and passes
     # the r2 filter), the round's answer is complete even with < k rows —
-    # retire the query instead of doubling further.  Acceptance stays the
-    # exact dist2 <= r2 filter, so this only changes WHEN rings run, never
-    # what they return.
-    region_far: dict | None = None
+    # that is the query's completion radius.  Acceptance stays the exact
+    # dist2 <= r2 filter, so this only changes WHEN rings run, never what
+    # they return.
+    complete: dict = {}
     if region is not None and isinstance(region, Cap):
         from ..s2core.regions import chord2_to_radians
 
         cx, cy, cz = region.center
         cap_ang = math.degrees(chord2_to_radians(region.radius2))
-        region_far = {}
-        for qid, (lat, lng) in pending.items():
-            px, py, pz = q_xyz(qid, lat, lng)
+        for qid, (px, py, pz) in xyz.items():
             dot = max(-1.0, min(1.0, px * cx + py * cy + pz * cz))
             ang = math.degrees(math.acos(dot))
             gap = ang - cap_ang
@@ -159,126 +378,84 @@ def knn_join(
             # (antipodal-gap points could be missed) — keep the brute
             # fallback for that query by leaving the bound infinite
             far = ang + cap_ang + 1e-6
-            region_far[qid] = far if far <= max_r else float("inf")
+            complete[qid] = far if far <= max_r else math.inf
 
-    done_rows: list = []
-    topk_schema = None
-    brute: dict = {}
+    def probe(coverings):
+        cand = candidate_match_kernel(points_df, coverings, cell_col=cell_col)
+        return cand.drop("is_interior").withColumnRenamed("region_id", "query_id")
 
-    for _ in range(max_rounds):
-        if not pending:
-            break
-        regions = [
-            (qid, Cap.from_latlng_radius(lat, lng, min(radius[qid] + cap_pad, max_r)))
-            for qid, (lat, lng) in pending.items()
-        ]
-        coverings = compute_coverings(regions, max_cells=24)
-        cand = candidate_match_kernel(points_df, coverings, cell_col=cell_col).drop("is_interior")
-        cand = cand.withColumnRenamed("region_id", "query_id")
-
-        # acceptance radius widened by max_error, never past the distance
-        # limit (see knn_edges_join — identical approximation contract)
-        qrows = [
-            (
-                qid,
-                *q_xyz(qid, lat, lng),
-                chord2_from_radians(
-                    math.radians(min(radius[qid] + max_error_deg, max_r))
-                ),
-            )
-            for qid, (lat, lng) in pending.items()
-        ]
-        qdf = local_df(spark, qrows, ["query_id", "qx", "qy", "qz", "r2"])
-        cand = cand.join(F.broadcast(qdf), "query_id")
-
-        scored = cand.withColumn("dist2", _chord2_to_query_expr(lat_col, lng_col)).filter(
-            F.col("dist2") <= F.col("r2")
-        )
-        w = Window.partitionBy("query_id").orderBy(F.col("dist2").asc(), F.col(tie_col).asc())
-        topk = (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .drop("qx", "qy", "qz", "r2")
-        )
-
-        # top-k output is tiny (<= |pending| * k): collect it ONCE per round
-        # and assemble the final result driver-side — keeping the lineage
-        # alive instead would re-execute every round's probe+window when the
-        # result is finally consumed.  Completeness: the dist2 <= r2 filter
-        # already bounds the k-th distance by the ring radius, so k results
-        # collected == proof the true top-k lies inside the ring.
-        rows = topk.collect()
-        topk_schema = topk.schema
-        by_q: dict = {}
-        for r in rows:
-            by_q.setdefault(r["query_id"], []).append(r)
-        for qid in list(pending):
-            got = by_q.get(qid, [])
-            if len(got) >= k:
-                done_rows.extend(got)
-                del pending[qid]
-            elif region_far is not None and radius[qid] >= region_far[qid]:
-                # the ring covered the whole region cap: every in-region
-                # point was a candidate and passed the r2 filter, so < k
-                # rows IS the complete answer (the region simply holds
-                # fewer than k points near enough)
-                done_rows.extend(got)
-                del pending[qid]
-            elif radius[qid] >= max_r:
-                if max_distance_deg is not None:
-                    # a distance limit makes <k results a complete answer
-                    done_rows.extend(got)
-                    del pending[qid]
-                else:
-                    # ring clamped and still short of k: points in the
-                    # antipodal gap are never candidates — fall through to
-                    # brute force rather than accept an incomplete top-k
-                    brute[qid] = pending.pop(qid)
-            else:
-                nr = radius[qid] * 2.0
-                if region_far is not None:
-                    # no point growing past "whole region covered"
-                    nr = min(nr, region_far[qid])
-                radius[qid] = nr
-        # straggler cutover (see knn_edges_join): a leftover handful goes
-        # straight to the exact brute probe — identical results to more
-        # ring rounds (both exact), minus their fixed job overhead.  Gated
-        # on a scan-affordable point table via the hint; with a region set
-        # the brute side is the (checkpointed) in-region subset, smaller
-        # still.
-        if (
-            pending
-            and len(pending) <= max(2, len(queries) // 8)
-            and (n_points_hint or 100_000) <= 10_000_000
-        ):
-            brute.update(pending)
-            pending.clear()
-
-    pending.update(brute)
-    results = (
-        local_df(spark, done_rows, topk_schema)
-        if topk_schema is not None
-        else None
+    return _ring_search(
+        spark,
+        [qid for qid, _, _ in queries],
+        k,
+        radius,
+        cover=lambda q, ring: _cap_covering(q, *geo[q], min(ring + cap_pad, max_r)),
+        probe=probe,
+        target=xyz,
+        target_cols=["qx", "qy", "qz"],
+        score=lambda cand: cand.withColumn("dist2", _chord2_to_query_expr(lat_col, lng_col)),
+        tie_col=tie_col,
+        # with a region set the brute side is the in-region subset, smaller
+        # still than the hinted table
+        brute_df=points_df,
+        brute_rows=n_points_hint,
+        max_rounds=max_rounds,
+        max_distance_deg=max_distance_deg,
+        max_error_deg=max_error_deg,
+        complete=complete,
     )
 
-    if pending:
-        # brute-force fallback for stragglers: tiny query set x all points
-        qrows = [(qid, *q_xyz(qid, lat, lng)) for qid, (lat, lng) in pending.items()]
-        qdf = local_df(spark, qrows, ["query_id", "qx", "qy", "qz"])
-        cand = points_df.crossJoin(F.broadcast(qdf))
-        scored = cand.withColumn("dist2", _chord2_to_query_expr(lat_col, lng_col))
-        if max_distance_deg is not None:
-            scored = scored.filter(
-                F.col("dist2")
-                <= F.lit(chord2_from_radians(math.radians(max_distance_deg)))
-            )
-        w = Window.partitionBy("query_id").orderBy(F.col("dist2").asc(), F.col(tie_col).asc())
-        topk = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k).drop(
-            "qx", "qy", "qz"
-        )
-        results = topk if results is None else results.unionByName(topk)
 
-    return results
+def _edge_cells(alat, alng, blat, blng, extra_rad) -> pd.Series:
+    """Vectorized body of the two cell-bound UDFs: the <=4-cell (or 6-face)
+    cell-union bound of each edge's bounding cap expanded by ``extra_rad``
+    (scalar or per-row array, radians).  Bounding-cap level from the
+    MIN_WIDTH metric, then the (n, 4) vertex-neighbors column kernel; edges
+    too long for any single level register under their face cells.  With
+    ``extra_rad`` 0.0 the cap is unchanged bit for bit: its radius is at
+    most pi, so min(radius + 0.0, pi) == radius."""
+    from ..s2core import cellid as ci
+    from ..s2core import coords, metrics
+
+    ax, ay, az = coords.latlng_to_xyz(
+        alat.to_numpy(dtype=np.float64), alng.to_numpy(dtype=np.float64)
+    )
+    bx, by, bz = coords.latlng_to_xyz(
+        blat.to_numpy(dtype=np.float64), blng.to_numpy(dtype=np.float64)
+    )
+    mx, my, mz = ax + bx, ay + by, az + bz
+    mn = np.sqrt(mx * mx + my * my + mz * mz)
+    mn = np.where(mn == 0, 1.0, mn)  # antipodal: radius becomes ~pi anyway
+    mx, my, mz = mx / mn, my / mn, mz / mn
+    r2 = np.maximum(
+        (mx - ax) ** 2 + (my - ay) ** 2 + (mz - az) ** 2,
+        (mx - bx) ** 2 + (my - by) ** 2 + (mz - bz) ** 2,
+    )
+    radius = 2.0 * np.arcsin(np.minimum(1.0, 0.5 * np.sqrt(r2)))
+    radius = np.minimum(radius + extra_rad, np.pi)
+    # vectorized Metric.get_level_for_min_value(radius) - 1  (dim=1)
+    safe = np.maximum(radius, 1e-300)
+    lvl = np.clip(
+        np.frexp(metrics.MIN_WIDTH.deriv / safe)[1] - 1, 0, 30
+    ).astype(np.int64) - 1
+
+    n = ax.shape[0]
+    out = np.empty(n, dtype=object)
+    fine = lvl >= 0
+    if fine.any():
+        leafs = ci.from_xyz(mx[fine], my[fine], mz[fine])
+        neigh = ci.vertex_neighbors(leafs, np.minimum(lvl[fine], 29))
+        signed = ci.to_signed(neigh.reshape(-1)).reshape(-1, 4)
+        for k, idx in enumerate(np.nonzero(fine)[0]):
+            out[idx] = signed[k].tolist()
+    if (~fine).any():
+        faces = [
+            int(np.int64(np.uint64(ci.CellId.from_face(f).id) ^ np.uint64(1 << 63)))
+            for f in range(6)
+        ]
+        for idx in np.nonzero(~fine)[0]:
+            out[idx] = faces
+    return pd.Series(out)
 
 
 def edge_register_cells_udf():
@@ -286,55 +463,11 @@ def edge_register_cells_udf():
     the <=4-cell (or 6-face) cell-union bound of the edge's bounding cap —
     a conservative cover of the whole edge, so covering-overlap candidate
     generation is complete (the shape-index registration analogue,
-    mutable_s2shape_index.d:929-1050, via S2Cap.GetCellUnionBound).
-
-    Fully vectorized: bounding-cap level from the MIN_WIDTH metric, then
-    the (n, 4) vertex-neighbors column kernel; edges too long for any
-    single level register under their face cells."""
+    mutable_s2shape_index.d:929-1050, via S2Cap.GetCellUnionBound)."""
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def reg(alat: pd.Series, alng: pd.Series, blat: pd.Series, blng: pd.Series) -> pd.Series:
-        from ..s2core import cellid as ci
-        from ..s2core import coords, metrics
-
-        ax, ay, az = coords.latlng_to_xyz(
-            alat.to_numpy(dtype=np.float64), alng.to_numpy(dtype=np.float64)
-        )
-        bx, by, bz = coords.latlng_to_xyz(
-            blat.to_numpy(dtype=np.float64), blng.to_numpy(dtype=np.float64)
-        )
-        mx, my, mz = ax + bx, ay + by, az + bz
-        mn = np.sqrt(mx * mx + my * my + mz * mz)
-        mn = np.where(mn == 0, 1.0, mn)  # antipodal: radius becomes ~pi anyway
-        mx, my, mz = mx / mn, my / mn, mz / mn
-        r2 = np.maximum(
-            (mx - ax) ** 2 + (my - ay) ** 2 + (mz - az) ** 2,
-            (mx - bx) ** 2 + (my - by) ** 2 + (mz - bz) ** 2,
-        )
-        radius = 2.0 * np.arcsin(np.minimum(1.0, 0.5 * np.sqrt(r2)))
-        # vectorized Metric.get_level_for_min_value(radius) - 1  (dim=1)
-        safe = np.maximum(radius, 1e-300)
-        lvl = np.clip(
-            np.frexp(metrics.MIN_WIDTH.deriv / safe)[1] - 1, 0, 30
-        ).astype(np.int64) - 1
-
-        n = ax.shape[0]
-        out = np.empty(n, dtype=object)
-        fine = lvl >= 0
-        if fine.any():
-            leafs = ci.from_xyz(mx[fine], my[fine], mz[fine])
-            neigh = ci.vertex_neighbors(leafs, np.minimum(lvl[fine], 29))
-            signed = ci.to_signed(neigh.reshape(-1)).reshape(-1, 4)
-            for k, idx in enumerate(np.nonzero(fine)[0]):
-                out[idx] = signed[k].tolist()
-        if (~fine).any():
-            faces = [
-                int(np.int64(np.uint64(ci.CellId.from_face(f).id) ^ np.uint64(1 << 63)))
-                for f in range(6)
-            ]
-            for idx in np.nonzero(~fine)[0]:
-                out[idx] = faces
-        return pd.Series(out)
+        return _edge_cells(alat, alng, blat, blng, 0.0)
 
     return reg
 
@@ -343,9 +476,7 @@ def edge_buffer_cells_udf():
     """(alat, alng, blat, blng, extra_radius_rad) -> array<long signed>:
     cell-union bound of the edge's bounding cap EXPANDED by a per-row
     radius — the covering of "everything within r of this edge", used by
-    the table-to-table kNN join's distributed ring expansion.  Same
-    vectorized construction as edge_register_cells_udf with the buffer
-    radius added before level selection."""
+    the table-to-table kNN join's distributed ring expansion."""
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def reg(
@@ -355,47 +486,7 @@ def edge_buffer_cells_udf():
         blng: pd.Series,
         extra_rad: pd.Series,
     ) -> pd.Series:
-        from ..s2core import cellid as ci
-        from ..s2core import coords, metrics
-
-        ax, ay, az = coords.latlng_to_xyz(
-            alat.to_numpy(dtype=np.float64), alng.to_numpy(dtype=np.float64)
-        )
-        bx, by, bz = coords.latlng_to_xyz(
-            blat.to_numpy(dtype=np.float64), blng.to_numpy(dtype=np.float64)
-        )
-        mx, my, mz = ax + bx, ay + by, az + bz
-        mn = np.sqrt(mx * mx + my * my + mz * mz)
-        mn = np.where(mn == 0, 1.0, mn)
-        mx, my, mz = mx / mn, my / mn, mz / mn
-        r2 = np.maximum(
-            (mx - ax) ** 2 + (my - ay) ** 2 + (mz - az) ** 2,
-            (mx - bx) ** 2 + (my - by) ** 2 + (mz - bz) ** 2,
-        )
-        radius = 2.0 * np.arcsin(np.minimum(1.0, 0.5 * np.sqrt(r2)))
-        radius = np.minimum(radius + extra_rad.to_numpy(dtype=np.float64), np.pi)
-        safe = np.maximum(radius, 1e-300)
-        lvl = np.clip(
-            np.frexp(metrics.MIN_WIDTH.deriv / safe)[1] - 1, 0, 30
-        ).astype(np.int64) - 1
-
-        n = ax.shape[0]
-        out = np.empty(n, dtype=object)
-        fine = lvl >= 0
-        if fine.any():
-            leafs = ci.from_xyz(mx[fine], my[fine], mz[fine])
-            neigh = ci.vertex_neighbors(leafs, np.minimum(lvl[fine], 29))
-            signed = ci.to_signed(neigh.reshape(-1)).reshape(-1, 4)
-            for k, idx in enumerate(np.nonzero(fine)[0]):
-                out[idx] = signed[k].tolist()
-        if (~fine).any():
-            faces = [
-                int(np.int64(np.uint64(ci.CellId.from_face(f).id) ^ np.uint64(1 << 63)))
-                for f in range(6)
-            ]
-            for idx in np.nonzero(~fine)[0]:
-                out[idx] = faces
-        return pd.Series(out)
+        return _edge_cells(alat, alng, blat, blng, extra_rad.to_numpy(dtype=np.float64))
 
     return reg
 
@@ -431,59 +522,68 @@ def register_edges(edges_df: DataFrame) -> DataFrame:
     )
 
 
-def registered_span_deg(registered: DataFrame) -> float | None:
-    """Conservative angular radius (deg) of the registered edge table's
-    lat/lng bounding box — the data's own extent, used to seed ring radii.
+def registered_stats(registered: DataFrame) -> dict:
+    """Statistics of a registered-edge index from ONE aggregate job, cached
+    as ``_s2_reg_stats`` on the (session-shared, persisted) frame so every
+    consumer after the first reads them for free:
 
-    The sphere-uniform seed formula (frac = 4k/n of the WHOLE sphere)
-    over-covers by orders of magnitude when the data occupies a small
-    region: a seed cap sized for global uniformity covers the entire data
-    set and turns round 1 into a near-brute-force candidate join.  One
-    min/max aggregate over the persisted index bounds the data instead;
-    cached as an attribute on the shared frame (same trick as
-    ``_s2_min_reg_level``) so every consumer after the first reads it for
-    free.  Returns None when the table is empty; a dateline-spanning box
-    degrades to a huge span, which callers clamp back to the global seed
-    (performance-conservative, never correctness-relevant — ring doubling
-    proves completeness for ANY seed).
+    * ``span_deg`` — conservative angular radius of the lat/lng bounding
+      box, the data's own extent for ring seeds (see :func:`_seed_deg`);
+      None when the table is empty.  A dateline-spanning box degrades to a
+      huge span, which callers clamp back to the global seed
+      (performance-conservative, never correctness-relevant — ring
+      doubling proves completeness for ANY seed);
+    * ``min_level`` — the coarsest registered cell level, the prefix-join
+      level of :func:`knn_edges_join_tables`;
+    * ``rows`` — ``count(*)``.  Every edge registers under at least one
+      cell, so this bounds the edge table the brute probe scans.
     """
-    cached = getattr(registered, "_s2_span_deg", None)
+    cached = getattr(registered, "_s2_reg_stats", None)
     if cached is not None:
         return cached
+    level = F.lit(30) - (
+        F.log2(F.col("ecell").bitwiseAND(-F.col("ecell")).cast("double")) / F.lit(2.0)
+    ).cast("int")
     row = registered.agg(
         F.min(F.least("alat", "blat")).alias("lat0"),
         F.max(F.greatest("alat", "blat")).alias("lat1"),
         F.min(F.least("alng", "blng")).alias("lng0"),
         F.max(F.greatest("alng", "blng")).alias("lng1"),
+        F.min(level).alias("min_level"),
+        F.count(F.lit(1)).alias("rows"),
     ).collect()[0]
-    if row["lat0"] is None:
-        return None
-    lat_span = float(row["lat1"]) - float(row["lat0"])
-    mid_lat = 0.5 * (float(row["lat1"]) + float(row["lat0"]))
-    lng_span = (float(row["lng1"]) - float(row["lng0"])) * math.cos(
-        math.radians(mid_lat)
-    )
-    span = max(0.5 * math.hypot(lat_span, lng_span), 1e-3)
-    try:
-        registered._s2_span_deg = span
-    except Exception:
-        pass
-    return span
+    span = None
+    if row["lat0"] is not None:
+        lat_span = float(row["lat1"]) - float(row["lat0"])
+        mid_lat = 0.5 * (float(row["lat1"]) + float(row["lat0"]))
+        lng_span = (float(row["lng1"]) - float(row["lng0"])) * math.cos(
+            math.radians(mid_lat)
+        )
+        span = max(0.5 * math.hypot(lat_span, lng_span), 1e-3)
+    stats = {"span_deg": span, "min_level": row["min_level"], "rows": int(row["rows"])}
+    return _memo(registered, "_s2_reg_stats", stats)
 
 
-def _span_seed_deg(
-    registered: DataFrame, frac: float, global_seed: float, floor: float
+def _seed_deg(
+    n: int, k: int, floor: float, registered: DataFrame | None = None
 ) -> float:
-    """Ring seed sized to the DATA extent: a cap of radius span*sqrt(frac)
-    holds ~frac of a box-uniform data set (frac already carries the 4x
-    margin over k).  Never larger than the sphere-uniform seed, never
-    below the floor.  Only meaningful for EXACT unbounded searches — the
-    max_error acceptance band depends on the ring schedule, so callers
-    must keep the global seed there."""
-    span = registered_span_deg(registered)
+    """Initial ring radius: the cap expected to hold ~4k of ``n`` rows
+    spread uniformly over the sphere, never below ``floor``.
+
+    The sphere-uniform seed over-covers by orders of magnitude when the
+    data occupies a small region: it covers the entire data set and turns
+    round 1 into a near-brute-force candidate join.  Given ``registered``,
+    the seed is sized to the DATA extent instead — a cap of radius
+    span*sqrt(frac) holds ~frac of a box-uniform data set (frac already
+    carries the 4x margin over k) — never larger than the sphere-uniform
+    seed.  Pass ``registered`` only for EXACT unbounded searches: the
+    max_error acceptance band depends on the ring schedule."""
+    frac = min(1.0, 4.0 * k / max(n, 1))
+    seed = max(floor, math.degrees(2.0 * math.asin(math.sqrt(frac))))
+    span = None if registered is None else registered_stats(registered)["span_deg"]
     if span is None:
-        return global_seed
-    return min(global_seed, max(floor, 1.5 * span * math.sqrt(frac)))
+        return seed
+    return min(seed, max(floor, 1.5 * span * math.sqrt(frac)))
 
 
 def knn_edges_join(
@@ -525,164 +625,38 @@ def knn_edges_join(
     ranks; 0.0 (default) keeps exact semantics.
     ``registered_df`` lets callers share one registered-cell table across
     queries (the reference's build-once index model).
+    ``n_edges_hint``: row count of ``edges_df``; it sizes the first ring and
+    gates the straggler cutover, as ``n_points_hint`` does in knn_join.
 
     Returns (query_id, rank, dist2, <edge columns>), rank 1..k by
     (dist2, edge_id).
     """
-    spark = edges_df.sparkSession
-
-    from ..functions import edgedist
-
     registered = registered_df if registered_df is not None else register_edges(edges_df)
-
-    max_r = 170.0 if max_distance_deg is None else min(max_distance_deg, 170.0)
     if initial_radius_deg is None:
-        n = n_edges_hint or 100_000
-        frac = min(1.0, 4.0 * k / max(n, 1))
-        initial_radius_deg = max(0.2, math.degrees(2.0 * math.asin(math.sqrt(frac))))
-        if max_error_deg == 0.0 and max_distance_deg is None:
-            # exact unbounded search: the ring schedule cannot change the
-            # result, so seed from the data's extent instead of assuming
-            # sphere uniformity (see _span_seed_deg)
-            initial_radius_deg = _span_seed_deg(
-                registered, frac, initial_radius_deg, 0.2
-            )
-    initial_radius_deg = min(initial_radius_deg, max_r)
-
-    pending = {qid: (lat, lng) for qid, lat, lng in queries}
-    radius = {qid: initial_radius_deg for qid in pending}
-    done_rows: list = []
-    topk_schema = None
-    brute: dict = {}
-
-    def _score(cand: DataFrame, qdf: DataFrame) -> DataFrame:
-        cand = cand.join(F.broadcast(qdf), "query_id")
-        for expr in edgedist.xyz_exprs("alat", "alng", "a"):
-            cand = cand.selectExpr("*", expr)
-        for expr in edgedist.xyz_exprs("blat", "blng", "b"):
-            cand = cand.selectExpr("*", expr)
-        scored = edgedist.with_dist2(cand)
-        return scored.drop("ax", "ay", "az", "bx", "by", "bz")
-
-    for _ in range(max_rounds):
-        if not pending:
-            break
-        regions = [
-            (qid, Cap.from_latlng_radius(lat, lng, min(radius[qid], max_r)))
-            for qid, (lat, lng) in pending.items()
-        ]
-        coverings = compute_coverings(regions, max_cells=24)
-        # prefilter=True: `ecell` is a stored column of the persisted
-        # registered index, so the coarse-prefix InSet runs native and the
-        # Arrow kernel sees only prefix-matching rows (guide §4.2 — shrink
-        # what crosses the Python boundary)
-        cand = candidate_match_kernel(
-            registered, coverings, cell_col="ecell", two_way=True, prefilter=True
-        ).drop("is_interior", "ecell")
-        # ONE exchange for dedup + window: hash on query_id up front —
-        # HashPartitioning(query_id) satisfies the clustered distribution of
-        # BOTH the (query_id, edge_id) dedup aggregate (subset key) and the
-        # query_id window, so neither adds its own shuffle (the plain
-        # dropDuplicates shuffled on the pair key and the window re-shuffled
-        # on query_id: two exchanges per round over the candidate set)
-        cand = (
-            cand.withColumnRenamed("region_id", "query_id")
-            .repartition("query_id")
-            .dropDuplicates(["query_id", edge_id_col])
+        # exact unbounded search: the ring schedule cannot change the
+        # result, so seed from the data's extent (see _seed_deg)
+        exact = max_error_deg == 0.0 and max_distance_deg is None
+        initial_radius_deg = _seed_deg(
+            n_edges_hint or 100_000, k, 0.2, registered if exact else None
         )
-
-        # acceptance radius widened by max_error (never past the distance
-        # limit): candidates are only COMPLETE within radius, but anything
-        # unseen is farther than radius >= accepted kth − max_error, which
-        # is exactly the approximation contract
-        qrows = [
-            (
-                qid,
-                *_xyz(lat, lng),
-                chord2_from_radians(
-                    math.radians(min(radius[qid] + max_error_deg, max_r))
-                ),
-            )
-            for qid, (lat, lng) in pending.items()
-        ]
-        qdf = local_df(spark, qrows, ["query_id", "qx", "qy", "qz", "r2"])
-        scored = _score(cand, qdf).filter(F.col("dist2") <= F.col("r2"))
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("dist2").asc(), F.col(edge_id_col).asc()
-        )
-        topk = (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .drop("qx", "qy", "qz", "r2")
-        )
-
-        # collect the tiny per-round top-k and finish driver-side (see
-        # knn_join): one plan execution per round, none at result time
-        rows = topk.collect()
-        topk_schema = topk.schema
-        by_q: dict = {}
-        for r in rows:
-            by_q.setdefault(r["query_id"], []).append(r)
-        for qid in list(pending):
-            got = by_q.get(qid, [])
-            if len(got) >= k:
-                done_rows.extend(got)
-                del pending[qid]
-            elif radius[qid] >= max_r:
-                if max_distance_deg is not None:
-                    # a distance limit makes <k results a complete answer
-                    done_rows.extend(got)
-                    del pending[qid]
-                else:
-                    # clamped at 170 deg with <k results: edges in the
-                    # antipodal gap are never candidates — brute-force them
-                    brute[qid] = pending.pop(qid)
-            else:
-                radius[qid] = radius[qid] * 2.0
-        # straggler cutover: a leftover handful is cheaper as one exact
-        # brute probe than as more ring rounds of fixed job overhead (the
-        # brute branch below is the SAME code the post-max_rounds path
-        # runs, so results are identical — exact top-k either way).  Gated
-        # on a scan-affordable index (the hint), so a 100 TB edge table
-        # keeps ringing instead of paying a full scan for two queries.
-        if (
-            pending
-            and len(pending) <= max(2, len(queries) // 8)
-            and (n_edges_hint or 100_000) <= 10_000_000
-        ):
-            brute.update(pending)
-            pending.clear()
-
-    pending.update(brute)
-    results = (
-        local_df(spark, done_rows, topk_schema)
-        if topk_schema is not None
-        else None
+    geo = {qid: (lat, lng) for qid, lat, lng in queries}
+    return _ring_search(
+        edges_df.sparkSession,
+        [qid for qid, _, _ in queries],
+        k,
+        dict.fromkeys(geo, initial_radius_deg),
+        cover=lambda q, ring: _cap_covering(q, *geo[q], ring),
+        probe=_edge_probe(registered, edge_id_col),
+        target={qid: _xyz(lat, lng) for qid, (lat, lng) in geo.items()},
+        target_cols=["qx", "qy", "qz"],
+        score=_point_edge_dist2,
+        tie_col=edge_id_col,
+        brute_df=edges_df,
+        brute_rows=n_edges_hint,
+        max_rounds=max_rounds,
+        max_distance_deg=max_distance_deg,
+        max_error_deg=max_error_deg,
     )
-
-    if pending:
-        qrows = [(qid, *_xyz(lat, lng)) for qid, (lat, lng) in pending.items()]
-        qdf = local_df(spark, qrows, ["query_id", "qx", "qy", "qz"])
-        cand = edges_df.crossJoin(
-            F.broadcast(local_df(spark, [(q,) for q in pending], ["query_id"]))
-        )
-        scored = _score(cand, qdf)
-        if max_distance_deg is not None:
-            scored = scored.filter(
-                F.col("dist2")
-                <= F.lit(chord2_from_radians(math.radians(max_distance_deg)))
-            )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("dist2").asc(), F.col(edge_id_col).asc()
-        )
-        topk = (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .drop("qx", "qy", "qz")
-        )
-        results = topk if results is None else results.unionByName(topk)
-
-    return results
 
 
 def knn_edges_join_with_interiors(
@@ -801,18 +775,13 @@ def knn_edges_to_edges(
     endpoint-to-edge distances) stated as the engine-shared SQL fragment
     (functions/edgepair.py).  Returns (query_id, rank, dist2, <edge cols>).
     """
-    from ..functions import edgedist, edgepair
     from ..s2core.regions import latlng_point
 
-    spark = edges_df.sparkSession
     registered = registered_df if registered_df is not None else register_edges(edges_df)
-    max_r = 170.0 if max_distance_deg is None else min(max_distance_deg, 170.0)
-
-    geom = {}
+    ends, seg = {}, {}
     for qid, (la, ln), (lb, lnb) in query_edges:
-        c = latlng_point(la, ln)
-        d = latlng_point(lb, lnb)
-        geom[qid] = (c, d, (float(la), float(ln), float(lb), float(lnb)))
+        ends[qid] = (*latlng_point(la, ln), *latlng_point(lb, lnb))
+        seg[qid] = (float(la), float(ln), float(lb), float(lnb))
 
     # numpy pair scorer (bit-identical twin of the SQL fragment, see
     # edgepair._pair_dist2_np): the 62-intermediate SQL projection paid
@@ -820,14 +789,8 @@ def knn_edges_to_edges(
     # in SQL so the trig path is unchanged
     pair_udf = edgepair.pair_dist2_udf()
 
-    def _score(cand: DataFrame, qdf: DataFrame) -> DataFrame:
-        cand = cand.join(F.broadcast(qdf), "query_id")
-        cand = cand.selectExpr(
-            "*",
-            *edgedist.xyz_exprs("alat", "alng", "a"),
-            *edgedist.xyz_exprs("blat", "blng", "b"),
-        )
-        return cand.withColumn(
+    def score(cand: DataFrame) -> DataFrame:
+        return _with_edge_xyz(cand).withColumn(
             "dist2",
             pair_udf(
                 F.col("ax"), F.col("ay"), F.col("az"),
@@ -837,117 +800,30 @@ def knn_edges_to_edges(
             ),
         ).drop("ax", "ay", "az", "bx", "by", "bz")
 
-    pending = dict(geom)
-    radius = {qid: initial_radius_deg for qid in pending}
-    done_rows: list = []
-    topk_schema = None
-    brute: dict = {}
+    # memoized per-(segment, ring) covering — the driver-side coverer was
+    # ~0.5 s per evaluation for 41 segments, re-paid every evaluation; keys
+    # repeat so the cache hits thereafter
+    def cover(qid, ring: float) -> RegionCovering:
+        cells = buffered_segment_covering(*seg[qid], math.radians(ring), 24)
+        return RegionCovering(qid, None, list(cells))
 
-    for _ in range(max_rounds):
-        if not pending:
-            break
-        coverings = []
-        qrows = []
-        for qid, (c, d, seg) in pending.items():
-            ring = min(radius[qid], max_r)
-            # memoized per-(segment, ring) covering — the driver-side
-            # coverer was ~0.5 s per evaluation for 41 segments, re-paid
-            # every evaluation; keys repeat so the cache hits thereafter
-            coverings.append(
-                RegionCovering(
-                    qid,
-                    None,
-                    list(
-                        buffered_segment_covering(
-                            *seg, math.radians(ring), 24
-                        )
-                    ),
-                )
-            )
-            qrows.append(
-                (
-                    qid,
-                    *c,
-                    *d,
-                    chord2_from_radians(
-                        math.radians(min(radius[qid] + max_error_deg, max_r))
-                    ),
-                )
-            )
-        cand = candidate_match_kernel(
-            registered, coverings, cell_col="ecell", two_way=True, prefilter=True
-        ).drop("is_interior", "ecell")
-        # one exchange for dedup + window (see knn_edges_join): hashing on
-        # query_id satisfies both downstream distributions
-        cand = (
-            cand.withColumnRenamed("region_id", "query_id")
-            .repartition("query_id")
-            .dropDuplicates(["query_id", edge_id_col])
-        )
-        qdf = local_df(spark, 
-            qrows, ["query_id", "cx", "cy", "cz", "dx", "dy", "dz", "r2"]
-        )
-        scored = _score(cand, qdf).filter(F.col("dist2") <= F.col("r2"))
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("dist2").asc(), F.col(edge_id_col).asc()
-        )
-        topk = (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .drop("cx", "cy", "cz", "dx", "dy", "dz", "r2")
-        )
-        rows = topk.collect()
-        topk_schema = topk.schema
-        by_q: dict = {}
-        for r in rows:
-            by_q.setdefault(r["query_id"], []).append(r)
-        for qid in list(pending):
-            got = by_q.get(qid, [])
-            if len(got) >= k:
-                done_rows.extend(got)
-                del pending[qid]
-            elif radius[qid] >= max_r:
-                if max_distance_deg is not None:
-                    # a distance limit makes <k results a complete answer
-                    done_rows.extend(got)
-                    del pending[qid]
-                else:
-                    brute[qid] = pending.pop(qid)
-            else:
-                radius[qid] = radius[qid] * 2.0
-
-    pending.update(brute)
-    results = (
-        local_df(spark, done_rows, topk_schema)
-        if topk_schema is not None
-        else None
+    return _ring_search(
+        edges_df.sparkSession,
+        [qid for qid, _, _ in query_edges],
+        k,
+        dict.fromkeys(ends, initial_radius_deg),
+        cover=cover,
+        probe=_edge_probe(registered, edge_id_col),
+        target=ends,
+        target_cols=["cx", "cy", "cz", "dx", "dy", "dz"],
+        score=score,
+        tie_col=edge_id_col,
+        brute_df=edges_df,
+        brute_rows=None,
+        max_rounds=max_rounds,
+        max_distance_deg=max_distance_deg,
+        max_error_deg=max_error_deg,
     )
-
-    if pending:
-        qrows = [(qid, *c, *d) for qid, (c, d, _) in pending.items()]
-        qdf = local_df(spark, 
-            qrows, ["query_id", "cx", "cy", "cz", "dx", "dy", "dz"]
-        )
-        cand = edges_df.crossJoin(
-            F.broadcast(local_df(spark, [(q,) for q in pending], ["query_id"]))
-        )
-        scored = _score(cand, qdf)
-        if max_distance_deg is not None:
-            scored = scored.filter(
-                F.col("dist2")
-                <= F.lit(chord2_from_radians(math.radians(max_distance_deg)))
-            )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("dist2").asc(), F.col(edge_id_col).asc()
-        )
-        topk = (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .drop("cx", "cy", "cz", "dx", "dy", "dz")
-        )
-        results = topk if results is None else results.unionByName(topk)
-
-    return results
 
 
 def knn_edges_to_cells(
@@ -973,13 +849,10 @@ def knn_edges_to_cells(
     engine-shared SQL fragment (functions/edgepair.cell_dist2_parts) with
     the cell's vertices and inward normals riding as broadcast columns.
     """
-    from ..functions import edgedist, edgepair
     from ..s2core.coords import xyz_to_latlng
-    from ..s2core.regions import Cap, Cell, chord2_between, chord2_to_radians
+    from ..s2core.regions import Cell, chord2_between, chord2_to_radians
 
-    spark = edges_df.sparkSession
     registered = registered_df if registered_df is not None else register_edges(edges_df)
-    max_r = 170.0 if max_distance_deg is None else min(max_distance_deg, 170.0)
 
     geom = {}
     for qid, cid in query_cells:
@@ -1006,14 +879,8 @@ def knn_edges_to_cells(
         {qid: (verts, norms) for qid, (_, _, _, verts, norms) in geom.items()}
     )
 
-    def _score(cand: DataFrame, qdf: DataFrame) -> DataFrame:
-        cand = cand.join(F.broadcast(qdf), "query_id")
-        cand = cand.selectExpr(
-            "*",
-            *edgedist.xyz_exprs("alat", "alng", "a"),
-            *edgedist.xyz_exprs("blat", "blng", "b"),
-        )
-        return cand.withColumn(
+    def score(cand: DataFrame) -> DataFrame:
+        return _with_edge_xyz(cand).withColumn(
             "dist2",
             score_udf(
                 F.col("query_id"),
@@ -1022,100 +889,26 @@ def knn_edges_to_cells(
             ),
         ).drop("ax", "ay", "az", "bx", "by", "bz")
 
-    pending = dict(geom)
-    radius = {qid: initial_radius_deg for qid in pending}
-    done_rows: list = []
-    topk_schema = None
-    brute: dict = {}
+    def cover(qid, ring: float) -> RegionCovering:
+        la, ln, circ, _, _ = geom[qid]
+        return _cap_covering(qid, la, ln, min(circ + ring, 179.0))
 
-    for _ in range(max_rounds):
-        if not pending:
-            break
-        regions = []
-        qrows = []
-        for qid, (la, ln, circ, verts, norms) in pending.items():
-            ring = min(radius[qid], max_r)
-            regions.append(
-                (qid, Cap.from_latlng_radius(la, ln, min(circ + ring, 179.0)))
-            )
-            qrows.append((qid, chord2_from_radians(math.radians(ring))))
-        coverings = compute_coverings(regions, max_cells=24)
-        cand = candidate_match_kernel(
-            registered, coverings, cell_col="ecell", two_way=True, prefilter=True
-        ).drop("is_interior", "ecell")
-        # one exchange for dedup + window (see knn_edges_join): hashing on
-        # query_id satisfies both downstream distributions
-        cand = (
-            cand.withColumnRenamed("region_id", "query_id")
-            .repartition("query_id")
-            .dropDuplicates(["query_id", edge_id_col])
-        )
-        qdf = local_df(spark, qrows, ["query_id", "r2"])
-        scored = _score(cand, qdf).filter(F.col("dist2") <= F.col("r2"))
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("dist2").asc(), F.col(edge_id_col).asc()
-        )
-        topk = (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .drop("r2")
-        )
-        rows = topk.collect()
-        topk_schema = topk.schema
-        by_q: dict = {}
-        for r in rows:
-            by_q.setdefault(r["query_id"], []).append(r)
-        for qid in list(pending):
-            got = by_q.get(qid, [])
-            if len(got) >= k:
-                done_rows.extend(got)
-                del pending[qid]
-            elif radius[qid] >= max_r:
-                if max_distance_deg is not None:
-                    done_rows.extend(got)
-                    del pending[qid]
-                else:
-                    brute[qid] = pending.pop(qid)
-            else:
-                radius[qid] = radius[qid] * 2.0
-
-    pending.update(brute)
-    results = (
-        local_df(spark, done_rows, topk_schema)
-        if topk_schema is not None
-        else None
+    return _ring_search(
+        edges_df.sparkSession,
+        [qid for qid, _ in query_cells],
+        k,
+        dict.fromkeys(geom, initial_radius_deg),
+        cover=cover,
+        probe=_edge_probe(registered, edge_id_col),
+        target=dict.fromkeys(geom, ()),
+        target_cols=[],
+        score=score,
+        tie_col=edge_id_col,
+        brute_df=edges_df,
+        brute_rows=None,
+        max_rounds=max_rounds,
+        max_distance_deg=max_distance_deg,
     )
-
-    if pending:
-        qdf = local_df(spark, [(q,) for q in pending], ["query_id"])
-        cand = edges_df.crossJoin(F.broadcast(qdf))
-        cand = cand.selectExpr(
-            "*",
-            *edgedist.xyz_exprs("alat", "alng", "a"),
-            *edgedist.xyz_exprs("blat", "blng", "b"),
-        )
-        scored = cand.withColumn(
-            "dist2",
-            score_udf(
-                F.col("query_id"),
-                F.col("ax"), F.col("ay"), F.col("az"),
-                F.col("bx"), F.col("by"), F.col("bz"),
-            ),
-        ).drop("ax", "ay", "az", "bx", "by", "bz")
-        if max_distance_deg is not None:
-            scored = scored.filter(
-                F.col("dist2")
-                <= F.lit(chord2_from_radians(math.radians(max_distance_deg)))
-            )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("dist2").asc(), F.col(edge_id_col).asc()
-        )
-        topk = scored.withColumn("rank", F.row_number().over(w)).filter(
-            F.col("rank") <= k
-        )
-        results = topk if results is None else results.unionByName(topk)
-
-    return results
 
 
 def knn_edges_join_tables(
@@ -1145,13 +938,13 @@ def knn_edges_join_tables(
     nothing nearer was missed).  Finished queries leave the pending set by
     anti-join; the driver never holds geometry or results — only the round
     counter.  Stragglers after max_rounds (antipodal-gap cases) fall back
-    to a broadcast cross join of the (small) remainder.
+    to a broadcast cross join of the (small) remainder; a straggler handful
+    cuts over to it early only when the registered index's row count is
+    at most ``_BRUTE_SCAN_ROWS``.
 
     Both query columns are expected as (query_id, alat, alng, blat, blng);
     returns (query_id, edge_id, rank, dist2).
     """
-    from ..functions import edgedist, edgepair
-
     spark = query_edges_df.sparkSession
     # Catalyst's constraint propagation canonicalizes every aliased
     # intermediate through the round's filter+window+join pipeline; with 62
@@ -1168,27 +961,10 @@ def knn_edges_join_tables(
         registered = (
             registered_df if registered_df is not None else register_edges(index_edges_df)
         )
-        # min registered level: one tiny aggregate — cached as an attribute
-        # on the (session-shared, persisted) registered DataFrame so repeat
-        # consumers skip the job (same trick as index_df._s2_min_cov_level)
-        jl = getattr(registered, "_s2_min_reg_level", None)
-        if jl is None:
-            jl_row = registered.agg(
-                F.min(
-                    F.lit(30)
-                    - (
-                        F.log2(
-                            F.col("ecell").bitwiseAND(-F.col("ecell")).cast("double")
-                        )
-                        / F.lit(2.0)
-                    ).cast("int")
-                )
-            ).collect()[0]
-            jl = int(jl_row[0])
-            try:
-                registered._s2_min_reg_level = jl
-            except AttributeError:
-                pass
+        # min registered level and row count: one tiny aggregate cached on
+        # the registered frame (see registered_stats)
+        stats = registered_stats(registered)
+        jl = int(stats["min_level"])
         # candidate rows CARRY the index-edge endpoints from the registered
         # table (one persisted artifact) — the old shape joined candidates
         # back to a separate checkpointed idx_xyz table on edge_id every
@@ -1234,11 +1010,7 @@ def knn_edges_join_tables(
             # rides in via a broadcast of the (small) checkpointed q_xyz,
             # the index xyz is computed inline (same SQL trig exprs —
             # bit-identical to a precomputed column)
-            cand = cand.join(bc_q(q_xyz), "query_id").selectExpr(
-                "*",
-                *edgedist.xyz_exprs("alat", "alng", "a"),
-                *edgedist.xyz_exprs("blat", "blng", "b"),
-            )
+            cand = _with_edge_xyz(cand.join(bc_q(q_xyz), "query_id"))
             scored = cand.withColumn(
                 "dist2",
                 pair_udf(
@@ -1265,6 +1037,8 @@ def knn_edges_join_tables(
         bc_q = F.broadcast if n_q <= 100_000 else (lambda df: df)
         results = None
         n_pending = n_q
+        rounds = 0
+        cutover = False
         radius = initial_radius_deg
         for _ in range(max_rounds):
             r2 = chord2_from_radians(math.radians(min(radius, 170.0)))
@@ -1320,14 +1094,7 @@ def knn_edges_join_tables(
             )
 
             scored = _score(cand).filter(F.col("dist2") <= F.lit(r2))
-            w = Window.partitionBy("query_id").orderBy(
-                F.col("dist2").asc(), F.col(edge_id_col).asc()
-            )
-            topk = (
-                scored.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .localCheckpoint(eager=True)
-            )
+            topk = _rank(scored, k, edge_id_col).localCheckpoint(eager=True)
             # a query is certified complete when its k-th distance is inside
             # the ring (the buffer covering proves nothing nearer was missed)
             done_q = (
@@ -1348,12 +1115,18 @@ def knn_edges_join_tables(
             # rounds with 1-task jobs, half the query's wall time), and a
             # straggler handful is cheaper as the one bounded broadcast
             # probe below than as more ring rounds of fixed job overhead.
-            # The cutover bound scales with n_q, never with the index, so
-            # a large pending set keeps ringing (the 100 TB path).
+            # The cutover bound scales with n_q, and fails closed on the
+            # index size as in _ring_search, so a large pending set or an
+            # unaffordable index scan keeps ringing (the 100 TB path).
+            rounds += 1
             n_pending = pending.count()
             if n_pending == 0:
                 break
-            if n_pending <= max(16, n_q // 1000):
+            if (
+                n_pending <= max(16, n_q // 1000)
+                and stats["rows"] <= _BRUTE_SCAN_ROWS
+            ):
+                cutover = True
                 break
             radius *= 2.0
             if radius > 180.0 * 2:
@@ -1362,13 +1135,7 @@ def knn_edges_join_tables(
         # stragglers: broadcast the (small) remainder against the full index
         if n_pending > 0:
             cand = pending.select("query_id").crossJoin(idx_geom)
-            scored = _score(cand)
-            w = Window.partitionBy("query_id").orderBy(
-                F.col("dist2").asc(), F.col(edge_id_col).asc()
-            )
-            topk = scored.withColumn("rank", F.row_number().over(w)).filter(
-                F.col("rank") <= k
-            )
+            topk = _rank(_score(cand), k, edge_id_col)
             results = topk if results is None else results.unionByName(topk)
         if results is None:
             # empty query table: no round certified and no stragglers —
@@ -1401,6 +1168,8 @@ def knn_edges_join_tables(
         ).localCheckpoint(eager=True)
     finally:
         spark.conf.set(_cp_key, _cp_prev)
+    record = {"rounds": rounds, "n_brute": n_pending, "cutover": cutover}
+    _memo(out, "_s2_ring", {**record, "brute_rows": stats["rows"]})
     return out
 
 
@@ -1454,8 +1223,6 @@ def knn_edges_brute_force(
 ) -> DataFrame:
     """Oracle: exact cross-join top-k over edges (setUseBruteForce analogue,
     s2closest_edge_query_test.d:380-416)."""
-    from ..functions import edgedist
-
     spark = edges_df.sparkSession
     qdf = local_df(spark, 
         [(qid, *_xyz(lat, lng)) for qid, lat, lng in queries],

@@ -10,27 +10,29 @@ distances to polyline distances before the top-k window.
 
 Reference analogue: S2ClosestEdgeQuery with ShapeIndex targets over a
 multi-shape index (s2closest_edge_query.d:199-272, one shape per polyline);
-distributed, "shape" becomes a group key, and the best-first contraction
-becomes the same shrinking-frontier ring expansion as knn_edges_join.
-
-Completeness per round: a polyline's distance is the min over its edges;
-if >= k polylines have an in-ring edge, their per-polyline minima are exact
-(any edge outside the ring is farther than the ring radius >= the k-th
-distance), so the top-k is proven — the same argument as edge kNN, lifted
-through the min-aggregation.
+distributed, "shape" becomes a group key, and the search is the shared
+ring search of ``knn._ring_search`` with that min as its ``collapse``
+hook.  Its completeness argument lifts through the min: every edge outside
+the ring is farther than the ring, so per-polyline minima over in-ring
+edges are exact whenever they are.
 """
 
 from __future__ import annotations
-
-import math
 
 from ..functions.localdf import local_df
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..s2core.regions import Cap, chord2_from_radians
-from .knn import _xyz, register_edges
-from .spatial_join import candidate_match_kernel, compute_coverings
+from .knn import (
+    _cap_covering,
+    _edge_probe,
+    _point_edge_dist2,
+    _ring_search,
+    _seed_deg,
+    _xyz,
+    register_edges,
+    registered_stats,
+)
 
 
 def nearest_polyline_join(
@@ -59,142 +61,41 @@ def nearest_polyline_join(
     radius (early exit): every edge within the ring is a candidate, so an
     accepted distance in the (ring, ring+max_error] band errs by at most
     max_error — the contract lifts through the per-polyline min.
+    ``n_polylines_hint`` only sizes the first ring: a polyline count does
+    not bound the edge rows the brute probe scans, so the straggler cutover
+    is gated on the registered index's row count instead.
     """
-    from ..functions import edgedist
-
-    spark = edges_df.sparkSession
-
     registered = registered_df if registered_df is not None else register_edges(edges_df)
-
-    max_r = 170.0 if max_distance_deg is None else min(max_distance_deg, 170.0)
     if initial_radius_deg is None:
-        n = n_polylines_hint or 1_000
-        frac = min(1.0, 4.0 * k / max(n, 1))
-        initial_radius_deg = max(0.5, math.degrees(2.0 * math.asin(math.sqrt(frac))))
-        if max_error_deg == 0.0 and max_distance_deg is None:
-            # exact unbounded search: ring schedule cannot change results —
-            # seed from the data extent (see knn._span_seed_deg); the
-            # sphere-uniform seed covered the whole fixture region and made
-            # round 1 near-brute-force
-            from .knn import _span_seed_deg
-
-            initial_radius_deg = _span_seed_deg(
-                registered, frac, initial_radius_deg, 0.5
-            )
-    initial_radius_deg = min(initial_radius_deg, max_r)
-
-    def _score(cand: DataFrame, qdf: DataFrame) -> DataFrame:
-        cand = cand.join(F.broadcast(qdf), "query_id")
-        for expr in edgedist.xyz_exprs("alat", "alng", "a"):
-            cand = cand.selectExpr("*", expr)
-        for expr in edgedist.xyz_exprs("blat", "blng", "b"):
-            cand = cand.selectExpr("*", expr)
-        return edgedist.with_dist2(cand).drop("ax", "ay", "az", "bx", "by", "bz")
-
-    def _topk(scored: DataFrame) -> DataFrame:
-        agg = scored.groupBy("query_id", polyline_col).agg(
+        # exact unbounded search: the ring schedule cannot change results —
+        # seed from the data extent (see knn._seed_deg); the sphere-uniform
+        # seed covered the whole fixture region and made round 1
+        # near-brute-force
+        exact = max_error_deg == 0.0 and max_distance_deg is None
+        initial_radius_deg = _seed_deg(
+            n_polylines_hint or 1_000, k, 0.5, registered if exact else None
+        )
+    geo = {qid: (lat, lng) for qid, lat, lng in queries}
+    return _ring_search(
+        edges_df.sparkSession,
+        [qid for qid, _, _ in queries],
+        k,
+        dict.fromkeys(geo, initial_radius_deg),
+        cover=lambda q, ring: _cap_covering(q, *geo[q], ring),
+        probe=_edge_probe(registered, edge_id_col),
+        target={qid: _xyz(lat, lng) for qid, (lat, lng) in geo.items()},
+        target_cols=["qx", "qy", "qz"],
+        score=_point_edge_dist2,
+        tie_col=polyline_col,
+        collapse=lambda scored: scored.groupBy("query_id", polyline_col).agg(
             F.min("dist2").alias("dist2")
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("dist2").asc(), F.col(polyline_col).asc()
-        )
-        return agg.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-    pending = {qid: (lat, lng) for qid, lat, lng in queries}
-    radius = {qid: initial_radius_deg for qid in pending}
-    done_rows: list = []
-    topk_schema = None
-    brute: dict = {}
-
-    for _ in range(max_rounds):
-        if not pending:
-            break
-        regions = [
-            (qid, Cap.from_latlng_radius(lat, lng, min(radius[qid], max_r)))
-            for qid, (lat, lng) in pending.items()
-        ]
-        coverings = compute_coverings(regions, max_cells=24)
-        cand = candidate_match_kernel(
-            registered, coverings, cell_col="ecell", two_way=True, prefilter=True
-        ).drop("is_interior", "ecell")
-        # ONE exchange for the whole round: hashing on query_id satisfies
-        # the (query, edge) dedup, the (query, polyline) min-aggregation
-        # AND the query window — none of the three re-shuffles (the plain
-        # dropDuplicates shape paid three exchanges over the candidates)
-        cand = (
-            cand.withColumnRenamed("region_id", "query_id")
-            .repartition("query_id")
-            .dropDuplicates(["query_id", edge_id_col])
-        )
-        qrows = [
-            (
-                qid,
-                *_xyz(lat, lng),
-                chord2_from_radians(
-                    math.radians(min(radius[qid] + max_error_deg, max_r))
-                ),
-            )
-            for qid, (lat, lng) in pending.items()
-        ]
-        qdf = local_df(spark, qrows, ["query_id", "qx", "qy", "qz", "r2"])
-        scored = _score(cand, qdf).filter(F.col("dist2") <= F.col("r2"))
-        topk = _topk(scored.drop("qx", "qy", "qz", "r2"))
-
-        rows = topk.collect()  # tiny: <= |pending| * k (see knn_join)
-        topk_schema = topk.schema
-        by_q: dict = {}
-        for r in rows:
-            by_q.setdefault(r["query_id"], []).append(r)
-        for qid in list(pending):
-            got = by_q.get(qid, [])
-            if len(got) >= k:
-                done_rows.extend(got)
-                del pending[qid]
-            elif radius[qid] >= max_r:
-                if max_distance_deg is not None:
-                    # a distance limit makes <k results a complete answer
-                    done_rows.extend(got)
-                    del pending[qid]
-                else:
-                    # clamped at 170 deg and short of k (antipodal
-                    # residue): brute-force
-                    brute[qid] = pending.pop(qid)
-            else:
-                radius[qid] = radius[qid] * 2.0
-        # straggler cutover (see knn_edges_join): a leftover handful goes
-        # straight to the exact brute probe instead of more ring rounds —
-        # identical results (both exact), gated on a scan-affordable table
-        if (
-            pending
-            and len(pending) <= max(2, len(queries) // 8)
-            and (n_polylines_hint or 1_000) <= 100_000
-        ):
-            brute.update(pending)
-            pending.clear()
-
-    pending.update(brute)
-    results = (
-        local_df(spark, done_rows, topk_schema)
-        if topk_schema is not None
-        else None
+        ),
+        brute_df=edges_df,
+        brute_rows=registered_stats(registered)["rows"],
+        max_rounds=max_rounds,
+        max_distance_deg=max_distance_deg,
+        max_error_deg=max_error_deg,
     )
-
-    if pending:
-        qrows = [(qid, *_xyz(lat, lng)) for qid, (lat, lng) in pending.items()]
-        qdf = local_df(spark, qrows, ["query_id", "qx", "qy", "qz"])
-        cand = edges_df.crossJoin(
-            F.broadcast(local_df(spark, [(q,) for q in pending], ["query_id"]))
-        )
-        scored = _score(cand, qdf)
-        if max_distance_deg is not None:
-            scored = scored.filter(
-                F.col("dist2")
-                <= F.lit(chord2_from_radians(math.radians(max_distance_deg)))
-            )
-        topk = _topk(scored.drop("qx", "qy", "qz"))
-        results = topk if results is None else results.unionByName(topk)
-
-    return results
 
 
 def polyline_brute_force(

@@ -346,8 +346,8 @@ def registered_edges_view(index_df: DataFrame) -> DataFrame:
 
     The view is memoized as an attribute on ``index_df`` so repeat probes
     of one (persisted, session-shared) index receive the SAME DataFrame
-    object: the ring-search/pair-sweep hint memos (`_s2_span_deg`,
-    `_s2_min_reg_level`, `_s2_reg_rows`, `_s2_reg_levels`) attach to the
+    object: the ring-search/pair-sweep hint memos (`_s2_reg_stats`,
+    `_s2_reg_rows`, `_s2_reg_levels`) attach to the
     view object, and a fresh object per evaluation re-paid those aggregate
     jobs every time.  DataFrames are immutable, so returning the shared
     object is observationally identical."""

@@ -29,21 +29,32 @@ def _key(rows):
     return sorted((r.query_id, r.rank, r.edge_id) for r in rows)
 
 
-def test_knn_edges_straggler_cutover_matches_bruteforce(spark):
+# the small hint is scan-affordable; an absent or over-_BRUTE_SCAN_ROWS one
+# must fail closed — the search keeps ringing and never cuts over early
+_HINTS = ["small", None, 20_000_000]
+
+
+@pytest.mark.parametrize("hint", _HINTS)
+def test_knn_edges_straggler_cutover_matches_bruteforce(spark, hint):
     """16 near queries finish in round 1; the 1-2 antipodal stragglers are
     under the cutover bound (16+2 queries // 8 = 2) and route to the brute
-    branch early — results must equal the exact cross join regardless of
-    which path answered."""
+    branch early when the hint allows it — results must equal the exact
+    cross join regardless of which path answered."""
     edges = _clustered_edges(spark)
     near = [(f"n{i}", 48.0 + 0.1 * i, 2.0 + 0.1 * i) for i in range(16)]
     far = [("far1", -48.85, -177.65), ("far2", -40.0, -170.0)]
     queries = near + far
-    fast = knn.knn_edges_join(edges, queries, k=5, n_edges_hint=300)
+    n_edges = 300 if hint == "small" else hint
+    fast = knn.knn_edges_join(edges, queries, k=5, n_edges_hint=n_edges)
     slow = knn.knn_edges_brute_force(edges, queries, k=5)
     assert _key(fast.collect()) == _key(slow.collect())
+    assert fast._s2_ring["cutover"] is (hint == "small")
+    assert fast._s2_ring["brute_rows"] == n_edges
+    assert {"far1", "far2"} <= set(fast._s2_ring["brute"])
 
 
-def test_knn_points_straggler_cutover_matches_bruteforce(spark):
+@pytest.mark.parametrize("hint", _HINTS)
+def test_knn_points_straggler_cutover_matches_bruteforce(spark, hint):
     rng = np.random.default_rng(3)
     rows = [
         (i, float(48.85 + v[0]), float(2.35 + v[1]))
@@ -55,13 +66,40 @@ def test_knn_points_straggler_cutover_matches_bruteforce(spark):
     pts = pts.withColumn("cell_id", kernels.cell_from_latlng("lat", "lng"))
     near = [(f"n{i}", 48.0 + 0.2 * i, 2.0 + 0.2 * i) for i in range(16)]
     queries = near + [("far1", -48.85, -177.65)]
-    fast = knn.knn_join(
-        pts, queries, k=4, n_points_hint=400, tie_col="point_id"
-    ).select("query_id", "rank", F.col("point_id").alias("edge_id"))
+    n_points = 400 if hint == "small" else hint
+    res = knn.knn_join(pts, queries, k=4, n_points_hint=n_points, tie_col="point_id")
+    fast = res.select("query_id", "rank", F.col("point_id").alias("edge_id"))
     slow = knn.knn_brute_force(pts, queries, k=4, tie_col="point_id").select(
         "query_id", "rank", F.col("point_id").alias("edge_id")
     )
     assert _key(fast.collect()) == _key(slow.collect())
+    assert res._s2_ring["cutover"] is (hint == "small")
+    assert res._s2_ring["brute_rows"] == n_points
+    assert "far1" in res._s2_ring["brute"]
+
+
+def test_knn_table_join_closed_gate_keeps_ringing(spark, monkeypatch):
+    """With the scan bound below the registered index size, the table
+    variant's straggler handful keeps ringing instead of cutting over; the
+    antipodal query still reaches the post-max_rounds brute probe and the
+    answer equals the exact cross join (the driver-list variant with no
+    ring rounds, i.e. its brute probe alone)."""
+    monkeypatch.setattr(knn, "_BRUTE_SCAN_ROWS", 0)
+    edges = _clustered_edges(spark)
+    qlist = [
+        (i, (r["alat"], r["alng"]), (r["blat"], r["blng"]))
+        for i, r in enumerate(edges.filter(F.col("edge_id") % 50 == 0).collect())
+    ] + [(99, (-48.85, -177.65), (-48.0, -177.0))]
+    qdf = spark.createDataFrame(
+        [(q, a[0], a[1], b[0], b[1]) for q, a, b in qlist],
+        ["query_id", "alat", "alng", "blat", "blng"],
+    )
+    out = knn.knn_edges_join_tables(qdf, edges, k=3)
+    want = knn.knn_edges_to_edges(edges, qlist, k=3, max_rounds=0)
+    assert _key(out.collect()) == _key(want.collect())
+    assert out._s2_ring["cutover"] is False
+    assert out._s2_ring["n_brute"] >= 1
+    assert out._s2_ring["rounds"] == 5
 
 
 def test_buffered_segment_covering_matches_uncached():
