@@ -125,17 +125,18 @@ def _polyline_edges_registered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def release_caches(spark: SparkSession | None = None) -> int:
     """Unpersist and evict every session-cached fixture/index DataFrame
-    (edges, registered-cell indexes, polygon index).  Long-lived sessions
-    touching many sf_dirs or ad-hoc edge tables would otherwise accumulate
-    pinned storage for the application lifetime (ADVICE round-3).  Pass a
-    SparkSession to release only that application's entries.  Returns the
-    number of DataFrames unpersisted."""
+    (points, edges, registered-cell indexes, polygon index).  Long-lived
+    sessions touching many sf_dirs or ad-hoc edge tables would otherwise
+    accumulate pinned storage for the application lifetime (ADVICE
+    round-3).  Pass a SparkSession to release only that application's
+    entries.  Returns the number of DataFrames unpersisted."""
     app_id = spark.sparkContext.applicationId if spark is not None else None
     for key in list(_NPOINTS_CACHE):
         if app_id is None or key[0] == app_id:
             _NPOINTS_CACHE.pop(key)
     released = 0
     for cache in (
+        tables._POINTS_CACHE,
         _EDGES_CACHE,
         _REGISTERED_CACHE,
         _REGISTERED_PL_CACHE,

@@ -1,9 +1,12 @@
 """Closed-form point-to-edge squared-chord distance as ANSI SQL fragments.
 
-ONE expression text serves both engines: Spark consumes it via ``F.expr``
-and the DuckDB oracle embeds the same string, so the floating-point
-evaluation trees are identical and ranking agrees bit-for-bit (every op is
-IEEE +,-,*,/ ,sqrt — all correctly rounded).
+ONE expression text defines the distance.  The DuckDB oracles embed it
+(:func:`dist2_select_sql`), and the Spark brute-force test oracles and the
+within-distance join evaluate it via ``F.expr`` (:func:`with_dist2`).  The
+kNN ring search scores with ``edgepair._point_edge_dist2_np``, a numpy
+twin of the same IEEE operation tree, term for term.  Every op is IEEE
++,-,*,/ ,sqrt (all correctly rounded), so all three agree bit-for-bit and
+rankings match (tests/test_edge_twins.py).
 
 Geometry (reference s2edge_distances.d:45-235, re-derived):
 for unit point q and edge (a, b) with great-circle normal n = a x b,

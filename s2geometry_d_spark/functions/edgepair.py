@@ -1,8 +1,11 @@
 """Edge-PAIR min squared-chord distance as engine-shared ANSI SQL.
 
-Same discipline as functions/edgedist.py: ONE expression text consumed by
-Spark via ``F.expr`` and embedded verbatim in the DuckDB oracle, so both
-engines evaluate identical IEEE trees and rankings agree bit-for-bit.
+Same discipline as functions/edgedist.py: ONE expression text, embedded
+verbatim in the DuckDB oracle, with Spark mirrors (``with_pair_dist2``,
+``with_cell_dist2``) and the numpy twins the kNN scorers run
+(``_pair_dist2_np``, ``cell_dist2_np``, behind pandas UDFs).  All evaluate
+identical IEEE trees, so rankings agree bit-for-bit
+(tests/test_edge_twins.py).
 
 Semantics (reference s2edge_distances.d:280-283, mirrored by
 s2core.measures.edge_pair_min_dist2): the distance between two geodesic
@@ -237,29 +240,39 @@ def cell_dist2_np(ax, ay, az, bx, by, bz, verts, norms):
     )
 
 
+def _twin_udf(twin, name: str):
+    """DoubleType pandas UDF over a numpy twin: every argument Series goes
+    in as float64, the twin's array comes back as dist2.  Both join sides
+    stay DataFrames (no geometry in the closure), so it scales like any
+    Arrow kernel.
+
+    Marked nondeterministic only to keep Catalyst from pushing the
+    ``dist2 <= r2`` filter below the projection: a pushed filter inlines
+    the UDF, and every candidate row would be scored twice, by two
+    ArrowEvalPython nodes (one Python worker each)."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    def body(*cols: pd.Series) -> pd.Series:
+        return pd.Series(twin(*[s.to_numpy(dtype=np.float64) for s in cols]))
+
+    body.__name__ = name
+    return F.pandas_udf(body, T.DoubleType()).asNondeterministic()
+
+
 def pair_dist2_udf():
     """(ax..bz, cx..dz) -> dist2 pandas UDF — the vectorized numpy twin of
     with_pair_dist2 (bit-identical IEEE tree, see _pair_dist2_np).  Used
     where the 62-intermediate SQL projection's Catalyst analysis and
-    codegen dominate the round wall time; both join sides stay DataFrames
-    (no geometry in the closure), so it scales like any Arrow kernel."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
+    codegen dominate the round wall time."""
+    return _twin_udf(_pair_dist2_np, "pair_dist2")
 
-    @F.pandas_udf(T.DoubleType())
-    def score(
-        ax: pd.Series, ay: pd.Series, az: pd.Series,
-        bx: pd.Series, by: pd.Series, bz: pd.Series,
-        cx: pd.Series, cy: pd.Series, cz: pd.Series,
-        dx: pd.Series, dy: pd.Series, dz: pd.Series,
-    ) -> pd.Series:
-        args = [
-            s.to_numpy(dtype=np.float64)
-            for s in (ax, ay, az, bx, by, bz, cx, cy, cz, dx, dy, dz)
-        ]
-        return pd.Series(_pair_dist2_np(*args))
 
-    return score
+def point_edge_dist2_udf():
+    """(qx..qz, ax..bz) -> dist2 pandas UDF — the numpy twin of
+    edgedist.with_dist2 (bit-identical, see _point_edge_dist2_np), the
+    closest-edge ring rounds' scorer."""
+    return _twin_udf(_point_edge_dist2_np, "point_edge_dist2")
 
 
 def cell_dist2_udf(geom: dict):
@@ -293,7 +306,8 @@ def cell_dist2_udf(geom: dict):
             out[m] = cell_dist2_np(*[c[m] for c in A], verts, norms)
         return pd.Series(out)
 
-    return score
+    # nondeterministic for the same reason as _twin_udf: one evaluation
+    return score.asNondeterministic()
 
 
 def pair_dist2_select_sql(inner: str, keep: str) -> str:

@@ -17,8 +17,10 @@ Each variant supplies only its target hooks:
   prefiltered probe of a registered-edge index (:func:`_edge_probe`);
 * ``target`` / ``target_cols`` — the per-query columns the scorer reads,
   shipped as a broadcast local query frame next to the acceptance ``r2``;
-* ``score(cand)`` — the exact squared-chord ``dist2``, evaluated natively
-  or by a bit-identical numpy twin of the engine's SQL fragment;
+* ``score(cand)`` — the exact squared-chord ``dist2``: natively for point
+  targets, and for every edge variant by a pandas UDF over a numpy twin
+  that is bit-identical to the engine's SQL fragment (functions/edgepair.py;
+  the SQL form costs seconds of Catalyst optimization per round);
 * ``collapse(scored)`` — optional per-group reduction ahead of the top-k
   window (the polyline variant's per-polyline min).
 
@@ -242,12 +244,17 @@ def _edge_probe(registered: DataFrame, edge_id_col: str):
         cand = candidate_match_kernel(
             registered, coverings, cell_col="ecell", two_way=True, prefilter=True
         ).drop("is_interior", "ecell")
-        # ONE exchange for the whole round: HashPartitioning(query_id)
-        # satisfies the clustered distribution of the (query_id, edge_id)
-        # dedup (subset key), a (query_id, group) collapse and the query_id
-        # window, so none of them adds its own shuffle (the plain
-        # dropDuplicates shuffled on the pair key and the window re-shuffled
-        # on query_id: two exchanges per round over the candidate set)
+        # HashPartitioning(query_id) satisfies the clustered distribution of
+        # the (query_id, edge_id) dedup (subset key), so the dedup adds no
+        # shuffle of its own (the plain dropDuplicates shuffled on the pair
+        # key).  Every edge variant scores with an ArrowEvalPython node,
+        # which does not pass this partitioning through, so the query_id
+        # window re-shuffles the scored rows: TWO hash exchanges per round
+        # (measured in the executed plan; pinned by
+        # tests/test_plan_shapes.py).  Scoring ahead of this exchange saves
+        # one, but a build that did so read ~500 MiB (+29%) more knn_probe
+        # peak RSS on a 4-core host: the scorer then shares its task, and
+        # the task's live Python workers, with the match kernel.
         return (
             cand.withColumnRenamed("region_id", "query_id")
             .repartition("query_id")
@@ -268,8 +275,15 @@ def _with_edge_xyz(df: DataFrame) -> DataFrame:
 
 def _point_edge_dist2(cand: DataFrame) -> DataFrame:
     """The ``score`` hook for point queries against edges: the closed-form
-    point-to-edge chord^2 from the same expression text the SQL oracle uses."""
-    return edgedist.with_dist2(_with_edge_xyz(cand)).drop("ax", "ay", "az", "bx", "by", "bz")
+    point-to-edge chord^2 by its numpy twin (edgepair._point_edge_dist2_np,
+    bit-identical to the SQL fragment the oracles use).  The endpoint xyz
+    stays in SQL so the trig path is unchanged.  The SQL form's 13 chained
+    intermediates cost 1.2-1.6 s of Catalyst optimization per ring round on
+    a 4-core host; the UDF is one ArrowEvalPython node."""
+    cols = ("qx", "qy", "qz", "ax", "ay", "az", "bx", "by", "bz")
+    return _with_edge_xyz(cand).withColumn(
+        "dist2", edgepair.point_edge_dist2_udf()(*cols)
+    ).drop(*cols[3:])
 
 
 def knn_join(
@@ -610,8 +624,8 @@ def knn_edges_join(
       union bound (whole-edge conservative cover, adaptive level);
     * the covering probe is TWO-WAY (registered cells may be coarser or
       finer than the query-cap covering cells);
-    * scoring is the closed-form point-to-edge chord^2 (functions.edgedist)
-      evaluated natively from the same expression text the SQL oracle uses.
+    * scoring is the closed-form point-to-edge chord^2 (functions.edgedist),
+      evaluated by its bit-identical numpy twin (see _point_edge_dist2).
 
     Options parity with the reference (s2closest_edge_query.d:199-272):
     ``max_distance_deg`` bounds results to that distance (within-distance
@@ -1212,7 +1226,10 @@ def furthest_points_join(
         tie_col=tie_col,
         queries_xyz=anti_xyz,
     )
-    return res.withColumn("dist2", F.lit(4.0) - F.col("dist2"))
+    out = res.withColumn("dist2", F.lit(4.0) - F.col("dist2"))
+    # a new frame: carry knn_join's decision record over
+    _memo(out, "_s2_ring", res._s2_ring)
+    return out
 
 
 def knn_edges_brute_force(

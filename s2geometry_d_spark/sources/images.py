@@ -122,10 +122,14 @@ def synth_images(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def synth_images_cached(spark: SparkSession, sf_dir: str, cache_root: str | None = None) -> DataFrame:
     """Materialized image table (parquet) — the fact table is *stored*, not
-    regenerated per query; generation happens once per sf_dir."""
+    regenerated per query; generation happens once per sf_dir.  The default
+    ``cache_root`` is ``.cache/images`` in the checkout holding this
+    package."""
     import os
 
-    cache_root = cache_root or "/root/repo/.cache/images"
+    if cache_root is None:
+        checkout = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+        cache_root = os.path.join(checkout, ".cache", "images")
     key = sf_dir.rstrip("/").replace("/", "_")
     path = os.path.join(cache_root, key)
     marker = os.path.join(path, "_SUCCESS")

@@ -116,6 +116,40 @@ class TestImages:
         pn = v.filter(F.col("fmt") == "png").select(F.min("psnr_db")).collect()[0][0]
         assert pn == 999.0
 
+    def test_default_cache_root_is_in_checkout(self, spark):
+        """Without ``cache_root`` the image table is stored under the
+        checkout that holds the package, wherever that checkout lives."""
+        import os
+        from urllib.parse import urlparse
+
+        import s2geometry_d_spark
+        from s2geometry_d_spark.sources.images import synth_images_cached
+
+        checkout = os.path.dirname(os.path.dirname(os.path.abspath(s2geometry_d_spark.__file__)))
+        root = os.path.join(checkout, ".cache", "images") + os.sep
+        files = synth_images_cached(spark, SF_DIR).inputFiles()
+        assert files
+        for f in files:
+            assert urlparse(f).path.startswith(root), (f, root)
+
+
+class TestReleaseCaches:
+    def test_release_caches_evicts_points_cache(self, spark, entrymod):
+        """release_caches(spark) unpersists and evicts every fixture cache
+        entry of this application, the points cache included, and counts
+        the points entries among the DataFrames it released."""
+        from s2geometry_d_spark.sources import tables
+
+        app = spark.sparkContext.applicationId
+        entrymod.release_caches(spark)
+        pts = tables.spatial_points(spark, SF_DIR)
+        bare = tables.spatial_points(spark, SF_DIR, with_cell=False)
+        pts.count()
+        assert pts.is_cached and bare.is_cached
+        assert entrymod.release_caches(spark) == 2
+        assert not [k for k in tables._POINTS_CACHE if k[0] == app]
+        assert not pts.is_cached and not bare.is_cached
+
 
 if __name__ == "__main__":
     pytest.main([__file__, "-x", "-q"])

@@ -276,3 +276,42 @@ def test_path_assembly_is_pure_catalyst(spark, entrymod):
     assert "ArrowEvalPython" not in plan, plan
     assert "BatchEvalPython" not in plan, plan
     assert "CartesianProduct" not in plan, plan
+
+
+def test_knn_edges_round_scores_after_probe_exchange(spark, entrymod, monkeypatch):
+    """One knn_edges_join ring round: dist2 comes from ONE point_edge_dist2
+    ArrowEvalPython above the probe's hashpartitioning(query_id) exchange,
+    not inside the probe's stage next to the match kernel (sharing that
+    task kept two Python workers alive and raised peak RSS ~29%).  The SQL
+    fragment (CASE WHEN nn > 1e-60 ...) whose 13 chained intermediates cost
+    seconds of Catalyst optimization per round is gone, and the round pays
+    exactly two hash exchanges: the probe's and the window's."""
+    from s2geometry_d_spark.operators import knn
+
+    rounds = []
+    rank = knn._rank
+
+    def spy(*args, **kwargs):
+        out = rank(*args, **kwargs)
+        rounds.append(out)
+        return out
+
+    monkeypatch.setattr(knn, "_rank", spy)
+    entrymod.queries()["knn_edges_join"](spark, SF_DIR)
+    assert rounds
+    plan = _plan(rounds[0])
+    lines = plan.splitlines()
+
+    def at(pred):
+        return [(i, len(ln) - len(ln.lstrip(" :|+-"))) for i, ln in enumerate(lines) if pred(ln)]
+
+    score = at(lambda ln: "ArrowEvalPython [point_edge_dist2(" in ln)
+    probe = at(lambda ln: "hashpartitioning(query_id" in ln and "REPARTITION_BY_COL" in ln)
+    match = at(lambda ln: "ArrowEvalPython [match(" in ln)
+    assert len(score) == 1 and len(probe) == 1 and len(match) == 1, plan
+    # top-down tree text: an ancestor prints earlier and less indented
+    (si, sd), (pi, pd_), (mi, md) = score[0], probe[0], match[0]
+    assert si < pi < mi and sd < pd_ < md, plan
+    assert "1.0E-60" not in plan and "CASE WHEN" not in plan, plan
+    hash_exchanges = [ln for ln in lines if "Exchange hashpartitioning" in ln]
+    assert len(hash_exchanges) == 2, plan

@@ -76,6 +76,13 @@ def test_knn_points_straggler_cutover_matches_bruteforce(spark, hint):
     assert res._s2_ring["cutover"] is (hint == "small")
     assert res._s2_ring["brute_rows"] == n_points
     assert "far1" in res._s2_ring["brute"]
+    # furthest_points_join answers from the antipode through knn_join and
+    # keeps its decision record (far1's antipode lies inside the cluster)
+    far = knn.furthest_points_join(
+        pts, [queries[-1]], k=4, n_points_hint=n_points, tie_col="point_id"
+    )
+    assert far._s2_ring["brute_rows"] == n_points
+    assert far._s2_ring["rounds"] >= 1 and far._s2_ring["brute"] == []
 
 
 def test_knn_table_join_closed_gate_keeps_ringing(spark, monkeypatch):
