@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from s2geometry_d_spark.functions import kernels
+from s2geometry_d_spark.functions.localdf import local_df
 from s2geometry_d_spark.operators import dedup, knn, similarity, text, tiling
 from s2geometry_d_spark.operators.spatial_join import (
     points_in_regions,
@@ -262,7 +263,7 @@ def _q_pip_text_index(spark, sf_dir):
             (rid, "# # " + tf.polygon_to_string(poly))
             for rid, poly in demo.many_poly_regions()
         ]
-        src = spark.createDataFrame(rows, ["index_id", "text"])
+        src = local_df(spark, rows, ["index_id", "text"])
         idx = unified_index_from_text(src).persist()
         jl = (
             idx.filter(F.col("dim") == 2).agg(F.min("cov_level")).collect()[0][0]
@@ -1523,8 +1524,8 @@ def _q_assemble_polylines(spark, sf_dir):
     with a recursive walk over the same edge literals."""
     from s2geometry_d_spark.operators import chains
 
-    df = spark.createDataFrame(
-        demo.chain_fixture_edges(), "edge_id long, src long, dst long"
+    df = local_df(
+        spark, demo.chain_fixture_edges(), "edge_id long, src long, dst long"
     )
     return chains.assemble_polylines(df)
 
@@ -1600,9 +1601,7 @@ def _q_assemble_walks(spark, sf_dir):
     from s2geometry_d_spark.operators import chains
 
     edges = [(g, *t) for g in (0, 1) for t in demo.chain_fixture_edges()]
-    df = spark.createDataFrame(
-        edges, "graph_id int, edge_id long, src long, dst long"
-    )
+    df = local_df(spark, edges, "graph_id int, edge_id long, src long, dst long")
     return chains.assemble_walks_per_graph(df)
 
 

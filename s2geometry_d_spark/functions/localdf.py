@@ -1,172 +1,38 @@
-"""LocalRelation-backed DataFrames for small driver-side row lists.
+"""Small driver-side row lists as LocalRelation DataFrames, built via Arrow.
 
-``spark.createDataFrame(rows)`` over a plain Python list builds a PICKLED
-RDD split into ``defaultParallelism`` slices — so a 40-row broadcast side
-(a ring round's query frame, a covering-index mapping, the assembled
-result of an iterative search) costs a 32-task job whose every task is a
-Python-worker round-trip (~150 ms each; measured ~0.4 s wall per frame,
-zero input bytes).  Each kNN ring round pays that twice, and every
-consumer of an assembled result pays it again.
-
-``local_df`` instead renders the rows as a SQL ``VALUES`` list, which
-Catalyst parses straight into a LocalRelation: the physical plan is
-LocalTableScan — no RDD, no Python workers, no job at broadcast-build
-time.  Doubles are emitted as ``CAST('<repr>' AS DOUBLE)``: ``repr`` of a
-Python float is the shortest string that round-trips to the same IEEE-754
-value and Spark's cast parses with ``Double.parseDouble`` (correctly
-rounded), so the stored bits are identical to what the pickled path
-produces — verified bit-for-bit across magnitude extremes in
-tests/test_r06_optimizations.py.
-
-Rows whose types the VALUES renderer does not cover (arrays, maps,
-datetimes, Decimals) fall back to ``createDataFrame`` over an RDD with a
-row-count-proportional slice count (never the full default parallelism
-for a handful of rows).  Behaviour — schema, values, nullability — is
-identical either way; only the physical encoding of the local data
-changes.
+``spark.createDataFrame(rows)`` over a plain Python list pickles the rows
+into an RDD, so a 40-row broadcast side (a ring round's query frame, a
+covering map, an assembled top-k) costs a Python-worker job.  ``local_df``
+transposes the rows into a ``pyarrow.Table`` and hands that to
+``createDataFrame``, which plans it as a bare LocalTableScan: no RDD, no
+job.  Arrow also keeps the frame exactly as given — there is no SQL text
+to parse or substitute into, doubles travel as their raw IEEE bits, an
+explicit schema (nullability included) is kept verbatim, and an integer
+that does not fit its field raises instead of wrapping.
 """
 
 from __future__ import annotations
 
-import math
-
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-# Above this many literal cells the parse + analysis of the generated SQL
-# and the plan-embedded LocalRelation rows start costing more than the RDD
-# path's task overhead (measured on the 2500-row knn_table_join assembly)
-# — fall back to the RDD path with a row-proportional slice count.
-_MAX_CELLS = 2_048
-
-_ATOMIC = (T.StringType, T.BooleanType, T.DoubleType, T.FloatType,
-           T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-
-_SQL_NAME = {
-    T.StringType: "STRING",
-    T.BooleanType: "BOOLEAN",
-    T.DoubleType: "DOUBLE",
-    T.FloatType: "FLOAT",
-    T.LongType: "BIGINT",
-    T.IntegerType: "INT",
-    T.ShortType: "SMALLINT",
-    T.ByteType: "TINYINT",
-}
-
-
-def _infer_field(name: str, values: list) -> T.StructField | None:
-    """Mirror createDataFrame's inference for the types we render:
-    bool -> boolean, int -> bigint, float -> double, str -> string."""
-    t = None
-    for v in values:
-        if v is None:
-            continue
-        # bool first: it is a subclass of int
-        if isinstance(v, bool):
-            c = T.BooleanType()
-        elif isinstance(v, int):
-            c = T.LongType()
-        elif isinstance(v, float):
-            c = T.DoubleType()
-        elif isinstance(v, str):
-            c = T.StringType()
-        else:
-            return None
-        if t is None:
-            t = c
-        elif type(t) is not type(c):
-            # mixed int/float promotes to double like the pickled path;
-            # anything else: let createDataFrame decide
-            if {type(t), type(c)} == {T.LongType, T.DoubleType}:
-                t = T.DoubleType()
-            else:
-                return None
-    if t is None:
-        return None  # all-None column: no basis to pick a type
-    return T.StructField(name, t, True)
-
-
-def _render(v, dt: T.DataType) -> str | None:
-    if v is None:
-        return f"CAST(NULL AS {_SQL_NAME[type(dt)]})"
-    if isinstance(dt, T.StringType):
-        if not isinstance(v, str):
-            return None
-        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-    if isinstance(dt, T.BooleanType):
-        if not isinstance(v, bool):
-            return None
-        return "true" if v else "false"
-    if isinstance(dt, (T.DoubleType, T.FloatType)):
-        if isinstance(v, bool) or not isinstance(v, (int, float)):
-            return None
-        f = float(v)
-        if math.isnan(f):
-            lit = "NaN"
-        elif math.isinf(f):
-            lit = "Infinity" if f > 0 else "-Infinity"
-        else:
-            lit = repr(f)
-        return f"CAST('{lit}' AS {_SQL_NAME[type(dt)]})"
-    # integral
-    if isinstance(v, bool) or not isinstance(v, int):
-        return None
-    return f"CAST({v} AS {_SQL_NAME[type(dt)]})"
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:
-    """Drop-in for ``spark.createDataFrame(rows, schema)`` on SMALL
-    driver-side lists: same schema and values, LocalRelation physical plan
-    (see module docstring).  ``schema`` is a list of column names (types
-    inferred as createDataFrame would) or a StructType.  Falls back to
-    createDataFrame — with a row-proportional slice count — whenever the
-    rows or schema are outside the rendered subset."""
-    rows = rows if isinstance(rows, list) else list(rows)
+    """``spark.createDataFrame(rows, schema)`` for small driver-side lists.
+    ``schema`` is a StructType, a DDL string, or a list of column names
+    whose types Arrow infers per column over all rows (int -> bigint,
+    float or mixed int/float -> double, str, bool)."""
+    rows = list(rows)
     if isinstance(schema, str):
-        # DDL string: delegate parsing to Spark, then render as usual
-        schema = T._parse_datatype_string(schema)
-        if not isinstance(schema, T.StructType):
-            schema = T.StructType([T.StructField("value", schema)])
+        schema = T.StructType.fromDDL(schema)
+    names = schema.names if isinstance(schema, T.StructType) else list(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(names)
     if isinstance(schema, T.StructType):
-        fields = list(schema)
-        explicit = schema
+        arrow = to_arrow_schema(schema)
+        arrays = [pa.array(c, type=f.type) for c, f in zip(cols, arrow)]
+        table = pa.Table.from_arrays(arrays, schema=arrow)
     else:
-        cols = list(schema)
-        explicit = None
-        fields = None
-        if rows:
-            per_col = list(zip(*rows))
-            if len(per_col) == len(cols):
-                maybe = [_infer_field(c, list(v)) for c, v in zip(cols, per_col)]
-                if all(f is not None for f in maybe):
-                    fields = maybe
-    ok = (
-        fields is not None
-        and rows
-        and len(rows) * len(fields) <= _MAX_CELLS
-        and all(isinstance(f.dataType, _ATOMIC) for f in fields)
-    )
-    if ok:
-        tuples = []
-        for r in rows:
-            cells = [_render(v, f.dataType) for v, f in zip(r, fields)]
-            if len(cells) != len(fields) or any(c is None for c in cells):
-                ok = False
-                break
-            tuples.append("(" + ",".join(cells) + ")")
-    if ok:
-        names = ",".join(f"`{f.name}`" for f in fields)
-        sql = f"SELECT * FROM (VALUES {','.join(tuples)}) AS __local({names})"
-        return spark.sql(sql)
-    # fallback: the pickled-RDD path, but never 32 slices for tiny lists
-    n_slices = max(1, min(
-        spark.sparkContext.defaultParallelism, (len(rows) + 1023) // 1024
-    ))
-    target = explicit if explicit is not None else schema
-    if not rows:
-        if explicit is not None:
-            return spark.createDataFrame([], explicit)
-        return spark.createDataFrame(rows, schema)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, n_slices), target
-    )
+        table = pa.Table.from_arrays([pa.array(c) for c in cols], names=names)
+    return spark.createDataFrame(table, schema)

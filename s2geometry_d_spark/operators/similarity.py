@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.localdf import local_df
+
 ROUND_DIGITS = 6
 
 
@@ -299,7 +301,7 @@ def cosine_topk_ivf(
         top = np.argsort(-(C @ v))[:nprobe]
         probe_rows.extend((int(r.vec_id), int(c)) for c in top)
     spark = embeddings.sparkSession
-    probes = spark.createDataFrame(probe_rows, ["query_id", "cluster"])
+    probes = local_df(spark, probe_rows, ["query_id", "cluster"])
 
     q = embeddings.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")

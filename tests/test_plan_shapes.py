@@ -285,7 +285,8 @@ def test_knn_edges_round_scores_after_probe_exchange(spark, entrymod, monkeypatc
     task kept two Python workers alive and raised peak RSS ~29%).  The SQL
     fragment (CASE WHEN nn > 1e-60 ...) whose 13 chained intermediates cost
     seconds of Catalyst optimization per round is gone, and the round pays
-    exactly two hash exchanges: the probe's and the window's."""
+    exactly two hash exchanges: the probe's and the window's.  The round's
+    broadcast query side is a LocalTableScan; no pickled-RDD scan appears."""
     from s2geometry_d_spark.operators import knn
 
     rounds = []
@@ -315,3 +316,9 @@ def test_knn_edges_round_scores_after_probe_exchange(spark, entrymod, monkeypatc
     assert "1.0E-60" not in plan and "CASE WHEN" not in plan, plan
     hash_exchanges = [ln for ln in lines if "Exchange hashpartitioning" in ln]
     assert len(hash_exchanges) == 2, plan
+    # the round's broadcast query side is a driver-built local relation
+    qside = [
+        i for i, ln in enumerate(lines) if "LocalTableScan [query_id#" in ln
+    ]
+    assert len(qside) == 1 and "BroadcastExchange" in lines[qside[0] - 1], plan
+    assert "Scan ExistingRDD" not in plan, plan

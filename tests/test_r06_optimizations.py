@@ -3,7 +3,9 @@ their contracts — straggler cutover == more ring rounds, memoized coverings
 == the uncached coverer, and the streaming chain retry guard.
 """
 
+import contextlib
 import math
+import struct
 
 import numpy as np
 import pytest
@@ -194,51 +196,110 @@ def test_read_live_chains_tolerates_missing_tombstones(spark, tmp_path):
     assert rows == [(1, 0, 10), (1, 1, 11)]
 
 
-# --- local_df: LocalRelation-backed small driver-side frames ---------------
+# --- local_df: Arrow-built LocalRelation small driver-side frames ---------
+
+
+def _local_plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _bits(x):
+    return struct.pack("<d", x)
+
+
+@contextlib.contextmanager
+def _conf(spark, key, value):
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
 
 
 def test_local_df_bit_exact_and_local_plan(spark):
     """local_df must produce the same schema and BIT-IDENTICAL values as
     createDataFrame while planning as a LocalTableScan (no RDD, no Python
-    workers at broadcast-build time)."""
-    import struct
+    workers at broadcast-build time) — for a name list (types inferred over
+    ALL rows, so leading None rows are fine) and for an explicit
+    StructType, whose nullability is kept verbatim."""
+    from pyspark.sql import types as T
 
     from s2geometry_d_spark.functions.localdf import local_df
 
+    names = ["query_id", "qx", "qy", "n", "flag"]
     rows = [
         (f"q{i}", v, -v, i, bool(i % 2))
         for i, v in enumerate(
             [0.0, 1e-300, -1e300, 0.1, 2.0 / 3.0, 1.7976931348623157e308, 5e-324]
         )
     ]
-    ref = spark.createDataFrame(rows, ["query_id", "qx", "qy", "n", "flag"])
-    got = local_df(spark, rows, ["query_id", "qx", "qy", "n", "flag"])
-    assert [f.dataType for f in got.schema] == [f.dataType for f in ref.schema]
-    assert "LocalTableScan" in got._jdf.queryExecution().executedPlan().toString()
-    a = sorted(ref.collect(), key=lambda r: r.query_id)
-    b = sorted(got.collect(), key=lambda r: r.query_id)
-    for ra, rb in zip(a, b):
-        assert ra.query_id == rb.query_id and ra.n == rb.n and ra.flag == rb.flag
-        assert struct.pack("<d", ra.qx) == struct.pack("<d", rb.qx)
-        assert struct.pack("<d", ra.qy) == struct.pack("<d", rb.qy)
+    strict = T.StructType(
+        [
+            T.StructField("query_id", T.StringType(), False),
+            T.StructField("qx", T.DoubleType(), False),
+            T.StructField("qy", T.DoubleType(), True),
+            T.StructField("n", T.LongType(), False),
+            T.StructField("flag", T.BooleanType(), False),
+        ]
+    )
+    # 500 leading None rows: types must come from all rows, not a sample
+    first_none = [(f"n{i:03d}", None, None, None, None) for i in range(500)] + rows
+    for data, schema in [(rows, names), (rows, strict), (first_none, names)]:
+        ref = spark.createDataFrame(data, schema)
+        got = local_df(spark, data, schema)
+        assert got.schema == ref.schema
+        if isinstance(schema, T.StructType):
+            assert got.schema == schema
+        plan = _local_plan(got)
+        assert "LocalTableScan" in plan and "Scan ExistingRDD" not in plan, plan
+        a = sorted(ref.collect(), key=lambda r: r.query_id)
+        b = sorted(got.collect(), key=lambda r: r.query_id)
+        assert len(a) == len(b) == len(data)
+        for ra, rb in zip(a, b):
+            assert ra.query_id == rb.query_id and ra.n == rb.n and ra.flag == rb.flag
+            for x, y in ((ra.qx, rb.qx), (ra.qy, rb.qy)):
+                assert (x is None and y is None) or _bits(x) == _bits(y)
 
 
 def test_local_df_nulls_specials_and_escaping(spark):
+    """Strings are data, never SQL: quotes, backslashes and ``${...}`` come
+    back verbatim, also under the escaped-string-literals parser mode."""
     from s2geometry_d_spark.functions.localdf import local_df
 
     rows = [
         ("it's \\ tricky", None, float("nan")),
         (None, 7, float("inf")),
+        ("${x}", 8, float("-inf")),
+        ("${x}'\\\"", 9, 0.5),
     ]
-    got = local_df(spark, rows, ["s", "n", "x"]).collect()
-    got.sort(key=lambda r: (r.s is None, r.s or ""))
-    assert got[0].s == "it's \\ tricky" and got[0].n is None and math.isnan(got[0].x)
-    assert got[1].s is None and got[1].n == 7 and got[1].x == float("inf")
+    for mode in ("false", "true"):
+        with _conf(spark, "spark.sql.parser.escapedStringLiterals", mode):
+            got = local_df(spark, rows, ["s", "n", "x"]).collect()
+        got.sort(key=lambda r: r.n if r.n is not None else -1)
+        assert got[0].s == "it's \\ tricky" and got[0].n is None
+        assert math.isnan(got[0].x)
+        assert got[1].s is None and got[1].n == 7 and got[1].x == float("inf")
+        assert got[2].s == "${x}" and got[2].x == float("-inf")
+        assert got[3].s == "${x}'\\\"" and got[3].x == 0.5
 
 
-def test_local_df_falls_back_for_arrays(spark):
-    """Non-atomic schemas take the createDataFrame path (few slices), with
-    identical results."""
+def test_local_df_rejects_out_of_range_int(spark):
+    """An int that does not fit its IntegerType field raises — with ANSI
+    casts off too, where a rendered CAST would have wrapped silently."""
+    from s2geometry_d_spark.functions.localdf import local_df
+
+    with _conf(spark, "spark.sql.ansi.enabled", "false"):
+        with pytest.raises(ValueError):
+            local_df(spark, [(1,), (2**40,)], "n int").collect()
+
+
+def test_local_df_arrays_plan_as_local_table_scan(spark):
+    """Array-typed frames (polygon loops, overlay inputs) take the same
+    Arrow path: a LocalTableScan with the schema and values as given."""
     from pyspark.sql import types as T
 
     from s2geometry_d_spark.functions.localdf import local_df
@@ -247,13 +308,15 @@ def test_local_df_falls_back_for_arrays(spark):
         [
             T.StructField("id", T.StringType()),
             T.StructField("xs", T.ArrayType(T.DoubleType())),
+            T.StructField("loops", T.ArrayType(T.ArrayType(T.DoubleType()))),
         ]
     )
-    rows = [("a", [1.0, 2.0]), ("b", [3.0])]
+    rows = [("a", [1.0, 2.0], [[0.1, 5e-324], [3.0]]), ("b", [3.0], [])]
     got = local_df(spark, rows, schema)
     assert got.schema == schema
-    assert sorted((r.id, tuple(r.xs)) for r in got.collect()) == [
-        ("a", (1.0, 2.0)),
-        ("b", (3.0,)),
+    plan = _local_plan(got)
+    assert "LocalTableScan" in plan and "Scan ExistingRDD" not in plan, plan
+    assert sorted((r.id, r.xs, r.loops) for r in got.collect()) == [
+        ("a", [1.0, 2.0], [[0.1, 5e-324], [3.0]]),
+        ("b", [3.0], []),
     ]
-    assert got.rdd.getNumPartitions() == 1
