@@ -35,22 +35,6 @@ def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tables.spatial_points(spark, sf_dir)
 
 
-_NPOINTS_CACHE: dict = {}
-
-
-def _n_points(spark: SparkSession, sf_dir: str) -> int:
-    """Session-memoized row count of the points fixture (== orders rows):
-    a size HINT consumed by the kNN seed formulas.  Every kNN-family query
-    paid a count job per evaluation for a number that is constant per
-    (session, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    n = _NPOINTS_CACHE.get(key)
-    if n is None:
-        n = _points(spark, sf_dir).count()
-        _NPOINTS_CACHE[key] = n
-    return n
-
-
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
@@ -132,9 +116,6 @@ def release_caches(spark: SparkSession | None = None) -> int:
     round-3).  Pass a SparkSession to release only that application's
     entries.  Returns the number of DataFrames unpersisted."""
     app_id = spark.sparkContext.applicationId if spark is not None else None
-    for key in list(_NPOINTS_CACHE):
-        if app_id is None or key[0] == app_id:
-            _NPOINTS_CACHE.pop(key)
     released = 0
     for cache in (
         tables._POINTS_CACHE,
@@ -459,10 +440,7 @@ def _q_spatial_antijoin(spark, sf_dir):
 
 def _q_knn(spark, sf_dir):
     pts = _points(spark, sf_dir)
-    n = _n_points(spark, sf_dir)
-    res = knn.knn_join(
-        pts, demo.knn_queries(), k=5, n_points_hint=n, tie_col="point_id"
-    )
+    res = knn.knn_join(pts, demo.knn_queries(), k=5, tie_col="point_id")
     return res.select("query_id", "rank", "point_id")
 
 
@@ -471,12 +449,10 @@ def _q_knn_maxdist(spark, sf_dir):
     (s2closest_point_query.d:58-97 setMaxDistance): the ring never grows
     past the limit and fewer than k results there is a complete answer."""
     pts = _points(spark, sf_dir)
-    n = _n_points(spark, sf_dir)
     res = knn.knn_join(
         pts,
         demo.knn_queries(),
         k=5,
-        n_points_hint=n,
         tie_col="point_id",
         max_distance_deg=1.0,
     )
@@ -492,12 +468,10 @@ def _q_knn_maxerror(spark, sf_dir):
     option end-to-end; the genuinely-approximate regime is covered by the
     tolerance flip in tests/test_knn_options.py."""
     pts = _points(spark, sf_dir)
-    n = _n_points(spark, sf_dir)
     res = knn.knn_join(
         pts,
         demo.knn_queries(),
         k=5,
-        n_points_hint=n,
         tie_col="point_id",
         max_error_deg=0.02,
     )
@@ -514,12 +488,10 @@ def _q_knn_region(spark, sf_dir):
 
     _, la, ln, r = demo.CAPS[0]
     pts = _points(spark, sf_dir)
-    n = _n_points(spark, sf_dir)
     res = knn.knn_join(
         pts,
         demo.knn_queries(),
         k=5,
-        n_points_hint=n,
         tie_col="point_id",
         region=Cap.from_latlng_radius(la, ln, r),
     )
@@ -529,13 +501,10 @@ def _q_knn_region(spark, sf_dir):
 def _q_knn_edges(spark, sf_dir):
     """Closest-edge kNN (the reference's flagship query class)."""
     e = _edges(spark, sf_dir)
-    # edge count = orders count - 1; parquet metadata count is free
-    n = _n_points(spark, sf_dir) - 1
     res = knn.knn_edges_join(
         e,
         demo.knn_queries(),
         k=5,
-        n_edges_hint=n,
         registered_df=_edges_registered(spark, sf_dir),
     )
     return res.select("query_id", "rank", "edge_id")
@@ -556,8 +525,7 @@ def _q_knn_unified(spark, sf_dir):
         idx = unified_shape_index(edges_df=_edges(spark, sf_dir)).persist()
         cached = _POLY_INDEX_CACHE[key] = (idx, None)
     idx, _ = cached
-    n = _n_points(spark, sf_dir) - 1
-    res = knn_edges_unified(idx, demo.knn_queries(), k=5, n_edges_hint=n)
+    res = knn_edges_unified(idx, demo.knn_queries(), k=5)
     return res.select(
         "query_id", "rank", F.col("edge_id").cast("long").alias("edge_id")
     )
@@ -606,12 +574,10 @@ def _q_nearest_polyline(spark, sf_dir):
     from s2geometry_d_spark.operators.polyline_join import nearest_polyline_join
 
     pe = _polyline_edges(spark, sf_dir)
-    n_pl = (_n_points(spark, sf_dir) - 1) // _POLYLINE_CHAIN + 1
     res = nearest_polyline_join(
         pe,
         demo.knn_queries(),
         k=3,
-        n_polylines_hint=n_pl,
         registered_df=_polyline_edges_registered(spark, sf_dir),
     )
     return res.select(
@@ -633,7 +599,6 @@ def _q_polyline_within_distance(spark, sf_dir):
         pe,
         demo.knn_queries(),
         k=5,
-        n_polylines_hint=1000,
         registered_df=_polyline_edges_registered(spark, sf_dir),
         max_distance_deg=_PL_WITHIN_DEG,
     )
@@ -647,12 +612,10 @@ def _q_knn_edges_maxdist(spark, sf_dir):
     parity, s2closest_edge_query.d:199-272): fewer than k results at the
     limit is a complete answer."""
     e = _edges(spark, sf_dir)
-    n = _n_points(spark, sf_dir) - 1
     res = knn.knn_edges_join(
         e,
         demo.knn_queries(),
         k=5,
-        n_edges_hint=n,
         max_distance_deg=1.0,
         registered_df=_edges_registered(spark, sf_dir),
     )
@@ -668,12 +631,10 @@ def _q_knn_edges_maxerror(spark, sf_dir):
     brute-force tolerance flip in tests/test_knn_options.py covers the
     genuinely-approximate regime)."""
     e = _edges(spark, sf_dir)
-    n = _n_points(spark, sf_dir) - 1
     res = knn.knn_edges_join(
         e,
         demo.knn_queries(),
         k=5,
-        n_edges_hint=n,
         max_error_deg=0.02,
         registered_df=_edges_registered(spark, sf_dir),
     )
@@ -684,10 +645,7 @@ def _q_furthest(spark, sf_dir):
     """k furthest points per query (max-distance family) via the exact
     antipodal reduction chord2(p,q) = 4 - chord2(p,-q)."""
     pts = _points(spark, sf_dir)
-    n = _n_points(spark, sf_dir)
-    res = knn.furthest_points_join(
-        pts, demo.knn_queries(), k=5, n_points_hint=n, tie_col="point_id"
-    )
+    res = knn.furthest_points_join(pts, demo.knn_queries(), k=5, tie_col="point_id")
     return res.select("query_id", "rank", "point_id")
 
 

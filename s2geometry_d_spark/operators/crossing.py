@@ -203,13 +203,13 @@ def crossing_pairs_self(
     table size (hot cells are bounded by the registration levels; salt the
     cell key if a single cell dominates)."""
     from ..functions import edgedist, kernels
-    from .knn import register_edges
+    from .knn import register_edges, registered_stats
 
     registered = (
         registered_df if registered_df is not None else register_edges(edges_df)
     )
     reg = _reg_with_level(registered, edge_id_col)
-    levels = _distinct_levels(reg, cache_on=registered)
+    levels = registered_stats(registered)["levels"]
     if not levels:
         return (
             edges_df.select(F.col(edge_id_col).alias("id_a"))
@@ -237,7 +237,8 @@ def crossing_pairs_self(
     # broadcast the own-cell side when the registered table is small: the
     # frames are derived (filters + explode over a persisted table), so
     # the planner has no usable size estimate and falls back to a shuffle
-    # join of both sides; the registered row count is exact and cached.
+    # join of both sides; the registered row count (registered_stats) is
+    # exact and cached.
     # Above the limit both sides shuffle as before (the 100 TB path).
     a_side = _bc_small(a_side, registered)
 
@@ -280,44 +281,25 @@ BROADCAST_REG_ROWS = 2_000_000
 
 def _bc_small(side: DataFrame, registered: DataFrame) -> DataFrame:
     """Mark ``side`` for broadcast iff ``registered`` (the persisted table
-    it derives from) is small; the exact row count is cached as an
-    attribute so repeat sweeps skip the count job."""
-    n = getattr(registered, "_s2_reg_rows", None)
-    if n is None:
-        n = registered.count()
-        try:
-            registered._s2_reg_rows = n
-        except AttributeError:
-            pass
+    it derives from) is small, by its memoized ``registered_stats`` row
+    count."""
+    from .knn import registered_stats
+
+    n = registered_stats(registered)["rows"]
     return F.broadcast(side) if n <= BROADCAST_REG_ROWS else side
 
 
 def _reg_with_level(registered: DataFrame, id_col: str) -> DataFrame:
-    lvl = F.lit(30) - (
-        F.log2(F.col("ecell").bitwiseAND(-F.col("ecell")).cast("double"))
-        / F.lit(2.0)
-    ).cast("int")
-    return registered.select(id_col, "ecell").withColumn("_lvl", lvl)
+    from .knn import _cell_level
+
+    return registered.select(id_col, "ecell").withColumn("_lvl", _cell_level("ecell"))
 
 
-def _distinct_levels(reg: DataFrame, cache_on: DataFrame | None = None) -> list[int]:
-    """Distinct registration levels of ``reg``; a pure function of the
-    underlying registered table, so when ``cache_on`` (that persisted,
-    session-shared table) is given the result is memoized as an attribute —
-    repeat sweep evaluations skip the distinct+collect job entirely (same
-    trick as ``_s2_reg_rows``).  Pass cache_on=None for derived/pruned
-    frames whose level set is not a function of the shared table alone."""
-    if cache_on is not None:
-        cached = getattr(cache_on, "_s2_reg_levels", None)
-        if cached is not None:
-            return cached
-    levels = sorted(int(r["_lvl"]) for r in reg.select("_lvl").distinct().collect())
-    if cache_on is not None:
-        try:
-            cache_on._s2_reg_levels = levels
-        except AttributeError:
-            pass
-    return levels
+def _distinct_levels(reg: DataFrame) -> list[int]:
+    """Distinct registration levels of a derived (pruned) ``reg`` frame,
+    whose level set is not a function of the shared registered table —
+    that table's own levels come from ``registered_stats``."""
+    return sorted(int(r["_lvl"]) for r in reg.select("_lvl").distinct().collect())
 
 
 def _ancestor_keys(reg: DataFrame, id_col: str, out_id: str, levels: list[int]) -> DataFrame:
@@ -378,13 +360,13 @@ def crossing_pairs_join(
     Use when A is small relative to B (a micro-batch vs the accumulated
     index); leave False for two comparable tables."""
     from ..functions import kernels
-    from .knn import register_edges
+    from .knn import register_edges, registered_stats
 
     a_registered = a_registered if a_registered is not None else register_edges(a_edges)
     b_registered = b_registered if b_registered is not None else register_edges(b_edges)
     a_reg = _reg_with_level(a_registered, a_id_col)
     b_reg_full = _reg_with_level(b_registered, b_id_col)
-    a_levels = _distinct_levels(a_reg, cache_on=a_registered)
+    a_levels = registered_stats(a_registered)["levels"]
     if not a_levels:
         return (
             a_edges.select(F.col(a_id_col).alias("id_a"))
@@ -399,8 +381,7 @@ def crossing_pairs_join(
         ).distinct()
         # coarser-than-l0 index cells are ancestors OF the batch cells:
         # enumerate S's ancestors at every coarse level the index holds
-        b_levels_all = _distinct_levels(b_reg_full, cache_on=b_registered)
-        coarse = [l for l in b_levels_all if l < l0]
+        coarse = [l for l in registered_stats(b_registered)["levels"] if l < l0]
         s_plus = s_keys
         for l in coarse:
             s_plus = s_plus.unionByName(
@@ -416,22 +397,21 @@ def crossing_pairs_join(
             .drop("_pk")
         )
 
-    # the pruned frame's level set is input-dependent — only memoize when
-    # b_reg IS the full registered view
-    b_levels = _distinct_levels(
-        b_reg, cache_on=None if prune_b_by_a else b_registered
+    # the pruned frame's level set is input-dependent: collect it directly
+    b_levels = (
+        _distinct_levels(b_reg)
+        if prune_b_by_a
+        else registered_stats(b_registered)["levels"]
     )
 
     # own-cell sides broadcast when their registered tables are small (see
     # crossing_pairs_self/_bc_small): derived frames carry no size
     # estimate, so the planner otherwise shuffles both directions
-    a_own_src = a_registered
-    b_own_src = b_registered
     dir1 = _bc_small(
         a_reg.select(
             F.col("ecell").alias("_key"), F.col(a_id_col).alias("id_a")
         ),
-        a_own_src,
+        a_registered,
     ).join(_ancestor_keys(b_reg, b_id_col, "id_b", a_levels), "_key")
     cand = dir1.select("id_a", "id_b")
     if b_levels:
@@ -440,7 +420,7 @@ def crossing_pairs_join(
                 b_reg.select(
                     F.col("ecell").alias("_key"), F.col(b_id_col).alias("id_b")
                 ),
-                b_own_src,
+                b_registered,
             ),
             "_key",
         )

@@ -36,13 +36,16 @@ antipodal gap are never candidates.
 
 Straggler cutover, fail closed: once at most max(2, n/8) queries remain
 they go straight to that brute probe — the same exact answer as more
-rings, minus their fixed job overhead — but only when the caller passed an
-upper bound ``brute_rows`` on the rows the probe scans and it is at most
-``_BRUTE_SCAN_ROWS``.  An unknown size keeps ringing.
+rings, minus their fixed job overhead — but only when the probe's own
+table, counted once by :func:`frame_rows`, holds at most
+``_BRUTE_SCAN_ROWS`` rows.  A larger table keeps ringing.  Sizes are
+measured, never passed in: the first ring is seeded from the same count
+(the reference likewise reads its index's own size, maxBruteForceIndexSize).
 
 Every result frame carries its decision record as ``_s2_ring``: rounds
 run, the ids of the brute-probed queries, whether the cutover fired and
-the ``brute_rows`` it was judged on.  :func:`knn_edges_join_tables` keeps
+the ``brute_rows`` it was judged on (None when no cutover was due, so
+nothing was counted).  :func:`knn_edges_join_tables` keeps
 its own loop (its pending set is a DataFrame) under the same gate, and
 records the straggler count as ``n_brute`` instead of ids.
 
@@ -73,6 +76,9 @@ from .spatial_join import (
 # the largest table the straggler cutover may scan in full
 _BRUTE_SCAN_ROWS = 10_000_000
 
+# first ring (deg) of the edge-, cell- and table-target variants
+_TARGET_SEED_DEG = 1.0
+
 
 def _chord2_to_query_expr(lat_col: str, lng_col: str):
     lat_r = F.radians(F.col(lat_col))
@@ -90,12 +96,35 @@ def _max_ring(max_distance_deg: float | None) -> float:
     return 170.0 if max_distance_deg is None else min(max_distance_deg, 170.0)
 
 
+def _cell_level(col: str):
+    """Level of the signed cell id in ``col``, from its lowest set bit."""
+    return F.lit(30) - (
+        F.log2(F.col(col).bitwiseAND(-F.col(col)).cast("double")) / F.lit(2.0)
+    ).cast("int")
+
+
 def _memo(df: DataFrame, attr: str, value):
     try:
         setattr(df, attr, value)
     except AttributeError:
         pass
     return value
+
+
+def frame_rows(df: DataFrame, key: str | None = None) -> int:
+    """Exact ``count(*)`` of ``df`` — or ``count(distinct key)`` — measured
+    once per frame object and memoized on it.  The session's fixtures and
+    registered indexes are persisted, shared frames, so every later reader
+    of a size gets it for free."""
+    attr = "_s2_rows" if key is None else f"_s2_rows_{key}"
+    n = getattr(df, attr, None)
+    if n is None:
+        if key is None:
+            n = df.count()
+        else:
+            n = df.agg(F.count_distinct(key)).collect()[0][0]
+        n = _memo(df, attr, int(n))
+    return n
 
 
 def _rank(scored: DataFrame, k: int, tie_col: str, collapse=None) -> DataFrame:
@@ -118,7 +147,6 @@ def _ring_search(
     score,
     tie_col: str,
     brute_df: DataFrame,
-    brute_rows: int | None,
     max_rounds: int,
     max_distance_deg: float | None = None,
     max_error_deg: float = 0.0,
@@ -141,6 +169,7 @@ def _ring_search(
     brute: list = []
     rounds = 0
     cutover = False
+    brute_rows = None
 
     for _ in range(max_rounds):
         if not pending:
@@ -194,18 +223,16 @@ def _ring_search(
         # straggler cutover: a leftover handful is cheaper as one exact
         # brute probe than as more ring rounds of fixed job overhead (the
         # brute branch below is the SAME code the post-max_rounds path
-        # runs, so results are identical).  Fail closed: only a KNOWN,
-        # scan-affordable probe size cuts over, so a 100 TB table — or one
-        # whose size nobody stated — keeps ringing.
-        if (
-            pending
-            and brute_rows is not None
-            and brute_rows <= _BRUTE_SCAN_ROWS
-            and len(pending) <= max(2, len(ids) // 8)
-        ):
-            cutover = True
-            brute.extend(pending)
-            pending.clear()
+        # runs, so results are identical).  Fail closed: only a
+        # scan-affordable probe table cuts over, so a 100 TB table keeps
+        # ringing.  The count comes last: it is taken only once a cutover
+        # is otherwise due.
+        if pending and len(pending) <= max(2, len(ids) // 8):
+            brute_rows = frame_rows(brute_df)
+            if brute_rows <= _BRUTE_SCAN_ROWS:
+                cutover = True
+                brute.extend(pending)
+                pending.clear()
 
     brute = [*pending, *brute]
     results = local_df(spark, done_rows, topk_schema) if topk_schema is not None else None
@@ -293,9 +320,7 @@ def knn_join(
     lat_col: str = "lat",
     lng_col: str = "lng",
     cell_col: str = "cell_id",
-    initial_radius_deg: float | None = None,
     max_rounds: int = 6,
-    n_points_hint: int | None = None,
     tie_col: str | None = None,
     queries_xyz: dict | None = None,
     max_distance_deg: float | None = None,
@@ -312,9 +337,9 @@ def knn_join(
     furthest_points_join to query the exact floating-point negation of the
     original point (the lat/lng stays the seed for the search-cap covering,
     which is inflated by an epsilon to absorb the ulp-level center gap).
-    ``n_points_hint``: row count of ``points_df``; it sizes the first ring
-    and, as the brute probe's scan bound, gates the straggler cutover
-    (absent, the search keeps ringing).
+    The first ring is sized from the measured row count of ``points_df``
+    (:func:`frame_rows`, before any ``region`` filter); the straggler
+    cutover is gated on the count of the table the brute probe scans.
 
     Options parity with S2ClosestPointQuery
     (s2closest_point_query.d:58-111 setMaxDistance/setMaxError, the same
@@ -335,6 +360,7 @@ def knn_join(
     tie_col = tie_col or cell_col
     queries_xyz = queries_xyz or {}
     max_r = _max_ring(max_distance_deg)
+    seed_deg = _seed_deg(frame_rows(points_df), k, 0.2)
     if region is not None:
         from .spatial_join import points_in_regions
 
@@ -360,14 +386,12 @@ def knn_join(
     # whose true center is ulps away from the trig-derived cap center
     cap_pad = 1e-7 if queries_xyz else 0.0
 
-    if initial_radius_deg is None:
-        initial_radius_deg = _seed_deg(n_points_hint or 100_000, k, 0.2)
-    radius = dict.fromkeys(geo, initial_radius_deg)
+    radius = dict.fromkeys(geo, seed_deg)
 
     # region-aware ring seeding (Cap regions): every result lies inside the
     # cap, so rings smaller than dist(query, cap) provably find nothing —
     # start at that distance instead of doubling up to it from
-    # initial_radius_deg (a far query otherwise burned all max_rounds and
+    # the seed (a far query otherwise burned all max_rounds and
     # fell through to the brute scan).  Dually, once the ring covers the
     # WHOLE cap (radius >= dist(query, center) + cap angle, so by the
     # triangle inequality every in-region point is a candidate and passes
@@ -385,8 +409,8 @@ def knn_join(
             dot = max(-1.0, min(1.0, px * cx + py * cy + pz * cz))
             ang = math.degrees(math.acos(dot))
             gap = ang - cap_ang
-            if gap > initial_radius_deg:
-                radius[qid] = min(gap + initial_radius_deg, max_r)
+            if gap > seed_deg:
+                radius[qid] = min(gap + seed_deg, max_r)
             # pad absorbs the trig ulps in ang/cap_ang; when the bound
             # exceeds the ring clamp the certification is unavailable
             # (antipodal-gap points could be missed) — keep the brute
@@ -409,10 +433,8 @@ def knn_join(
         target_cols=["qx", "qy", "qz"],
         score=lambda cand: cand.withColumn("dist2", _chord2_to_query_expr(lat_col, lng_col)),
         tie_col=tie_col,
-        # with a region set the brute side is the in-region subset, smaller
-        # still than the hinted table
+        # with a region set the brute side is the in-region subset
         brute_df=points_df,
-        brute_rows=n_points_hint,
         max_rounds=max_rounds,
         max_distance_deg=max_distance_deg,
         max_error_deg=max_error_deg,
@@ -539,42 +561,57 @@ def register_edges(edges_df: DataFrame) -> DataFrame:
 def registered_stats(registered: DataFrame) -> dict:
     """Statistics of a registered-edge index from ONE aggregate job, cached
     as ``_s2_reg_stats`` on the (session-shared, persisted) frame so every
-    consumer after the first reads them for free:
+    consumer after the first reads them for free — the ring seeds here and
+    in ``polyline_join``, :func:`knn_edges_join_tables` and the pair sweeps
+    of ``crossing``:
 
     * ``span_deg`` — conservative angular radius of the lat/lng bounding
       box, the data's own extent for ring seeds (see :func:`_seed_deg`);
       None when the table is empty.  A dateline-spanning box degrades to a
       huge span, which callers clamp back to the global seed
       (performance-conservative, never correctness-relevant — ring
-      doubling proves completeness for ANY seed);
+      doubling proves completeness for ANY seed).  A crossing-only cell
+      table (id, ecell) has no endpoint columns, and no span;
     * ``min_level`` — the coarsest registered cell level, the prefix-join
       level of :func:`knn_edges_join_tables`;
+    * ``levels`` — every registered cell level, ascending: the ancestor
+      levels of the crossing pair sweeps;
     * ``rows`` — ``count(*)``.  Every edge registers under at least one
-      cell, so this bounds the edge table the brute probe scans.
+      cell, so this bounds the edge table the table variant's brute probe
+      scans; the crossing sweeps pick broadcast or shuffle joins by it.
     """
     cached = getattr(registered, "_s2_reg_stats", None)
     if cached is not None:
         return cached
-    level = F.lit(30) - (
-        F.log2(F.col("ecell").bitwiseAND(-F.col("ecell")).cast("double")) / F.lit(2.0)
-    ).cast("int")
+    level = _cell_level("ecell")
+    bounds = []
+    if {"alat", "alng", "blat", "blng"} <= set(registered.columns):
+        bounds = [
+            F.min(F.least("alat", "blat")).alias("lat0"),
+            F.max(F.greatest("alat", "blat")).alias("lat1"),
+            F.min(F.least("alng", "blng")).alias("lng0"),
+            F.max(F.greatest("alng", "blng")).alias("lng1"),
+        ]
     row = registered.agg(
-        F.min(F.least("alat", "blat")).alias("lat0"),
-        F.max(F.greatest("alat", "blat")).alias("lat1"),
-        F.min(F.least("alng", "blng")).alias("lng0"),
-        F.max(F.greatest("alng", "blng")).alias("lng1"),
+        *bounds,
         F.min(level).alias("min_level"),
+        F.sort_array(F.collect_set(level)).alias("levels"),
         F.count(F.lit(1)).alias("rows"),
-    ).collect()[0]
+    ).collect()[0].asDict()
     span = None
-    if row["lat0"] is not None:
+    if row.get("lat0") is not None:
         lat_span = float(row["lat1"]) - float(row["lat0"])
         mid_lat = 0.5 * (float(row["lat1"]) + float(row["lat0"]))
         lng_span = (float(row["lng1"]) - float(row["lng0"])) * math.cos(
             math.radians(mid_lat)
         )
         span = max(0.5 * math.hypot(lat_span, lng_span), 1e-3)
-    stats = {"span_deg": span, "min_level": row["min_level"], "rows": int(row["rows"])}
+    stats = {
+        "span_deg": span,
+        "min_level": row["min_level"],
+        "levels": [int(v) for v in row["levels"]],
+        "rows": int(row["rows"]),
+    }
     return _memo(registered, "_s2_reg_stats", stats)
 
 
@@ -605,9 +642,7 @@ def knn_edges_join(
     queries: list[tuple[str, float, float]],
     k: int,
     edge_id_col: str = "edge_id",
-    initial_radius_deg: float | None = None,
     max_rounds: int = 6,
-    n_edges_hint: int | None = None,
     max_distance_deg: float | None = None,
     max_error_deg: float = 0.0,
     registered_df: DataFrame | None = None,
@@ -639,26 +674,24 @@ def knn_edges_join(
     ranks; 0.0 (default) keeps exact semantics.
     ``registered_df`` lets callers share one registered-cell table across
     queries (the reference's build-once index model).
-    ``n_edges_hint``: row count of ``edges_df``; it sizes the first ring and
-    gates the straggler cutover, as ``n_points_hint`` does in knn_join.
+    The first ring is sized from the measured row count of ``edges_df``
+    (:func:`frame_rows`), which also gates the straggler cutover, as in
+    knn_join.
 
     Returns (query_id, rank, dist2, <edge columns>), rank 1..k by
     (dist2, edge_id).
     """
     registered = registered_df if registered_df is not None else register_edges(edges_df)
-    if initial_radius_deg is None:
-        # exact unbounded search: the ring schedule cannot change the
-        # result, so seed from the data's extent (see _seed_deg)
-        exact = max_error_deg == 0.0 and max_distance_deg is None
-        initial_radius_deg = _seed_deg(
-            n_edges_hint or 100_000, k, 0.2, registered if exact else None
-        )
+    # exact unbounded search: the ring schedule cannot change the result,
+    # so seed from the data's extent (see _seed_deg)
+    exact = max_error_deg == 0.0 and max_distance_deg is None
+    seed_deg = _seed_deg(frame_rows(edges_df), k, 0.2, registered if exact else None)
     geo = {qid: (lat, lng) for qid, lat, lng in queries}
     return _ring_search(
         edges_df.sparkSession,
         [qid for qid, _, _ in queries],
         k,
-        dict.fromkeys(geo, initial_radius_deg),
+        dict.fromkeys(geo, seed_deg),
         cover=lambda q, ring: _cap_covering(q, *geo[q], ring),
         probe=_edge_probe(registered, edge_id_col),
         target={qid: _xyz(lat, lng) for qid, (lat, lng) in geo.items()},
@@ -666,7 +699,6 @@ def knn_edges_join(
         score=_point_edge_dist2,
         tie_col=edge_id_col,
         brute_df=edges_df,
-        brute_rows=n_edges_hint,
         max_rounds=max_rounds,
         max_distance_deg=max_distance_deg,
         max_error_deg=max_error_deg,
@@ -766,7 +798,6 @@ def knn_edges_to_edges(
     query_edges: list[tuple[str, tuple[float, float], tuple[float, float]]],
     k: int,
     edge_id_col: str = "edge_id",
-    initial_radius_deg: float = 1.0,
     max_rounds: int = 6,
     registered_df: DataFrame | None = None,
     max_distance_deg: float | None = None,
@@ -825,7 +856,7 @@ def knn_edges_to_edges(
         edges_df.sparkSession,
         [qid for qid, _, _ in query_edges],
         k,
-        dict.fromkeys(ends, initial_radius_deg),
+        dict.fromkeys(ends, _TARGET_SEED_DEG),
         cover=cover,
         probe=_edge_probe(registered, edge_id_col),
         target=ends,
@@ -833,7 +864,6 @@ def knn_edges_to_edges(
         score=score,
         tie_col=edge_id_col,
         brute_df=edges_df,
-        brute_rows=None,
         max_rounds=max_rounds,
         max_distance_deg=max_distance_deg,
         max_error_deg=max_error_deg,
@@ -845,7 +875,6 @@ def knn_edges_to_cells(
     query_cells: list[tuple[str, "object"]],
     k: int,
     edge_id_col: str = "edge_id",
-    initial_radius_deg: float = 1.0,
     max_rounds: int = 6,
     registered_df: DataFrame | None = None,
     max_distance_deg: float | None = None,
@@ -911,7 +940,7 @@ def knn_edges_to_cells(
         edges_df.sparkSession,
         [qid for qid, _ in query_cells],
         k,
-        dict.fromkeys(geom, initial_radius_deg),
+        dict.fromkeys(geom, _TARGET_SEED_DEG),
         cover=cover,
         probe=_edge_probe(registered, edge_id_col),
         target=dict.fromkeys(geom, ()),
@@ -919,7 +948,6 @@ def knn_edges_to_cells(
         score=score,
         tie_col=edge_id_col,
         brute_df=edges_df,
-        brute_rows=None,
         max_rounds=max_rounds,
         max_distance_deg=max_distance_deg,
     )
@@ -931,7 +959,6 @@ def knn_edges_join_tables(
     k: int,
     query_id_col: str = "query_id",
     edge_id_col: str = "edge_id",
-    initial_radius_deg: float = 1.0,
     max_rounds: int = 5,
     registered_df: DataFrame | None = None,
 ) -> DataFrame:
@@ -1008,10 +1035,7 @@ def knn_edges_join_tables(
         ).localCheckpoint(eager=False)
 
         buffer_cells = edge_buffer_cells_udf()
-        qlvl = F.lit(30) - (
-            F.log2(F.col("qcell").bitwiseAND(-F.col("qcell")).cast("double"))
-            / F.lit(2.0)
-        ).cast("int")
+        qlvl = _cell_level("qcell")
 
         # numpy pair scorer (bit-identical SQL twin, edgepair._pair_dist2_np)
         # — replaces the 62-intermediate projection whose analysis cost
@@ -1053,7 +1077,7 @@ def knn_edges_join_tables(
         n_pending = n_q
         rounds = 0
         cutover = False
-        radius = initial_radius_deg
+        radius = _TARGET_SEED_DEG
         for _ in range(max_rounds):
             r2 = chord2_from_radians(math.radians(min(radius, 170.0)))
             # ONE evaluation of the buffer-cell kernel per round: the frame
@@ -1194,7 +1218,6 @@ def furthest_points_join(
     lat_col: str = "lat",
     lng_col: str = "lng",
     cell_col: str = "cell_id",
-    n_points_hint: int | None = None,
     tie_col: str | None = None,
 ) -> DataFrame:
     """k FURTHEST points per query (the reference's max-distance side,
@@ -1222,7 +1245,6 @@ def furthest_points_join(
         lat_col=lat_col,
         lng_col=lng_col,
         cell_col=cell_col,
-        n_points_hint=n_points_hint,
         tie_col=tie_col,
         queries_xyz=anti_xyz,
     )

@@ -30,8 +30,8 @@ from .knn import (
     _ring_search,
     _seed_deg,
     _xyz,
+    frame_rows,
     register_edges,
-    registered_stats,
 )
 
 
@@ -41,9 +41,7 @@ def nearest_polyline_join(
     k: int,
     polyline_col: str = "polyline_id",
     edge_id_col: str = "edge_id",
-    initial_radius_deg: float | None = None,
     max_rounds: int = 6,
-    n_polylines_hint: int | None = None,
     registered_df: DataFrame | None = None,
     max_distance_deg: float | None = None,
     max_error_deg: float = 0.0,
@@ -61,26 +59,25 @@ def nearest_polyline_join(
     radius (early exit): every edge within the ring is a candidate, so an
     accepted distance in the (ring, ring+max_error] band errs by at most
     max_error — the contract lifts through the per-polyline min.
-    ``n_polylines_hint`` only sizes the first ring: a polyline count does
-    not bound the edge rows the brute probe scans, so the straggler cutover
-    is gated on the registered index's row count instead.
+    The first ring is sized from the measured number of distinct polylines
+    (``knn.frame_rows``); the straggler cutover is gated on the edge rows
+    the brute probe scans, as in every ring search.
     """
     registered = registered_df if registered_df is not None else register_edges(edges_df)
-    if initial_radius_deg is None:
-        # exact unbounded search: the ring schedule cannot change results —
-        # seed from the data extent (see knn._seed_deg); the sphere-uniform
-        # seed covered the whole fixture region and made round 1
-        # near-brute-force
-        exact = max_error_deg == 0.0 and max_distance_deg is None
-        initial_radius_deg = _seed_deg(
-            n_polylines_hint or 1_000, k, 0.5, registered if exact else None
-        )
+    # exact unbounded search: the ring schedule cannot change results —
+    # seed from the data extent (see knn._seed_deg); the sphere-uniform
+    # seed covered the whole fixture region and made round 1
+    # near-brute-force
+    exact = max_error_deg == 0.0 and max_distance_deg is None
+    seed_deg = _seed_deg(
+        frame_rows(edges_df, polyline_col), k, 0.5, registered if exact else None
+    )
     geo = {qid: (lat, lng) for qid, lat, lng in queries}
     return _ring_search(
         edges_df.sparkSession,
         [qid for qid, _, _ in queries],
         k,
-        dict.fromkeys(geo, initial_radius_deg),
+        dict.fromkeys(geo, seed_deg),
         cover=lambda q, ring: _cap_covering(q, *geo[q], ring),
         probe=_edge_probe(registered, edge_id_col),
         target={qid: _xyz(lat, lng) for qid, (lat, lng) in geo.items()},
@@ -91,7 +88,6 @@ def nearest_polyline_join(
             F.min("dist2").alias("dist2")
         ),
         brute_df=edges_df,
-        brute_rows=registered_stats(registered)["rows"],
         max_rounds=max_rounds,
         max_distance_deg=max_distance_deg,
         max_error_deg=max_error_deg,

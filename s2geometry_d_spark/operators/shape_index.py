@@ -346,20 +346,17 @@ def registered_edges_view(index_df: DataFrame) -> DataFrame:
 
     The view is memoized as an attribute on ``index_df`` so repeat probes
     of one (persisted, session-shared) index receive the SAME DataFrame
-    object: the ring-search/pair-sweep hint memos (`_s2_reg_stats`,
-    `_s2_reg_rows`, `_s2_reg_levels`) attach to the
-    view object, and a fresh object per evaluation re-paid those aggregate
-    jobs every time.  DataFrames are immutable, so returning the shared
-    object is observationally identical."""
+    object: the measured statistics (``knn.registered_stats`` and
+    ``knn.frame_rows``) attach to the view object, and a fresh object per
+    evaluation re-paid those aggregate jobs every time.  DataFrames are
+    immutable, so returning the shared object is observationally
+    identical."""
+    from .knn import _memo
+
     cached = getattr(index_df, "_s2_reg_edges_view", None)
     if cached is not None:
         return cached
-    view = _registered_edges_view(index_df)
-    try:
-        index_df._s2_reg_edges_view = view
-    except AttributeError:
-        pass
-    return view
+    return _memo(index_df, "_s2_reg_edges_view", _registered_edges_view(index_df))
 
 
 def _registered_edges_view(index_df: DataFrame) -> DataFrame:
@@ -377,12 +374,15 @@ def knn_edges_unified(index_df: DataFrame, queries: list, k: int, **kwargs) -> D
     """Closest-EDGE kNN probed through the unified table: the dim=1 slice
     feeds the standard ring-expansion search as its prebuilt registration
     (s2closest_edge_query.d over one heterogeneous artifact)."""
-    from .knn import knn_edges_join
+    from .knn import _memo, knn_edges_join
 
     e = registered_edges_view(index_df)
     # the view has one row per (edge, registered cell); the edges_df side
     # feeds the brute fallback, where duplicate edge rows would occupy
     # several top-k ranks — dedup to one row per edge (the ring rounds
-    # probe the registration, which keeps every cell row)
-    e_edges = e.drop("ecell").dropDuplicates(["edge_id"])
+    # probe the registration, which keeps every cell row).  Memoized on
+    # the view, so the edge count measured on it is paid once.
+    e_edges = getattr(e, "_s2_unique_edges", None)
+    if e_edges is None:
+        e_edges = _memo(e, "_s2_unique_edges", e.drop("ecell").dropDuplicates(["edge_id"]))
     return knn_edges_join(e_edges, queries, k, registered_df=e, **kwargs)

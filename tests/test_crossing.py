@@ -156,6 +156,42 @@ def test_crossing_pairs_self_matches_bruteforce(spark):
     assert len(got) == len(set(got)), "pairs must be reported exactly once"
 
 
+def test_crossing_pairs_self_reads_registered_stats(spark, monkeypatch):
+    """The pair sweep reads its level set and its broadcast chooser's row
+    count from the registered frame's one memoized stats aggregate; with
+    the broadcast limit at 0 the shuffle-join side of the chooser returns
+    the identical pair set."""
+    from s2geometry_d_spark.operators import crossing
+    from s2geometry_d_spark.operators.knn import register_edges
+
+    table = _random_edges(120, seed=11, spread=4.0) + [
+        (200 + i, la, ln, lb, lnb)
+        for i, la, ln, lb, lnb in _random_edges(15, seed=12, spread=45.0)
+    ]
+    edges = spark.createDataFrame(table, ["edge_id", "alat", "alng", "blat", "blng"])
+    reg = register_edges(edges)
+
+    def pairs():
+        return {tuple(r) for r in crossing.crossing_pairs_self(edges, registered_df=reg).collect()}
+
+    try:
+        broadcast = pairs()
+        stats = reg._s2_reg_stats
+        ecells = [r["ecell"] for r in reg.select("ecell").collect()]
+        assert stats["rows"] == reg.count() == len(ecells)
+        # level from the lowest set bit of the signed id, computed here in
+        # Python rather than by the engine's column expression
+        assert stats["levels"] == sorted(
+            {30 - ((c & -c).bit_length() - 1) // 2 for c in ecells}
+        )
+        assert len(stats["levels"]) > 1, "fixture should register at several levels"
+
+        monkeypatch.setattr(crossing, "BROADCAST_REG_ROWS", 0)
+        assert broadcast and pairs() == broadcast
+    finally:
+        reg.unpersist()
+
+
 def test_crossing_pairs_self_chain_reports_no_adjacent(spark):
     """A polyline chain's consecutive edges share a vertex — NOT a proper
     crossing (crossingSign==0 at shared vertices); an X pair IS reported."""

@@ -135,7 +135,7 @@ def test_fractal_knn_edges_flip(spark):
     the completeness bound both get exercised off the regular-fixture path."""
     for dim in (1.0, 1.26):
         edges = _fractal_edges_df(spark, dim)
-        fast = knn.knn_edges_join(edges, FRACTAL_QUERIES, k=6, n_edges_hint=192)
+        fast = knn.knn_edges_join(edges, FRACTAL_QUERIES, k=6)
         slow = knn.knn_edges_brute_force(edges, FRACTAL_QUERIES, k=6)
         key = lambda rows: sorted((r.query_id, r.rank, r.edge_id) for r in rows)
         assert key(fast.collect()) == key(slow.collect()), dim

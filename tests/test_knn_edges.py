@@ -34,7 +34,7 @@ def _key(rows):
 
 def test_knn_edges_matches_bruteforce(spark):
     edges = _edges_df(spark)
-    fast = knn.knn_edges_join(edges, QUERIES, k=7, n_edges_hint=400)
+    fast = knn.knn_edges_join(edges, QUERIES, k=7)
     slow = knn.knn_edges_brute_force(edges, QUERIES, k=7)
     assert _key(fast.collect()) == _key(slow.collect())
 
@@ -42,7 +42,7 @@ def test_knn_edges_matches_bruteforce(spark):
 def test_knn_edges_k_larger_than_ring(spark):
     # k close to the edge count forces multiple ring expansions / fallback
     edges = _edges_df(spark, n=40)
-    fast = knn.knn_edges_join(edges, QUERIES[:2], k=25, n_edges_hint=40)
+    fast = knn.knn_edges_join(edges, QUERIES[:2], k=25)
     slow = knn.knn_edges_brute_force(edges, QUERIES[:2], k=25)
     assert _key(fast.collect()) == _key(slow.collect())
 

@@ -53,7 +53,7 @@ def test_nearest_polyline_matches_brute_force(spark, edges):
     got = {
         (r["query_id"], r["rank"]): (r["polyline_id"], r["dist2"])
         for r in nearest_polyline_join(
-            edges, QUERIES, k=4, n_polylines_hint=100
+            edges, QUERIES, k=4
         ).collect()
     }
     want = {
@@ -67,7 +67,7 @@ def test_knn_edges_max_distance_is_a_filtered_topk(spark, edges):
     r_deg = 2.0
     r2 = chord2_from_radians(math.radians(r_deg))
     got = knn.knn_edges_join(
-        edges, QUERIES, k=5, n_edges_hint=4000, max_distance_deg=r_deg
+        edges, QUERIES, k=5, max_distance_deg=r_deg
     ).collect()
     brute = knn.knn_edges_brute_force(edges, QUERIES, k=4000).collect()
     want = {}
@@ -90,7 +90,7 @@ def test_include_interiors_zero_distance_hits(spark, edges):
         ("elsewhere", Polygon([Loop.make_regular(-70.0, -120.0, 3.0, 16)], "b")),
     ]
     res = knn.knn_edges_join_with_interiors(
-        edges, QUERIES, k=3, interior_shapes=polys, n_edges_hint=4000
+        edges, QUERIES, k=3, interior_shapes=polys
     ).collect()
     by_q = {}
     for r in sorted(res, key=lambda r: (r["query_id"], r["rank"])):
@@ -121,7 +121,7 @@ def test_furthest_points_matches_brute_force(spark):
     got = {
         (r["query_id"], r["rank"]): r["point_id"]
         for r in knn.furthest_points_join(
-            pts, QUERIES, k=5, n_points_hint=3000, tie_col="point_id"
+            pts, QUERIES, k=5, tie_col="point_id"
         ).collect()
     }
     # brute force: direct distances, DESC
@@ -198,7 +198,7 @@ def test_knn_edges_max_error_tolerance(spark):
     max_error_deg = 2.0
 
     approx = knn.knn_edges_join(
-        edges, queries, k=k, n_edges_hint=n, max_error_deg=max_error_deg
+        edges, queries, k=k, max_error_deg=max_error_deg
     )
     exact = knn.knn_edges_brute_force(edges, queries, k=k)
     by_q_a, by_q_e = {}, {}
@@ -235,7 +235,7 @@ def test_knn_edges_max_error_zero_is_exact(spark):
     ]
     edges = spark.createDataFrame(rows, ["edge_id", "alat", "alng", "blat", "blng"])
     queries = [("q1", 3.0, 3.0)]
-    a = knn.knn_edges_join(edges, queries, k=6, n_edges_hint=n, max_error_deg=0.0)
+    a = knn.knn_edges_join(edges, queries, k=6, max_error_deg=0.0)
     b = knn.knn_edges_brute_force(edges, queries, k=6)
     key = lambda rows: sorted((r.query_id, r.rank, r.edge_id) for r in rows)
     assert key(a.collect()) == key(b.collect())
@@ -256,10 +256,10 @@ def test_include_interiors_table_path_parity(spark, edges):
     ]
     idx = build_polygon_index(polygons_dataframe(spark, polys))
     table_res = knn.knn_edges_join_with_interiors_table(
-        edges, QUERIES, k=3, index_df=idx, n_edges_hint=4000
+        edges, QUERIES, k=3, index_df=idx
     ).collect()
     driver_res = knn.knn_edges_join_with_interiors(
-        edges, QUERIES, k=3, interior_shapes=polys, n_edges_hint=4000
+        edges, QUERIES, k=3, interior_shapes=polys
     ).collect()
     key = lambda rows: sorted(
         (r["query_id"], r["rank"], r["shape_id"], r["edge_id"], round(r["dist2"], 12))
@@ -356,7 +356,6 @@ def test_knn_points_max_distance_is_a_filtered_topk(spark, points):
         points,
         QUERIES,
         k=5,
-        n_points_hint=4000,
         tie_col="point_id",
         max_distance_deg=r_deg,
     ).collect()
@@ -387,7 +386,6 @@ def test_knn_points_max_error_tolerance(spark, points):
         points,
         QUERIES,
         k=5,
-        n_points_hint=4000,
         tie_col="point_id",
         max_error_deg=e_deg,
     ).collect()
@@ -403,7 +401,7 @@ def test_knn_points_max_error_tolerance(spark, points):
         a_true = math.degrees(2 * math.asin(min(1.0, math.sqrt(want) / 2)))
         assert a_got <= a_true + e_deg + 1e-9
     exact = knn.knn_join(
-        points, QUERIES, k=5, n_points_hint=4000, tie_col="point_id", max_error_deg=0.0
+        points, QUERIES, k=5, tie_col="point_id", max_error_deg=0.0
     ).collect()
     want_ids = {(r["query_id"], r["rank"]): r["point_id"] for r in brute}
     for r in exact:
@@ -419,7 +417,7 @@ def test_knn_points_region_option(spark, points):
 
     cap = Cap.from_latlng_radius(10.0, 20.0, 30.0)
     got = knn.knn_join(
-        points, QUERIES, k=5, n_points_hint=4000, tie_col="point_id", region=cap
+        points, QUERIES, k=5, tie_col="point_id", region=cap
     ).collect()
     from s2geometry_d_spark.operators.spatial_join import points_in_regions
 

@@ -157,7 +157,7 @@ def test_nearest_polyline_max_error_tolerance(spark):
     k = 5
     max_err = 3.0
     got = nearest_polyline_join(
-        edges, queries, k=k, n_polylines_hint=20, max_error_deg=max_err
+        edges, queries, k=k, max_error_deg=max_err
     ).collect()
 
     def ang(d2):

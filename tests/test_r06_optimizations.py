@@ -31,32 +31,39 @@ def _key(rows):
     return sorted((r.query_id, r.rank, r.edge_id) for r in rows)
 
 
-# the small hint is scan-affordable; an absent or over-_BRUTE_SCAN_ROWS one
-# must fail closed — the search keeps ringing and never cuts over early
-_HINTS = ["small", None, 20_000_000]
+# the default scan bound affords the measured probe table; a bound one row
+# below the measured count must fail closed — the search keeps ringing and
+# never cuts over early
+_BOUNDS = ["default", "below_count"]
 
 
-@pytest.mark.parametrize("hint", _HINTS)
-def test_knn_edges_straggler_cutover_matches_bruteforce(spark, hint):
+def _set_bound(monkeypatch, bound, n_rows):
+    if bound == "below_count":
+        monkeypatch.setattr(knn, "_BRUTE_SCAN_ROWS", n_rows - 1)
+
+
+@pytest.mark.parametrize("bound", _BOUNDS)
+def test_knn_edges_straggler_cutover_matches_bruteforce(spark, monkeypatch, bound):
     """16 near queries finish in round 1; the 1-2 antipodal stragglers are
     under the cutover bound (16+2 queries // 8 = 2) and route to the brute
-    branch early when the hint allows it — results must equal the exact
-    cross join regardless of which path answered."""
+    branch early when the measured edge count is scan-affordable — results
+    must equal the exact cross join regardless of which path answered."""
+    _set_bound(monkeypatch, bound, 300)
     edges = _clustered_edges(spark)
     near = [(f"n{i}", 48.0 + 0.1 * i, 2.0 + 0.1 * i) for i in range(16)]
     far = [("far1", -48.85, -177.65), ("far2", -40.0, -170.0)]
     queries = near + far
-    n_edges = 300 if hint == "small" else hint
-    fast = knn.knn_edges_join(edges, queries, k=5, n_edges_hint=n_edges)
+    fast = knn.knn_edges_join(edges, queries, k=5)
     slow = knn.knn_edges_brute_force(edges, queries, k=5)
     assert _key(fast.collect()) == _key(slow.collect())
-    assert fast._s2_ring["cutover"] is (hint == "small")
-    assert fast._s2_ring["brute_rows"] == n_edges
+    assert fast._s2_ring["cutover"] is (bound == "default")
+    assert fast._s2_ring["brute_rows"] == 300
     assert {"far1", "far2"} <= set(fast._s2_ring["brute"])
 
 
-@pytest.mark.parametrize("hint", _HINTS)
-def test_knn_points_straggler_cutover_matches_bruteforce(spark, hint):
+@pytest.mark.parametrize("bound", _BOUNDS)
+def test_knn_points_straggler_cutover_matches_bruteforce(spark, monkeypatch, bound):
+    _set_bound(monkeypatch, bound, 400)
     rng = np.random.default_rng(3)
     rows = [
         (i, float(48.85 + v[0]), float(2.35 + v[1]))
@@ -68,23 +75,49 @@ def test_knn_points_straggler_cutover_matches_bruteforce(spark, hint):
     pts = pts.withColumn("cell_id", kernels.cell_from_latlng("lat", "lng"))
     near = [(f"n{i}", 48.0 + 0.2 * i, 2.0 + 0.2 * i) for i in range(16)]
     queries = near + [("far1", -48.85, -177.65)]
-    n_points = 400 if hint == "small" else hint
-    res = knn.knn_join(pts, queries, k=4, n_points_hint=n_points, tie_col="point_id")
+    res = knn.knn_join(pts, queries, k=4, tie_col="point_id")
     fast = res.select("query_id", "rank", F.col("point_id").alias("edge_id"))
     slow = knn.knn_brute_force(pts, queries, k=4, tie_col="point_id").select(
         "query_id", "rank", F.col("point_id").alias("edge_id")
     )
     assert _key(fast.collect()) == _key(slow.collect())
-    assert res._s2_ring["cutover"] is (hint == "small")
-    assert res._s2_ring["brute_rows"] == n_points
+    assert res._s2_ring["cutover"] is (bound == "default")
+    assert res._s2_ring["brute_rows"] == 400
     assert "far1" in res._s2_ring["brute"]
     # furthest_points_join answers from the antipode through knn_join and
-    # keeps its decision record (far1's antipode lies inside the cluster)
-    far = knn.furthest_points_join(
-        pts, [queries[-1]], k=4, n_points_hint=n_points, tie_col="point_id"
-    )
-    assert far._s2_ring["brute_rows"] == n_points
+    # keeps its decision record (far1's antipode lies inside the cluster,
+    # so no cutover is due and nothing is counted for the gate)
+    far = knn.furthest_points_join(pts, [queries[-1]], k=4, tie_col="point_id")
+    assert far._s2_ring["brute_rows"] is None
     assert far._s2_ring["rounds"] >= 1 and far._s2_ring["brute"] == []
+
+
+def test_edge_and_cell_targets_cut_over_on_measured_size(spark):
+    """The edge- and cell-target variants gate their straggler cutover on
+    the measured edge count: an antipodal query finds nothing in round 1
+    and goes straight to the brute probe, whose answer equals the
+    max_rounds=0 brute reference."""
+    from s2geometry_d_spark.s2core.cellid import CellId
+
+    edges = _clustered_edges(spark)
+    qedges = [
+        ("near", (48.9, 2.3), (49.1, 2.6)),
+        ("far", (-48.85, -177.65), (-48.0, -177.0)),
+    ]
+    qcells = [
+        ("near", CellId.from_latlng(48.85, 2.35).parent(12)),
+        ("far", CellId.from_latlng(-48.85, -177.65).parent(12)),
+    ]
+    cases = [
+        (lambda **kw: knn.knn_edges_to_edges(edges, qedges, k=4, **kw)),
+        (lambda **kw: knn.knn_edges_to_cells(edges, qcells, k=4, **kw)),
+    ]
+    for run in cases:
+        got = run()
+        assert got._s2_ring["cutover"] is True
+        assert got._s2_ring["brute_rows"] == 300
+        assert "far" in got._s2_ring["brute"]
+        assert _key(got.collect()) == _key(run(max_rounds=0).collect())
 
 
 def test_knn_table_join_closed_gate_keeps_ringing(spark, monkeypatch):

@@ -2,7 +2,8 @@
 polyline query built on the shared ring search must hash-match its
 ``oracle_sql()`` at the test scale factor, with the same comparison the
 oracle gate uses (``scripts/check_oracles.py``: row count plus the
-order-insensitive value hash)."""
+order-insensitive value hash).  The two crossing pair sweeps, which read
+the same memoized registered-index stats, are checked the same way."""
 
 import pytest
 
@@ -26,6 +27,8 @@ RING_QUERIES = [
     "polyline_within_distance",
 ]
 
+CROSSING_QUERIES = ["crossing_pairs_self", "crossing_pairs_tables"]
+
 
 @pytest.fixture(scope="module")
 def entrymod():
@@ -47,8 +50,7 @@ def duck():
     con.close()
 
 
-@pytest.mark.parametrize("name", RING_QUERIES)
-def test_ring_search_query_matches_oracle(spark, entrymod, duck, name):
+def _assert_matches_oracle(spark, entrymod, duck, name):
     sdf = entrymod.queries()[name](spark, SF_DIR)
     srows = [tuple(r) for r in sdf.collect()]
     res = duck.execute(entrymod.oracle_sql()[name])
@@ -57,3 +59,13 @@ def test_ring_search_query_matches_oracle(spark, entrymod, duck, name):
     assert sorted(sdf.columns) == sorted(ocols)
     assert len(srows) == len(orows)
     assert value_hash(srows, sdf.columns) == value_hash(orows, ocols)
+
+
+@pytest.mark.parametrize("name", RING_QUERIES)
+def test_ring_search_query_matches_oracle(spark, entrymod, duck, name):
+    _assert_matches_oracle(spark, entrymod, duck, name)
+
+
+@pytest.mark.parametrize("name", CROSSING_QUERIES)
+def test_crossing_query_matches_oracle(spark, entrymod, duck, name):
+    _assert_matches_oracle(spark, entrymod, duck, name)

@@ -78,8 +78,7 @@ class TestKnnJoin:
 
     def test_matches_brute_force(self, spark, points):
         k = 7
-        n = points.count()
-        got = knn_ops.knn_join(points, self.QUERIES, k, n_points_hint=n)
+        got = knn_ops.knn_join(points, self.QUERIES, k)
         brute = knn_ops.knn_brute_force(points, self.QUERIES, k)
         g = {(r.query_id, r.rank): r.point_id for r in got.collect()}
         b = {(r.query_id, r.rank): r.point_id for r in brute.collect()}
