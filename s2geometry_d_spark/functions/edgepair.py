@@ -3,9 +3,10 @@
 Same discipline as functions/edgedist.py: ONE expression text, embedded
 verbatim in the DuckDB oracle, with Spark mirrors (``with_pair_dist2``,
 ``with_cell_dist2``) and the numpy twins the kNN scorers run
-(``_pair_dist2_np``, ``cell_dist2_np``, behind pandas UDFs).  All evaluate
-identical IEEE trees, so rankings agree bit-for-bit
-(tests/test_edge_twins.py).
+(``_point_edge_dist2_np``, ``_pair_dist2_np``, ``cell_dist2_np``, behind
+the per-query scorers ``point_edge_scorer``, ``pair_scorer`` and
+``cell_scorer``).  All evaluate identical IEEE trees, so rankings agree
+bit-for-bit (tests/test_edge_twins.py).
 
 Semantics (reference s2edge_distances.d:280-283, mirrored by
 s2core.measures.edge_pair_min_dist2): the distance between two geodesic
@@ -268,46 +269,62 @@ def pair_dist2_udf():
     return _twin_udf(_pair_dist2_np, "pair_dist2")
 
 
-def point_edge_dist2_udf():
-    """(qx..qz, ax..bz) -> dist2 pandas UDF — the numpy twin of
-    edgedist.with_dist2 (bit-identical, see _point_edge_dist2_np), the
-    closest-edge ring rounds' scorer."""
-    return _twin_udf(_point_edge_dist2_np, "point_edge_dist2")
+# Per-query scorers: ``score(q, ax, ay, az, bx, by, bz) -> dist2`` scores
+# table-edge arrays against query ``q`` (an int array indexing the query
+# geometry held in the closure) with the twins above, so every kNN ring
+# round and brute probe stays bit-identical to the SQL fragments.
 
 
-def cell_dist2_udf(geom: dict):
-    """(query_id, ax..bz) -> dist2 pandas UDF scoring edge rows against the
-    per-query CELL geometry held in the closure; ``geom`` maps query_id ->
-    (verts, norms).  This replaces the 992-intermediate SQL projection in
-    the cell-target kNN ring: the giant fused expression failed whole-stage
-    codegen (janino 64KB-class error, observed live) and fell back to
-    interpreted evaluation, and its Catalyst analysis alone cost seconds
-    per round.  The numpy twin is bit-identical (see cell_dist2_np) and
-    turns the round plan into one small ArrowEvalPython node."""
-    import numpy as np
-    import pandas as pd
+def point_edge_scorer(points):
+    """Point queries: ``points`` is the (n, 3) xyz of query 0..n-1."""
+    px, py, pz = np.asarray(points, dtype=np.float64).reshape(-1, 3).T
+
+    def score(q, ax, ay, az, bx, by, bz):
+        return _point_edge_dist2_np(px[q], py[q], pz[q], ax, ay, az, bx, by, bz)
+
+    return score
+
+
+def pair_scorer(edges):
+    """Edge queries: ``edges`` is the (n, 6) xyz of each query edge's two
+    endpoints (c, d)."""
+    cols = np.asarray(edges, dtype=np.float64).reshape(-1, 6).T
+
+    def score(q, ax, ay, az, bx, by, bz):
+        return _pair_dist2_np(ax, ay, az, bx, by, bz, *(c[q] for c in cols))
+
+    return score
+
+
+def cell_scorer(cells):
+    """Cell queries: ``cells[q]`` is the cell's (verts, norms), scored per
+    query group by cell_dist2_np (the 992-intermediate SQL form of this
+    fragment failed whole-stage codegen)."""
+
+    def score(q, *edge):
+        out = np.zeros(q.shape[0], dtype=np.float64)
+        for i in np.unique(q):
+            m = q == i
+            out[m] = cell_dist2_np(*[c[m] for c in edge], *cells[i])
+        return out
+
+    return score
+
+
+def scorer_udf(score, name: str):
+    """(q int, ax..bz) -> dist2 pandas UDF over a per-query scorer, the
+    brute probe's twin of the ring rounds' fused kernel; nondeterministic
+    for the reason given at :func:`_twin_udf`."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    @F.pandas_udf(T.DoubleType())
-    def score(
-        query_id: pd.Series,
-        ax: pd.Series, ay: pd.Series, az: pd.Series,
-        bx: pd.Series, by: pd.Series, bz: pd.Series,
-    ) -> pd.Series:
-        A = [s.to_numpy(dtype=np.float64) for s in (ax, ay, az, bx, by, bz)]
-        out = np.zeros(len(query_id), dtype=np.float64)
-        for qid in query_id.unique():
-            g = geom.get(qid)
-            if g is None:
-                continue
-            verts, norms = g
-            m = (query_id == qid).to_numpy()
-            out[m] = cell_dist2_np(*[c[m] for c in A], verts, norms)
-        return pd.Series(out)
+    def body(q: pd.Series, *edge: pd.Series) -> pd.Series:
+        return pd.Series(
+            score(q.to_numpy(dtype=np.int64), *[s.to_numpy(dtype=np.float64) for s in edge])
+        )
 
-    # nondeterministic for the same reason as _twin_udf: one evaluation
-    return score.asNondeterministic()
+    body.__name__ = name
+    return F.pandas_udf(body, T.DoubleType()).asNondeterministic()
 
 
 def pair_dist2_select_sql(inner: str, keep: str) -> str:

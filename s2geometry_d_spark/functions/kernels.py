@@ -3,13 +3,13 @@
 Two tiers (SURVEY.md §2.11, §4):
 
 * **native column expressions** for everything that is pure 64-bit bit math
-  (parent, range_min/range_max, level lsb) — stays inside whole-stage
+  (parent, level lsb) — stays inside whole-stage
   codegen, no Python round-trip.  These operate on *signed-flipped* cell ids
   (``id XOR 2^63`` stored as LongType): because the flip only touches bit 63
   and every mask below keeps it, the same bit identities hold and unsigned
   Hilbert order == signed order.
 * **pandas UDFs** (Arrow-batched, no per-row Python) for the trig-heavy
-  ladder: latlng -> leaf cell, cell -> center latlng, tokens, xyz.
+  ladder: latlng -> leaf cell, cell -> center latlng, tokens.
 """
 
 from __future__ import annotations
@@ -39,17 +39,6 @@ def parent_signed(cell: Column, level: int) -> Column:
     Pure bit math: (id & -lsb) | lsb — Catalyst-native, codegen'd."""
     nl = lsb_for_level(level)
     return cell.bitwiseAND(F.lit(-nl)).bitwiseOR(F.lit(nl))
-
-
-def range_min_signed(cell: Column, level: int) -> Column:
-    """range_min of the level-``level`` ancestor (signed domain)."""
-    nl = lsb_for_level(level)
-    return parent_signed(cell, level) - F.lit(nl - 1)
-
-
-def range_max_signed(cell: Column, level: int) -> Column:
-    nl = lsb_for_level(level)
-    return parent_signed(cell, level) + F.lit(nl - 1)
 
 
 # ---------------------------------------------------------------------------
@@ -86,12 +75,6 @@ def cell_token(cell_signed: pd.Series) -> pd.Series:
     return pd.Series([ci.token_of(v) for v in ids.tolist()])
 
 
-@F.pandas_udf(T.LongType())
-def cell_from_token(token: pd.Series) -> pd.Series:
-    ids = np.array([ci.token_to_id(t) for t in token.tolist()], dtype=np.uint64)
-    return pd.Series(ci.to_signed(ids))
-
-
 @F.pandas_udf(T.IntegerType())
 def cell_level(cell_signed: pd.Series) -> pd.Series:
     ids = ci.from_signed(cell_signed.to_numpy(dtype=np.int64))
@@ -103,33 +86,6 @@ def cell_exact_area(cell_signed: pd.Series) -> pd.Series:
     """Exact spherical cell area (steradians) — vectorized column kernel."""
     ids = ci.from_signed(cell_signed.to_numpy(dtype=np.int64))
     return pd.Series(ci.cells_exact_area(ids))
-
-
-@F.pandas_udf(T.DoubleType())
-def cell_avg_area(cell_signed: pd.Series) -> pd.Series:
-    """AVG_AREA metric for each cell's level."""
-    ids = ci.from_signed(cell_signed.to_numpy(dtype=np.int64))
-    return pd.Series(ci.cells_average_area(ids))
-
-
-def xyz_columns(df, lat_col: str = "lat", lng_col: str = "lng", prefix: str = ""):
-    """Attach unit-vector columns px/py/pz via native trig expressions —
-    keeps chord-distance predicates fully inside Catalyst codegen."""
-    lat_r = F.radians(F.col(lat_col))
-    lng_r = F.radians(F.col(lng_col))
-    return (
-        df.withColumn(prefix + "px", F.cos(lng_r) * F.cos(lat_r))
-        .withColumn(prefix + "py", F.sin(lng_r) * F.cos(lat_r))
-        .withColumn(prefix + "pz", F.sin(lat_r))
-    )
-
-
-def chord2_expr(px, py, pz, qx: float, qy: float, qz: float) -> Column:
-    """Squared chord distance from point columns to a fixed point — native."""
-    dx = F.col(px) - F.lit(qx)
-    dy = F.col(py) - F.lit(qy)
-    dz = F.col(pz) - F.lit(qz)
-    return dx * dx + dy * dy + dz * dz
 
 
 def compress_cell_points_udf(level: int):

@@ -12,27 +12,35 @@ Each variant supplies only its target hooks:
 * ``cover(qid, ring_deg)`` — a covering of everything within ``ring_deg``
   of the query: a cap for point queries, the buffered segment for edge
   targets, the ring-expanded circumcap for cell targets;
-* ``probe(coverings)`` — the candidate rows: the broadcast-covering point
-  kernel (one Arrow pass, no fact-table shuffle), or the two-way
-  prefiltered probe of a registered-edge index (:func:`_edge_probe`);
-* ``target`` / ``target_cols`` — the per-query columns the scorer reads,
-  shipped as a broadcast local query frame next to the acceptance ``r2``;
-* ``score(cand)`` — the exact squared-chord ``dist2``: natively for point
-  targets, and for every edge variant by a pandas UDF over a numpy twin
-  that is bit-identical to the engine's SQL fragment (functions/edgepair.py;
-  the SQL form costs seconds of Catalyst optimization per round);
+* ``candidates(coverings, qrows)`` — one round's scored candidate rows
+  (query_id, <candidate columns>, dist2), already cut to ``dist2 <= r2``;
+  ``qrows`` holds (query_id, *target, r2) per pending query.  Point
+  targets compose the broadcast-covering point kernel (one Arrow pass, no
+  fact-table shuffle), the broadcast query frame, the native chord^2 and
+  the cut.  Every registered-edge variant runs ONE fused Arrow kernel over
+  the prefiltered index: two-way covering match, numpy-twin scorer and r2
+  cut in one pass, so only accepted hits reach the round's one exchange
+  (:func:`_edge_search`, :func:`edge_round_kernel`);
+* ``target`` / ``target_cols`` — the per-query columns of ``qrows`` and of
+  the brute probe's broadcast query frame: the query xyz for points, the
+  query's index into the numpy scorer's geometry (``_q``) for edges;
+* ``score(cand)`` — the brute probe's exact squared-chord ``dist2`` over
+  the probe table crossed with that frame: natively for point targets,
+  and for every edge variant by a pandas UDF over the same numpy scorer
+  the fused kernel runs, bit-identical to the engine's SQL fragment
+  (functions/edgepair.py; the SQL form costs seconds of Catalyst
+  optimization per round);
 * ``collapse(scored)`` — optional per-group reduction ahead of the top-k
   window (the polyline variant's per-polyline min).
 
-Each round runs cover -> probe -> join the query frame -> score -> keep
-``dist2 <= r2`` -> window top-k -> ONE collect of the tiny top-k.  A query
-retires once k rows lie inside its ring (the ring bounds the k-th
-distance, so nothing unseen can beat them), or once its ring reaches its
-completion radius — the ``max_distance_deg`` limit, or the far side of a
-``knn_join`` region cap — where fewer than k rows IS the complete answer.
-Otherwise its ring doubles.  A ring clamped at 170 deg with no limit and
-still short of k goes to the one exact brute cross join: points in the
-antipodal gap are never candidates.
+Each round runs cover -> candidates -> window top-k -> ONE collect of the
+tiny top-k.  A query retires once k rows lie inside its ring (the ring
+bounds the k-th distance, so nothing unseen can beat them), or once its
+ring reaches its completion radius — the ``max_distance_deg`` limit, or
+the far side of a ``knn_join`` region cap — where fewer than k rows IS
+the complete answer.  Otherwise its ring doubles.  A ring clamped at 170
+deg with no limit and still short of k goes to the one exact brute cross
+join: points in the antipodal gap are never candidates.
 
 Straggler cutover, fail closed: once at most max(2, n/8) queries remain
 they go straight to that brute probe — the same exact answer as more
@@ -70,6 +78,7 @@ from .spatial_join import (
     RegionCovering,
     buffered_segment_covering,
     candidate_match_kernel,
+    coarse_prefix_filter,
     compute_coverings,
 )
 
@@ -141,7 +150,7 @@ def _ring_search(
     radius: dict,
     *,
     cover,
-    probe,
+    candidates,
     target: dict,
     target_cols: list[str],
     score,
@@ -188,11 +197,9 @@ def _ring_search(
             )
             for q in pending
         ]
-        qdf = local_df(spark, qrows, ["query_id", *target_cols, "r2"])
-        scored = score(probe(coverings).join(F.broadcast(qdf), "query_id"))
-        topk = _rank(
-            scored.filter(F.col("dist2") <= F.col("r2")), k, tie_col, collapse
-        ).drop(*target_cols, "r2")
+        topk = _rank(candidates(coverings, qrows), k, tie_col, collapse).drop(
+            *target_cols, "r2"
+        )
 
         # top-k output is tiny (<= |pending| * k): collect it ONCE per round
         # and assemble the final result driver-side — keeping the lineage
@@ -259,36 +266,106 @@ def _cap_covering(qid, lat: float, lng: float, radius_deg: float) -> RegionCover
     return compute_coverings([(qid, cap)], max_cells=24)[0]
 
 
-def _edge_probe(registered: DataFrame, edge_id_col: str):
-    """The ``probe`` hook over a registered-edge index: two-way, because
-    registered cells may be coarser or finer than the covering cells."""
+_EDGE_XYZ = ("ax", "ay", "az", "bx", "by", "bz")
 
-    def probe(coverings):
-        # prefilter=True: `ecell` is a stored column of the persisted
-        # registered index, so the coarse-prefix InSet runs native and the
-        # Arrow kernel sees only prefix-matching rows (guide §4.2 — shrink
-        # what crosses the Python boundary)
-        cand = candidate_match_kernel(
-            registered, coverings, cell_col="ecell", two_way=True, prefilter=True
-        ).drop("is_interior", "ecell")
-        # HashPartitioning(query_id) satisfies the clustered distribution of
-        # the (query_id, edge_id) dedup (subset key), so the dedup adds no
-        # shuffle of its own (the plain dropDuplicates shuffled on the pair
-        # key).  Every edge variant scores with an ArrowEvalPython node,
-        # which does not pass this partitioning through, so the query_id
-        # window re-shuffles the scored rows: TWO hash exchanges per round
-        # (measured in the executed plan; pinned by
-        # tests/test_plan_shapes.py).  Scoring ahead of this exchange saves
-        # one, but a build that did so read ~500 MiB (+29%) more knn_probe
-        # peak RSS on a 4-core host: the scorer then shares its task, and
-        # the task's live Python workers, with the match kernel.
+_EDGE_HITS = T.ArrayType(
+    T.StructType(
+        [T.StructField("q", T.IntegerType()), T.StructField("dist2", T.DoubleType())]
+    )
+)
+
+
+def edge_round_kernel(coverings: list[RegionCovering], q, r2, score):
+    """The body of one registered-edge ring round's Arrow kernel:
+    ``(ecell, ax..bz) -> array<struct<q, dist2>>``.
+
+    ``coverings[i]`` is pending query ``q[i]``'s ring covering and ``r2[i]``
+    its acceptance radius; ``score(q, ax..bz)`` is the variant's numpy
+    scorer (edgepair).  Each row is matched two-way against the coverings
+    (registered cells may be coarser or finer than the covering cells), its
+    (row, query) hits deduplicated, scored, and kept only when ``dist2 <=
+    r2`` — so the round's probe exchange carries accepted hits alone."""
+    import pyarrow as pa
+
+    from .spatial_join import covering_tables, match_coverings
+
+    tables = covering_tables(coverings)
+    q = np.asarray(q, dtype=np.int32)
+    r2 = np.asarray(r2, dtype=np.float64)
+    nreg = max(len(coverings), 1)
+
+    def edge_candidates(ecell, *edge):
+        ids = ecell.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+        n = ids.shape[0]
+        rows, codes = match_coverings(ids, tables, two_way=True)
+        # one hit per (row, query): a row reaches a query through every
+        # covering cell it overlaps; unique() also keeps them row-ordered
+        pair = np.unique(rows * nreg + (codes >> 1))
+        rows, ridx = pair // nreg, pair % nreg
+        dist2 = score(q[ridx], *(c.to_numpy(zero_copy_only=False)[rows] for c in edge))
+        keep = dist2 <= r2[ridx]
+        offsets = np.zeros(n + 1, dtype=np.int32)
+        offsets[1:] = np.cumsum(np.bincount(rows[keep], minlength=n))
+        hits = pa.StructArray.from_arrays(
+            [pa.array(q[ridx[keep]]), pa.array(dist2[keep])], names=["q", "dist2"]
+        )
+        return pa.ListArray.from_arrays(pa.array(offsets), hits)
+
+    return edge_candidates
+
+
+def _edge_search(registered: DataFrame, edge_id_col: str, geom: dict, scorer) -> dict:
+    """The hooks of every registered-edge variant of :func:`_ring_search`.
+    ``geom`` maps query id -> target geometry, ``scorer`` builds the numpy
+    ``score(q, ax..bz)`` over ``list(geom.values())`` (edgepair).
+
+    ``candidates`` plans one round as: the persisted index, the native
+    coarse-prefix filter (``ecell`` is a stored column, so the InSet never
+    re-runs a kernel), ONE fused Arrow kernel (:func:`edge_round_kernel`)
+    under the explode, the broadcast ``q -> query_id`` map, and one
+    ``repartition("query_id")``: its HashPartitioning satisfies both the
+    (query_id, edge_id) dedup (an edge registers under up to 4 cells) and
+    the top-k window, so the round pays one exchange of accepted hits.
+
+    ``score`` is the brute probe's scorer over the unregistered edge table
+    (the same numpy scorer behind a pandas UDF): the index would score an
+    edge once per registered cell."""
+    spark = registered.sparkSession
+    ids = list(geom)
+    score_np = scorer(list(geom.values()))
+    cols = [c for c in registered.columns if c != "ecell"]
+    twin = edgepair.scorer_udf(score_np, "edge_dist2")
+
+    def candidates(coverings, qrows):
+        slot = {row[0]: (row[1], row[-1]) for row in qrows}
+        q, r2 = zip(*(slot[rc.region_id] for rc in coverings))
+        kernel = F.arrow_udf(edge_round_kernel(coverings, q, r2, score_np), _EDGE_HITS)
+        qmap = local_df(spark, [(row[1], row[0]) for row in qrows], ["q", "query_id"])
+        cond = coarse_prefix_filter(coverings, "ecell", two_way=True)
+        src = registered if cond is None else registered.filter(cond)
         return (
-            cand.withColumnRenamed("region_id", "query_id")
+            _with_edge_xyz(src)
+            .select(*cols, F.explode(kernel("ecell", *_EDGE_XYZ)).alias("_h"))
+            .select(*cols, "_h.q", "_h.dist2")
+            .join(F.broadcast(qmap), "q")
+            .select("query_id", *cols, "dist2")
             .repartition("query_id")
             .dropDuplicates(["query_id", edge_id_col])
         )
 
-    return probe
+    def score(cand: DataFrame) -> DataFrame:
+        return (
+            _with_edge_xyz(cand)
+            .withColumn("dist2", twin("_q", *_EDGE_XYZ))
+            .drop(*_EDGE_XYZ)
+        )
+
+    return {
+        "candidates": candidates,
+        "target": {qid: (i,) for i, qid in enumerate(ids)},
+        "target_cols": ["_q"],
+        "score": score,
+    }
 
 
 def _with_edge_xyz(df: DataFrame) -> DataFrame:
@@ -298,19 +375,6 @@ def _with_edge_xyz(df: DataFrame) -> DataFrame:
         *edgedist.xyz_exprs("alat", "alng", "a"),
         *edgedist.xyz_exprs("blat", "blng", "b"),
     )
-
-
-def _point_edge_dist2(cand: DataFrame) -> DataFrame:
-    """The ``score`` hook for point queries against edges: the closed-form
-    point-to-edge chord^2 by its numpy twin (edgepair._point_edge_dist2_np,
-    bit-identical to the SQL fragment the oracles use).  The endpoint xyz
-    stays in SQL so the trig path is unchanged.  The SQL form's 13 chained
-    intermediates cost 1.2-1.6 s of Catalyst optimization per ring round on
-    a 4-core host; the UDF is one ArrowEvalPython node."""
-    cols = ("qx", "qy", "qz", "ax", "ay", "az", "bx", "by", "bz")
-    return _with_edge_xyz(cand).withColumn(
-        "dist2", edgepair.point_edge_dist2_udf()(*cols)
-    ).drop(*cols[3:])
 
 
 def knn_join(
@@ -418,9 +482,15 @@ def knn_join(
             far = ang + cap_ang + 1e-6
             complete[qid] = far if far <= max_r else math.inf
 
-    def probe(coverings):
+    def score(cand):
+        return cand.withColumn("dist2", _chord2_to_query_expr(lat_col, lng_col))
+
+    def candidates(coverings, qrows):
         cand = candidate_match_kernel(points_df, coverings, cell_col=cell_col)
-        return cand.drop("is_interior").withColumnRenamed("region_id", "query_id")
+        cand = cand.drop("is_interior").withColumnRenamed("region_id", "query_id")
+        qdf = local_df(spark, qrows, ["query_id", "qx", "qy", "qz", "r2"])
+        scored = score(cand.join(F.broadcast(qdf), "query_id"))
+        return scored.filter(F.col("dist2") <= F.col("r2"))
 
     return _ring_search(
         spark,
@@ -428,10 +498,10 @@ def knn_join(
         k,
         radius,
         cover=lambda q, ring: _cap_covering(q, *geo[q], min(ring + cap_pad, max_r)),
-        probe=probe,
+        candidates=candidates,
         target=xyz,
         target_cols=["qx", "qy", "qz"],
-        score=lambda cand: cand.withColumn("dist2", _chord2_to_query_expr(lat_col, lng_col)),
+        score=score,
         tie_col=tie_col,
         # with a region set the brute side is the in-region subset
         brute_df=points_df,
@@ -660,7 +730,9 @@ def knn_edges_join(
     * the covering probe is TWO-WAY (registered cells may be coarser or
       finer than the query-cap covering cells);
     * scoring is the closed-form point-to-edge chord^2 (functions.edgedist),
-      evaluated by its bit-identical numpy twin (see _point_edge_dist2).
+      evaluated by its bit-identical numpy twin inside the same Arrow
+      kernel as the covering match, so each ring round is one Python
+      stage and one exchange of ``dist2 <= r2`` hits (see _edge_search).
 
     Options parity with the reference (s2closest_edge_query.d:199-272):
     ``max_distance_deg`` bounds results to that distance (within-distance
@@ -693,10 +765,12 @@ def knn_edges_join(
         k,
         dict.fromkeys(geo, seed_deg),
         cover=lambda q, ring: _cap_covering(q, *geo[q], ring),
-        probe=_edge_probe(registered, edge_id_col),
-        target={qid: _xyz(lat, lng) for qid, (lat, lng) in geo.items()},
-        target_cols=["qx", "qy", "qz"],
-        score=_point_edge_dist2,
+        **_edge_search(
+            registered,
+            edge_id_col,
+            {qid: _xyz(lat, lng) for qid, (lat, lng) in geo.items()},
+            edgepair.point_edge_scorer,
+        ),
         tie_col=edge_id_col,
         brute_df=edges_df,
         max_rounds=max_rounds,
@@ -814,11 +888,12 @@ def knn_edges_to_edges(
     polyline within-distance region): any table edge within ring distance
     has a point inside the strip, so the covering probe is complete, and a
     strip prunes far harder than a midpoint cap for long segments (area
-    ~2*len*r vs (len/2 + r)^2 — the candidate count is what the giant
-    scoring fragment's cost scales with).  Scoring is the edge-PAIR min
-    squared chord (0 when properly crossing, else min of the four
-    endpoint-to-edge distances) stated as the engine-shared SQL fragment
-    (functions/edgepair.py).  Returns (query_id, rank, dist2, <edge cols>).
+    ~2*len*r vs (len/2 + r)^2 — the candidate count is what scoring
+    scales with).  Scoring is the edge-PAIR min squared chord (0 when
+    properly crossing, else min of the four endpoint-to-edge distances):
+    the numpy twin of the engine-shared SQL fragment (functions/edgepair.py)
+    inside the round's fused kernel.  Returns (query_id, rank, dist2,
+    <edge cols>).
     """
     from ..s2core.regions import latlng_point
 
@@ -827,23 +902,6 @@ def knn_edges_to_edges(
     for qid, (la, ln), (lb, lnb) in query_edges:
         ends[qid] = (*latlng_point(la, ln), *latlng_point(lb, lnb))
         seg[qid] = (float(la), float(ln), float(lb), float(lnb))
-
-    # numpy pair scorer (bit-identical twin of the SQL fragment, see
-    # edgepair._pair_dist2_np): the 62-intermediate SQL projection paid
-    # seconds of Catalyst analysis per ring round; the endpoint xyz stays
-    # in SQL so the trig path is unchanged
-    pair_udf = edgepair.pair_dist2_udf()
-
-    def score(cand: DataFrame) -> DataFrame:
-        return _with_edge_xyz(cand).withColumn(
-            "dist2",
-            pair_udf(
-                F.col("ax"), F.col("ay"), F.col("az"),
-                F.col("bx"), F.col("by"), F.col("bz"),
-                F.col("cx"), F.col("cy"), F.col("cz"),
-                F.col("dx"), F.col("dy"), F.col("dz"),
-            ),
-        ).drop("ax", "ay", "az", "bx", "by", "bz")
 
     # memoized per-(segment, ring) covering — the driver-side coverer was
     # ~0.5 s per evaluation for 41 segments, re-paid every evaluation; keys
@@ -858,10 +916,10 @@ def knn_edges_to_edges(
         k,
         dict.fromkeys(ends, _TARGET_SEED_DEG),
         cover=cover,
-        probe=_edge_probe(registered, edge_id_col),
-        target=ends,
-        target_cols=["cx", "cy", "cz", "dx", "dy", "dz"],
-        score=score,
+        # numpy pair scorer (bit-identical twin of the SQL fragment, see
+        # edgepair._pair_dist2_np): the 62-intermediate SQL projection paid
+        # seconds of Catalyst analysis per ring round
+        **_edge_search(registered, edge_id_col, ends, edgepair.pair_scorer),
         tie_col=edge_id_col,
         brute_df=edges_df,
         max_rounds=max_rounds,
@@ -888,9 +946,10 @@ def knn_edges_to_cells(
     Same ring scheme as the other target kinds; the search region is the
     cell's circumcap expanded by the ring radius (any edge within ring
     distance of the cell has a point within circumradius + ring of the
-    center, so the covering probe is complete).  Scoring is the
-    engine-shared SQL fragment (functions/edgepair.cell_dist2_parts) with
-    the cell's vertices and inward normals riding as broadcast columns.
+    center, so the covering probe is complete).  Scoring is the numpy twin
+    of the engine-shared SQL fragment (functions/edgepair.cell_dist2_parts),
+    with each query cell's vertices and inward normals in the scorer's
+    closure.
     """
     from ..s2core.coords import xyz_to_latlng
     from ..s2core.regions import Cell, chord2_between, chord2_to_radians
@@ -910,28 +969,6 @@ def knn_edges_to_cells(
         la, ln = xyz_to_latlng(*center)
         geom[qid] = (float(la), float(ln), circ, verts, norms)
 
-    # numpy scorer with the per-query cell geometry in the closure: the SQL
-    # form of this fragment (4 pair instances = 992 intermediates) failed
-    # whole-stage codegen (janino class-size error) and fell back to
-    # interpreted evaluation, and its Catalyst analysis alone cost seconds
-    # per ring round.  cell_dist2_np is the bit-identical IEEE twin
-    # (verified element-for-element against the SQL path), the endpoint
-    # xyz stays in SQL so the trig library is unchanged, and the round
-    # plan shrinks to one ArrowEvalPython over the candidate rows.
-    score_udf = edgepair.cell_dist2_udf(
-        {qid: (verts, norms) for qid, (_, _, _, verts, norms) in geom.items()}
-    )
-
-    def score(cand: DataFrame) -> DataFrame:
-        return _with_edge_xyz(cand).withColumn(
-            "dist2",
-            score_udf(
-                F.col("query_id"),
-                F.col("ax"), F.col("ay"), F.col("az"),
-                F.col("bx"), F.col("by"), F.col("bz"),
-            ),
-        ).drop("ax", "ay", "az", "bx", "by", "bz")
-
     def cover(qid, ring: float) -> RegionCovering:
         la, ln, circ, _, _ = geom[qid]
         return _cap_covering(qid, la, ln, min(circ + ring, 179.0))
@@ -942,10 +979,16 @@ def knn_edges_to_cells(
         k,
         dict.fromkeys(geom, _TARGET_SEED_DEG),
         cover=cover,
-        probe=_edge_probe(registered, edge_id_col),
-        target=dict.fromkeys(geom, ()),
-        target_cols=[],
-        score=score,
+        # numpy scorer with the per-query cell geometry in the closure: the
+        # SQL form of this fragment (4 pair instances = 992 intermediates)
+        # failed whole-stage codegen and cost seconds of Catalyst analysis
+        # per ring round; cell_dist2_np is its bit-identical IEEE twin
+        **_edge_search(
+            registered,
+            edge_id_col,
+            {qid: (verts, norms) for qid, (_, _, _, verts, norms) in geom.items()},
+            edgepair.cell_scorer,
+        ),
         tie_col=edge_id_col,
         brute_df=edges_df,
         max_rounds=max_rounds,

@@ -23,10 +23,10 @@ from ..functions.localdf import local_df
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import edgepair
 from .knn import (
     _cap_covering,
-    _edge_probe,
-    _point_edge_dist2,
+    _edge_search,
     _ring_search,
     _seed_deg,
     _xyz,
@@ -79,10 +79,12 @@ def nearest_polyline_join(
         k,
         dict.fromkeys(geo, seed_deg),
         cover=lambda q, ring: _cap_covering(q, *geo[q], ring),
-        probe=_edge_probe(registered, edge_id_col),
-        target={qid: _xyz(lat, lng) for qid, (lat, lng) in geo.items()},
-        target_cols=["qx", "qy", "qz"],
-        score=_point_edge_dist2,
+        **_edge_search(
+            registered,
+            edge_id_col,
+            {qid: _xyz(lat, lng) for qid, (lat, lng) in geo.items()},
+            edgepair.point_edge_scorer,
+        ),
         tie_col=polyline_col,
         collapse=lambda scored: scored.groupBy("query_id", polyline_col).agg(
             F.min("dist2").alias("dist2")

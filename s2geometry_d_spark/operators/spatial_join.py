@@ -163,11 +163,30 @@ def covering_match_udf(coverings: list[RegionCovering], two_way: bool = False):
     Returns a pandas UDF: cell_id (signed) -> array<int> of codes
     ``region_idx * 2 + is_interior`` (empty for the vast majority of rows).
     """
-    # per-level sorted covering arrays (signed domain preserves order)
+    tables = covering_tables(coverings)
+    region_ids = [rc.region_id for rc in coverings]
+
+    @F.pandas_udf(T.ArrayType(T.IntegerType()))
+    def match(cell_signed: pd.Series) -> pd.Series:
+        ids = cell_signed.to_numpy(dtype=np.int64)
+        n = ids.shape[0]
+        all_rows, all_codes = match_coverings(ids, tables, two_way)
+        out = [()] * n
+        starts = np.searchsorted(all_rows, np.arange(n), side="left")
+        ends = np.searchsorted(all_rows, np.arange(n), side="right")
+        for i in np.nonzero(ends > starts)[0]:
+            out[i] = tuple(int(c) for c in all_codes[starts[i] : ends[i]])
+        return pd.Series(out)
+
+    return match, region_ids
+
+
+def covering_tables(coverings: list[RegionCovering]) -> list:
+    """The covering cells as per-level sorted arrays ``(lsb, cells, codes)``
+    (the signed domain preserves order), code = region_idx * 2 +
+    is_interior — the broadcast side of :func:`match_coverings`."""
     by_level: dict[int, list[tuple[int, int, int]]] = {}
-    region_ids = []
     for ridx, rc in enumerate(coverings):
-        region_ids.append(rc.region_id)
         for cid, interior in rc.cells:
             lvl = CellId(cid).level()
             signed = int(np.int64(np.uint64(cid) ^ np.uint64(1 << 63)))
@@ -179,54 +198,48 @@ def covering_match_udf(coverings: list[RegionCovering], two_way: bool = False):
         codes = np.array([r[1] * 2 + r[2] for r in rows], dtype=np.int64)
         nl = np.int64(1 << (2 * (30 - lvl)))
         tables.append((nl, cells, codes))
+    return tables
 
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def match(cell_signed: pd.Series) -> pd.Series:
-        ids = cell_signed.to_numpy(dtype=np.int64)
-        n = ids.shape[0]
-        lsb_in = ids & -ids  # valid in the signed-flipped domain (bit 63 untouched)
-        hit_rows: list[np.ndarray] = []
-        hit_codes: list[np.ndarray] = []
-        for nl, cells, codes in tables:
-            # ancestor probe: input at least as fine as this covering level
-            fine = lsb_in <= nl
-            parents = np.where(fine, (ids & -nl) | nl, np.int64(0))
-            left = np.searchsorted(cells, parents, side="left")
-            right = np.searchsorted(cells, parents, side="right")
-            cnt = np.where(fine, right - left, 0)
-            if two_way:
-                # descendant probe: covering cells inside the input cell's
-                # leaf range (input strictly coarser than this level)
-                coarse = lsb_in > nl
-                rmin = ids - (lsb_in - 1)
-                rmax = ids + (lsb_in - 1)
-                lo = np.searchsorted(cells, rmin, side="left")
-                hi = np.searchsorted(cells, rmax, side="right")
-                cnt = cnt + np.where(coarse, hi - lo, 0)
-                left = np.where(fine, left, lo)
-            nz = np.nonzero(cnt)[0]
-            if nz.size == 0:
-                continue
-            # expand duplicates (same covering cell used by several regions)
-            reps = cnt[nz]
-            rows = np.repeat(nz, reps)
-            offs = np.concatenate([np.arange(c) for c in reps])
-            hit_rows.append(rows)
-            hit_codes.append(codes[left[rows] + offs])
-        out = [()] * n
-        if hit_rows:
-            all_rows = np.concatenate(hit_rows)
-            all_codes = np.concatenate(hit_codes)
-            order = np.argsort(all_rows, kind="stable")
-            all_rows = all_rows[order]
-            all_codes = all_codes[order]
-            starts = np.searchsorted(all_rows, np.arange(n), side="left")
-            ends = np.searchsorted(all_rows, np.arange(n), side="right")
-            for i in np.nonzero(ends > starts)[0]:
-                out[i] = tuple(int(c) for c in all_codes[starts[i] : ends[i]])
-        return pd.Series(out)
 
-    return match, region_ids
+def match_coverings(ids: np.ndarray, tables: list, two_way: bool = False):
+    """Every (row, code) hit of the signed cell ids against
+    :func:`covering_tables`, as two int64 arrays sorted by row: a row hits
+    each covering cell that is its ancestor or itself, and with
+    ``two_way`` also each covering cell inside its leaf range."""
+    lsb_in = ids & -ids  # valid in the signed-flipped domain (bit 63 untouched)
+    hit_rows: list[np.ndarray] = []
+    hit_codes: list[np.ndarray] = []
+    for nl, cells, codes in tables:
+        # ancestor probe: input at least as fine as this covering level
+        fine = lsb_in <= nl
+        parents = np.where(fine, (ids & -nl) | nl, np.int64(0))
+        left = np.searchsorted(cells, parents, side="left")
+        right = np.searchsorted(cells, parents, side="right")
+        cnt = np.where(fine, right - left, 0)
+        if two_way:
+            # descendant probe: covering cells inside the input cell's
+            # leaf range (input strictly coarser than this level)
+            coarse = lsb_in > nl
+            rmin = ids - (lsb_in - 1)
+            rmax = ids + (lsb_in - 1)
+            lo = np.searchsorted(cells, rmin, side="left")
+            hi = np.searchsorted(cells, rmax, side="right")
+            cnt = cnt + np.where(coarse, hi - lo, 0)
+            left = np.where(fine, left, lo)
+        nz = np.nonzero(cnt)[0]
+        if nz.size == 0:
+            continue
+        # expand duplicates (same covering cell used by several regions)
+        reps = cnt[nz]
+        rows = np.repeat(nz, reps)
+        offs = np.arange(rows.size) - np.repeat(np.cumsum(reps) - reps, reps)
+        hit_rows.append(rows)
+        hit_codes.append(codes[left[rows] + offs])
+    if not hit_rows:
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
+    all_rows = np.concatenate(hit_rows)
+    order = np.argsort(all_rows, kind="stable")
+    return all_rows[order], np.concatenate(hit_codes)[order]
 
 
 # Above this many covering cells the coarse-prefix InSet literal list stops
@@ -252,7 +265,10 @@ def coarse_prefix_filter(
 
     Both tests are pure bit math + InSet, so rows the kernel would map to
     an empty match array never cross the Arrow boundary at all.  Returns
-    None (caller skips the filter) for empty or oversized coverings.
+    None (caller skips the filter) for empty or oversized coverings.  The
+    predicate is parsed from ONE SQL text with BIGINT literals (integers
+    only, so nothing needs escaping): ``Column.isin`` paid one py4j call
+    per literal, ~0.1 s of driver time per probe.
 
     ONLY apply this to inputs whose cell column is a stored/persisted
     column (e.g. a registered edge index): on a column computed by a
@@ -269,19 +285,21 @@ def coarse_prefix_filter(
     def signed(cid: int) -> int:
         return int(np.int64(np.uint64(cid) ^ np.uint64(1 << 63)))
 
-    parents = sorted({(signed(cid) & -nl) | nl for cid in cells})
-    cell = F.col(cell_col)
-    lsb = cell.bitwiseAND(-cell)
-    fine_hit = (lsb <= F.lit(nl)) & kernels.parent_signed(cell, L).isin(parents)
-    if not two_way or L == 0:
-        return fine_hit
-    ancestors: set[int] = set()
-    for cid in cells:
-        c = CellId(cid)
-        for lvl in range(L):
-            ancestors.add(signed(c.parent(lvl).id))
-    coarse_hit = (lsb > F.lit(nl)) & cell.isin(sorted(ancestors))
-    return fine_hit | coarse_hit
+    def in_list(ids) -> str:
+        return ", ".join(f"{v}L" for v in sorted(ids))
+
+    parents = {(signed(cid) & -nl) | nl for cid in cells}
+    cell = f"`{cell_col}`"
+    lsb = f"({cell} & -{cell})"
+    cond = f"({lsb} <= {nl}L AND (({cell} & {-nl}L) | {nl}L) IN ({in_list(parents)}))"
+    if two_way and L > 0:
+        ancestors: set[int] = set()
+        for cid in cells:
+            c = CellId(cid)
+            for lvl in range(L):
+                ancestors.add(signed(c.parent(lvl).id))
+        cond += f" OR ({lsb} > {nl}L AND {cell} IN ({in_list(ancestors)}))"
+    return F.expr(cond)
 
 
 def candidate_match_kernel(

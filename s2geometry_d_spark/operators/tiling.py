@@ -43,6 +43,7 @@ from pyspark.sql import types as T
 from ..functions import kernels
 from ..s2core import cellid as ci
 from ..s2core import coords, metrics
+from .knn import _cell_level
 
 GRID = 4
 _SAMP = 4  # lattice samples per axis inside the kernel
@@ -315,15 +316,10 @@ def tile_containment_check(
     # assignment kernel evaluates exactly once.  (Branching directly on the
     # map-only subtree re-evaluated the kernel once per branch — measured 3x
     # the whole check's cost in round 4.)
-    lvl_of = (
-        F.lit(30)
-        - (
-            F.log2(F.col("cell_id").bitwiseAND(-F.col("cell_id")).cast("double"))
-            / F.lit(2.0)
-        ).cast("int")
-    ).alias("_lvl")
     per_tile = (
-        assigned.select(id_col, "tile_x", "tile_y", "cell_id", lvl_of)
+        assigned.select(
+            id_col, "tile_x", "tile_y", "cell_id", _cell_level("cell_id").alias("_lvl")
+        )
         .groupBy(id_col, "tile_x", "tile_y")
         .agg(
             F.collect_list("cell_id").alias("_cells"),

@@ -206,10 +206,6 @@ def overlay_pairs():
     ]
 
 
-def overlay_intersection_sql() -> str:
-    return overlay_sql("intersection")
-
-
 def overlay_sql(op: str) -> str:
     """Vertex multiset of op(A, B) per pair, derived INDEPENDENTLY of the
     engine's overlay walk: retained vertices by convex det-sign containment

@@ -157,15 +157,6 @@ def to_latlng(ids) -> tuple[np.ndarray, np.ndarray]:
     return coords.xyz_to_latlng(x, y, z)
 
 
-def to_token(ids) -> np.ndarray:
-    """Order-preserving lowercase-hex tokens with trailing zeros stripped."""
-    ids = np.asarray(ids, dtype=np.uint64)
-    out = np.empty(ids.shape, dtype=object)
-    for idx, v in enumerate(ids.tolist()):
-        out[idx] = token_of(v)
-    return out
-
-
 def to_signed(ids) -> np.ndarray:
     """uint64 id -> order-preserving signed storage form (id XOR 2^63)."""
     ids = np.asarray(ids, dtype=np.uint64)

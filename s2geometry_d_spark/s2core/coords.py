@@ -145,10 +145,6 @@ def st_to_ij(s):
     return np.clip(ij, 0, LIMIT_IJ - 1).astype(np.int64)
 
 
-def ij_to_st_min(i):
-    return np.asarray(i, dtype=np.float64) * (1.0 / LIMIT_IJ)
-
-
 def si_ti_to_st(si):
     return np.asarray(si, dtype=np.float64) * (1.0 / MAX_SI_TI)
 

@@ -49,20 +49,6 @@ def loop_area(vertices) -> float:
     return total
 
 
-def loop_centroid(vertices):
-    """(Non-unit) area-weighted centroid of the loop interior — the fan sum
-    of triangle true centroids scaled by signed areas (relative weights)."""
-    cx = cy = cz = 0.0
-    v0 = vertices[0]
-    for i in range(1, len(vertices) - 1):
-        a, b, c = v0, vertices[i], vertices[i + 1]
-        w = signed_triangle_area(a, b, c)
-        cx += w * (a[0] + b[0] + c[0]) / 3.0
-        cy += w * (a[1] + b[1] + c[1]) / 3.0
-        cz += w * (a[2] + b[2] + c[2]) / 3.0
-    return (cx, cy, cz)
-
-
 def cap_area(radius_radians: float) -> float:
     return 2.0 * math.pi * (1.0 - math.cos(radius_radians))
 

@@ -72,10 +72,3 @@ def spatial_points(spark: SparkSession, sf_dir: str, with_cell: bool = True) -> 
     _POINTS_CACHE[key] = df
     return df
 
-
-def oracle_points_cte() -> str:
-    """DuckDB CTE producing the identical (point_id, lat, lng) table."""
-    return (
-        "SELECT o_orderkey AS point_id, "
-        f"{LAT_SQL} AS lat, {LNG_SQL} AS lng FROM orders"
-    )

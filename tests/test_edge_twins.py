@@ -8,7 +8,8 @@ compared with its Spark mirror (``edgedist.with_dist2``,
 ``edgepair.with_pair_dist2``, ``edgepair.with_cell_dist2``) as raw int64
 bit patterns over a seeded edge set carrying the degenerate cases: a == b,
 antipodal endpoints, queries on an endpoint, on the arc interior and at a
-pole.
+pole.  The fused ring-round kernel (``knn.edge_round_kernel``) is pinned
+the same way, plus its list layout against a per-row reference.
 """
 
 import numpy as np
@@ -92,14 +93,16 @@ def test_point_edge_twin_is_bit_identical(spark):
 
 
 def test_point_edge_udf_is_bit_identical(spark):
-    """The operator's scorer (the twin behind a pandas UDF) returns the same
-    bits as the SQL fragment, Arrow round trip included."""
+    """The brute probe's scorer (the per-query point scorer behind a pandas
+    UDF, row i against query i) returns the same bits as the SQL fragment,
+    Arrow round trip included."""
     from pyspark.sql import functions as F
 
     a, b, q = _cases(seed=8)
     df = _frame(spark, **_named(_Q, q), **_named(_A, a), **_named(_B, b))
     want = _sql_dist2(edgedist.with_dist2(df))
-    got = _sql_dist2(df.withColumn("dist2", edgepair.point_edge_dist2_udf()(*_Q, *_A, *_B)))
+    udf = edgepair.scorer_udf(edgepair.point_edge_scorer(q), "edge_dist2")
+    got = _sql_dist2(df.withColumn("dist2", udf(F.col("row"), *_A, *_B)))
     _assert_bits(got, want)
     assert np.isfinite(want).all()
 
@@ -143,3 +146,136 @@ def test_cell_twin_is_bit_identical(spark):
         want = _sql_dist2(edgepair.with_cell_dist2(df))
         got = edgepair.cell_dist2_np(*a.T, *b.T, verts, norms)
         _assert_bits(got, want)
+
+
+def _cell_geom(cid):
+    cell = Cell(cid)
+    return [cell.get_vertex(k) for k in range(4)], [cell.get_edge_raw(k) for k in range(4)]
+
+
+def _kernel_dist2(spark, a, b, score):
+    """Runs the fused round kernel through Spark with row i registered
+    under its own leaf cell and covered only by query i (infinite r2):
+    one hit per row, (row, dist2) sorted by row."""
+    from pyspark.sql import functions as F
+
+    from s2geometry_d_spark.operators import knn
+    from s2geometry_d_spark.operators.spatial_join import RegionCovering
+    from s2geometry_d_spark.s2core import cellid as ci
+
+    n = len(a)
+    leaf = (2 * np.arange(n) + 1).astype(np.uint64)  # distinct face-0 leaves
+    coverings = [RegionCovering(i, None, [(int(leaf[i]), False)]) for i in range(n)]
+    kernel = knn.edge_round_kernel(coverings, np.arange(n), np.full(n, np.inf), score)
+    pdf = pd.DataFrame({"row": np.arange(n), "ecell": ci.to_signed(leaf)})
+    for name, col in {**_named(_A, a), **_named(_B, b)}.items():
+        pdf[name] = col
+    udf = F.arrow_udf(kernel, knn._EDGE_HITS)
+    out = (
+        spark.createDataFrame(pdf)
+        .select("row", F.explode(udf("ecell", *_A, *_B)).alias("h"))
+        .select("row", "h.q", "h.dist2")
+        .toPandas()
+        .sort_values("row")
+    )
+    assert out["row"].tolist() == list(range(n)) and (out["q"] == out["row"]).all()
+    return out["dist2"].to_numpy(dtype=np.float64)
+
+
+def test_fused_kernel_dist2_is_bit_identical(spark):
+    """The fused kernel's dist2 equals the SQL fragment bit for bit for the
+    point, pair and cell scorers, Arrow round trip included."""
+    a, b, q = _cases(seed=9)
+    df = _frame(spark, **_named(_Q, q), **_named(_A, a), **_named(_B, b))
+    want = _sql_dist2(edgedist.with_dist2(df))
+    _assert_bits(_kernel_dist2(spark, a, b, edgepair.point_edge_scorer(q)), want)
+
+    c, d = q, np.roll(a, 1, axis=0)
+    cols = ("cx", "cy", "cz"), ("dx", "dy", "dz")
+    df = _frame(
+        spark, **_named(_A, a), **_named(_B, b), **_named(cols[0], c), **_named(cols[1], d)
+    )
+    want = _sql_dist2(edgepair.with_pair_dist2(df))
+    got = _kernel_dist2(spark, a, b, edgepair.pair_scorer(np.hstack([c, d])))
+    _assert_bits(got, want)
+    assert (got == 0.0).any() and (got > 0.0).any()
+
+    cells = [
+        _cell_geom(CellId.from_latlng(0.0, 0.0).parent(3)),
+        _cell_geom(CellId.from_point(*a[0]).parent(10)),
+        _cell_geom(CellId.from_face(5)),
+    ]
+    pick = np.arange(len(a)) % len(cells)
+    geom = {}
+    for k in range(4):
+        for i, ax in enumerate("xyz"):
+            geom[f"v{k}{ax}"] = np.array([cells[j][0][k][i] for j in pick])
+            geom[f"n{k}{ax}"] = np.array([cells[j][1][k][i] for j in pick])
+    df = _frame(spark, **_named(_A, a), **_named(_B, b), **geom)
+    want = _sql_dist2(edgepair.with_cell_dist2(df))
+    got = _kernel_dist2(spark, a, b, edgepair.cell_scorer([cells[j] for j in pick]))
+    _assert_bits(got, want)
+    assert (got == 0.0).any() and (got > 0.0).any()
+
+
+def test_fused_kernel_lists_match_per_row_reference():
+    """The kernel's ListArray equals a per-row reference: zero-hit rows,
+    rows hitting several queries, a (row, query) pair reached through two
+    covering cells (emitted once), the r2 cut, and an empty batch."""
+    import pyarrow as pa
+
+    from s2geometry_d_spark.operators import knn
+    from s2geometry_d_spark.operators.spatial_join import RegionCovering
+    from s2geometry_d_spark.s2core import cellid as ci
+
+    coarse = CellId.from_latlng(10.0, 20.0).parent(10)
+    kids = [coarse.child(0).child(1), coarse.child(2).child(3)]  # level 12
+    coverings = [
+        RegionCovering("in", None, [(k.id, False) for k in kids]),
+        RegionCovering("up", None, [(coarse.parent(5).id, True)]),
+        RegionCovering("none", None, [(CellId.from_latlng(-60.0, -100.0).parent(8).id, False)]),
+    ]
+    row_cells = [
+        coarse,                                  # holds both kids and sits under "up"
+        CellId.from_latlng(10.0, 20.0),          # a leaf: under "up", maybe a kid
+        kids[0].child(1).child(2),               # under kid 0 and "up"
+        CellId.from_latlng(45.0, -170.0).parent(7),  # nothing
+        coarse.parent(5).child(3).child(0),      # under "up" only
+    ]
+    rng = np.random.default_rng(5)
+    edge = [_unit(rng.normal(size=(len(row_cells), 3))) for _ in range(2)]
+    xyz = [*edge[0].T, *edge[1].T]
+    points = _unit(rng.normal(size=(10, 3)))
+    score = edgepair.point_edge_scorer(points)
+    gidx = np.array([7, 2, 4])
+
+    def hits(cell, cov):
+        lo, hi = cell.range_min().id, cell.range_max().id
+        return any(
+            CellId(c).range_min().id <= hi and lo <= CellId(c).range_max().id
+            for c, _ in cov.cells
+        )
+
+    def d2(i, g):
+        return score(np.array([g]), *[np.array([c[i]]) for c in xyz])[0]
+
+    up = [d2(i, gidx[1]) for i, c in enumerate(row_cells) if hits(c, coverings[1])]
+    r2 = np.array([np.inf, sorted(up)[1], np.inf])  # "up" keeps its two nearest rows
+    want = [
+        [
+            {"q": int(g), "dist2": d2(i, g)}
+            for cov, g, r in zip(coverings, gidx, r2)
+            if hits(cell, cov) and d2(i, g) <= r
+        ]
+        for i, cell in enumerate(row_cells)
+    ]
+    kernel = knn.edge_round_kernel(coverings, gidx, r2, score)
+    ecell = pa.array(ci.to_signed(np.array([c.id for c in row_cells], dtype=np.uint64)))
+    got = kernel(ecell, *[pa.array(c) for c in xyz])
+    assert got.type == pa.list_(pa.struct([("q", pa.int32()), ("dist2", pa.float64())]))
+    assert got.to_pylist() == want
+    assert want[3] == [] and len(want[0]) == 2 and len(up) > 2
+    assert sum(h["q"] == 7 for h in want[0]) == 1  # two covering cells, one hit
+
+    empty = kernel(pa.array([], pa.int64()), *[pa.array([], pa.float64())] * 6)
+    assert len(empty) == 0 and empty.type == got.type

@@ -278,15 +278,41 @@ def test_path_assembly_is_pure_catalyst(spark, entrymod):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_knn_edges_round_scores_after_probe_exchange(spark, entrymod, monkeypatch):
-    """One knn_edges_join ring round: dist2 comes from ONE point_edge_dist2
-    ArrowEvalPython above the probe's hashpartitioning(query_id) exchange,
-    not inside the probe's stage next to the match kernel (sharing that
-    task kept two Python workers alive and raised peak RSS ~29%).  The SQL
-    fragment (CASE WHEN nn > 1e-60 ...) whose 13 chained intermediates cost
-    seconds of Catalyst optimization per round is gone, and the round pays
-    exactly two hash exchanges: the probe's and the window's.  The round's
-    broadcast query side is a LocalTableScan; no pickled-RDD scan appears."""
+def _operators(df) -> list[tuple[str, list[str]]]:
+    """(operator, ancestors) for every physical operator the plan runs
+    itself, top-down, with AQE wrappers and query stages unwrapped.  An
+    InMemoryTableScan is a leaf: the build plan of the cached relation it
+    reads (printed under it in the plan text) is not part of this plan."""
+    out: list[tuple[str, list[str]]] = []
+
+    def walk(node, ancestors):
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            return walk(node.executedPlan(), ancestors)
+        if name.endswith("QueryStage"):
+            return walk(node.plan(), ancestors)
+        text = node.simpleString(100)
+        out.append((text, ancestors))
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i), [*ancestors, text])
+
+    walk(df._jdf.queryExecution().executedPlan(), [])
+    return out
+
+
+@pytest.mark.parametrize("query", ["knn_edges_join", "knn_edge_targets"])
+def test_knn_edge_round_is_one_fused_kernel_below_one_exchange(
+    spark, entrymod, monkeypatch, query
+):
+    """One registered-edge ring round: the covering match, the numpy-twin
+    scorer and the r2 cut run as ONE ArrowEvalPython (edge_candidates)
+    over the prefiltered index, below the round's only hash exchange, the
+    probe's repartition(query_id), which the (query_id, edge_id) dedup and
+    the top-k window share.  No separate match or point_edge_dist2 stage
+    remains, nor the SQL fragment (CASE WHEN nn > 1e-60 ...) whose chained
+    intermediates cost seconds of Catalyst optimization per round; the
+    q -> query_id map is a driver-built local relation, not a pickled RDD."""
     from s2geometry_d_spark.operators import knn
 
     rounds = []
@@ -298,27 +324,24 @@ def test_knn_edges_round_scores_after_probe_exchange(spark, entrymod, monkeypatc
         return out
 
     monkeypatch.setattr(knn, "_rank", spy)
-    entrymod.queries()["knn_edges_join"](spark, SF_DIR)
+    # an earlier clearCache() leaves the entry's fixture frames unpersisted,
+    # and the round would re-plan the whole index build: start from fresh,
+    # persisted fixtures
+    entrymod.release_caches(spark)
+    entrymod.queries()[query](spark, SF_DIR)
     assert rounds
     plan = _plan(rounds[0])
-    lines = plan.splitlines()
-
-    def at(pred):
-        return [(i, len(ln) - len(ln.lstrip(" :|+-"))) for i, ln in enumerate(lines) if pred(ln)]
-
-    score = at(lambda ln: "ArrowEvalPython [point_edge_dist2(" in ln)
-    probe = at(lambda ln: "hashpartitioning(query_id" in ln and "REPARTITION_BY_COL" in ln)
-    match = at(lambda ln: "ArrowEvalPython [match(" in ln)
-    assert len(score) == 1 and len(probe) == 1 and len(match) == 1, plan
-    # top-down tree text: an ancestor prints earlier and less indented
-    (si, sd), (pi, pd_), (mi, md) = score[0], probe[0], match[0]
-    assert si < pi < mi and sd < pd_ < md, plan
+    ops = _operators(rounds[0])
+    python = [(op, up) for op, up in ops if "ArrowEvalPython" in op]
+    exchanges = [op for op, _ in ops if op.startswith("Exchange hashpartitioning")]
+    assert len(python) == 1 and python[0][0].startswith("ArrowEvalPython [edge_candidates("), plan
+    assert len(exchanges) == 1 and exchanges[0].startswith(
+        "Exchange hashpartitioning(query_id"
+    ) and "REPARTITION_BY_COL" in exchanges[0], plan
+    assert exchanges[0] in python[0][1], plan  # the exchange is an ancestor
+    # the native coarse-prefix filter sits between the kernel and the index
+    below = [op for op, up in ops if python[0][0] in up]
+    assert any(op.startswith("Filter") and "INSET" in op for op in below), plan
+    assert "match(" not in plan and "point_edge_dist2(" not in plan, plan
     assert "1.0E-60" not in plan and "CASE WHEN" not in plan, plan
-    hash_exchanges = [ln for ln in lines if "Exchange hashpartitioning" in ln]
-    assert len(hash_exchanges) == 2, plan
-    # the round's broadcast query side is a driver-built local relation
-    qside = [
-        i for i, ln in enumerate(lines) if "LocalTableScan [query_id#" in ln
-    ]
-    assert len(qside) == 1 and "BroadcastExchange" in lines[qside[0] - 1], plan
     assert "Scan ExistingRDD" not in plan, plan

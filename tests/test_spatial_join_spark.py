@@ -112,3 +112,80 @@ def test_tile_assignment_covers_face_seams(spark):
         leafs = ci.from_latlng(LA.ravel(), LO.ravel())
         for lf in leafs:
             assert ((rmin <= lf) & (lf <= rmax)).any(), (img_id, lf)
+
+
+def _column_prefix_filter(coverings, cell_col, two_way):
+    """The coarse-prefix predicate built Column by Column (``isin`` per
+    literal list): the reference form the single-SQL-text build must match."""
+    import numpy as np
+
+    from s2geometry_d_spark.functions import kernels
+    from s2geometry_d_spark.s2core.cellid import CellId
+
+    def signed(cid):
+        return int(np.int64(np.uint64(cid) ^ np.uint64(1 << 63)))
+
+    cells = [cid for rc in coverings for cid, _ in rc.cells]
+    L = min(CellId(cid).level() for cid in cells)
+    nl = kernels.lsb_for_level(L)
+    cell = F.col(cell_col)
+    lsb = cell.bitwiseAND(-cell)
+    parents = sorted({(signed(cid) & -nl) | nl for cid in cells})
+    cond = (lsb <= F.lit(nl)) & kernels.parent_signed(cell, L).isin(parents)
+    if two_way and L > 0:
+        anc = sorted({signed(CellId(cid).parent(lv).id) for cid in cells for lv in range(L)})
+        cond = cond | ((lsb > F.lit(nl)) & cell.isin(anc))
+    return cond
+
+
+def test_coarse_prefix_filter_keeps_the_column_built_rows(spark):
+    """The prefilter parsed from one SQL text keeps exactly the rows of the
+    Column-built predicate, over seeded cells at every level (face cells
+    and level-30 leaves included), for one- and two-way probes, and still
+    plans as a native INSET."""
+    import numpy as np
+
+    from s2geometry_d_spark.operators.spatial_join import (
+        RegionCovering,
+        coarse_prefix_filter,
+        compute_coverings,
+    )
+    from s2geometry_d_spark.s2core import cellid as ci
+    from s2geometry_d_spark.s2core.cellid import CellId
+
+    rng = np.random.default_rng(11)
+    lat = np.degrees(np.arcsin(rng.uniform(-1, 1, 3000)))
+    lng = rng.uniform(-180, 180, 3000)
+    leaves = ci.from_latlng(lat, lng)
+    levels = rng.integers(0, 31, leaves.shape[0])
+    cells = [CellId(int(v)).parent(int(lv)).id for v, lv in zip(leaves, levels)]
+    cells += [CellId.from_face(f).id for f in range(6)]
+    cells += [CellId(int(v)).id for v in leaves[:50]]  # level-30 leaves
+    ids = [int(v) for v in ci.to_signed(np.array(cells, dtype=np.uint64))]
+    df = spark.createDataFrame([(i,) for i in ids], "cell long").cache()
+
+    caps = [
+        ("near", Cap.from_latlng_radius(10.0, 20.0, 3.0)),
+        ("wide", Cap.from_latlng_radius(-40.0, 100.0, 40.0)),
+    ]
+    coverings = compute_coverings(caps, max_cells=24)
+    # a face cell and a leaf as covering cells: levels 0 and 30
+    coverings.append(
+        RegionCovering("edges", None, [(CellId.from_face(2).id, False), (cells[-1], False)])
+    )
+    # a dozen small caps: many distinct coarse prefixes, a fine level L
+    spread = compute_coverings(
+        [(f"s{i}", Cap.from_latlng_radius(-55.0 + 10 * i, -170.0 + 29 * i, 0.5)) for i in range(12)]
+        + [("near", caps[0][1])],
+        max_cells=8,
+    )
+    for covs in (coverings[:2], coverings, spread):
+        for two_way in (False, True):
+            got = df.filter(coarse_prefix_filter(covs, "cell", two_way=two_way))
+            want = df.filter(_column_prefix_filter(covs, "cell", two_way))
+            got_ids = sorted(r[0] for r in got.collect())
+            assert got_ids == sorted(r[0] for r in want.collect())
+            assert 0 < len(got_ids) < len(ids)
+    plan = df.filter(coarse_prefix_filter(spread, "cell", True))
+    assert "INSET" in plan._jdf.queryExecution().executedPlan().toString()
+    df.unpersist()
