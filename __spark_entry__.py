@@ -21,7 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from s2geometry_d_spark.functions import kernels
 from s2geometry_d_spark.functions.localdf import local_df
-from s2geometry_d_spark.operators import dedup, knn, similarity, text, tiling
+from s2geometry_d_spark.operators import crossing, dedup, knn, similarity, text, tiling
 from s2geometry_d_spark.operators.spatial_join import (
     points_in_regions,
     points_not_in_regions,
@@ -113,8 +113,9 @@ def release_caches(spark: SparkSession | None = None) -> int:
     (points, edges, registered-cell indexes, polygon index).  Long-lived
     sessions touching many sf_dirs or ad-hoc edge tables would otherwise
     accumulate pinned storage for the application lifetime (ADVICE
-    round-3).  Pass a SparkSession to release only that application's
-    entries.  Returns the number of DataFrames unpersisted."""
+    round-3).  The crossing payload broadcasts memoized on a frame are
+    destroyed with it.  Pass a SparkSession to release only that
+    application's entries.  Returns the number of DataFrames unpersisted."""
     app_id = spark.sparkContext.applicationId if spark is not None else None
     released = 0
     for cache in (
@@ -131,6 +132,7 @@ def release_caches(spark: SparkSession | None = None) -> int:
             val = cache.pop(key)
             for df in val if isinstance(val, tuple) else (val,):
                 if isinstance(df, DataFrame):
+                    crossing.release_payloads(df)
                     df.unpersist()
                     released += 1
     return released

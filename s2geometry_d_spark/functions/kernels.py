@@ -3,13 +3,13 @@
 Two tiers (SURVEY.md §2.11, §4):
 
 * **native column expressions** for everything that is pure 64-bit bit math
-  (parent, level lsb) — stays inside whole-stage
+  (parent, level lsb, tokens) — stays inside whole-stage
   codegen, no Python round-trip.  These operate on *signed-flipped* cell ids
   (``id XOR 2^63`` stored as LongType): because the flip only touches bit 63
   and every mask below keeps it, the same bit identities hold and unsigned
   Hilbert order == signed order.
 * **pandas UDFs** (Arrow-batched, no per-row Python) for the trig-heavy
-  ladder: latlng -> leaf cell, cell -> center latlng, tokens.
+  ladder: latlng -> leaf cell, cell -> center latlng.
 """
 
 from __future__ import annotations
@@ -41,6 +41,19 @@ def parent_signed(cell: Column, level: int) -> Column:
     return cell.bitwiseAND(F.lit(-nl)).bitwiseOR(F.lit(nl))
 
 
+def cell_token(cell_signed: Column | str) -> Column:
+    """Token of a signed-flipped cell id column (``cellid.token_of``): the
+    unsigned id as 16 lower-case hex digits with its trailing zero nibbles
+    stripped, ``"X"`` for id 0.  Native string functions over the flipped
+    bits, so no row crosses into Python."""
+    cell = F.col(cell_signed) if isinstance(cell_signed, str) else cell_signed
+    unsigned = cell.bitwiseXOR(F.lit(-(1 << 63)))
+    digits = F.lpad(F.hex(unsigned), 16, "0")
+    return F.when(unsigned == 0, F.lit("X")).otherwise(
+        F.lower(F.regexp_replace(digits, "0+$", ""))
+    )
+
+
 # ---------------------------------------------------------------------------
 # pandas UDFs
 # ---------------------------------------------------------------------------
@@ -67,12 +80,6 @@ def cell_to_lng(cell_signed: pd.Series) -> pd.Series:
     ids = ci.from_signed(cell_signed.to_numpy(dtype=np.int64))
     _, lng = ci.to_latlng(ids)
     return pd.Series(lng)
-
-
-@F.pandas_udf(T.StringType())
-def cell_token(cell_signed: pd.Series) -> pd.Series:
-    ids = ci.from_signed(cell_signed.to_numpy(dtype=np.int64))
-    return pd.Series([ci.token_of(v) for v in ids.tolist()])
 
 
 @F.pandas_udf(T.IntegerType())

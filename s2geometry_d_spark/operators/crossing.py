@@ -1,14 +1,30 @@
-"""Crossing-edge join: which edges of a big table cross a target edge set.
+"""Crossing-edge joins: which edges of one collection cross edges of another.
 
 The reference's S2CrossingEdgeQuery (s2crossing_edge_query.d:78-160) asks a
-shape index for the edges crossing a query edge; distributed, this becomes:
+shape index for the edges crossing a query edge, and visitCrossingEdgePairs
+(shapeutil/visit_crossing_edge_pairs.d) sweeps one or two indexes for every
+crossing pair.  Distributed, both become ONE fused Arrow kernel, ``crosses``,
+over a broadcast cell table:
 
-1. register every table edge under the <=4 cells of its bounding cap
-   (knn.edge_register_cells_udf — shared with closest-edge kNN);
-2. per target edge, a covering from ITS bounding cap; candidates via the
-   two-way broadcast covering probe (registered cells may be coarser or
-   finer than the target covering cells) — map-only, no fact shuffle;
-3. exact crossingSign (vectorized triage -> exact fallback) on candidates.
+1. every table edge is registered under the <=4 cells of its bounding cap
+   (knn.register_edges — the index artifact closest-edge kNN shares);
+2. the small side — a driver target list, or the smaller registered table
+   when it has at most ``BROADCAST_REG_ROWS`` rows — is collected once into
+   per-level sorted ``(cell, edge index)`` tables plus one xyz row per edge
+   and shipped as one broadcast variable, memoized on its registered frame;
+3. the kernel scans the other side's registered rows.  If two edges cross
+   at p, p lies in one registered cell of EACH, and S2 cells containing a
+   common point are nested, so each batch matches its cells two-way against
+   the broadcast tables (``spatial_join.match_coverings``), dedups the
+   (row, edge) hits and runs the exact crossingSign on them (vectorized
+   triage -> exact fallback), returning the crossing edges' ids;
+4. an explode and one ``distinct`` over the survivors: a pair found through
+   several registered cells of the scanned edge is reported once.
+
+The plan is the persisted index scan, one ArrowEvalPython and one hash
+exchange of crossings only.  Tables whose smaller side is above the gate
+keep the shuffle path: an ancestor equi-join on cell keys, a pair distinct
+and the pair predicate behind the id joins.
 
 This is the door to polygon overlays: boolean ops need exactly "which
 edges of A cross edges of B".
@@ -16,16 +32,28 @@ edges of A cross edges of B".
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .spatial_join import RegionCovering, candidate_match_kernel
+from ..functions import kernels
+# register_edges and coarse_prefix_filter are looked up on their modules at
+# call time, so wrappers installed on those modules (tracing) see the calls
+from . import knn, spatial_join
+from .knn import _memo, registered_stats
+from .spatial_join import RegionCovering, cell_tables, covering_tables, match_coverings
 
+# registered tables at or below this many (edge, cell) rows may be the
+# broadcast side of the pair kernels (~90 bytes/row collected -> ~180 MB
+# at the limit); above it on both sides, the ancestor equi-join shuffles
+BROADCAST_REG_ROWS = 2_000_000
 
-from functools import lru_cache
+_XYZ = ("ax", "ay", "az", "bx", "by", "bz")
+_ENDPOINTS = ("alat", "alng", "blat", "blng")
+_CROSSING_TYPES = ("interior", "all")
 
 
 @lru_cache(maxsize=4096)
@@ -49,41 +77,194 @@ def _edge_cap_cells(la, ln, lb, lnb) -> list[tuple[int, bool]]:
     return [(cid, False) for cid in coverer.get_covering(region)]
 
 
-def _crossing_udf(targets: dict[str, tuple[tuple, tuple]]):
-    """(target_id, alat, alng, blat, blng) -> crossingSign > 0, vectorized
-    per target group."""
+def _crossing_mask(A, B, C, D, crossing_type: str) -> np.ndarray:
+    """Edge pair (A, B) x (C, D) crosses, over (n, 3) endpoint arrays.
+    "interior" keeps proper crossings only (crossingSign > 0); "all" also
+    applies vertexCrossing to shared-vertex pairs (the reference's
+    CrossingType::ALL, s2edge_crossings.d:105-151) — crossingSign is 0 ONLY
+    there, so the scalar parity rule runs on exactly that tiny slice."""
+    from ..s2core import predicates as pred
 
-    @F.pandas_udf(T.BooleanType())
-    def crosses(
-        target_id: pd.Series,
-        alat: pd.Series,
-        alng: pd.Series,
-        blat: pd.Series,
-        blng: pd.Series,
-    ) -> pd.Series:
+    sign = pred.crossing_sign_pairs(A, B, C, D)
+    out = sign > 0
+    if crossing_type == "all":
+        for i in np.nonzero(sign == 0)[0]:
+            out[i] = pred.vertex_crossing(
+                tuple(A[i]), tuple(B[i]), tuple(C[i]), tuple(D[i])
+            )
+    return out
+
+
+def _check_type(crossing_type: str) -> None:
+    if crossing_type not in _CROSSING_TYPES:
+        raise ValueError(crossing_type)
+
+
+def crossing_kernel(
+    payload,
+    crossing_type: str = "interior",
+    scanned_first: bool = True,
+    lower_first: bool = False,
+    from_latlng: bool = False,
+):
+    """The body of the fused crossing kernel ``crosses(ecell, [id,] *geom)
+    -> array<broadcast id>``.
+
+    ``payload()`` returns the broadcast side ``(tables, xyz, ids)``:
+    :func:`spatial_join.cell_tables` whose codes index ``xyz`` (one row
+    ``ax..bz`` per edge) and ``ids`` (a pyarrow array).  Each scanned row
+    is matched two-way against the tables, its (row, edge) hits
+    deduplicated and tested, and the ids of the edges it crosses returned
+    through ``pa.ListArray.from_arrays`` with no per-row Python.
+
+    Predicate argument order is the caller's: the scanned edge first iff
+    ``scanned_first``.  ``lower_first`` (the self join) reads the scanned
+    id column after ``ecell`` and keeps only hits whose scanned id is the
+    lower one — the other order is found when the other edge is scanned.
+    ``geom`` is ``ax..bz``, or ``alat, alng, blat, blng`` converted by the
+    numpy ``latlng_to_xyz`` when ``from_latlng``."""
+    _check_type(crossing_type)
+
+    def crosses(ecell, *cols):
+        import pyarrow as pa
+
         from ..s2core import coords
-        from ..s2core import predicates as pred
 
-        ax, ay, az = coords.latlng_to_xyz(
-            alat.to_numpy(dtype=np.float64), alng.to_numpy(dtype=np.float64)
-        )
-        bx, by, bz = coords.latlng_to_xyz(
-            blat.to_numpy(dtype=np.float64), blng.to_numpy(dtype=np.float64)
-        )
-        A = np.stack([ax, ay, az], axis=1)
-        B = np.stack([bx, by, bz], axis=1)
-        out = np.zeros(A.shape[0], dtype=bool)
-        for tid in target_id.unique():
-            if tid not in targets:
-                continue
-            c, d = targets[tid]
-            m = (target_id == tid).to_numpy()
-            C = np.broadcast_to(np.asarray(c), (int(m.sum()), 3))
-            D = np.broadcast_to(np.asarray(d), (int(m.sum()), 3))
-            out[m] = pred.crossing_sign_pairs(A[m], B[m], C, D) > 0
-        return pd.Series(out)
+        tables, xyz, ids = payload()
+        cells = ecell.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+        n = cells.shape[0]
+        rows, codes = match_coverings(cells, tables, two_way=True)
+        # one hit per (row, edge): a row meets an edge through every nested
+        # cell pair; unique() also keeps the hits row-ordered
+        nb = max(len(ids), 1)
+        pair = np.unique(rows * nb + codes)
+        rows, edge = pair // nb, pair % nb
+        geom = [c.to_numpy(zero_copy_only=False) for c in cols]
+        if lower_first:
+            own, geom = geom[0], geom[1:]
+            lower = own[rows] < ids.to_numpy(zero_copy_only=False)[edge]
+            rows, edge = rows[lower], edge[lower]
+        geom = [g[rows] for g in geom]
+        if from_latlng:
+            geom = [
+                *coords.latlng_to_xyz(geom[0], geom[1]),
+                *coords.latlng_to_xyz(geom[2], geom[3]),
+            ]
+        mine = np.column_stack(geom).reshape(-1, 6)
+        theirs = xyz[edge]
+        p, q = (mine, theirs) if scanned_first else (theirs, mine)
+        keep = _crossing_mask(p[:, :3], p[:, 3:], q[:, :3], q[:, 3:], crossing_type)
+        offsets = np.zeros(n + 1, dtype=np.int32)
+        offsets[1:] = np.cumsum(np.bincount(rows[keep], minlength=n))
+        return pa.ListArray.from_arrays(pa.array(offsets), ids.take(pa.array(edge[keep])))
 
     return crosses
+
+
+def _arrow_kernel(body, ids):
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    return F.arrow_udf(body, T.ArrayType(from_arrow_type(ids.type)))
+
+
+def _with_xyz(df: DataFrame, *keep: str) -> DataFrame:
+    """``keep`` columns plus the engine-shared SQL xyz (edgedist) of both
+    edge endpoints, ``ax..bz``."""
+    from ..functions import edgedist
+
+    return df.selectExpr(
+        *(f"`{c}`" for c in keep),
+        *edgedist.xyz_exprs("alat", "alng", "a"),
+        *edgedist.xyz_exprs("blat", "blng", "b"),
+    )
+
+
+def _with_geometry(registered: DataFrame, edges: DataFrame, id_col: str) -> DataFrame:
+    """``registered`` with its edges' endpoint columns: a cell-only table
+    (id, ecell), such as the stream's accumulated cells, gets them from
+    ``edges`` by id."""
+    if set(_ENDPOINTS) <= set(registered.columns):
+        return registered
+    return registered.select(id_col, "ecell").join(
+        edges.select(id_col, *_ENDPOINTS), id_col
+    )
+
+
+def _payload(registered: DataFrame, id_col: str, edges: DataFrame):
+    """The broadcast side built from ``registered``: collected once with
+    ``toArrow()`` into :func:`crossing_kernel`'s ``(tables, xyz, ids)`` —
+    xyz from the same SQL expressions the scanned side evaluates, so every
+    predicate sees the bits the pair join saw — and shipped as ONE
+    broadcast variable, memoized on the frame per id column (see
+    :func:`release_payloads`)."""
+    import pyarrow as pa
+
+    memo = getattr(registered, "_s2_cross_payload", None)
+    if memo is None:
+        memo = _memo(registered, "_s2_cross_payload", {})
+    if id_col not in memo:
+        t = _with_xyz(_with_geometry(registered, edges, id_col), id_col, "ecell").toArrow()
+        ids = t.column(id_col).combine_chunks()
+        _, first, edge = np.unique(
+            ids.to_numpy(zero_copy_only=False), return_index=True, return_inverse=True
+        )
+        xyz = np.column_stack([t.column(c).to_numpy() for c in _XYZ]).reshape(-1, 6)
+        tables = cell_tables(t.column("ecell").to_numpy(), edge.reshape(-1))
+        sc = registered.sparkSession.sparkContext
+        memo[id_col] = sc.broadcast((tables, xyz[first], ids.take(pa.array(first))))
+    return memo[id_col]
+
+
+def release_payloads(registered: DataFrame) -> None:
+    """Destroy the broadcast payloads memoized on ``registered``; owners of
+    a registered frame call this with its ``unpersist()``."""
+    for bc in (getattr(registered, "_s2_cross_payload", None) or {}).values():
+        bc.destroy()
+    _memo(registered, "_s2_cross_payload", {})
+
+
+def _payload_prefilter(tables):
+    """``coarse_prefix_filter`` over the broadcast cells (None when there
+    are more than it takes)."""
+    cells = np.unique(np.concatenate([c for _, c, _ in tables] or [np.empty(0, np.int64)]))
+    if not cells.size or cells.size > spatial_join.PREFILTER_CELL_LIMIT:
+        return None
+    unsigned = (cells.view(np.uint64) ^ np.uint64(1 << 63)).tolist()
+    cover = RegionCovering("", None, [(cid, False) for cid in unsigned])
+    return spatial_join.coarse_prefix_filter([cover], "ecell", two_way=True)
+
+
+def _kernel_pairs(
+    scan: DataFrame,
+    scan_edges: DataFrame,
+    scan_id: str,
+    bc,
+    names: tuple[str, str],
+    crossing_type: str,
+    scanned_first: bool = True,
+    lower_first: bool = False,
+    prefilter: bool = False,
+) -> DataFrame:
+    """(id_a, id_b): every scanned registered row through the fused
+    kernel against the broadcast payload ``bc``, exploded and made
+    distinct.  ``names`` = (scanned id, broadcast id) output names."""
+    tables, _, ids = bc.value
+    if prefilter:
+        cond = _payload_prefilter(tables)
+        if cond is not None:
+            scan = scan.filter(cond)
+    kernel = _arrow_kernel(
+        crossing_kernel(lambda: bc.value, crossing_type, scanned_first, lower_first),
+        ids,
+    )
+    args = ["ecell", *([scan_id] if lower_first else []), *_XYZ]
+    own, other = names
+    return (
+        _with_xyz(_with_geometry(scan, scan_edges, scan_id), scan_id, "ecell")
+        .select(F.col(scan_id).alias(own), F.explode(kernel(*args)).alias(other))
+        .distinct()
+        .select("id_a", "id_b")
+    )
 
 
 def crossing_edges_join(
@@ -92,79 +273,73 @@ def crossing_edges_join(
     edge_id_col: str = "edge_id",
     registered_df: DataFrame | None = None,
 ) -> DataFrame:
-    """(target_id, <edge columns>) for every table edge PROPERLY crossing a
+    """(<edge columns>, target_id) for every table edge PROPERLY crossing a
     target edge.  ``target_edges``: [(target_id, (alat, alng), (blat, blng))]
-    — the small/broadcast side (a polyline, a polygon boundary).
-    ``registered_df`` shares a prebuilt registered-cell table (knn.register_edges)."""
+    — the small side (a polyline, a polygon boundary), ``registered_df``
+    shares a prebuilt registered-cell table (knn.register_edges).
+
+    The targets' tight edge coverings are the kernel's cell tables (in the
+    closure: a driver list is tiny); the persisted index is prefiltered by
+    the native coarse-prefix InSet, then ONE ``crosses`` kernel tests each
+    row against the targets its cells meet: the data edge from the numpy
+    ``latlng_to_xyz`` first, the target from ``latlng_point``.  The
+    (target_id, edge) dedup shuffles crossings only."""
+    import pyarrow as pa
+
     from ..s2core.regions import latlng_point
-    from .knn import register_edges
 
-    registered = registered_df if registered_df is not None else register_edges(edges_df)
+    registered = registered_df if registered_df is not None else knn.register_edges(edges_df)
 
-    coverings = []
-    payload = {}
+    coverings, xyz = [], []
     for tid, (la, ln), (lb, lnb) in target_edges:
-        a = latlng_point(la, ln)
-        b = latlng_point(lb, lnb)
-        payload[tid] = (a, b)
+        xyz.append((*latlng_point(la, ln), *latlng_point(lb, lnb)))
         coverings.append(RegionCovering(tid, None, _edge_cap_cells(la, ln, lb, lnb)))
+    ids = pa.array([rc.region_id for rc in coverings])
+    payload = (
+        # no cell is interior, so code >> 1 is the target's index
+        [(nl, cells, codes >> 1) for nl, cells, codes in covering_tables(coverings)],
+        np.array(xyz, dtype=np.float64).reshape(-1, 6),
+        ids,
+    )
+    kernel = _arrow_kernel(crossing_kernel(lambda: payload, from_latlng=True), ids)
 
-    cand = candidate_match_kernel(
-        registered, coverings, cell_col="ecell", two_way=True, prefilter=True
-    ).drop("is_interior", "ecell")
-    cand = cand.withColumnRenamed("region_id", "target_id")
-    crosses = _crossing_udf(payload)
-    # dedup AFTER the crossing kernel: an edge meeting a target covering
-    # through several registered cells duplicates its candidate row, but
-    # scoring a duplicate is one cheap vectorized row while deduping first
-    # shuffled the WHOLE candidate set (full edge rows) before the filter —
-    # this way the plan is map-only (persisted index scan -> kernel ->
-    # filter) plus one exchange over just the surviving crossings
-    return cand.filter(
-        crosses(
-            F.col("target_id"),
-            F.col("alat"),
-            F.col("alng"),
-            F.col("blat"),
-            F.col("blng"),
-        )
+    cond = spatial_join.coarse_prefix_filter(coverings, "ecell", two_way=True)
+    src = registered if cond is None else registered.filter(cond)
+    cols = [c for c in registered.columns if c != "ecell"]
+    return src.select(
+        *cols, F.explode(kernel("ecell", *_ENDPOINTS)).alias("target_id")
     ).dropDuplicates(["target_id", edge_id_col])
 
 
-def _pair_crossing_udf(crossing_type: str = "interior"):
-    """(ax..az, bx..bz, cx..cz, dx..dz) -> crossing boolean over edge PAIRS,
-    vectorized (triage + exact fallback — predicates.crossing_sign_pairs).
-    ``crossing_type``: "interior" keeps proper crossings only (crossingSign
-    > 0); "all" additionally applies vertexCrossing to shared-vertex pairs
-    (the reference's CrossingType::ALL, shapeutil/visit_crossing_edge_pairs.d
-    + s2edge_crossings.d:105-151) — crossingSign is 0 ONLY there, so the
-    scalar parity rule runs on exactly that tiny slice."""
-    if crossing_type not in ("interior", "all"):
-        raise ValueError(crossing_type)
+def _pair_filter(crossing_type: str):
+    """The shuffle path's predicate: ``crosses(ax..az, bx..bz, cx..cz,
+    dx..dz)`` over candidate pairs, one Arrow batch at a time."""
+    _check_type(crossing_type)
 
-    @F.pandas_udf(T.BooleanType())
-    def crosses(
-        ax: pd.Series, ay: pd.Series, az: pd.Series,
-        bx: pd.Series, by: pd.Series, bz: pd.Series,
-        cx: pd.Series, cy: pd.Series, cz: pd.Series,
-        dx: pd.Series, dy: pd.Series, dz: pd.Series,
-    ) -> pd.Series:
-        from ..s2core import predicates as pred
+    def crosses(*cols):
+        import pyarrow as pa
 
-        A = np.column_stack([ax, ay, az])
-        B = np.column_stack([bx, by, bz])
-        C = np.column_stack([cx, cy, cz])
-        D = np.column_stack([dx, dy, dz])
-        sign = pred.crossing_sign_pairs(A, B, C, D)
-        out = sign > 0
-        if crossing_type == "all":
-            for i in np.nonzero(sign == 0)[0]:
-                out[i] = pred.vertex_crossing(
-                    tuple(A[i]), tuple(B[i]), tuple(C[i]), tuple(D[i])
-                )
-        return pd.Series(out)
+        xyz = np.column_stack([c.to_numpy(zero_copy_only=False) for c in cols])
+        xyz = xyz.reshape(-1, 12)
+        return pa.array(
+            _crossing_mask(xyz[:, 0:3], xyz[:, 3:6], xyz[:, 6:9], xyz[:, 9:12], crossing_type)
+        )
 
-    return crosses
+    return F.arrow_udf(crosses, T.BooleanType())
+
+
+def _filter_pairs(cand, a_edges, a_id, b_edges, b_id, crossing_type) -> DataFrame:
+    """Shuffle path: geometry joined to candidate (id_a, id_b) pairs by id,
+    then the pair predicate, a-edge first."""
+    ga = _with_xyz(a_edges, a_id).toDF("id_a", *_XYZ)
+    gb = _with_xyz(b_edges, b_id).toDF("id_b", "cx", "cy", "cz", "dx", "dy", "dz")
+    crosses = _pair_filter(crossing_type)
+    return (
+        cand.join(ga, "id_a")
+        .join(gb, "id_b")
+        .filter(crosses(*_XYZ, "cx", "cy", "cz", "dx", "dy", "dz"))
+        .select("id_a", "id_b")
+    )
 
 
 def crossing_pairs_self(
@@ -182,66 +357,33 @@ def crossing_pairs_self(
     (the reference's CrossingType option: shared-vertex pairs kept iff the
     vertexCrossing parity rule holds).
 
-    Distributed shape (never all-pairs):
+    With at most ``BROADCAST_REG_ROWS`` registered rows the table is both
+    sides of the fused kernel (module docstring): broadcast once, scanned
+    once, each pair tested when its lower-id edge is scanned, lower id
+    first.  Plan: the persisted index scan, ONE ArrowEvalPython, one hash
+    exchange (the pair distinct).
 
-    1. every edge is registered under its <=4/6 covering cells
-       (knn.register_edges — the shared index artifact);
-    2. if two edges cross at p, p lies in one registered cell of EACH, and
-       S2 cells at any two levels containing a common point are nested — so
-       every crossing pair shares an (ancestor cell == cell) relation.
-       Candidates come from ONE equi-join: side A keyed at each cell's own
-       id, side B exploding each cell's ancestors at every level present in
-       the index (a small driver-collected set), so coarse-vs-fine pairs
-       meet at the coarse key.  Over-generation is scored away;
-    3. unordered dedup (least/greatest + distinct), then the exact pair
-       kernel (vectorized det triage, exact scalar fallback) on candidates.
-
-    Per-pair output is reported once regardless of how many shared cells
-    produced it.  Plan: one cell-keyed shuffle + one pair-distinct shuffle +
-    two broadcast-or-shuffle id joins + ONE ArrowEvalPython — no crossJoin;
-    survives 100x because candidates are bounded by cell co-occupancy, not
-    table size (hot cells are bounded by the registration levels; salt the
-    cell key if a single cell dominates)."""
-    from ..functions import edgedist, kernels
-    from .knn import register_edges, registered_stats
-
+    Above the gate, candidates come from ONE ancestor equi-join: side A
+    keyed at each cell's own id, side B exploding each cell's ancestors at
+    every level present in the index, so coarse-vs-fine pairs meet at the
+    coarse key; then the unordered pair distinct, the two id joins for
+    geometry and the pair predicate.  Never all-pairs: candidates are
+    bounded by cell co-occupancy (salt the cell key if one cell
+    dominates)."""
     registered = (
-        registered_df if registered_df is not None else register_edges(edges_df)
+        registered_df if registered_df is not None else knn.register_edges(edges_df)
     )
+    stats = registered_stats(registered)
+    if stats["rows"] <= BROADCAST_REG_ROWS:
+        bc = _payload(registered, edge_id_col, edges_df)
+        return _kernel_pairs(
+            registered, edges_df, edge_id_col, bc, ("id_a", "id_b"),
+            crossing_type, lower_first=True,
+        )
+
     reg = _reg_with_level(registered, edge_id_col)
-    levels = registered_stats(registered)["levels"]
-    if not levels:
-        return (
-            edges_df.select(F.col(edge_id_col).alias("id_a"))
-            .withColumn("id_b", F.col("id_a"))
-            .filter(F.lit(False))
-        )
-
-    a_side = reg.select(
-        F.col("ecell").alias("_key"), F.col(edge_id_col).alias("_ida")
-    )
-    ancestors = F.array(
-        *[
-            F.when(F.col("_lvl") >= l, kernels.parent_signed(F.col("ecell"), l))
-            for l in levels
-        ]
-    )
-    b_side = (
-        reg.select(
-            F.col(edge_id_col).alias("_idb"),
-            F.explode(ancestors).alias("_key"),
-        )
-        .filter(F.col("_key").isNotNull())
-    )
-
-    # broadcast the own-cell side when the registered table is small: the
-    # frames are derived (filters + explode over a persisted table), so
-    # the planner has no usable size estimate and falls back to a shuffle
-    # join of both sides; the registered row count (registered_stats) is
-    # exact and cached.
-    # Above the limit both sides shuffle as before (the 100 TB path).
-    a_side = _bc_small(a_side, registered)
-
+    a_side = reg.select(F.col("ecell").alias("_key"), F.col(edge_id_col).alias("_ida"))
+    b_side = _ancestor_keys(reg, edge_id_col, "_idb", stats["levels"])
     cand = (
         a_side.join(b_side, "_key")
         .filter(F.col("_ida") != F.col("_idb"))
@@ -251,48 +393,19 @@ def crossing_pairs_self(
         )
         .distinct()
     )
-
-    geom = edges_df.selectExpr(
-        edge_id_col,
-        *edgedist.xyz_exprs("alat", "alng", "a"),
-        *edgedist.xyz_exprs("blat", "blng", "b"),
-    )
-    ga = geom.toDF("id_a", "ax", "ay", "az", "bx", "by", "bz")
-    gb = geom.toDF("id_b", "cx", "cy", "cz", "dx", "dy", "dz")
-    crosses = _pair_crossing_udf(crossing_type)
-    return (
-        cand.join(ga, "id_a")
-        .join(gb, "id_b")
-        .filter(
-            crosses(
-                "ax", "ay", "az", "bx", "by", "bz",
-                "cx", "cy", "cz", "dx", "dy", "dz",
-            )
-        )
-        .select("id_a", "id_b")
-    )
+    return _filter_pairs(cand, edges_df, edge_id_col, edges_df, edge_id_col, crossing_type)
 
 
-# registered tables at or below this many (edge, cell) rows broadcast
-# their own-cell join side in the pair sweeps (~16 bytes/row -> tens of MB
-# at the limit); larger indexes keep the shuffle join
-BROADCAST_REG_ROWS = 2_000_000
-
-
-def _bc_small(side: DataFrame, registered: DataFrame) -> DataFrame:
-    """Mark ``side`` for broadcast iff ``registered`` (the persisted table
-    it derives from) is small, by its memoized ``registered_stats`` row
-    count."""
-    from .knn import registered_stats
-
-    n = registered_stats(registered)["rows"]
-    return F.broadcast(side) if n <= BROADCAST_REG_ROWS else side
+def _level_sql(col: str) -> str:
+    """SQL text of the level of the signed cell id in ``col`` — the same
+    expression tree as ``knn._cell_level`` (double literal marked D, which
+    Spark would otherwise parse as DECIMAL)."""
+    c = f"`{col}`"
+    return f"(30 - CAST((log2(CAST(({c} & -{c}) AS DOUBLE)) / 2.0D) AS INT))"
 
 
 def _reg_with_level(registered: DataFrame, id_col: str) -> DataFrame:
-    from .knn import _cell_level
-
-    return registered.select(id_col, "ecell").withColumn("_lvl", _cell_level("ecell"))
+    return registered.select(id_col, "ecell", F.expr(_level_sql("ecell")).alias("_lvl"))
 
 
 def _distinct_levels(reg: DataFrame) -> list[int]:
@@ -304,28 +417,17 @@ def _distinct_levels(reg: DataFrame) -> list[int]:
 
 def _ancestor_keys(reg: DataFrame, id_col: str, out_id: str, levels: list[int]) -> DataFrame:
     """(out_id, _key): each registered cell exploded to its ancestor at every
-    level in ``levels`` that is <= the cell's own level (incl. itself)."""
-    from ..functions import kernels
-
-    anc = F.array(
-        *[
-            F.when(F.col("_lvl") >= l, kernels.parent_signed(F.col("ecell"), l))
-            for l in levels
-        ]
+    level in ``levels`` that is <= the cell's own level (incl. itself).
+    The array is parsed from ONE SQL text with BIGINT literals: built from
+    Columns it cost ~8 py4j calls per level."""
+    anc = ", ".join(
+        f"CASE WHEN (`_lvl` >= {l}) THEN ((`ecell` & {-n}L) | {n}L) END"
+        for l in levels
+        for n in [kernels.lsb_for_level(l)]
     )
     return (
-        reg.select(F.col(id_col).alias(out_id), F.explode(anc).alias("_key"))
+        reg.select(F.col(id_col).alias(out_id), F.explode(F.expr(f"array({anc})")).alias("_key"))
         .filter(F.col("_key").isNotNull())
-    )
-
-
-def _xyz_geom(edges_df: DataFrame, id_col: str) -> DataFrame:
-    from ..functions import edgedist
-
-    return edges_df.selectExpr(
-        id_col,
-        *edgedist.xyz_exprs("alat", "alng", "a"),
-        *edgedist.xyz_exprs("blat", "blng", "b"),
     )
 
 
@@ -342,38 +444,52 @@ def crossing_pairs_join(
     """TABLE-to-TABLE crossing join — S2CrossingEdgeQuery with the query
     side itself an indexed edge collection (s2crossing_edge_query.d:78-160
     probed per edge of another index, the ShapeIndexTarget shape): every
-    (a, b) pair with a PROPER crossing, as (id_a, id_b) — id_a from
-    ``a_edges``, id_b from ``b_edges``, each pair once.
+    (a, b) pair with a PROPER crossing (or, with ``crossing_type="all"``,
+    an edgeOrVertexCrossing), as (id_a, id_b) — id_a from ``a_edges``,
+    id_b from ``b_edges``, each pair once, tested a-edge first.
 
-    Same nested-cell completeness argument as crossing_pairs_self, but the
-    ancestor relation must be probed in BOTH directions explicitly (the
-    self join gets the swap for free): A-own-cell vs B-ancestors at A's
-    level set, UNION A-ancestors at B's level set vs B-own-cell; dedup;
-    ONE exact pair kernel on candidates.
+    When the smaller registered side has at most ``BROADCAST_REG_ROWS``
+    rows it is the broadcast side of the fused kernel (module docstring)
+    and the other side's registered rows are scanned: the two-way match
+    covers both nesting directions in one pass, with no candidate UNION,
+    candidate shuffle or geometry join.  A registered frame without
+    endpoint columns (the stream's accumulated cells) gets its geometry
+    from its edge table by id.
 
-    ``prune_b_by_a=True`` is the streaming/new-vs-accumulated mode: before
-    exploding B's ancestors, B is semi-joined against the (broadcast-sized)
-    set of A's min-level ancestor cells plus THEIR coarser ancestors — the
-    index side is scanned but never shuffled, and at 100 TB the semi-join
-    key is exactly the partition-pruning key of a cell-bucketed artifact
-    (only index partitions overlapping the batch's cell ranges are read).
-    Use when A is small relative to B (a micro-batch vs the accumulated
-    index); leave False for two comparable tables."""
-    from ..functions import kernels
-    from .knn import register_edges, registered_stats
+    Above the gate the shuffle path probes the ancestor relation in BOTH
+    directions explicitly: A-own-cell vs B-ancestors at A's level set,
+    UNION A-ancestors at B's level set vs B-own-cell; dedup; the pair
+    predicate behind the geometry joins.
 
-    a_registered = a_registered if a_registered is not None else register_edges(a_edges)
-    b_registered = b_registered if b_registered is not None else register_edges(b_edges)
-    a_reg = _reg_with_level(a_registered, a_id_col)
-    b_reg_full = _reg_with_level(b_registered, b_id_col)
-    a_levels = registered_stats(a_registered)["levels"]
-    if not a_levels:
-        return (
-            a_edges.select(F.col(a_id_col).alias("id_a"))
-            .join(b_edges.select(F.col(b_id_col).alias("id_b")), F.lit(False))
+    ``prune_b_by_a=True`` is the streaming/new-vs-accumulated mode (A
+    small relative to B: a micro-batch vs the accumulated index).  On the
+    kernel path the scanned side is filtered by the native coarse-prefix
+    InSet over the broadcast cells (``ecell`` is a stored column).  On the
+    shuffle path B is semi-joined against A's min-level ancestor cells plus
+    THEIR coarser ancestors before its ancestors explode — the index side
+    is scanned but never shuffled, and at 100 TB the semi-join key is
+    exactly the partition-pruning key of a cell-bucketed artifact.  Leave
+    it False for two comparable tables."""
+    a_registered = a_registered if a_registered is not None else knn.register_edges(a_edges)
+    b_registered = b_registered if b_registered is not None else knn.register_edges(b_edges)
+    a_stats = registered_stats(a_registered)
+    b_stats = registered_stats(b_registered)
+    if min(a_stats["rows"], b_stats["rows"]) <= BROADCAST_REG_ROWS:
+        if a_stats["rows"] <= b_stats["rows"]:
+            bc = _payload(a_registered, a_id_col, a_edges)
+            scan, edges, scan_id, names = b_registered, b_edges, b_id_col, ("id_b", "id_a")
+        else:
+            bc = _payload(b_registered, b_id_col, b_edges)
+            scan, edges, scan_id, names = a_registered, a_edges, a_id_col, ("id_a", "id_b")
+        # the predicate takes the a-edge first whichever side is scanned
+        return _kernel_pairs(
+            scan, edges, scan_id, bc, names, crossing_type,
+            scanned_first=names[0] == "id_a", prefilter=prune_b_by_a,
         )
 
-    b_reg = b_reg_full
+    a_levels = a_stats["levels"]
+    a_reg = _reg_with_level(a_registered, a_id_col)
+    b_reg = _reg_with_level(b_registered, b_id_col)
     if prune_b_by_a:
         l0 = min(a_levels)
         s_keys = a_reg.select(
@@ -381,7 +497,7 @@ def crossing_pairs_join(
         ).distinct()
         # coarser-than-l0 index cells are ancestors OF the batch cells:
         # enumerate S's ancestors at every coarse level the index holds
-        coarse = [l for l in registered_stats(b_registered)["levels"] if l < l0]
+        coarse = [l for l in b_stats["levels"] if l < l0]
         s_plus = s_keys
         for l in coarse:
             s_plus = s_plus.unionByName(
@@ -392,52 +508,22 @@ def crossing_pairs_join(
             F.col("_lvl") >= l0, kernels.parent_signed(F.col("ecell"), l0)
         ).otherwise(F.col("ecell"))
         b_reg = (
-            b_reg_full.withColumn("_pk", prune_key)
+            b_reg.withColumn("_pk", prune_key)
             .join(F.broadcast(s_plus), "_pk", "left_semi")
             .drop("_pk")
         )
-
     # the pruned frame's level set is input-dependent: collect it directly
-    b_levels = (
-        _distinct_levels(b_reg)
-        if prune_b_by_a
-        else registered_stats(b_registered)["levels"]
-    )
+    b_levels = _distinct_levels(b_reg) if prune_b_by_a else b_stats["levels"]
 
-    # own-cell sides broadcast when their registered tables are small (see
-    # crossing_pairs_self/_bc_small): derived frames carry no size
-    # estimate, so the planner otherwise shuffles both directions
-    dir1 = _bc_small(
-        a_reg.select(
-            F.col("ecell").alias("_key"), F.col(a_id_col).alias("id_a")
-        ),
-        a_registered,
-    ).join(_ancestor_keys(b_reg, b_id_col, "id_b", a_levels), "_key")
+    dir1 = a_reg.select(F.col("ecell").alias("_key"), F.col(a_id_col).alias("id_a")).join(
+        _ancestor_keys(b_reg, b_id_col, "id_b", a_levels), "_key"
+    )
     cand = dir1.select("id_a", "id_b")
     if b_levels:
         dir2 = _ancestor_keys(a_reg, a_id_col, "id_a", b_levels).join(
-            _bc_small(
-                b_reg.select(
-                    F.col("ecell").alias("_key"), F.col(b_id_col).alias("id_b")
-                ),
-                b_registered,
-            ),
+            b_reg.select(F.col("ecell").alias("_key"), F.col(b_id_col).alias("id_b")),
             "_key",
         )
         cand = cand.unionByName(dir2.select("id_a", "id_b"))
     cand = cand.distinct()
-
-    ga = _xyz_geom(a_edges, a_id_col).toDF("id_a", "ax", "ay", "az", "bx", "by", "bz")
-    gb = _xyz_geom(b_edges, b_id_col).toDF("id_b", "cx", "cy", "cz", "dx", "dy", "dz")
-    crosses = _pair_crossing_udf(crossing_type)
-    return (
-        cand.join(ga, "id_a")
-        .join(gb, "id_b")
-        .filter(
-            crosses(
-                "ax", "ay", "az", "bx", "by", "bz",
-                "cx", "cy", "cz", "dx", "dy", "dz",
-            )
-        )
-        .select("id_a", "id_b")
-    )
+    return _filter_pairs(cand, a_edges, a_id_col, b_edges, b_id_col, crossing_type)

@@ -185,19 +185,27 @@ def covering_tables(coverings: list[RegionCovering]) -> list:
     """The covering cells as per-level sorted arrays ``(lsb, cells, codes)``
     (the signed domain preserves order), code = region_idx * 2 +
     is_interior — the broadcast side of :func:`match_coverings`."""
-    by_level: dict[int, list[tuple[int, int, int]]] = {}
-    for ridx, rc in enumerate(coverings):
-        for cid, interior in rc.cells:
-            lvl = CellId(cid).level()
-            signed = int(np.int64(np.uint64(cid) ^ np.uint64(1 << 63)))
-            by_level.setdefault(lvl, []).append((signed, ridx, int(interior)))
+    cids = np.array([cid for rc in coverings for cid, _ in rc.cells], dtype=np.uint64)
+    codes = np.array(
+        [i * 2 + int(inner) for i, rc in enumerate(coverings) for _, inner in rc.cells],
+        dtype=np.int64,
+    )
+    return cell_tables((cids ^ np.uint64(1 << 63)).view(np.int64), codes)
+
+
+def cell_tables(cells: np.ndarray, codes: np.ndarray) -> list:
+    """Signed cell ids and their int64 codes as the per-level ``(lsb,
+    cells, codes)`` tables :func:`match_coverings` probes: one table per
+    level present, ascending, each sorted by (cell, code)."""
+    cells = np.asarray(cells, dtype=np.int64)
+    codes = np.asarray(codes, dtype=np.int64)
+    lsb = cells & -cells
     tables = []
-    for lvl, rows in sorted(by_level.items()):
-        rows.sort()
-        cells = np.array([r[0] for r in rows], dtype=np.int64)
-        codes = np.array([r[1] * 2 + r[2] for r in rows], dtype=np.int64)
-        nl = np.int64(1 << (2 * (30 - lvl)))
-        tables.append((nl, cells, codes))
+    for nl in np.unique(lsb)[::-1]:  # largest lsb = coarsest level first
+        m = lsb == nl
+        c, k = cells[m], codes[m]
+        order = np.lexsort((k, c))
+        tables.append((np.int64(nl), c[order], k[order]))
     return tables
 
 

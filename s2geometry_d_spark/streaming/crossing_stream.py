@@ -8,9 +8,12 @@ s2crossing_edge_query.d:78-160) as a Structured Streaming job.
 Spark-first shape: the accumulated side is a parquet artifact carrying
 BOTH the edge geometry (edges/) and its registered covering cells
 (cells/), so no batch ever re-registers history; the batch-vs-index join
-runs in crossing_pairs_join's prune mode — the index is scanned but never
-shuffled, and its scan is semi-join-pruned by the batch's cell ranges
-(the partition-pruning key of a cell-bucketed artifact at 100 TB).
+runs in crossing_pairs_join's prune mode — once the index outgrows a
+batch, the batch's registered cells are the broadcast side of the fused
+crossing kernel (the same payload its self sweep built), and the index is
+scanned but never shuffled, its cells filtered by the batch's cell
+prefixes before their geometry is joined (the partition-pruning key of a
+cell-bucketed artifact at 100 TB).
 
 Each unordered pair is found exactly once: within one batch by the self
 sweep, across batches when the LATER edge's batch arrives.  Exactly-once
@@ -48,7 +51,11 @@ def crossing_pairs_stream(
     ``src_dir`` (EDGE_STREAM_SCHEMA), emitting every proper-crossing pair
     to ``out_dir``/pairs as (id_a, id_b) with id_a < id_b and maintaining
     the accumulated artifact at ``out_dir``/{edges,cells}."""
-    from ..operators.crossing import crossing_pairs_join, crossing_pairs_self
+    from ..operators.crossing import (
+        crossing_pairs_join,
+        crossing_pairs_self,
+        release_payloads,
+    )
     from ..operators.knn import register_edges
 
     reader = spark.readStream.schema(EDGE_STREAM_SCHEMA)
@@ -59,6 +66,7 @@ def crossing_pairs_stream(
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.select(*_EDGE_COLS).localCheckpoint(eager=True)
         reg = register_edges(batch)
+        acc_cells = None
         try:
             pairs = crossing_pairs_self(batch, registered_df=reg)
             try:
@@ -85,6 +93,10 @@ def crossing_pairs_stream(
                 f"{out_dir}/cells"
             )
         finally:
+            # either registered side may hold the crossing kernel's payload
+            for df in (reg, acc_cells):
+                if df is not None:
+                    release_payloads(df)
             reg.unpersist()
 
     return (

@@ -326,3 +326,122 @@ def test_crossing_pairs_self_type_all_matches_edge_or_vertex(spark):
     assert any(p < 5 and q < 5 for p, q in vertex_only), (
         "expected a spoke pair kept only under CrossingType::ALL"
     )
+
+
+def _star_and_random(n_random=60, seed=41):
+    """Edges rich in shared vertices: a fan of spokes around V and random
+    edges through the same area."""
+    V = (15.0, 40.0)
+    spokes = [(0.0, 3.0), (2.0, 1.0), (3.0, -2.0), (-1.0, -3.0), (-3.0, 0.5)]
+    table = [(i, V[0], V[1], V[0] + a, V[1] + b) for i, (a, b) in enumerate(spokes)]
+    return table + [
+        (100 + i, la, ln, lb, lnb)
+        for i, la, ln, lb, lnb in _random_edges(n_random, seed=seed, spread=4.0, lat0=15.0, lng0=40.0)
+    ]
+
+
+def test_kernel_path_equals_shuffle_path(spark, monkeypatch):
+    """The fused broadcast kernel and the ancestor equi-join (the path
+    above ``BROADCAST_REG_ROWS``, forced with the limit at 0) return the
+    same pair sets: the table join with and without the index prune, with
+    either side the smaller (broadcast) one, against a cell-only
+    ``b_registered`` that gets its geometry from ``b_edges``, and the self
+    sweep under ``crossing_type="all"`` on shared-vertex pairs.  The
+    broadcast payload is memoized on its registered frame until
+    ``release_payloads`` destroys it."""
+    from s2geometry_d_spark.operators import crossing
+    from s2geometry_d_spark.operators.knn import register_edges
+
+    cols = ["edge_id", "alat", "alng", "blat", "blng"]
+    ta = _random_edges(80, seed=21, spread=5.0) + [
+        (900 + i, la, ln, lb, lnb)
+        for i, la, ln, lb, lnb in _random_edges(8, seed=22, spread=40.0)
+    ]
+    tb = _random_edges(120, seed=23, spread=5.0) + [
+        (900 + i, la, ln, lb, lnb)
+        for i, la, ln, lb, lnb in _random_edges(8, seed=24, spread=40.0)
+    ]
+    a = spark.createDataFrame(ta, cols)
+    b = spark.createDataFrame(tb, cols)
+    star = spark.createDataFrame(_star_and_random(), cols)
+    rega, regb, regs = register_edges(a), register_edges(b), register_edges(star)
+    cells_b = regb.select("edge_id", "ecell")
+
+    def runs():
+        out = {}
+        for prune in (False, True):
+            out["ab", prune] = crossing.crossing_pairs_join(
+                a, b, a_registered=rega, b_registered=regb, prune_b_by_a=prune
+            )
+            out["ba", prune] = crossing.crossing_pairs_join(
+                b, a, a_registered=regb, b_registered=rega, prune_b_by_a=prune
+            )
+            out["cells", prune] = crossing.crossing_pairs_join(
+                a, b, a_registered=rega, b_registered=cells_b, prune_b_by_a=prune
+            )
+        out["self_all"] = crossing.crossing_pairs_self(
+            star, registered_df=regs, crossing_type="all"
+        )
+        return {k: {tuple(r) for r in df.collect()} for k, df in out.items()}
+
+    try:
+        kernel = runs()
+        assert set(rega._s2_cross_payload) == {"edge_id"}
+        monkeypatch.setattr(crossing, "BROADCAST_REG_ROWS", 0)
+        shuffle = runs()
+        assert kernel == shuffle
+        assert all(kernel.values())
+        assert len({frozenset(kernel[k, p]) for k in ("ab", "cells") for p in (False, True)}) == 1
+        assert kernel["ba", False] == {(q, p) for p, q in kernel["ab", False]}
+        # shared-vertex pairs kept under CrossingType::ALL
+        assert any(p < 5 and q < 5 for p, q in kernel["self_all"])
+    finally:
+        for reg in (rega, regb, regs):
+            crossing.release_payloads(reg)
+            reg.unpersist()
+    assert rega._s2_cross_payload == {}
+
+
+def test_ancestor_keys_sql_keeps_the_column_built_plan(spark):
+    """The shuffle path's level column and ancestor arrays, parsed from one
+    SQL text each, optimize to the same plan as the Column-built
+    expressions they replace."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from s2geometry_d_spark.functions import kernels
+    from s2geometry_d_spark.operators import crossing
+    from s2geometry_d_spark.operators.knn import _cell_level, register_edges
+
+    edges = spark.createDataFrame(
+        _random_edges(40, seed=5), ["edge_id", "alat", "alng", "blat", "blng"]
+    )
+    reg = register_edges(edges)
+    levels = [0, 3, 7, 12, 15, 16, 22, 30]
+
+    def column_built():
+        lvl = reg.select("edge_id", "ecell").withColumn("_lvl", _cell_level("ecell"))
+        anc = F.array(
+            *[
+                F.when(F.col("_lvl") >= l, kernels.parent_signed(F.col("ecell"), l))
+                for l in levels
+            ]
+        )
+        return (
+            lvl.select(F.col("edge_id").alias("id_b"), F.explode(anc).alias("_key"))
+            .filter(F.col("_key").isNotNull())
+        )
+
+    def optimized(df):
+        text = df._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"#\d+L?", "#", text)
+
+    try:
+        sql_built = crossing._ancestor_keys(
+            crossing._reg_with_level(reg, "edge_id"), "edge_id", "id_b", levels
+        )
+        assert optimized(sql_built) == optimized(column_built())
+        assert sorted(sql_built.collect()) == sorted(column_built().collect())
+    finally:
+        reg.unpersist()

@@ -225,8 +225,11 @@ def test_tile_assignment_evaluates_kernel_once(spark, entrymod):
     The pin is about the UN-CACHED plan shape: if an earlier test cached a
     tile-assignment lineage, the substituted InMemoryRelation's stored
     build plan adds a second TEXTUAL tile_cells occurrence that is never
-    re-executed — clear the cache so the count means evaluations."""
+    re-executed — clear the cache so the count means evaluations, then
+    evict the entry's fixture caches, whose frames clearCache() unpersisted,
+    so later tests get fresh persisted fixtures."""
     spark.catalog.clearCache()
+    entrymod.release_caches(spark)
     for q in ("tile_assignment", "tile_assignment_stats"):
         df = entrymod.queries()[q](spark, SF_DIR)
         plan = _plan(df)
@@ -238,31 +241,41 @@ def test_edge_face_span_evaluates_kernel_once(spark, entrymod):
     fields — the explode-inline pattern must keep it at ONE ArrowEvalPython
     (CollapseProject would otherwise clone the UDF per field)."""
     spark.catalog.clearCache()
+    entrymod.release_caches(spark)
     df = entrymod.queries()["edge_face_span"](spark, SF_DIR)
     plan = _plan(df)
     assert plan.count("edge_face_span(") == 1, plan
 
 
-def test_crossing_pairs_self_single_kernel_no_cartesian(spark, entrymod):
-    """The single-table crossing sweep must stay candidate-driven: exactly
-    ONE pair-kernel ArrowEvalPython (triage + exact fallback), and never a
-    cartesian/nested-loop pair join — the all-pairs form is the oracle's
-    job, not the engine's."""
-    df = entrymod.queries()["crossing_pairs_self"](spark, SF_DIR)
+def _crossing_plan_checks(df) -> None:
+    """One fused ``crosses`` ArrowEvalPython over the persisted index, no
+    broadcast join (the other side rides in a broadcast variable), and one
+    hash exchange: the final pair distinct, above the kernel."""
     plan = _plan(df)
+    ops = _operators(df)
+    python = [(op, up) for op, up in ops if "ArrowEvalPython" in op]
+    exchanges = [op for op, _ in ops if op.startswith("Exchange hashpartitioning")]
     assert plan.count("crosses(") == 1, plan
+    assert len(python) == 1 and python[0][0].startswith("ArrowEvalPython [crosses("), plan
+    assert not any("BroadcastHashJoin" in op for op, _ in ops), plan
+    assert len(exchanges) == 1 and exchanges[0] in python[0][1], plan
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
+
+
+def test_crossing_pairs_self_single_kernel_no_cartesian(spark, entrymod):
+    """The single-table crossing sweep must stay candidate-driven: exactly
+    ONE fused kernel (two-way cell match + triage + exact fallback), and
+    never a cartesian/nested-loop pair join — the all-pairs form is the
+    oracle's job, not the engine's."""
+    _crossing_plan_checks(entrymod.queries()["crossing_pairs_self"](spark, SF_DIR))
 
 
 def test_crossing_pairs_tables_single_kernel_no_cartesian(spark, entrymod):
     """Two-table crossing join: same discipline as the self sweep — one
-    pair-kernel evaluation, candidates only from equi-joins."""
-    df = entrymod.queries()["crossing_pairs_tables"](spark, SF_DIR)
-    plan = _plan(df)
-    assert plan.count("crosses(") == 1, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
+    kernel evaluation over the larger side's index, the smaller side
+    broadcast, no candidate UNION or geometry join."""
+    _crossing_plan_checks(entrymod.queries()["crossing_pairs_tables"](spark, SF_DIR))
 
 
 def test_path_assembly_is_pure_catalyst(spark, entrymod):

@@ -189,3 +189,34 @@ def test_coarse_prefix_filter_keeps_the_column_built_rows(spark):
     plan = df.filter(coarse_prefix_filter(spread, "cell", True))
     assert "INSET" in plan._jdf.queryExecution().executedPlan().toString()
     df.unpersist()
+
+
+def test_cell_token_expression_matches_token_of(spark):
+    """The native token expression gives ``cellid.token_of`` over seeded
+    cells at every level 0-30, the six face cells, level-30 leaves and id
+    0, and plans with no Python evaluation."""
+    import numpy as np
+
+    from s2geometry_d_spark.functions import kernels
+    from s2geometry_d_spark.s2core import cellid as ci
+    from s2geometry_d_spark.s2core.cellid import CellId
+
+    rng = np.random.default_rng(17)
+    lat = np.degrees(np.arcsin(rng.uniform(-1, 1, 2000)))
+    lng = rng.uniform(-180, 180, 2000)
+    leaves = ci.from_latlng(lat, lng)
+    cells = [
+        CellId(int(v)).parent(int(lv)).id
+        for v, lv in zip(leaves, rng.integers(0, 31, leaves.shape[0]))
+    ]
+    cells += [CellId(int(leaves[lv])).parent(lv).id for lv in range(31)]
+    cells += [CellId.from_face(f).id for f in range(6)]
+    cells += [int(v) for v in leaves[:50]] + [0]
+    ids = [int(v) for v in ci.to_signed(np.array(cells, dtype=np.uint64))]
+    df = spark.createDataFrame([(i,) for i in ids], "cell long")
+    out = df.select("cell", kernels.cell_token(F.col("cell")).alias("token"))
+    assert "EvalPython" not in out._jdf.queryExecution().executedPlan().toString()
+    got = {r["cell"]: r["token"] for r in out.collect()}
+    want = {s: ci.token_of(c) for s, c in zip(ids, cells)}
+    assert got == want
+    assert want[ids[-1]] == "X" and len(set(len(t) for t in want.values())) > 10
