@@ -46,96 +46,60 @@ def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 # deterministic edge fixture shared with the SQL oracle: chain points in
 # (floor(lat), lng, point_id) order -> latitude-banded short edges.  The
 # global window is fixture GENERATION only (fine at test scale); production
-# edge tables arrive as data.  Both the edge table and its registered-cell
-# index are session-cached (the reference's build-once index model,
-# s2loop.d:1078-1093) so the kNN, crossing and polyline queries share ONE
-# fixture build + ONE registration instead of re-running both per query.
+# edge tables arrive as data.  Every fixture below is owned by the session
+# store (sources.tables.shared): built once per session and handed out as
+# the SAME frame object, so the registration knn.registration memoizes on
+# it is shared too — the kNN, crossing and polyline queries share ONE
+# fixture build + ONE registration (the reference's build-once index
+# model, s2loop.d:1078-1093) and release_caches frees both.
 _EDGE_ORDER = "ORDER BY floor(lat), lng, point_id"
-_EDGES_CACHE: dict = {}
-_REGISTERED_CACHE: dict = {}
 
 
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _EDGES_CACHE.get(key)
-    if cached is not None:
-        return cached
-    pts = _points(spark, sf_dir).select("point_id", "lat", "lng")
-    w = W.orderBy(F.floor("lat"), F.col("lng"), F.col("point_id"))
-    df = (
-        pts.withColumn("blat", F.lead("lat").over(w))
-        .withColumn("blng", F.lead("lng").over(w))
-        .filter(F.col("blat").isNotNull())
-        .select(
-            F.col("point_id").alias("edge_id"),
-            F.col("lat").alias("alat"),
-            F.col("lng").alias("alng"),
-            "blat",
-            "blng",
+    def build():
+        pts = _points(spark, sf_dir).select("point_id", "lat", "lng")
+        w = W.orderBy(F.floor("lat"), F.col("lng"), F.col("point_id"))
+        return (
+            pts.withColumn("blat", F.lead("lat").over(w))
+            .withColumn("blng", F.lead("lng").over(w))
+            .filter(F.col("blat").isNotNull())
+            .select(
+                F.col("point_id").alias("edge_id"),
+                F.col("lat").alias("alat"),
+                F.col("lng").alias("alng"),
+                "blat",
+                "blng",
+            )
+            # the global fixture window collapses to ONE partition; spread the
+            # persisted table so every consumer (probes, brute fallbacks, clip
+            # walks) gets full parallelism instead of a serialized scan
+            .repartition(spark.sparkContext.defaultParallelism)
+            .persist()
         )
-        # the global fixture window collapses to ONE partition; spread the
-        # persisted table so every consumer (probes, brute fallbacks, clip
-        # walks) gets full parallelism instead of a serialized scan
-        .repartition(spark.sparkContext.defaultParallelism)
-        .persist()
-    )
-    _EDGES_CACHE[key] = df
-    return df
+
+    return tables.shared(spark, sf_dir, "edges", build)
 
 
 def _edges_registered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _REGISTERED_CACHE.get(key)
-    if cached is not None:
-        return cached
-    df = knn.register_edges(_edges(spark, sf_dir))
-    _REGISTERED_CACHE[key] = df
-    return df
-
-
-_REGISTERED_PL_CACHE: dict = {}
-
-
-def _polyline_edges_registered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _REGISTERED_PL_CACHE.get(key)
-    if cached is not None:
-        return cached
-    df = knn.register_edges(_polyline_edges(spark, sf_dir))
-    _REGISTERED_PL_CACHE[key] = df
-    return df
+    return knn.registration(_edges(spark, sf_dir))
 
 
 def release_caches(spark: SparkSession | None = None) -> int:
-    """Unpersist and evict every session-cached fixture/index DataFrame
-    (points, edges, registered-cell indexes, polygon index).  Long-lived
-    sessions touching many sf_dirs or ad-hoc edge tables would otherwise
-    accumulate pinned storage for the application lifetime (ADVICE
-    round-3).  The crossing payload broadcasts memoized on a frame are
-    destroyed with it.  Pass a SparkSession to release only that
-    application's entries.  Returns the number of DataFrames unpersisted."""
-    app_id = spark.sparkContext.applicationId if spark is not None else None
-    released = 0
-    for cache in (
-        tables._POINTS_CACHE,
-        _EDGES_CACHE,
-        _REGISTERED_CACHE,
-        _REGISTERED_PL_CACHE,
-        _POLY_INDEX_CACHE,
-        _POLYLINE_EDGES_CACHE,
-    ):
-        for key in list(cache):
-            if app_id is not None and key[0] != app_id:
-                continue
-            val = cache.pop(key)
-            for df in val if isinstance(val, tuple) else (val,):
-                if isinstance(df, DataFrame):
-                    crossing.release_payloads(df)
-                    df.unpersist()
-                    released += 1
-    return released
+    """Unpersist and evict every frame the session store owns: the
+    fixtures (points, edges, polylines, chords, polygon and shape indexes)
+    and the edge registrations operators built for their callers.  Long-
+    lived sessions touching many sf_dirs or ad-hoc edge tables would
+    otherwise accumulate pinned storage for the application lifetime.  The
+    crossing payload broadcasts memoized on a frame are destroyed with it.
+    Pass a SparkSession to release only that application's frames.
+    Returns the number of frames released."""
+    frames = tables.evict(spark)
+    for df in frames:
+        crossing.release_payloads(df)
+        df.unpersist()
+    return len(frames)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -183,9 +147,6 @@ def _q_pip_many_poly(spark, sf_dir):
     )
 
 
-_POLY_INDEX_CACHE: dict = {}
-
-
 def _q_pip_many_poly_table(spark, sf_dir):
     """Same 1000-polygon PIP through the DISTRIBUTED index-table path
     (S2ShapeIndex as rows, SURVEY §1.3): applyInPandas builds the index as
@@ -198,16 +159,15 @@ def _q_pip_many_poly_table(spark, sf_dir):
         polygons_dataframe,
     )
 
-    key = (spark.sparkContext.applicationId, "many_poly_index")
-    cached = _POLY_INDEX_CACHE.get(key)
-    if cached is None:
-        polys_df = polygons_dataframe(spark, demo.many_poly_regions())
-        idx = build_polygon_index(polys_df).persist()
-        jl = idx.agg(F.min("cov_level")).collect()[0][0]
-        cached = _POLY_INDEX_CACHE[key] = (idx, int(jl))
-    idx, jl = cached
-    pts = _points(spark, sf_dir)
-    out = points_in_polygons_table(pts, idx, join_level=jl)
+    idx = tables.shared(
+        spark,
+        None,
+        "many_poly_index",
+        lambda: build_polygon_index(
+            polygons_dataframe(spark, demo.many_poly_regions())
+        ).persist(),
+    )
+    out = points_in_polygons_table(_points(spark, sf_dir), idx)
     return out.select(F.col("poly_id").alias("region_id"), "point_id")
 
 
@@ -219,9 +179,7 @@ def _q_pip_unified_index(spark, sf_dir):
     carries dim=0/1 rows."""
     from s2geometry_d_spark.operators.shape_index import points_in_shapes
 
-    idx, jl = _unified_index(spark, sf_dir)
-    pts = _points(spark, sf_dir)
-    out = points_in_shapes(pts, idx, join_level=jl)
+    out = points_in_shapes(_points(spark, sf_dir), _unified_index(spark, sf_dir))
     return out.select(F.col("poly_id").alias("region_id"), "point_id")
 
 
@@ -239,44 +197,49 @@ def _q_pip_text_index(spark, sf_dir):
     )
     from s2geometry_d_spark.s2core import textformat as tf
 
-    key = (spark.sparkContext.applicationId, "text_index")
-    cached = _POLY_INDEX_CACHE.get(key)
-    if cached is None:
+    def build():
         rows = [
             (rid, "# # " + tf.polygon_to_string(poly))
             for rid, poly in demo.many_poly_regions()
         ]
         src = local_df(spark, rows, ["index_id", "text"])
-        idx = unified_index_from_text(src).persist()
-        jl = (
-            idx.filter(F.col("dim") == 2).agg(F.min("cov_level")).collect()[0][0]
-        )
-        cached = _POLY_INDEX_CACHE[key] = (idx, int(jl))
-    idx, jl = cached
-    pts = _points(spark, sf_dir)
-    out = points_in_shapes(pts, idx, join_level=jl)
+        return unified_index_from_text(src).persist()
+
+    idx = tables.shared(spark, None, "text_index", build)
+    out = points_in_shapes(_points(spark, sf_dir), idx)
     return out.select(
         F.regexp_replace("poly_id", ":g0$", "").alias("region_id"), "point_id"
     )
 
 
 def _unified_index(spark, sf_dir):
-    """Session-cached unified mixed-shape index shared with
-    pip_unified_index (same cache key → build-once across the suite)."""
+    """The unified mixed-shape index (1000 polygons + 2000 fixture edges)
+    the PIP and index-region queries share, one build per sf_dir."""
     from s2geometry_d_spark.operators.shape_index import unified_shape_index
     from s2geometry_d_spark.operators.poly_index import polygons_dataframe
 
-    key = (spark.sparkContext.applicationId, "unified_index")
-    cached = _POLY_INDEX_CACHE.get(key)
-    if cached is None:
-        polys_df = polygons_dataframe(spark, demo.many_poly_regions())
-        edges = _edges(spark, sf_dir).limit(2000)
-        idx = unified_shape_index(edges_df=edges, polys_df=polys_df).persist()
-        jl = (
-            idx.filter(F.col("dim") == 2).agg(F.min("cov_level")).collect()[0][0]
-        )
-        cached = _POLY_INDEX_CACHE[key] = (idx, int(jl))
-    return cached
+    return tables.shared(
+        spark,
+        sf_dir,
+        "unified_index",
+        lambda: unified_shape_index(
+            edges_df=_edges(spark, sf_dir).limit(2000),
+            polys_df=polygons_dataframe(spark, demo.many_poly_regions()),
+        ).persist(),
+    )
+
+
+def _unified_edges_index(spark, sf_dir):
+    """The unified index over the whole edge fixture, shared by the
+    closest-edge and crossing-edge probes."""
+    from s2geometry_d_spark.operators.shape_index import unified_shape_index
+
+    return tables.shared(
+        spark,
+        sf_dir,
+        "unified_edges_index",
+        lambda: unified_shape_index(edges_df=_edges(spark, sf_dir)).persist(),
+    )
 
 
 def _q_pip_incremental_index(spark, sf_dir):
@@ -294,27 +257,21 @@ def _q_pip_incremental_index(spark, sf_dir):
         update_shape_index,
     )
 
-    key = (spark.sparkContext.applicationId, "incremental_index")
-    cached = _POLY_INDEX_CACHE.get(key)
-    if cached is None:
+    def build():
         regions = demo.many_poly_regions()
         half = len(regions) // 2
         decoys = [("rm:" + rid, poly) for rid, poly in regions[:50]]
         base = unified_shape_index(
             polys_df=polygons_dataframe(spark, regions[:half] + decoys)
         )
-        idx = update_shape_index(
+        return update_shape_index(
             base,
             add_polys=polygons_dataframe(spark, regions[half:]),
             remove_shape_ids=[rid for rid, _ in decoys],
         ).persist()
-        jl = (
-            idx.filter(F.col("dim") == 2).agg(F.min("cov_level")).collect()[0][0]
-        )
-        cached = _POLY_INDEX_CACHE[key] = (idx, int(jl))
-    idx, jl = cached
-    pts = _points(spark, sf_dir)
-    out = points_in_shapes(pts, idx, join_level=jl)
+
+    idx = tables.shared(spark, None, "incremental_index", build)
+    out = points_in_shapes(_points(spark, sf_dir), idx)
     return out.select(F.col("poly_id").alias("region_id"), "point_id")
 
 
@@ -333,9 +290,12 @@ def _q_index_region_check(spark, sf_dir):
     coverage is identical and the full-density relation is pinned by
     tests/test_index_region.py."""
     from s2geometry_d_spark.operators.index_region import cells_region_relation
-    from s2geometry_d_spark.operators.shape_index import points_in_shapes
+    from s2geometry_d_spark.operators.shape_index import (
+        points_in_shapes,
+        polygon_join_level,
+    )
 
-    idx, jl = _unified_index(spark, sf_dir)
+    idx = _unified_index(spark, sf_dir)
     # lazy localCheckpoints at every fan-out frame: the final plan consumes
     # pts twice (ancestor explode + PIP), ptsL twice (targets + the match
     # join) and targets four times (fine/coarse/out-join inside
@@ -376,10 +336,12 @@ def _q_index_region_check(spark, sf_dir):
     )
 
     targets = ptsL.select("tcell", "level").distinct().localCheckpoint(eager=False)
-    rel = cells_region_relation(targets, idx, join_level=jl, broadcast_index=True)
+    rel = cells_region_relation(
+        targets, idx, join_level=polygon_join_level(idx), broadcast_index=True
+    )
 
     matched = (
-        points_in_shapes(pts, idx, join_level=jl)
+        points_in_shapes(pts, idx)
         .select("point_id")
         .distinct()
         .withColumn("_m", F.lit(True))
@@ -414,7 +376,7 @@ def _q_index_union_bound_check(spark, sf_dir):
     from s2geometry_d_spark.operators.index_region import index_cell_union_bound
     from s2geometry_d_spark.operators.shape_index import points_in_shapes
 
-    idx, jl = _unified_index(spark, sf_dir)
+    idx = _unified_index(spark, sf_dir)
     pts = _points(spark, sf_dir)
     bound = index_cell_union_bound(idx)
     arr = "array(" + ",".join(f"{c}L" for c in bound) + ")"
@@ -423,7 +385,7 @@ def _q_index_union_bound_check(spark, sf_dir):
         f" AND cell_id <= c + (c & -c) - 1)"
     )
     matched = (
-        points_in_shapes(pts, idx, join_level=jl)
+        points_in_shapes(pts, idx)
         .select("point_id")
         .distinct()
         .join(pts.select("point_id", "cell_id"), "point_id")
@@ -502,13 +464,7 @@ def _q_knn_region(spark, sf_dir):
 
 def _q_knn_edges(spark, sf_dir):
     """Closest-edge kNN (the reference's flagship query class)."""
-    e = _edges(spark, sf_dir)
-    res = knn.knn_edges_join(
-        e,
-        demo.knn_queries(),
-        k=5,
-        registered_df=_edges_registered(spark, sf_dir),
-    )
+    res = knn.knn_edges_join(_edges(spark, sf_dir), demo.knn_queries(), k=5)
     return res.select("query_id", "rank", "edge_id")
 
 
@@ -519,15 +475,7 @@ def _q_knn_unified(spark, sf_dir):
     knn_edges_join."""
     from s2geometry_d_spark.operators.shape_index import knn_edges_unified
 
-    key = (spark.sparkContext.applicationId, "unified_edges_index", sf_dir)
-    cached = _POLY_INDEX_CACHE.get(key)
-    if cached is None:
-        from s2geometry_d_spark.operators.shape_index import unified_shape_index
-
-        idx = unified_shape_index(edges_df=_edges(spark, sf_dir)).persist()
-        cached = _POLY_INDEX_CACHE[key] = (idx, None)
-    idx, _ = cached
-    res = knn_edges_unified(idx, demo.knn_queries(), k=5)
+    res = knn_edges_unified(_unified_edges_index(spark, sf_dir), demo.knn_queries(), k=5)
     return res.select(
         "query_id", "rank", F.col("edge_id").cast("long").alias("edge_id")
     )
@@ -536,38 +484,32 @@ def _q_knn_unified(spark, sf_dir):
 _POLYLINE_CHAIN = 100  # consecutive fixture edges per polyline
 
 
-_POLYLINE_EDGES_CACHE: dict = {}
-
-
 def _polyline_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Polyline TABLE fixture: consecutive fixture edges chained into
     polylines of _POLYLINE_CHAIN edges each (SQL-reproducible numbering:
-    row_number over the a-endpoint's original sort key).  Session-cached
-    and persisted like ``_edges``: the global row_number is a single-
-    partition sort of the whole edge table, and without the cache every
-    consumer (clip walk, polyline kNN brute side, within-distance) re-ran
-    it per action."""
+    row_number over the a-endpoint's original sort key).  Stored and
+    persisted like ``_edges``: the global row_number is a single-partition
+    sort of the whole edge table, and without the store every consumer
+    (clip walk, polyline kNN brute side, within-distance) re-ran it per
+    action."""
     from pyspark.sql import Window as W
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _POLYLINE_EDGES_CACHE.get(key)
-    if cached is not None:
-        return cached
-    e = _edges(spark, sf_dir)
-    w = W.orderBy(F.floor("alat"), F.col("alng"), F.col("edge_id"))
-    rn = F.row_number().over(w)
-    df = (
-        e.withColumn("seq", rn)
-        .withColumn(
-            "polyline_id",
-            F.floor((rn - 1) / _POLYLINE_CHAIN).cast("long"),
+    def build():
+        w = W.orderBy(F.floor("alat"), F.col("alng"), F.col("edge_id"))
+        rn = F.row_number().over(w)
+        return (
+            _edges(spark, sf_dir)
+            .withColumn("seq", rn)
+            .withColumn(
+                "polyline_id",
+                F.floor((rn - 1) / _POLYLINE_CHAIN).cast("long"),
+            )
+            # spread the single-partition window output (see _edges)
+            .repartition(spark.sparkContext.defaultParallelism)
+            .persist()
         )
-        # spread the single-partition window output (see _edges)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .persist()
-    )
-    _POLYLINE_EDGES_CACHE[key] = df
-    return df
+
+    return tables.shared(spark, sf_dir, "polyline_edges", build)
 
 
 def _q_nearest_polyline(spark, sf_dir):
@@ -575,13 +517,7 @@ def _q_nearest_polyline(spark, sf_dir):
     side (VERDICT #10)."""
     from s2geometry_d_spark.operators.polyline_join import nearest_polyline_join
 
-    pe = _polyline_edges(spark, sf_dir)
-    res = nearest_polyline_join(
-        pe,
-        demo.knn_queries(),
-        k=3,
-        registered_df=_polyline_edges_registered(spark, sf_dir),
-    )
+    res = nearest_polyline_join(_polyline_edges(spark, sf_dir), demo.knn_queries(), k=3)
     return res.select(
         "query_id", "rank", "polyline_id", F.round("dist2", 9).alias("dist2")
     )
@@ -596,12 +532,10 @@ def _q_polyline_within_distance(spark, sf_dir):
     parity; partial answers are complete answers)."""
     from s2geometry_d_spark.operators.polyline_join import nearest_polyline_join
 
-    pe = _polyline_edges(spark, sf_dir)
     res = nearest_polyline_join(
-        pe,
+        _polyline_edges(spark, sf_dir),
         demo.knn_queries(),
         k=5,
-        registered_df=_polyline_edges_registered(spark, sf_dir),
         max_distance_deg=_PL_WITHIN_DEG,
     )
     return res.select(
@@ -613,13 +547,8 @@ def _q_knn_edges_maxdist(spark, sf_dir):
     """Closest-edge kNN with a max_distance option (reference options
     parity, s2closest_edge_query.d:199-272): fewer than k results at the
     limit is a complete answer."""
-    e = _edges(spark, sf_dir)
     res = knn.knn_edges_join(
-        e,
-        demo.knn_queries(),
-        k=5,
-        max_distance_deg=1.0,
-        registered_df=_edges_registered(spark, sf_dir),
+        _edges(spark, sf_dir), demo.knn_queries(), k=5, max_distance_deg=1.0
     )
     return res.select("query_id", "rank", "edge_id")
 
@@ -632,13 +561,8 @@ def _q_knn_edges_maxerror(spark, sf_dir):
     what lets the exact SQL oracle verify the option end-to-end (the
     brute-force tolerance flip in tests/test_knn_options.py covers the
     genuinely-approximate regime)."""
-    e = _edges(spark, sf_dir)
     res = knn.knn_edges_join(
-        e,
-        demo.knn_queries(),
-        k=5,
-        max_error_deg=0.02,
-        registered_df=_edges_registered(spark, sf_dir),
+        _edges(spark, sf_dir), demo.knn_queries(), k=5, max_error_deg=0.02
     )
     return res.select("query_id", "rank", "edge_id")
 
@@ -686,10 +610,7 @@ def _q_crossing_edges(spark, sf_dir):
     """Which data edges properly cross the route polyline's edges."""
     from s2geometry_d_spark.operators.crossing import crossing_edges_join
 
-    e = _edges(spark, sf_dir)
-    out = crossing_edges_join(
-        e, _crossing_targets(), registered_df=_edges_registered(spark, sf_dir)
-    )
+    out = crossing_edges_join(_edges(spark, sf_dir), _crossing_targets())
     return out.select("target_id", "edge_id")
 
 
@@ -698,18 +619,9 @@ def _q_crossing_unified(spark, sf_dir):
     index (dim=1 slice reconstructs the registered-edge view) — shares the
     det-product oracle with crossing_edges_join, so hash parity across
     artifacts is driver-checked every round."""
-    from s2geometry_d_spark.operators.shape_index import (
-        crossing_edges_unified,
-        unified_shape_index,
-    )
+    from s2geometry_d_spark.operators.shape_index import crossing_edges_unified
 
-    key = (spark.sparkContext.applicationId, "unified_edges_index", sf_dir)
-    cached = _POLY_INDEX_CACHE.get(key)
-    if cached is None:
-        idx = unified_shape_index(edges_df=_edges(spark, sf_dir)).persist()
-        cached = _POLY_INDEX_CACHE[key] = (idx, None)
-    idx, _ = cached
-    out = crossing_edges_unified(idx, _crossing_targets())
+    out = crossing_edges_unified(_unified_edges_index(spark, sf_dir), _crossing_targets())
     return out.select("target_id", F.col("edge_id").cast("long").alias("edge_id"))
 
 
@@ -724,18 +636,27 @@ _SELF_JLAT = "(((point_id * 1103515245 + 98765) % 1000003) / 1000003e0 - 0.5e0) 
 _SELF_JLNG = "(((point_id * 1597334677 + 424242) % 1000003) / 1000003e0 - 0.5e0) * 4e0"
 
 
-def _chord_edges(spark, sf_dir):
-    return (
-        _points(spark, sf_dir)
+def _chords(spark, sf_dir, name, jlat, jlng, residue):
+    """Stored chord table: the same frame object on every call, so its
+    registration (knn.registration) is built once per session."""
+    return tables.shared(
+        spark,
+        sf_dir,
+        name,
+        lambda: _points(spark, sf_dir)
         .selectExpr(
             "point_id AS edge_id",
             "lat AS alat",
             "lng AS alng",
-            f"greatest(-89.95e0, least(89.95e0, lat + {_SELF_JLAT})) AS blat",
-            f"lng + {_SELF_JLNG} AS blng",
+            f"greatest(-89.95e0, least(89.95e0, lat + {jlat})) AS blat",
+            f"lng + {jlng} AS blng",
         )
-        .filter(F.col("edge_id") % _SELF_PAIRS_MOD == 0)
+        .filter(F.col("edge_id") % _SELF_PAIRS_MOD == residue),
     )
+
+
+def _chord_edges(spark, sf_dir):
+    return _chords(spark, sf_dir, "chords", _SELF_JLAT, _SELF_JLNG, 0)
 
 
 # a second, independently-jittered chord table (disjoint point subset) for
@@ -745,61 +666,37 @@ _SELF_JLNG2 = "(((point_id * 1812433253 + 246801) % 1000003) / 1000003e0 - 0.5e0
 
 
 def _chord_edges_b(spark, sf_dir):
-    return (
-        _points(spark, sf_dir)
-        .selectExpr(
-            "point_id AS edge_id",
-            "lat AS alat",
-            "lng AS alng",
-            f"greatest(-89.95e0, least(89.95e0, lat + {_SELF_JLAT2})) AS blat",
-            f"lng + {_SELF_JLNG2} AS blng",
-        )
-        .filter(F.col("edge_id") % _SELF_PAIRS_MOD == 1)
-    )
+    return _chords(spark, sf_dir, "chords_b", _SELF_JLAT2, _SELF_JLNG2, 1)
 
 
 def _q_crossing_pairs_tables(spark, sf_dir):
     """TABLE-to-TABLE crossing join (S2CrossingEdgeQuery with an indexed
     edge collection as the query side): every (a, b) proper crossing
     between two independently-jittered chord tables over disjoint point
-    subsets — both sides DataFrames end to end, candidates from the
-    two-direction cell/ancestor equi-join, never all-pairs."""
+    subsets — both sides DataFrames end to end, never all-pairs.  The
+    smaller registered side is broadcast as cell tables and the other
+    side's registered rows are scanned by the fused ``crosses`` kernel;
+    only above ``crossing.BROADCAST_REG_ROWS`` on both sides do candidates
+    come from the two-direction cell/ancestor equi-join."""
     from s2geometry_d_spark.operators.crossing import crossing_pairs_join
-    from s2geometry_d_spark.operators import knn as _knn
 
-    a = _chord_edges(spark, sf_dir)
-    b = _chord_edges_b(spark, sf_dir)
-    rega_key = (spark.sparkContext.applicationId, sf_dir, "selfpairs_reg")
-    rega = _REGISTERED_CACHE.get(rega_key)
-    if rega is None:
-        rega = _knn.register_edges(a)
-        _REGISTERED_CACHE[rega_key] = rega
-    regb_key = (spark.sparkContext.applicationId, sf_dir, "tablepairs_regb")
-    regb = _REGISTERED_CACHE.get(regb_key)
-    if regb is None:
-        regb = _knn.register_edges(b)
-        _REGISTERED_CACHE[regb_key] = regb
-    out = crossing_pairs_join(a, b, a_registered=rega, b_registered=regb)
+    out = crossing_pairs_join(_chord_edges(spark, sf_dir), _chord_edges_b(spark, sf_dir))
     return out.select("id_a", "id_b")
 
 
 def _q_crossing_pairs_self(spark, sf_dir):
     """Single-TABLE crossing sweep (shapeutil/visit_crossing_edge_pairs.d):
     every properly-crossing unordered edge pair within one edge table,
-    reported once, via the registered-cell ancestor join — never all-pairs.
-    The DuckDB oracle forms the subset's explicit pair join with the same
-    det-product condition; the engine never does."""
+    reported once — never all-pairs.  The table is both sides of the fused
+    ``crosses`` kernel: its registered cells are broadcast once and its
+    registered rows scanned once, each pair tested when its lower-id edge
+    is scanned; the registered-cell ancestor join runs only above
+    ``crossing.BROADCAST_REG_ROWS``.  The DuckDB oracle forms the subset's
+    explicit pair join with the same det-product condition; the engine
+    never does."""
     from s2geometry_d_spark.operators.crossing import crossing_pairs_self
 
-    e = _chord_edges(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "selfpairs_reg")
-    reg = _REGISTERED_CACHE.get(key)
-    if reg is None:
-        from s2geometry_d_spark.operators import knn as _knn
-
-        reg = _knn.register_edges(e)
-        _REGISTERED_CACHE[key] = reg
-    out = crossing_pairs_self(e, registered_df=reg)
+    out = crossing_pairs_self(_chord_edges(spark, sf_dir))
     return out.select("id_a", "id_b")
 
 
@@ -876,10 +773,7 @@ def _q_clip_polylines(spark, sf_dir):
     from s2geometry_d_spark.operators.overlay import clip_polylines_to_polygon
 
     _, poly = demo.poly_region()
-    pe = _polyline_edges(spark, sf_dir)
-    out = clip_polylines_to_polygon(
-        pe, poly, registered_df=_polyline_edges_registered(spark, sf_dir)
-    )
+    out = clip_polylines_to_polygon(_polyline_edges(spark, sf_dir), poly)
     return out.select(
         "polyline_id",
         F.round("vx", 6).alias("vx"),
@@ -891,13 +785,7 @@ def _q_clip_polylines(spark, sf_dir):
 def _q_knn_edge_targets(spark, sf_dir):
     """EDGE-target closest-edge query: k nearest table edges to each route
     segment (reference target kinds, s2min_distance_targets.d)."""
-    e = _edges(spark, sf_dir)
-    res = knn.knn_edges_to_edges(
-        e,
-        _crossing_targets(),
-        k=5,
-        registered_df=_edges_registered(spark, sf_dir),
-    )
+    res = knn.knn_edges_to_edges(_edges(spark, sf_dir), _crossing_targets(), k=5)
     return res.select("query_id", "rank", "edge_id")
 
 
@@ -912,9 +800,7 @@ def _q_knn_table_join(spark, sf_dir):
     qdf = e.filter(F.col("edge_id") % 300 == 0).select(
         F.col("edge_id").alias("query_id"), "alat", "alng", "blat", "blng"
     )
-    res = knn.knn_edges_join_tables(
-        qdf, e, k=5, registered_df=_edges_registered(spark, sf_dir)
-    )
+    res = knn.knn_edges_join_tables(qdf, e, k=5)
     return res.select("query_id", "rank", "edge_id")
 
 
@@ -935,13 +821,7 @@ def _q_knn_cell_targets(spark, sf_dir):
     cell — 0 for edges touching/inside the cell (the big level-4 target
     exercises the tie regime), else min pair distance against the cell's
     four boundary edges, via the engine-shared SQL fragment."""
-    e = _edges(spark, sf_dir)
-    res = knn.knn_edges_to_cells(
-        e,
-        _cell_targets(),
-        k=5,
-        registered_df=_edges_registered(spark, sf_dir),
-    )
+    res = knn.knn_edges_to_cells(_edges(spark, sf_dir), _cell_targets(), k=5)
     return res.select("query_id", "rank", "edge_id")
 
 
@@ -1172,13 +1052,18 @@ def _q_covering_containment(spark, sf_dir):
     from s2geometry_d_spark.operators.spatial_join import compute_coverings
 
     n_lat, n_lng = 90, 180
-    grid = spark.range(0, n_lat * n_lng).select(
-        (F.lit(-89.0) + float(_GRID_STEP) * (F.col("id") % n_lat)).alias("lat"),
-        (F.lit(-179.0) + float(_GRID_STEP) * F.floor(F.col("id") / n_lat)).alias("lng"),
+    grid = tables.shared(
+        spark,
+        None,
+        "probe_grid",
+        lambda: spark.range(0, n_lat * n_lng)
+        .select(
+            (F.lit(-89.0) + float(_GRID_STEP) * (F.col("id") % n_lat)).alias("lat"),
+            (F.lit(-179.0) + float(_GRID_STEP) * F.floor(F.col("id") / n_lat)).alias("lng"),
+        )
+        .withColumn("leaf", kernels.cell_from_latlng(F.col("lat"), F.col("lng")))
+        .persist(),
     )
-    grid = grid.withColumn(
-        "leaf", kernels.cell_from_latlng(F.col("lat"), F.col("lng"))
-    ).persist()
 
     preds = {rid: demo.cap_predicate_sql(la, ln, r) for rid, la, ln, r in demo.CAPS}
     preds.update(

@@ -40,10 +40,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import kernels
-# register_edges and coarse_prefix_filter are looked up on their modules at
-# call time, so wrappers installed on those modules (tracing) see the calls
+from ..sources.tables import memo
+# register_edges (through knn.registration) and coarse_prefix_filter are
+# looked up on their modules at call time, so wrappers installed on those
+# modules (tracing) see the calls
 from . import knn, spatial_join
-from .knn import _memo, registered_stats
+from .knn import registered_stats
 from .spatial_join import RegionCovering, cell_tables, covering_tables, match_coverings
 
 # registered tables at or below this many (edge, cell) rows may be the
@@ -199,10 +201,8 @@ def _payload(registered: DataFrame, id_col: str, edges: DataFrame):
     :func:`release_payloads`)."""
     import pyarrow as pa
 
-    memo = getattr(registered, "_s2_cross_payload", None)
-    if memo is None:
-        memo = _memo(registered, "_s2_cross_payload", {})
-    if id_col not in memo:
+    payloads = memo(registered, "_s2_cross_payload", dict)
+    if id_col not in payloads:
         t = _with_xyz(_with_geometry(registered, edges, id_col), id_col, "ecell").toArrow()
         ids = t.column(id_col).combine_chunks()
         _, first, edge = np.unique(
@@ -211,16 +211,17 @@ def _payload(registered: DataFrame, id_col: str, edges: DataFrame):
         xyz = np.column_stack([t.column(c).to_numpy() for c in _XYZ]).reshape(-1, 6)
         tables = cell_tables(t.column("ecell").to_numpy(), edge.reshape(-1))
         sc = registered.sparkSession.sparkContext
-        memo[id_col] = sc.broadcast((tables, xyz[first], ids.take(pa.array(first))))
-    return memo[id_col]
+        payloads[id_col] = sc.broadcast((tables, xyz[first], ids.take(pa.array(first))))
+    return payloads[id_col]
 
 
 def release_payloads(registered: DataFrame) -> None:
     """Destroy the broadcast payloads memoized on ``registered``; owners of
     a registered frame call this with its ``unpersist()``."""
-    for bc in (getattr(registered, "_s2_cross_payload", None) or {}).values():
+    payloads = getattr(registered, "_s2_cross_payload", {})
+    for bc in payloads.values():
         bc.destroy()
-    _memo(registered, "_s2_cross_payload", {})
+    payloads.clear()
 
 
 def _payload_prefilter(tables):
@@ -275,8 +276,8 @@ def crossing_edges_join(
 ) -> DataFrame:
     """(<edge columns>, target_id) for every table edge PROPERLY crossing a
     target edge.  ``target_edges``: [(target_id, (alat, alng), (blat, blng))]
-    — the small side (a polyline, a polygon boundary), ``registered_df``
-    shares a prebuilt registered-cell table (knn.register_edges).
+    — the small side (a polyline, a polygon boundary); ``registered_df``
+    passes a registered-cell table the caller owns (``knn.registration``).
 
     The targets' tight edge coverings are the kernel's cell tables (in the
     closure: a driver list is tiny); the persisted index is prefiltered by
@@ -288,7 +289,7 @@ def crossing_edges_join(
 
     from ..s2core.regions import latlng_point
 
-    registered = registered_df if registered_df is not None else knn.register_edges(edges_df)
+    registered = knn.registration(edges_df, registered_df)
 
     coverings, xyz = [], []
     for tid, (la, ln), (lb, lnb) in target_edges:
@@ -370,9 +371,7 @@ def crossing_pairs_self(
     geometry and the pair predicate.  Never all-pairs: candidates are
     bounded by cell co-occupancy (salt the cell key if one cell
     dominates)."""
-    registered = (
-        registered_df if registered_df is not None else knn.register_edges(edges_df)
-    )
+    registered = knn.registration(edges_df, registered_df)
     stats = registered_stats(registered)
     if stats["rows"] <= BROADCAST_REG_ROWS:
         bc = _payload(registered, edge_id_col, edges_df)
@@ -470,8 +469,8 @@ def crossing_pairs_join(
     is scanned but never shuffled, and at 100 TB the semi-join key is
     exactly the partition-pruning key of a cell-bucketed artifact.  Leave
     it False for two comparable tables."""
-    a_registered = a_registered if a_registered is not None else knn.register_edges(a_edges)
-    b_registered = b_registered if b_registered is not None else knn.register_edges(b_edges)
+    a_registered = knn.registration(a_edges, a_registered)
+    b_registered = knn.registration(b_edges, b_registered)
     a_stats = registered_stats(a_registered)
     b_stats = registered_stats(b_registered)
     if min(a_stats["rows"], b_stats["rows"]) <= BROADCAST_REG_ROWS:

@@ -175,14 +175,9 @@ def cells_region_relation(
     the dim>=1 boundary C ⊇ T slice; every other branch is pure bit math.
     """
     if join_level is None:
-        min_cov = getattr(index_df, "_s2_min_cov_level", None)
-        if min_cov is None:
-            min_cov = int(index_df.agg(F.min("cov_level")).collect()[0][0])
-            try:
-                index_df._s2_min_cov_level = min_cov
-            except AttributeError:
-                pass
-        join_level = min_cov
+        from .poly_index import min_cov_level
+
+        join_level = min_cov_level(index_df)
 
     t_lsb = F.col(cell_col).bitwiseAND(-F.col(cell_col))
     t_level = (

@@ -74,6 +74,7 @@ from pyspark.sql import types as T
 
 from ..functions import edgedist, edgepair, kernels
 from ..s2core.regions import Cap, chord2_from_radians
+from ..sources.tables import memo, shared
 from .spatial_join import (
     RegionCovering,
     buffered_segment_covering,
@@ -112,28 +113,16 @@ def _cell_level(col: str):
     ).cast("int")
 
 
-def _memo(df: DataFrame, attr: str, value):
-    try:
-        setattr(df, attr, value)
-    except AttributeError:
-        pass
-    return value
-
-
 def frame_rows(df: DataFrame, key: str | None = None) -> int:
     """Exact ``count(*)`` of ``df`` — or ``count(distinct key)`` — measured
     once per frame object and memoized on it.  The session's fixtures and
     registered indexes are persisted, shared frames, so every later reader
     of a size gets it for free."""
-    attr = "_s2_rows" if key is None else f"_s2_rows_{key}"
-    n = getattr(df, attr, None)
-    if n is None:
-        if key is None:
-            n = df.count()
-        else:
-            n = df.agg(F.count_distinct(key)).collect()[0][0]
-        n = _memo(df, attr, int(n))
-    return n
+    if key is None:
+        return memo(df, "_s2_rows", df.count)
+    return memo(
+        df, f"_s2_rows_{key}", lambda: int(df.agg(F.count_distinct(key)).collect()[0][0])
+    )
 
 
 def _rank(scored: DataFrame, k: int, tie_col: str, collapse=None) -> DataFrame:
@@ -253,11 +242,9 @@ def _ring_search(
         topk = _rank(scored, k, tie_col, collapse).drop(*target_cols)
         results = topk if results is None else results.unionByName(topk)
     if results is not None:
-        _memo(
-            results,
-            "_s2_ring",
-            {"rounds": rounds, "brute": brute, "cutover": cutover, "brute_rows": brute_rows},
-        )
+        results._s2_ring = {
+            "rounds": rounds, "brute": brute, "cutover": cutover, "brute_rows": brute_rows
+        }
     return results
 
 
@@ -605,10 +592,15 @@ def register_edges(edges_df: DataFrame) -> DataFrame:
     edge kNN rounds, crossing joins, polyline joins) probes the same built
     table instead of re-running the registration kernel per action.
 
+    ``ecell`` is stored in the persisted frame, so the frame carries the
+    ``_s2_cell_stored`` mark: covering probes of it may prepend the native
+    coarse-prefix prefilter (``spatial_join.candidate_match_kernel``).
+
     Ownership: the CALLER owns the returned persisted DataFrame and must
-    ``unpersist()`` it when done (long-lived sessions registering many edge
-    tables would otherwise pin storage forever); the bundled entry driver
-    does this via ``__spark_entry__.release_caches``."""
+    ``unpersist()`` it (and ``crossing.release_payloads`` it) when done —
+    the crossing stream does so per micro-batch.  An operator called
+    without a registered frame goes through :func:`registration` instead,
+    whose frames the session store owns."""
     from .dedup import _spread
 
     # spread BEFORE the registration kernel and the persist: an edge table
@@ -617,7 +609,7 @@ def register_edges(edges_df: DataFrame) -> DataFrame:
     # persisted index on one core (guide §2.6 input-layout lesson; no-op
     # when the input already has >= defaultParallelism splits)
     reg_udf = edge_register_cells_udf()
-    return (
+    reg = (
         _spread(edges_df)
         .withColumn(
             "_rc", reg_udf(F.col("alat"), F.col("alng"), F.col("blat"), F.col("blng"))
@@ -626,6 +618,27 @@ def register_edges(edges_df: DataFrame) -> DataFrame:
         .drop("_rc")
         .persist()
     )
+    reg._s2_cell_stored = True
+    return reg
+
+
+def registration(edges_df: DataFrame, registered_df: DataFrame | None = None) -> DataFrame:
+    """The registered index an operator probes: ``registered_df`` when the
+    caller passes one (and owns it), else the registration of ``edges_df``
+    itself — built by :func:`register_edges` once per frame object,
+    memoized on it as ``_s2_registered`` and recorded in the session store
+    (``sources.tables.shared``), so every operator called on the same
+    frame probes one index and ``__spark_entry__.release_caches`` frees it.
+    A memo whose frame has since been unpersisted is built again."""
+    if registered_df is not None:
+        return registered_df
+    reg = getattr(edges_df, "_s2_registered", None)
+    if reg is None or not reg.is_cached:
+        reg = edges_df._s2_registered = register_edges(edges_df)
+        # keyed by the registration's own id, unique while the store holds
+        # it (an edges frame's id may be reused once that frame is collected)
+        shared(edges_df.sparkSession, None, ("registered", id(reg)), lambda: reg)
+    return reg
 
 
 def registered_stats(registered: DataFrame) -> dict:
@@ -650,9 +663,10 @@ def registered_stats(registered: DataFrame) -> dict:
       cell, so this bounds the edge table the table variant's brute probe
       scans; the crossing sweeps pick broadcast or shuffle joins by it.
     """
-    cached = getattr(registered, "_s2_reg_stats", None)
-    if cached is not None:
-        return cached
+    return memo(registered, "_s2_reg_stats", lambda: _registered_stats(registered))
+
+
+def _registered_stats(registered: DataFrame) -> dict:
     level = _cell_level("ecell")
     bounds = []
     if {"alat", "alng", "blat", "blng"} <= set(registered.columns):
@@ -676,13 +690,12 @@ def registered_stats(registered: DataFrame) -> dict:
             math.radians(mid_lat)
         )
         span = max(0.5 * math.hypot(lat_span, lng_span), 1e-3)
-    stats = {
+    return {
         "span_deg": span,
         "min_level": row["min_level"],
         "levels": [int(v) for v in row["levels"]],
         "rows": int(row["rows"]),
     }
-    return _memo(registered, "_s2_reg_stats", stats)
 
 
 def _seed_deg(
@@ -744,8 +757,9 @@ def knn_edges_join(
     than radius >= kth − max_error, so no reported result can be beaten by
     more than max_error.  Early ring exits in exchange for approximate
     ranks; 0.0 (default) keeps exact semantics.
-    ``registered_df`` lets callers share one registered-cell table across
-    queries (the reference's build-once index model).
+    ``registered_df`` passes a registered-cell table the caller owns;
+    without it the search probes ``edges_df``'s own (see
+    :func:`registration` — the reference's build-once index model).
     The first ring is sized from the measured row count of ``edges_df``
     (:func:`frame_rows`), which also gates the straggler cutover, as in
     knn_join.
@@ -753,7 +767,7 @@ def knn_edges_join(
     Returns (query_id, rank, dist2, <edge columns>), rank 1..k by
     (dist2, edge_id).
     """
-    registered = registered_df if registered_df is not None else register_edges(edges_df)
+    registered = registration(edges_df, registered_df)
     # exact unbounded search: the ring schedule cannot change the result,
     # so seed from the data's extent (see _seed_deg)
     exact = max_error_deg == 0.0 and max_distance_deg is None
@@ -897,7 +911,7 @@ def knn_edges_to_edges(
     """
     from ..s2core.regions import latlng_point
 
-    registered = registered_df if registered_df is not None else register_edges(edges_df)
+    registered = registration(edges_df, registered_df)
     ends, seg = {}, {}
     for qid, (la, ln), (lb, lnb) in query_edges:
         ends[qid] = (*latlng_point(la, ln), *latlng_point(lb, lnb))
@@ -954,7 +968,7 @@ def knn_edges_to_cells(
     from ..s2core.coords import xyz_to_latlng
     from ..s2core.regions import Cell, chord2_between, chord2_to_radians
 
-    registered = registered_df if registered_df is not None else register_edges(edges_df)
+    registered = registration(edges_df, registered_df)
 
     geom = {}
     for qid, cid in query_cells:
@@ -1030,227 +1044,211 @@ def knn_edges_join_tables(
     returns (query_id, edge_id, rank, dist2).
     """
     spark = query_edges_df.sparkSession
-    # Catalyst's constraint propagation canonicalizes every aliased
-    # intermediate through the round's filter+window+join pipeline; with 62
-    # chained scoring aliases the constraint set grows combinatorially and
-    # OOMs the driver (getAllValidConstraints -> semanticEquals on huge Add
-    # chains — reproduced on an 800-edge fixture).  The inference buys
-    # nothing here (all joins are equi-joins on ids/cells), so turn it off
-    # for the operator's plan constructions and restore after.
-    _cp_key = "spark.sql.constraintPropagation.enabled"
-    _cp_prev = spark.conf.get(_cp_key, "true")
-    spark.conf.set(_cp_key, "false")
-    try:
+    registered = registration(index_edges_df, registered_df)
+    # min registered level and row count: one tiny aggregate cached on
+    # the registered frame (see registered_stats)
+    stats = registered_stats(registered)
+    jl = int(stats["min_level"])
+    # candidate rows CARRY the index-edge endpoints from the registered
+    # table (one persisted artifact) — the old shape joined candidates
+    # back to a separate checkpointed idx_xyz table on edge_id every
+    # round, a full index-sized shuffle join that the numpy scorer
+    # makes unnecessary (there is no 62-intermediate expression tree
+    # left for CollapseProject to blow up)
+    keyed_idx = registered.withColumn(
+        "_jk", kernels.parent_signed(F.col("ecell"), jl)
+    ).select("_jk", edge_id_col, "alat", "alng", "blat", "blng")
 
-        registered = (
-            registered_df if registered_df is not None else register_edges(index_edges_df)
-        )
-        # min registered level and row count: one tiny aggregate cached on
-        # the registered frame (see registered_stats)
-        stats = registered_stats(registered)
-        jl = int(stats["min_level"])
-        # candidate rows CARRY the index-edge endpoints from the registered
-        # table (one persisted artifact) — the old shape joined candidates
-        # back to a separate checkpointed idx_xyz table on edge_id every
-        # round, a full index-sized shuffle join that the numpy scorer
-        # makes unnecessary (there is no 62-intermediate expression tree
-        # left for CollapseProject to blow up)
-        keyed_idx = registered.withColumn(
-            "_jk", kernels.parent_signed(F.col("ecell"), jl)
-        ).select("_jk", edge_id_col, "alat", "alng", "blat", "blng")
+    q = query_edges_df.select(
+        F.col(query_id_col).alias("query_id"),
+        F.col("alat").alias("qalat"),
+        F.col("alng").alias("qalng"),
+        F.col("blat").alias("qblat"),
+        F.col("blng").alias("qblng"),
+    )
+    idx_geom = index_edges_df.select(
+        edge_id_col, "alat", "alng", "blat", "blng"
+    )
+    # lazy: the first round's broadcast build materializes it (an eager
+    # checkpoint here was one extra pre-loop job per call)
+    q_xyz = q.selectExpr(
+        "query_id",
+        *edgedist.xyz_exprs("qalat", "qalng", "c"),
+        *edgedist.xyz_exprs("qblat", "qblng", "d"),
+    ).localCheckpoint(eager=False)
 
-        q = query_edges_df.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col("alat").alias("qalat"),
-            F.col("alng").alias("qalng"),
-            F.col("blat").alias("qblat"),
-            F.col("blng").alias("qblng"),
+    buffer_cells = edge_buffer_cells_udf()
+    qlvl = _cell_level("qcell")
+
+    # numpy pair scorer (bit-identical SQL twin, edgepair._pair_dist2_np)
+    # — replaces the 62-intermediate projection whose analysis cost once
+    # needed constraint propagation switched off; xyz endpoints remain
+    # SQL-computed checkpointed columns
+    pair_udf = edgepair.pair_dist2_udf()
+
+    def _score(cand: DataFrame) -> DataFrame:
+        # cand carries (query_id, edge_id, alat..blng); the query xyz
+        # rides in via a broadcast of the (small) checkpointed q_xyz,
+        # the index xyz is computed inline (same SQL trig exprs —
+        # bit-identical to a precomputed column)
+        cand = _with_edge_xyz(cand.join(bc_q(q_xyz), "query_id"))
+        scored = cand.withColumn(
+            "dist2",
+            pair_udf(
+                F.col("ax"), F.col("ay"), F.col("az"),
+                F.col("bx"), F.col("by"), F.col("bz"),
+                F.col("cx"), F.col("cy"), F.col("cz"),
+                F.col("dx"), F.col("dy"), F.col("dz"),
+            ),
         )
-        idx_geom = index_edges_df.select(
-            edge_id_col, "alat", "alng", "blat", "blng"
-        )
-        # lazy: the first round's broadcast build materializes it (an eager
-        # checkpoint here was one extra pre-loop job per call)
-        q_xyz = q.selectExpr(
+        return scored.select("query_id", edge_id_col, "dist2")
+
+    # each round's pending/topk are localCheckpoint'ed: the anti-join of
+    # round t otherwise NESTS round t-1's full scoring plan, and the
+    # analyzed tree grows exponentially with rounds (observed as a
+    # driver-side Catalyst OOM, not an executor problem).  pending is
+    # checkpointed LAZILY — the next round's coarse-level collect (or
+    # the straggler probe) materializes it, saving one job per round.
+    pending = q.localCheckpoint(eager=True)
+    # strategy chooser: with a broadcast-sized query side, the per-round
+    # buffer-cell frames hash map-side against the big registered index
+    # (no index shuffle, no exchange cascade); a larger-than-broadcast
+    # query table keeps the shuffle joins
+    n_q = pending.count()
+    bc_q = F.broadcast if n_q <= 100_000 else (lambda df: df)
+    results = None
+    n_pending = n_q
+    rounds = 0
+    cutover = False
+    radius = _TARGET_SEED_DEG
+    for _ in range(max_rounds):
+        r2 = chord2_from_radians(math.radians(min(radius, 170.0)))
+        # ONE evaluation of the buffer-cell kernel per round: the frame
+        # feeds the fine join, the coarse-level collect and the
+        # per-level joins, so checkpoint it (lazily — the coarse-level
+        # collect below materializes it)
+        cells = pending.select(
             "query_id",
-            *edgedist.xyz_exprs("qalat", "qalng", "c"),
-            *edgedist.xyz_exprs("qblat", "qblng", "d"),
-        ).localCheckpoint(eager=False)
-
-        buffer_cells = edge_buffer_cells_udf()
-        qlvl = _cell_level("qcell")
-
-        # numpy pair scorer (bit-identical SQL twin, edgepair._pair_dist2_np)
-        # — replaces the 62-intermediate projection whose analysis cost
-        # motivated the constraint-propagation toggle above; xyz endpoints
-        # remain SQL-computed checkpointed columns
-        pair_udf = edgepair.pair_dist2_udf()
-
-        def _score(cand: DataFrame) -> DataFrame:
-            # cand carries (query_id, edge_id, alat..blng); the query xyz
-            # rides in via a broadcast of the (small) checkpointed q_xyz,
-            # the index xyz is computed inline (same SQL trig exprs —
-            # bit-identical to a precomputed column)
-            cand = _with_edge_xyz(cand.join(bc_q(q_xyz), "query_id"))
-            scored = cand.withColumn(
-                "dist2",
-                pair_udf(
-                    F.col("ax"), F.col("ay"), F.col("az"),
-                    F.col("bx"), F.col("by"), F.col("bz"),
-                    F.col("cx"), F.col("cy"), F.col("cz"),
-                    F.col("dx"), F.col("dy"), F.col("dz"),
-                ),
-            )
-            return scored.select("query_id", edge_id_col, "dist2")
-
-        # each round's pending/topk are localCheckpoint'ed: the anti-join of
-        # round t otherwise NESTS round t-1's full scoring plan, and the
-        # analyzed tree grows exponentially with rounds (observed as a
-        # driver-side Catalyst OOM, not an executor problem).  pending is
-        # checkpointed LAZILY — the next round's coarse-level collect (or
-        # the straggler probe) materializes it, saving one job per round.
-        pending = q.localCheckpoint(eager=True)
-        # strategy chooser: with a broadcast-sized query side, the per-round
-        # buffer-cell frames hash map-side against the big registered index
-        # (no index shuffle, no exchange cascade); a larger-than-broadcast
-        # query table keeps the shuffle joins
-        n_q = pending.count()
-        bc_q = F.broadcast if n_q <= 100_000 else (lambda df: df)
-        results = None
-        n_pending = n_q
-        rounds = 0
-        cutover = False
-        radius = _TARGET_SEED_DEG
-        for _ in range(max_rounds):
-            r2 = chord2_from_radians(math.radians(min(radius, 170.0)))
-            # ONE evaluation of the buffer-cell kernel per round: the frame
-            # feeds the fine join, the coarse-level collect and the
-            # per-level joins, so checkpoint it (lazily — the coarse-level
-            # collect below materializes it)
-            cells = pending.select(
-                "query_id",
-                F.explode(
-                    F.array_distinct(
-                        buffer_cells(
-                            F.col("qalat"),
-                            F.col("qalng"),
-                            F.col("qblat"),
-                            F.col("qblng"),
-                            F.lit(math.radians(min(radius, 170.0))),
-                        )
-                    )
-                ).alias("qcell"),
-            ).withColumn("_ql", qlvl).localCheckpoint(eager=False)
-
-            coarse_levels = [
-                int(r["_ql"])
-                for r in cells.filter(F.col("_ql") < jl)
-                .select("_ql")
-                .distinct()
-                .collect()
-            ]
-            fine = cells.filter(F.col("_ql") >= jl).withColumn(
-                "_jk", kernels.parent_signed(F.col("qcell"), jl)
-            )
-            cand = keyed_idx.join(bc_q(fine), "_jk").select(
-                "query_id", edge_id_col, "alat", "alng", "blat", "blng"
-            )
-            for lvl in coarse_levels:
-                cj = (
-                    registered.withColumn(
-                        "qcell", kernels.parent_signed(F.col("ecell"), lvl)
-                    )
-                    .select(
-                        "qcell", edge_id_col, "alat", "alng", "blat", "blng"
-                    )
-                    .join(bc_q(cells.filter(F.col("_ql") == lvl)), "qcell")
-                    .select(
-                        "query_id", edge_id_col, "alat", "alng", "blat", "blng"
+            F.explode(
+                F.array_distinct(
+                    buffer_cells(
+                        F.col("qalat"),
+                        F.col("qalng"),
+                        F.col("qblat"),
+                        F.col("qblng"),
+                        F.lit(math.radians(min(radius, 170.0))),
                     )
                 )
-                cand = cand.unionByName(cj)
-            # one exchange for dedup + window (see knn_edges_join)
-            cand = cand.repartition("query_id").dropDuplicates(
-                ["query_id", edge_id_col]
-            )
+            ).alias("qcell"),
+        ).withColumn("_ql", qlvl).localCheckpoint(eager=False)
 
-            scored = _score(cand).filter(F.col("dist2") <= F.lit(r2))
-            topk = _rank(scored, k, edge_id_col).localCheckpoint(eager=True)
-            # a query is certified complete when its k-th distance is inside
-            # the ring (the buffer covering proves nothing nearer was missed)
-            done_q = (
-                topk.groupBy("query_id")
-                .agg(F.count(F.lit(1)).alias("_n"), F.max("dist2").alias("_kth"))
-                .filter((F.col("_n") >= k) & (F.col("_kth") <= F.lit(r2)))
-                .select("query_id")
+        coarse_levels = [
+            int(r["_ql"])
+            for r in cells.filter(F.col("_ql") < jl)
+            .select("_ql")
+            .distinct()
+            .collect()
+        ]
+        fine = cells.filter(F.col("_ql") >= jl).withColumn(
+            "_jk", kernels.parent_signed(F.col("qcell"), jl)
+        )
+        cand = keyed_idx.join(bc_q(fine), "_jk").select(
+            "query_id", edge_id_col, "alat", "alng", "blat", "blng"
+        )
+        for lvl in coarse_levels:
+            cj = (
+                registered.withColumn(
+                    "qcell", kernels.parent_signed(F.col("ecell"), lvl)
+                )
+                .select(
+                    "qcell", edge_id_col, "alat", "alng", "blat", "blng"
+                )
+                .join(bc_q(cells.filter(F.col("_ql") == lvl)), "qcell")
+                .select(
+                    "query_id", edge_id_col, "alat", "alng", "blat", "blng"
+                )
             )
-            finished = topk.join(done_q, "query_id", "left_semi")
-            results = finished if results is None else results.unionByName(finished)
-            pending = pending.join(
-                bc_q(done_q), "query_id", "left_anti"
-            ).localCheckpoint(eager=False)
-            # one tiny count materializes the lazy checkpoint (the next
-            # round's coarse-level collect would have paid it anyway) and
-            # steers the loop: with NOTHING pending the loop used to burn
-            # every remaining round on empty frames (observed: 4 of 5
-            # rounds with 1-task jobs, half the query's wall time), and a
-            # straggler handful is cheaper as the one bounded broadcast
-            # probe below than as more ring rounds of fixed job overhead.
-            # The cutover bound scales with n_q, and fails closed on the
-            # index size as in _ring_search, so a large pending set or an
-            # unaffordable index scan keeps ringing (the 100 TB path).
-            rounds += 1
-            n_pending = pending.count()
-            if n_pending == 0:
-                break
-            if (
-                n_pending <= max(16, n_q // 1000)
-                and stats["rows"] <= _BRUTE_SCAN_ROWS
-            ):
-                cutover = True
-                break
-            radius *= 2.0
-            if radius > 180.0 * 2:
-                break
+            cand = cand.unionByName(cj)
+        # one exchange for dedup + window (see knn_edges_join)
+        cand = cand.repartition("query_id").dropDuplicates(
+            ["query_id", edge_id_col]
+        )
 
-        # stragglers: broadcast the (small) remainder against the full index
-        if n_pending > 0:
-            cand = pending.select("query_id").crossJoin(idx_geom)
-            topk = _rank(_score(cand), k, edge_id_col)
-            results = topk if results is None else results.unionByName(topk)
-        if results is None:
-            # empty query table: no round certified and no stragglers —
-            # emit an empty frame with id types taken from the inputs so the
-            # schema matches the non-empty path exactly
-            from pyspark.sql.types import (
-                DoubleType,
-                IntegerType,
-                StructField,
-                StructType,
-            )
+        scored = _score(cand).filter(F.col("dist2") <= F.lit(r2))
+        topk = _rank(scored, k, edge_id_col).localCheckpoint(eager=True)
+        # a query is certified complete when its k-th distance is inside
+        # the ring (the buffer covering proves nothing nearer was missed)
+        done_q = (
+            topk.groupBy("query_id")
+            .agg(F.count(F.lit(1)).alias("_n"), F.max("dist2").alias("_kth"))
+            .filter((F.col("_n") >= k) & (F.col("_kth") <= F.lit(r2)))
+            .select("query_id")
+        )
+        finished = topk.join(done_q, "query_id", "left_semi")
+        results = finished if results is None else results.unionByName(finished)
+        pending = pending.join(
+            bc_q(done_q), "query_id", "left_anti"
+        ).localCheckpoint(eager=False)
+        # one tiny count materializes the lazy checkpoint (the next
+        # round's coarse-level collect would have paid it anyway) and
+        # steers the loop: with NOTHING pending the loop used to burn
+        # every remaining round on empty frames (observed: 4 of 5
+        # rounds with 1-task jobs, half the query's wall time), and a
+        # straggler handful is cheaper as the one bounded broadcast
+        # probe below than as more ring rounds of fixed job overhead.
+        # The cutover bound scales with n_q, and fails closed on the
+        # index size as in _ring_search, so a large pending set or an
+        # unaffordable index scan keeps ringing (the 100 TB path).
+        rounds += 1
+        n_pending = pending.count()
+        if n_pending == 0:
+            break
+        if (
+            n_pending <= max(16, n_q // 1000)
+            and stats["rows"] <= _BRUTE_SCAN_ROWS
+        ):
+            cutover = True
+            break
+        radius *= 2.0
+        if radius > 180.0 * 2:
+            break
 
-            results = local_df(spark, 
-                [],
-                StructType(
-                    [
-                        StructField(
-                            "query_id", q.schema["query_id"].dataType
-                        ),
-                        StructField(
-                            edge_id_col, idx_geom.schema[edge_id_col].dataType
-                        ),
-                        StructField("rank", IntegerType()),
-                        StructField("dist2", DoubleType()),
-                    ]
-                ),
-            )
-        out = results.select(
-            "query_id", edge_id_col, "rank", "dist2"
-        ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set(_cp_key, _cp_prev)
+    # stragglers: broadcast the (small) remainder against the full index
+    if n_pending > 0:
+        cand = pending.select("query_id").crossJoin(idx_geom)
+        topk = _rank(_score(cand), k, edge_id_col)
+        results = topk if results is None else results.unionByName(topk)
+    if results is None:
+        # empty query table: no round certified and no stragglers —
+        # emit an empty frame with id types taken from the inputs so the
+        # schema matches the non-empty path exactly
+        from pyspark.sql.types import (
+            DoubleType,
+            IntegerType,
+            StructField,
+            StructType,
+        )
+
+        results = local_df(spark, 
+            [],
+            StructType(
+                [
+                    StructField(
+                        "query_id", q.schema["query_id"].dataType
+                    ),
+                    StructField(
+                        edge_id_col, idx_geom.schema[edge_id_col].dataType
+                    ),
+                    StructField("rank", IntegerType()),
+                    StructField("dist2", DoubleType()),
+                ]
+            ),
+        )
+    out = results.select(
+        "query_id", edge_id_col, "rank", "dist2"
+    ).localCheckpoint(eager=True)
     record = {"rounds": rounds, "n_brute": n_pending, "cutover": cutover}
-    _memo(out, "_s2_ring", {**record, "brute_rows": stats["rows"]})
+    out._s2_ring = {**record, "brute_rows": stats["rows"]}
     return out
 
 
@@ -1293,7 +1291,7 @@ def furthest_points_join(
     )
     out = res.withColumn("dist2", F.lit(4.0) - F.col("dist2"))
     # a new frame: carry knn_join's decision record over
-    _memo(out, "_s2_ring", res._s2_ring)
+    out._s2_ring = res._s2_ring
     return out
 
 

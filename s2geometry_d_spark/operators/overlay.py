@@ -118,13 +118,11 @@ def clip_polylines_to_polygon(
     region, everything else is dropped in the scan stage."""
     from ..s2core import coords
     from ..s2core.boolean import clip_polyline
-    from .knn import register_edges
+    from .knn import registration
     from .spatial_join import candidate_match_kernel, compute_coverings
 
     if keep_inside:
-        registered = (
-            registered_df if registered_df is not None else register_edges(edges_df)
-        )
+        registered = registration(edges_df, registered_df)
         coverings = compute_coverings([("_clip", polygon)], max_cells=64)
         cand = candidate_match_kernel(
             registered, coverings, cell_col="ecell", two_way=True

@@ -33,6 +33,7 @@ from pyspark.sql import types as T
 
 from ..functions import kernels
 from ..s2core.cellid import CellId
+from ..sources.tables import memo
 
 POLYS_SCHEMA = T.StructType(
     [
@@ -173,6 +174,17 @@ def _pip_from_row_payload(
     return pd.Series(out)
 
 
+def min_cov_level(index_df: DataFrame) -> int:
+    """The index's coarsest covering level, from one tiny aggregate,
+    memoized on ``index_df`` as ``_s2_min_cov_level`` — repeated probes of
+    one index never re-execute its build as a side effect."""
+    return memo(
+        index_df,
+        "_s2_min_cov_level",
+        lambda: int(index_df.agg(F.min("cov_level")).collect()[0][0]),
+    )
+
+
 def points_in_polygons_table(
     points_df: DataFrame,
     index_df: DataFrame,
@@ -187,22 +199,14 @@ def points_in_polygons_table(
     residual range containment, then interior pass-through / row-payload
     parity.  Returns points columns + poly_id.
 
-    ``join_level`` defaults to the index's own min(cov_level) (one tiny
-    aggregate, memoized on the DataFrame object so repeated PIP calls
-    against the same index don't re-execute the index build as a side
-    effect — ADVICE round-4).  A caller-supplied value FINER than the
-    coarsest covering cell would silently drop that cell's candidates (no
-    level-``join_level`` ancestor exists for a coarser cell); pass
+    ``join_level`` defaults to the index's own :func:`min_cov_level`.  A
+    caller-supplied value FINER than the coarsest covering cell would
+    silently drop that cell's candidates (no level-``join_level`` ancestor
+    exists for a coarser cell); pass
     ``validate_level=True`` to pay one aggregate for that check (ADVICE
     round-3 validation, now opt-in for explicit levels)."""
     if join_level is None or validate_level:
-        min_cov = getattr(index_df, "_s2_min_cov_level", None)
-        if min_cov is None:
-            min_cov = int(index_df.agg(F.min("cov_level")).collect()[0][0])
-            try:
-                index_df._s2_min_cov_level = min_cov
-            except AttributeError:
-                pass
+        min_cov = min_cov_level(index_df)
         if join_level is None:
             join_level = min_cov
         elif join_level > min_cov:

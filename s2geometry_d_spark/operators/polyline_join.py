@@ -31,7 +31,7 @@ from .knn import (
     _seed_deg,
     _xyz,
     frame_rows,
-    register_edges,
+    registration,
 )
 
 
@@ -63,7 +63,7 @@ def nearest_polyline_join(
     (``knn.frame_rows``); the straggler cutover is gated on the edge rows
     the brute probe scans, as in every ring search.
     """
-    registered = registered_df if registered_df is not None else register_edges(edges_df)
+    registered = registration(edges_df, registered_df)
     # exact unbounded search: the ring schedule cannot change results —
     # seed from the data extent (see knn._seed_deg); the sphere-uniform
     # seed covered the whole fixture region and made round 1

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import kernels
+from ..sources.tables import memo
 from .knn import edge_register_cells_udf
 from .poly_index import build_polygon_index, points_in_polygons_table
 
@@ -301,11 +302,25 @@ def points_in_shapes(
 ) -> DataFrame:
     """PIP against the unified table: the dim=2 slice IS a polygon index
     (same columns), so the prefix-equi-join + residual-range + row-payload
-    parity machinery is reused verbatim — one artifact, same plan."""
+    parity machinery is reused verbatim — one artifact, same plan.
+    ``join_level`` defaults to :func:`polygon_join_level`."""
     poly_rows = index_df.filter(F.col("dim") == 2).withColumnRenamed(
         "shape_id", "poly_id"
     )
+    if join_level is None:
+        join_level = polygon_join_level(index_df)
     return points_in_polygons_table(points_df, poly_rows, join_level, **kwargs)
+
+
+def polygon_join_level(index_df: DataFrame) -> int:
+    """The coarsest covering level of the table's dim=2 rows — the
+    prefix-join level of its polygon slice — from one tiny aggregate,
+    memoized on ``index_df`` as ``_s2_poly_join_level``."""
+    return memo(
+        index_df,
+        "_s2_poly_join_level",
+        lambda: int(index_df.filter(F.col("dim") == 2).agg(F.min("cov_level")).collect()[0][0]),
+    )
 
 
 def crossing_edges_unified(
@@ -351,12 +366,7 @@ def registered_edges_view(index_df: DataFrame) -> DataFrame:
     evaluation re-paid those aggregate jobs every time.  DataFrames are
     immutable, so returning the shared object is observationally
     identical."""
-    from .knn import _memo
-
-    cached = getattr(index_df, "_s2_reg_edges_view", None)
-    if cached is not None:
-        return cached
-    return _memo(index_df, "_s2_reg_edges_view", _registered_edges_view(index_df))
+    return memo(index_df, "_s2_reg_edges_view", lambda: _registered_edges_view(index_df))
 
 
 def _registered_edges_view(index_df: DataFrame) -> DataFrame:
@@ -374,7 +384,7 @@ def knn_edges_unified(index_df: DataFrame, queries: list, k: int, **kwargs) -> D
     """Closest-EDGE kNN probed through the unified table: the dim=1 slice
     feeds the standard ring-expansion search as its prebuilt registration
     (s2closest_edge_query.d over one heterogeneous artifact)."""
-    from .knn import _memo, knn_edges_join
+    from .knn import knn_edges_join
 
     e = registered_edges_view(index_df)
     # the view has one row per (edge, registered cell); the edges_df side
@@ -382,7 +392,5 @@ def knn_edges_unified(index_df: DataFrame, queries: list, k: int, **kwargs) -> D
     # several top-k ranks — dedup to one row per edge (the ring rounds
     # probe the registration, which keeps every cell row).  Memoized on
     # the view, so the edge count measured on it is paid once.
-    e_edges = getattr(e, "_s2_unique_edges", None)
-    if e_edges is None:
-        e_edges = _memo(e, "_s2_unique_edges", e.drop("ecell").dropDuplicates(["edge_id"]))
+    e_edges = memo(e, "_s2_unique_edges", lambda: e.drop("ecell").dropDuplicates(["edge_id"]))
     return knn_edges_join(e_edges, queries, k, registered_df=e, **kwargs)

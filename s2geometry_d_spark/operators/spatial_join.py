@@ -35,6 +35,7 @@ from ..s2core.coverer import CovererOptions, RegionCoverer
 from ..s2core.loops import Polygon
 from ..s2core.regions import Cap, Cell, LatLngRect
 from ..s2core.shapeindex import PolygonCellIndex
+from ..sources.tables import memo
 
 
 @dataclass
@@ -315,21 +316,18 @@ def candidate_match_kernel(
     coverings: list[RegionCovering],
     cell_col: str = "cell_id",
     two_way: bool = False,
-    prefilter: bool = False,
 ) -> DataFrame:
     """Map-only candidate generation: returns points columns +
     (region_id, is_interior), like candidate_join, without the explode.
 
-    ``prefilter=True`` adds the :func:`coarse_prefix_filter` native filter
-    ahead of the Arrow kernel — opt-in, and only safe when ``cell_col`` is
-    a stored column (see that function's pushdown caveat).  Frames whose
-    producer guarantees that (the persisted point fixture materializes
-    ``cell_id`` in its cache, so a filter on it never re-runs the cell
-    kernel) opt in by carrying a ``_s2_cell_stored`` attribute."""
+    Frames whose cell column is stored carry a ``_s2_cell_stored`` mark
+    (the persisted point fixture materializes ``cell_id``, a registered
+    edge index ``ecell``), and only they get the :func:`coarse_prefix_filter`
+    native filter ahead of the Arrow kernel: on a stored column the filter
+    never re-runs the kernel that derives it (see that function's pushdown
+    caveat)."""
     spark = points_df.sparkSession
-    if not prefilter:
-        prefilter = bool(getattr(points_df, "_s2_cell_stored", False))
-    if prefilter:
+    if getattr(points_df, "_s2_cell_stored", False):
         cond = coarse_prefix_filter(coverings, cell_col, two_way=two_way)
         if cond is not None:
             points_df = points_df.filter(cond)
@@ -401,9 +399,7 @@ def _cell_index(poly: Polygon, max_edges_per_cell: int) -> PolygonCellIndex:
     """Build (or reuse a cached) cell index for a polygon.  The index is the
     expensive driver-side artifact (index-once-reuse-everywhere,
     s2loop.d:1078-1093) — cache it on the polygon object."""
-    cache = getattr(poly, "_cell_index_cache", None)
-    if cache is None:
-        cache = poly._cell_index_cache = {}
+    cache = memo(poly, "_cell_index_cache", dict)
     if max_edges_per_cell not in cache:
         cache[max_edges_per_cell] = PolygonCellIndex(
             poly, max_edges_per_cell=max_edges_per_cell

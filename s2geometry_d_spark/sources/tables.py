@@ -34,19 +34,66 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-# derived-points cache: every spatial query starts from the same
-# (point_id, lat, lng, cell_id) projection — persist it once per session so
-# a query SUITE doesn't re-run the scan + cell kernel per query (at 100 TB
-# this is "materialize the enriched fact table once", the standard move)
+# The session store: every frame a session shares — the derived points, the
+# entry's edge and index fixtures, the registrations operators build for
+# their callers — is owned here, under (application id, sf_dir or None,
+# name), and ``__spark_entry__.release_caches`` unpersists what it holds.
+# Values are DataFrames only.  (The name predates the store: benchmark
+# release code reads it.)
 _POINTS_CACHE: dict = {}
 
 
+def _app(spark: SparkSession) -> str:
+    return spark.sparkContext.applicationId
+
+
+def shared(spark: SparkSession, sf_dir: str | None, name, build) -> DataFrame:
+    """The session's one copy of the frame ``name`` over ``sf_dir``: built
+    by ``build()`` on first use, the same object on every later call.
+    Frames that do not read ``sf_dir`` pass None and are shared across
+    sf_dirs."""
+    key = (_app(spark), sf_dir or None, name)
+    df = _POINTS_CACHE.get(key)
+    if df is None:
+        df = _POINTS_CACHE[key] = build()
+    return df
+
+
+def evict(spark: SparkSession | None = None) -> list[DataFrame]:
+    """Remove and return the store's frames — only ``spark``'s application's
+    when given.  The caller unpersists them."""
+    app = None if spark is None else _app(spark)
+    return [_POINTS_CACHE.pop(k) for k in list(_POINTS_CACHE) if app in (None, k[0])]
+
+
+def memo(obj, attr: str, build):
+    """``obj.<attr>``, built by ``build()`` and attached on first use: how a
+    measured size, a derived view or a payload rides on the (shared) frame
+    it describes, so every later reader gets it for free.  An object that
+    takes no attributes gets a fresh build per call."""
+    value = getattr(obj, attr, None)
+    if value is None:
+        value = build()
+        try:
+            setattr(obj, attr, value)
+        except AttributeError:
+            pass
+    return value
+
+
 def spatial_points(spark: SparkSession, sf_dir: str, with_cell: bool = True) -> DataFrame:
-    """orders -> (point_id, lat, lng[, cell_id]) deterministic placement."""
-    key = (spark.sparkContext.applicationId, sf_dir, with_cell)
-    cached = _POINTS_CACHE.get(key)
-    if cached is not None:
-        return cached
+    """orders -> (point_id, lat, lng[, cell_id]) deterministic placement,
+    persisted once per session: every spatial query starts from it (at
+    100 TB, "materialize the enriched fact table once")."""
+    return shared(
+        spark,
+        sf_dir,
+        "points" if with_cell else "points_bare",
+        lambda: _spatial_points(spark, sf_dir, with_cell),
+    )
+
+
+def _spatial_points(spark: SparkSession, sf_dir: str, with_cell: bool) -> DataFrame:
     # the test parquet is a single small file => one input split; spread the
     # rows across the executor cores before the cell kernel (at production
     # scale the fact table arrives in thousands of splits and this is a no-op
@@ -69,6 +116,4 @@ def spatial_points(spark: SparkSession, sf_dir: str, with_cell: bool = True) -> 
         # never re-evaluate the cell kernel — probes may safely prepend the
         # coarse-prefix prefilter (spatial_join.coarse_prefix_filter)
         df._s2_cell_stored = True
-    _POINTS_CACHE[key] = df
     return df
-

@@ -3,6 +3,10 @@ entry AND its oracle_sql() in DuckDB at the given SF, compare row count,
 schema arity and order-insensitive value hash.
 
 Usage: python scripts/check_oracles.py [sf_dir] [only_query ...]
+
+Runs at local[SPARK_GRAFT_CPUS] (default: every core).  Each query's row
+count and value hash, rows-only queries included, go to
+BENCH/check_oracles_last.json, so two checkouts compare by a JSON diff.
 """
 
 from __future__ import annotations
@@ -48,9 +52,10 @@ def main():
     import __spark_entry__ as entry
     from pyspark.sql import SparkSession
 
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
+        SparkSession.builder.master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.driver.memory", "24g")
         .config("spark.ui.enabled", "false")
         .config("spark.python.unix.domain.socket.enabled", "true")
@@ -83,9 +88,10 @@ def main():
             results[name] = {"status": "spark_error", "err": str(e)[:300]}
             continue
         t1 = time.time()
+        sh = value_hash(srows, scols)
         if name not in oracles:
-            print(f"ok-   {name:24s} rows={len(srows):7d} (rows-only) {t1-t0:6.1f}s")
-            results[name] = {"status": "no_oracle", "rows": len(srows)}
+            print(f"ok-   {name:24s} rows={len(srows):7d} hash={sh} (rows-only) {t1-t0:6.1f}s")
+            results[name] = {"status": "no_oracle", "rows": len(srows), "hash": sh}
             continue
         try:
             res = con.execute(oracles[name])
@@ -96,7 +102,6 @@ def main():
             failures.append(name)
             results[name] = {"status": "duckdb_error", "err": str(e)[:300]}
             continue
-        sh = value_hash(srows, scols)
         oh = value_hash(orows, ocols)
         ok = len(srows) == len(orows) and sh == oh
         status = "OK  " if ok else "FAIL"
@@ -107,6 +112,7 @@ def main():
         results[name] = {
             "status": "ok" if ok else "mismatch",
             "rows": len(srows),
+            "hash": sh,
             "oracle_rows": len(orows),
             "hash_match": sh == oh,
             "schema_match": sorted(scols) == sorted(ocols),

@@ -206,9 +206,13 @@ def test_coarse_prefix_filter_is_superset_of_kernel(spark):
         )
 
     plain = candidate_match_kernel(df, coverings, cell_col="ecell", two_way=True)
-    pre = candidate_match_kernel(
-        df, coverings, cell_col="ecell", two_way=True, prefilter=True
-    )
+    # a frame whose cell column is stored carries the mark that turns the
+    # prefilter on
+    marked = df.select("*")
+    marked._s2_cell_stored = True
+    pre = candidate_match_kernel(marked, coverings, cell_col="ecell", two_way=True)
+    logical = [f._jdf.queryExecution().logical().toString() for f in (plain, pre)]
+    assert "Filter" not in logical[0] and "Filter" in logical[1]
     assert key(pre) == key(plain)
     assert len(key(pre)) > 0  # the fixture actually produces matches
 

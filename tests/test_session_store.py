@@ -1,0 +1,143 @@
+"""One owner for every session-shared frame: the session store
+(``sources.tables.shared``) and the registration operators build for
+their callers (``knn.registration``), both freed by
+``__spark_entry__.release_caches``."""
+
+import numpy as np
+import pytest
+
+from conftest import SF_DIR
+
+COLS = ["edge_id", "alat", "alng", "blat", "blng"]
+QUERIES = [("q0", -20.0, -65.0), ("q1", -18.5, -63.0)]
+TARGET_EDGES = [("t0", (-24.0, -69.0), (-16.0, -61.0))]
+
+
+@pytest.fixture(scope="module")
+def entrymod():
+    import __spark_entry__ as e
+
+    return e
+
+
+def _edges(spark, seed, n=40):
+    """``n`` short random edges around the demo polygon (lat -20, lng -65),
+    with a ``polyline_id``/``seq`` chaining them into polylines of 10."""
+    rng = np.random.default_rng(seed)
+    rows = []
+    for i in range(n):
+        la, ln = rng.uniform(-6.0, 6.0, 2)
+        da, dn = rng.uniform(-2.0, 2.0, 2)
+        rows.append(
+            (i, float(-20.0 + la), float(-65.0 + ln), float(-20.0 + la + da),
+             float(-65.0 + ln + dn), i // 10, i % 10)
+        )
+    return spark.createDataFrame(rows, COLS + ["polyline_id", "seq"])
+
+
+def _persisted(spark) -> set:
+    """Ids of the persisted RDDs that back DataFrame caches: local
+    checkpoints (an operator's own round frames) are persisted RDDs too,
+    but no store owns them."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {
+        int(i) for i in rdds.keySet() if not rdds.get(i).rdd().isLocallyCheckpointed()
+    }
+
+
+def _ad_hoc_calls(spark):
+    """One call of every operator that registers its edges itself: crossing
+    x3, the four kNN registration sites, the polyline kNN and the clip —
+    each on its own table, forced by an action."""
+    from s2geometry_d_spark.operators import crossing, knn
+    from s2geometry_d_spark.operators.overlay import clip_polylines_to_polygon
+    from s2geometry_d_spark.operators.polyline_join import nearest_polyline_join
+    from s2geometry_d_spark.plans import demo
+    from s2geometry_d_spark.s2core.cellid import CellId
+
+    tables = [_edges(spark, seed) for seed in range(10)]
+    calls = [
+        lambda e: crossing.crossing_edges_join(e.select(*COLS), TARGET_EDGES),
+        lambda e: crossing.crossing_pairs_self(e.select(*COLS)),
+        lambda e: crossing.crossing_pairs_join(e.select(*COLS), tables[9].select(*COLS)),
+        lambda e: knn.knn_edges_join(e.select(*COLS), QUERIES, k=3),
+        lambda e: knn.knn_edges_to_edges(e.select(*COLS), TARGET_EDGES, k=3),
+        lambda e: knn.knn_edges_to_cells(
+            e.select(*COLS), [("c0", CellId.from_latlng(-20.0, -65.0).parent(6))], k=3
+        ),
+        lambda e: knn.knn_edges_join_tables(
+            e.select("alat", "alng", "blat", "blng", e.edge_id.alias("query_id")),
+            e.select(*COLS),
+            k=3,
+        ),
+        lambda e: nearest_polyline_join(e, QUERIES, k=2),
+        lambda e: clip_polylines_to_polygon(e, demo.poly_region()[1]),
+    ]
+    for call, e in zip(calls, tables):
+        assert call(e).collect() is not None
+
+
+def test_ad_hoc_registrations_do_not_survive_release(spark, entrymod):
+    entrymod.release_caches(spark)
+    before = _persisted(spark)
+    _ad_hoc_calls(spark)
+    created = _persisted(spark) - before
+    # crossing_pairs_join registers both of its tables
+    assert len(created) >= 10
+    entrymod.release_caches(spark)
+    assert not (_persisted(spark) & created)
+
+
+def test_one_registration_per_frame_until_released(spark, entrymod):
+    """Every operator called on one frame probes the same registration; a
+    release frees it and the next call persists a fresh one."""
+    from s2geometry_d_spark.operators import crossing, knn
+    from s2geometry_d_spark.sources import tables
+
+    e = _edges(spark, seed=20).select(*COLS)
+    knn.knn_edges_join(e, QUERIES, k=3).collect()
+    reg = e._s2_registered
+    crossing.crossing_pairs_self(e).collect()
+    knn.knn_edges_to_edges(e, TARGET_EDGES, k=3).collect()
+    assert knn.registration(e) is reg and e._s2_registered is reg
+    assert sum(df is reg for df in tables._POINTS_CACHE.values()) == 1
+    # a caller-owned registration is used as given
+    assert knn.registration(e, registered_df=e) is e
+
+    entrymod.release_caches(spark)
+    assert not reg.is_cached and reg._s2_cross_payload == {}
+    before = _persisted(spark)
+    knn.knn_edges_join(e, QUERIES, k=3).collect()
+    fresh = e._s2_registered
+    assert fresh is not reg and fresh.is_cached
+    assert _persisted(spark) - before
+    entrymod.release_caches(spark)
+
+
+def test_store_returns_one_frame_per_key(spark, entrymod):
+    from s2geometry_d_spark.sources import tables
+
+    built = []
+
+    def build():
+        built.append(spark.range(3))
+        return built[-1]
+
+    a = tables.shared(spark, "/data/a", "frame", build)
+    assert tables.shared(spark, "/data/a", "frame", build) is a
+    b = tables.shared(spark, "/data/b", "frame", build)
+    assert b is not a
+    # fixtures that do not read sf_dir are shared across sf_dirs
+    assert tables.shared(spark, None, "frame", build) is tables.shared(spark, "", "frame", build)
+    assert len(built) == 3
+
+    # every entry fixture comes back as the same object
+    assert entrymod._edges(spark, SF_DIR) is entrymod._edges(spark, SF_DIR)
+    assert entrymod._chord_edges(spark, SF_DIR) is entrymod._chord_edges(spark, SF_DIR)
+    assert entrymod._chord_edges_b(spark, SF_DIR) is not entrymod._chord_edges(spark, SF_DIR)
+    assert entrymod._edges_registered(spark, SF_DIR) is entrymod._edges_registered(
+        spark, SF_DIR
+    )
+
+    assert entrymod.release_caches(spark) >= 3
+    assert tables.shared(spark, "/data/a", "frame", build) is not a
