@@ -87,9 +87,10 @@ def _edges_registered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def release_caches(spark: SparkSession | None = None) -> int:
-    """Unpersist and evict every frame the session store owns: the
-    fixtures (points, edges, polylines, chords, polygon and shape indexes)
-    and the edge registrations operators built for their callers.  Long-
+    """Free and evict every frame the session store owns: the fixtures
+    (points, edges, polylines, chords, polygon and shape indexes), the
+    edge registrations operators built for their callers and the local
+    checkpoints that kNN results still read (``tables.free``).  Long-
     lived sessions touching many sf_dirs or ad-hoc edge tables would
     otherwise accumulate pinned storage for the application lifetime.  The
     crossing payload broadcasts memoized on a frame are destroyed with it.
@@ -98,7 +99,7 @@ def release_caches(spark: SparkSession | None = None) -> int:
     frames = tables.evict(spark)
     for df in frames:
         crossing.release_payloads(df)
-        df.unpersist()
+        tables.free(df)
     return len(frames)
 
 

@@ -46,7 +46,13 @@ from ..sources.tables import memo
 # modules (tracing) see the calls
 from . import knn, spatial_join
 from .knn import registered_stats
-from .spatial_join import RegionCovering, cell_tables, covering_tables, match_coverings
+from .spatial_join import (
+    RegionCovering,
+    cell_tables,
+    covering_tables,
+    hit_lists,
+    match_coverings,
+)
 
 # registered tables at or below this many (edge, cell) rows may be the
 # broadcast side of the pair kernels (~90 bytes/row collected -> ~180 MB
@@ -117,7 +123,7 @@ def crossing_kernel(
     ``ax..bz`` per edge) and ``ids`` (a pyarrow array).  Each scanned row
     is matched two-way against the tables, its (row, edge) hits
     deduplicated and tested, and the ids of the edges it crosses returned
-    through ``pa.ListArray.from_arrays`` with no per-row Python.
+    as one list per row (``spatial_join.hit_lists``, no per-row Python).
 
     Predicate argument order is the caller's: the scanned edge first iff
     ``scanned_first``.  ``lower_first`` (the self join) reads the scanned
@@ -156,9 +162,7 @@ def crossing_kernel(
         theirs = xyz[edge]
         p, q = (mine, theirs) if scanned_first else (theirs, mine)
         keep = _crossing_mask(p[:, :3], p[:, 3:], q[:, :3], q[:, 3:], crossing_type)
-        offsets = np.zeros(n + 1, dtype=np.int32)
-        offsets[1:] = np.cumsum(np.bincount(rows[keep], minlength=n))
-        return pa.ListArray.from_arrays(pa.array(offsets), ids.take(pa.array(edge[keep])))
+        return hit_lists(rows[keep], ids.take(pa.array(edge[keep])), n)
 
     return crosses
 

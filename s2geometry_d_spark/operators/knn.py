@@ -12,35 +12,40 @@ Each variant supplies only its target hooks:
 * ``cover(qid, ring_deg)`` — a covering of everything within ``ring_deg``
   of the query: a cap for point queries, the buffered segment for edge
   targets, the ring-expanded circumcap for cell targets;
-* ``candidates(coverings, qrows)`` — one round's scored candidate rows
-  (query_id, <candidate columns>, dist2), already cut to ``dist2 <= r2``;
-  ``qrows`` holds (query_id, *target, r2) per pending query.  Point
-  targets compose the broadcast-covering point kernel (one Arrow pass, no
-  fact-table shuffle), the broadcast query frame, the native chord^2 and
-  the cut.  Every registered-edge variant runs ONE fused Arrow kernel over
-  the prefiltered index: two-way covering match, numpy-twin scorer and r2
-  cut in one pass, so only accepted hits reach the round's one exchange
-  (:func:`_edge_search`, :func:`edge_round_kernel`);
+* ``candidates(coverings, qrows, k=, tie=, key=)`` — one round as ONE
+  map-only ``mapInArrow`` pass over the probe table (:func:`_round_frame`,
+  :func:`round_kernel`): the two-way covering match, the numpy scorer, the
+  ``dist2 <= r2`` cut, the reduction to one row per (query, ``key``) and a
+  per-partition top-k, returning (q, <candidate columns>, dist2) with q
+  the query's slot in ``qrows``.  ``qrows`` holds (query_id, *target, r2)
+  per pending query.  Point targets score ``dx*dx + dy*dy + dz*dz`` over
+  the SQL-computed point xyz; every registered-edge variant scores with
+  its numpy twin of the engine's SQL fragment (:func:`_edge_search`);
+* ``key`` / ``tie_col`` — the reduction key (edge id, polyline id, or
+  None for points) and the tie column of the ``ORDER BY dist2, tie``
+  top-k;
 * ``target`` / ``target_cols`` — the per-query columns of ``qrows`` and of
   the brute probe's broadcast query frame: the query xyz for points, the
   query's index into the numpy scorer's geometry (``_q``) for edges;
 * ``score(cand)`` — the brute probe's exact squared-chord ``dist2`` over
   the probe table crossed with that frame: natively for point targets,
   and for every edge variant by a pandas UDF over the same numpy scorer
-  the fused kernel runs, bit-identical to the engine's SQL fragment
+  the round kernel runs, bit-identical to the engine's SQL fragment
   (functions/edgepair.py; the SQL form costs seconds of Catalyst
   optimization per round);
-* ``collapse(scored)`` — optional per-group reduction ahead of the top-k
-  window (the polyline variant's per-polyline min).
+* ``collapse(scored)`` — optional per-group reduction ahead of the brute
+  probe's top-k window (the polyline variant's per-polyline min).
 
-Each round runs cover -> candidates -> window top-k -> ONE collect of the
-tiny top-k.  A query retires once k rows lie inside its ring (the ring
-bounds the k-th distance, so nothing unseen can beat them), or once its
-ring reaches its completion radius — the ``max_distance_deg`` limit, or
-the far side of a ``knn_join`` region cap — where fewer than k rows IS
-the complete answer.  Otherwise its ring doubles.  A ring clamped at 170
-deg with no limit and still short of k goes to the one exact brute cross
-join: points in the antipodal gap are never candidates.
+Each round is cover -> ONE Spark job with no exchange -> ``toArrow()`` of
+at most P x |pending| x k rows (P: the probe table's partitions) -> the
+same :func:`topk_rows` reduce on the driver.  A query retires once k
+rows lie inside its ring (the ring bounds the k-th distance, so nothing
+unseen can beat them), or once its ring reaches its completion radius —
+the ``max_distance_deg`` limit, or the far side of a ``knn_join`` region
+cap — where fewer than k rows IS the complete answer.  Otherwise its
+ring doubles.  A ring clamped at 170 deg with no limit and still short of
+k goes to the one exact brute cross join: points in the antipodal gap are
+never candidates.
 
 Straggler cutover, fail closed: once at most max(2, n/8) queries remain
 they go straight to that brute probe — the same exact answer as more
@@ -51,11 +56,12 @@ measured, never passed in: the first ring is seeded from the same count
 (the reference likewise reads its index's own size, maxBruteForceIndexSize).
 
 Every result frame carries its decision record as ``_s2_ring``: rounds
-run, the ids of the brute-probed queries, whether the cutover fired and
-the ``brute_rows`` it was judged on (None when no cutover was due, so
-nothing was counted).  :func:`knn_edges_join_tables` keeps
-its own loop (its pending set is a DataFrame) under the same gate, and
-records the straggler count as ``n_brute`` instead of ids.
+run, the rows each round collected (``round_rows``), the ids of the
+brute-probed queries, whether the cutover fired and the ``brute_rows`` it
+was judged on (None when no cutover was due, so nothing was counted).
+:func:`knn_edges_join_tables` keeps its own loop (its pending set is a
+DataFrame) under the same gate, and records the straggler count as
+``n_brute`` instead of ids.
 
 Correctness anchor: brute-force cross join comparison, the same oracle the
 reference tests use (s2closest_edge_query_test.d:380-416).
@@ -67,18 +73,20 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from ..functions.localdf import local_df
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_type
 
 from ..functions import edgedist, edgepair, kernels
 from ..s2core.regions import Cap, chord2_from_radians
-from ..sources.tables import memo, shared
+from ..sources.tables import free, memo, shared
 from .spatial_join import (
     RegionCovering,
     buffered_segment_covering,
-    candidate_match_kernel,
     coarse_prefix_filter,
     compute_coverings,
 )
@@ -90,12 +98,15 @@ _BRUTE_SCAN_ROWS = 10_000_000
 _TARGET_SEED_DEG = 1.0
 
 
-def _chord2_to_query_expr(lat_col: str, lng_col: str):
+def _point_xyz(lat_col: str, lng_col: str):
+    """The engine's SQL xyz of a lat/lng point: (px, py, pz) columns."""
     lat_r = F.radians(F.col(lat_col))
     lng_r = F.radians(F.col(lng_col))
-    px = F.cos(lng_r) * F.cos(lat_r)
-    py = F.sin(lng_r) * F.cos(lat_r)
-    pz = F.sin(lat_r)
+    return F.cos(lng_r) * F.cos(lat_r), F.sin(lng_r) * F.cos(lat_r), F.sin(lat_r)
+
+
+def _chord2_to_query_expr(lat_col: str, lng_col: str):
+    px, py, pz = _point_xyz(lat_col, lng_col)
     dx = px - F.col("qx")
     dy = py - F.col("qy")
     dz = pz - F.col("qz")
@@ -132,6 +143,38 @@ def _rank(scored: DataFrame, k: int, tie_col: str, collapse=None) -> DataFrame:
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
+def topk_rows(table: pa.Table, k: int, tie: str, key: str | None = None) -> pa.Table:
+    """The best ``k`` rows per query slot ``q`` of a round's candidate
+    table (q, <columns>, dist2), sorted by (q, dist2, ``tie``) — Spark's
+    ``ORDER BY dist2, tie`` (ascending, nulls first) within each q.  With
+    ``key``, each (q, key) first keeps only its best row: its minimum
+    dist2, the per-edge dedup (an edge registers under up to four cells)
+    and the per-polyline min.
+
+    One reducer for both halves of a round: :func:`round_kernel` runs it
+    per partition and :func:`_ring_search` over the partitions' union.
+    The per-partition cut is exact: every key ahead of a row in its
+    partition is ahead of it globally (a partition's per-key minimum is
+    never below the global one), so a row of the global top-k is in the
+    top-k of every partition that holds it."""
+    order = pc.sort_indices(
+        table,
+        sort_keys=[("q", "ascending"), ("dist2", "ascending"), (tie, "ascending")],
+        null_placement="at_start",
+    )
+    table = table.take(order)
+    q = table.column("q").to_numpy()
+    idx = np.arange(q.shape[0])
+    if key is not None and q.shape[0]:
+        # in this order the first row of each (q, key) is its best
+        keys = pc.dictionary_encode(table.column(key).combine_chunks())
+        kid = pc.fill_null(keys.indices, -1).to_numpy()
+        group = q.astype(np.int64) * (len(keys.dictionary) + 1) + kid + 1
+        idx = np.sort(np.unique(group, return_index=True)[1])
+    first = np.searchsorted(q[idx], q[idx], side="left")
+    return table.take(idx[np.arange(idx.shape[0]) - first < k])
+
+
 def _ring_search(
     spark,
     ids: list,
@@ -149,21 +192,23 @@ def _ring_search(
     max_distance_deg: float | None = None,
     max_error_deg: float = 0.0,
     complete: dict | None = None,
+    key: str | None = None,
     collapse=None,
 ) -> DataFrame | None:
     """The shared ring search (hooks and rules in the module docstring).
 
     ``ids``: query ids in input order; ``radius``: initial ring per query
     (deg); ``complete``: per-query completion radius, tightening the
-    distance limit's.  Returns (query_id, rank, dist2, <candidate
-    columns>) carrying ``_s2_ring``, or None for an empty query list."""
+    distance limit's.  Returns (query_id, <candidate columns>, dist2,
+    rank) carrying ``_s2_ring``, or None for an empty query list."""
     max_r = _max_ring(max_distance_deg)
     limit_r = max_r if max_distance_deg is not None else math.inf
     complete = complete or {}
     pending = dict.fromkeys(ids)
     radius = {q: min(radius[q], max_r) for q in pending}
     done_rows: list = []
-    topk_schema = None
+    schema = None
+    round_rows: list = []
     brute: list = []
     rounds = 0
     cutover = False
@@ -173,7 +218,8 @@ def _ring_search(
         if not pending:
             break
         rounds += 1
-        coverings = [cover(q, min(radius[q], max_r)) for q in pending]
+        slots = list(pending)
+        coverings = [cover(q, min(radius[q], max_r)) for q in slots]
         # acceptance radius widened by max_error, never past the distance
         # limit: candidates are only COMPLETE within the ring, but anything
         # unseen is farther than ring >= accepted kth - max_error, which is
@@ -184,28 +230,35 @@ def _ring_search(
                 *target[q],
                 chord2_from_radians(math.radians(min(radius[q] + max_error_deg, max_r))),
             )
-            for q in pending
+            for q in slots
         ]
-        topk = _rank(candidates(coverings, qrows), k, tie_col, collapse).drop(
-            *target_cols, "r2"
-        )
-
-        # top-k output is tiny (<= |pending| * k): collect it ONCE per round
-        # and assemble the final result driver-side — keeping the lineage
-        # alive instead would re-execute every round's probe+window when the
-        # result is finally consumed.  Completeness: the dist2 <= r2 filter
-        # already bounds the k-th distance by the ring radius, so k results
-        # collected == proof the true top-k lies inside the ring.
-        rows = topk.collect()
-        topk_schema = topk.schema
-        by_q: dict = {}
-        for r in rows:
-            by_q.setdefault(r["query_id"], []).append(r)
-        for q in list(pending):
-            got = by_q.get(q, [])
+        frame = candidates(coverings, qrows, k=k, tie=tie_col, key=key)
+        # the round's one job: each partition's top-k, at most P x
+        # |slots| x k rows, read ONCE and reduced here by the same
+        # topk_rows — the final result is assembled driver-side, since
+        # keeping the lineage alive would re-run every round's probe when
+        # the result is finally consumed.  Completeness: the dist2 <= r2
+        # cut already bounds the k-th distance by the ring radius, so k
+        # rows collected == proof the true top-k lies inside the ring.
+        table = frame.toArrow()
+        round_rows.append(table.num_rows)
+        table = topk_rows(table, k, tie_col, key)
+        if schema is None:
+            qtype = from_arrow_type(pa.array(list(ids)).type)
+            schema = T.StructType(
+                [
+                    T.StructField("query_id", qtype),
+                    *frame.schema.fields[1:],
+                    T.StructField("rank", T.IntegerType(), False),
+                ]
+            )
+        slot = table.column("q").to_numpy()
+        got = np.bincount(slot, minlength=len(slots))
+        retired = np.zeros(len(slots), dtype=bool)
+        for i, q in enumerate(slots):
             done_r = min(limit_r, complete.get(q, math.inf))
-            if len(got) >= k or radius[q] >= done_r:
-                done_rows.extend(got)
+            if got[i] >= k or radius[q] >= done_r:
+                retired[i] = True
                 del pending[q]
             elif radius[q] >= max_r:
                 # ring clamped and still short of k: rows in the antipodal
@@ -216,6 +269,15 @@ def _ring_search(
             else:
                 # no point growing past the completion radius
                 radius[q] = min(radius[q] * 2.0, done_r)
+        rank = np.arange(slot.shape[0]) - np.searchsorted(slot, slot) + 1
+        keep = np.nonzero(retired[slot])[0]
+        done_rows.extend(
+            zip(
+                [slots[i] for i in slot[keep]],
+                *(table.column(c).take(keep).to_pylist() for c in table.column_names[1:]),
+                rank[keep].tolist(),
+            )
+        )
         # straggler cutover: a leftover handful is cheaper as one exact
         # brute probe than as more ring rounds of fixed job overhead (the
         # brute branch below is the SAME code the post-max_rounds path
@@ -231,7 +293,7 @@ def _ring_search(
                 pending.clear()
 
     brute = [*pending, *brute]
-    results = local_df(spark, done_rows, topk_schema) if topk_schema is not None else None
+    results = local_df(spark, done_rows, schema) if schema is not None else None
     if brute:
         qdf = local_df(spark, [(q, *target[q]) for q in brute], ["query_id", *target_cols])
         scored = score(brute_df.crossJoin(F.broadcast(qdf)))
@@ -243,7 +305,11 @@ def _ring_search(
         results = topk if results is None else results.unionByName(topk)
     if results is not None:
         results._s2_ring = {
-            "rounds": rounds, "brute": brute, "cutover": cutover, "brute_rows": brute_rows
+            "rounds": rounds,
+            "round_rows": round_rows,
+            "brute": brute,
+            "cutover": cutover,
+            "brute_rows": brute_rows,
         }
     return results
 
@@ -254,90 +320,127 @@ def _cap_covering(qid, lat: float, lng: float, radius_deg: float) -> RegionCover
 
 
 _EDGE_XYZ = ("ax", "ay", "az", "bx", "by", "bz")
-
-_EDGE_HITS = T.ArrayType(
-    T.StructType(
-        [T.StructField("q", T.IntegerType()), T.StructField("dist2", T.DoubleType())]
-    )
-)
+_POINT_XYZ = ("_px", "_py", "_pz")
 
 
-def edge_round_kernel(coverings: list[RegionCovering], q, r2, score):
-    """The body of one registered-edge ring round's Arrow kernel:
-    ``(ecell, ax..bz) -> array<struct<q, dist2>>``.
+def round_kernel(
+    coverings: list[RegionCovering],
+    r2,
+    score,
+    *,
+    cell_col: str,
+    geom,
+    cols: list[str],
+    k: int,
+    tie: str,
+    key: str | None = None,
+    two_way: bool = False,
+):
+    """The body of one ring round's ``mapInArrow`` kernel: an iterator of
+    the probe table's Arrow batches in, one partition's top-k rows
+    (q, <cols>, dist2) out.
 
-    ``coverings[i]`` is pending query ``q[i]``'s ring covering and ``r2[i]``
-    its acceptance radius; ``score(q, ax..bz)`` is the variant's numpy
-    scorer (edgepair).  Each row is matched two-way against the coverings
-    (registered cells may be coarser or finer than the covering cells), its
-    (row, query) hits deduplicated, scored, and kept only when ``dist2 <=
-    r2`` — so the round's probe exchange carries accepted hits alone."""
-    import pyarrow as pa
-
+    ``coverings[i]`` is pending query slot i's ring covering and ``r2[i]``
+    its acceptance radius; ``score(slots, *geom)`` is the variant's numpy
+    scorer over the rows' ``geom`` columns.  Each batch's ``cell_col`` is
+    matched against the coverings (``two_way`` for registered edge cells,
+    which may be coarser or finer than a covering cell), its (row, slot)
+    hits deduplicated, scored and cut to ``dist2 <= r2``; the hits are
+    folded into the partition's running :func:`topk_rows` batch by batch,
+    so at most |slots| x k rows leave the partition."""
     from .spatial_join import covering_tables, match_coverings
 
     tables = covering_tables(coverings)
-    q = np.asarray(q, dtype=np.int32)
     r2 = np.asarray(r2, dtype=np.float64)
     nreg = max(len(coverings), 1)
 
-    def edge_candidates(ecell, *edge):
-        ids = ecell.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-        n = ids.shape[0]
-        rows, codes = match_coverings(ids, tables, two_way=True)
-        # one hit per (row, query): a row reaches a query through every
-        # covering cell it overlaps; unique() also keeps them row-ordered
+    def hits(batch) -> pa.Table:
+        ids = batch.column(cell_col).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+        rows, codes = match_coverings(ids, tables, two_way)
+        # one hit per (row, slot): a row reaches a query through every
+        # covering cell it overlaps
         pair = np.unique(rows * nreg + (codes >> 1))
-        rows, ridx = pair // nreg, pair % nreg
-        dist2 = score(q[ridx], *(c.to_numpy(zero_copy_only=False)[rows] for c in edge))
-        keep = dist2 <= r2[ridx]
-        offsets = np.zeros(n + 1, dtype=np.int32)
-        offsets[1:] = np.cumsum(np.bincount(rows[keep], minlength=n))
-        hits = pa.StructArray.from_arrays(
-            [pa.array(q[ridx[keep]]), pa.array(dist2[keep])], names=["q", "dist2"]
+        rows, slot = pair // nreg, pair % nreg
+        dist2 = score(slot, *(batch.column(c).to_numpy(zero_copy_only=False)[rows] for c in geom))
+        keep = dist2 <= r2[slot]
+        out = batch.select(cols).take(pa.array(rows[keep]))
+        return pa.Table.from_arrays(
+            [pa.array(slot[keep].astype(np.int32)), *out.columns, pa.array(dist2[keep])],
+            names=["q", *cols, "dist2"],
         )
-        return pa.ListArray.from_arrays(pa.array(offsets), hits)
 
-    return edge_candidates
+    def ring_round(batches):
+        best = None
+        for batch in batches:
+            found = hits(batch)
+            if best is not None:
+                found = pa.concat_tables([best, found])
+            best = topk_rows(found, k, tie, key)
+        if best is not None:
+            yield from best.to_batches()
+
+    return ring_round
 
 
-def _edge_search(registered: DataFrame, edge_id_col: str, geom: dict, scorer) -> dict:
+def _round_frame(
+    src: DataFrame, coverings, r2, score, *, cell_col, geom, cols, **spec
+) -> DataFrame:
+    """One ring round over ``src`` (the probe table, already prefiltered,
+    with its ``geom`` scorer columns) as ONE map-only ``mapInArrow`` node
+    of :func:`round_kernel`: no exchange, so reading it is one Spark job.
+    Returns (q int, <cols>, dist2 double); ``spec`` is the kernel's ``k``,
+    ``tie``, ``key`` and ``two_way``."""
+    kernel = round_kernel(coverings, r2, score, cell_col=cell_col, geom=geom, cols=cols, **spec)
+    schema = T.StructType(
+        [
+            T.StructField("q", T.IntegerType()),
+            *(src.schema[c] for c in cols),
+            T.StructField("dist2", T.DoubleType()),
+        ]
+    )
+    return src.select(*dict.fromkeys([cell_col, *geom, *cols])).mapInArrow(kernel, schema)
+
+
+def _edge_search(
+    registered: DataFrame, key: str, geom: dict, scorer, cols: list[str] | None = None
+) -> dict:
     """The hooks of every registered-edge variant of :func:`_ring_search`.
+    ``key`` is the edge id column — or the polyline id, whose rounds keep
+    each polyline's minimum — and the tie column; ``cols`` the candidate
+    columns a round returns (default: every index column but ``ecell``).
     ``geom`` maps query id -> target geometry, ``scorer`` builds the numpy
     ``score(q, ax..bz)`` over ``list(geom.values())`` (edgepair).
 
-    ``candidates`` plans one round as: the persisted index, the native
+    ``candidates`` plans one round as the persisted index, the native
     coarse-prefix filter (``ecell`` is a stored column, so the InSet never
-    re-runs a kernel), ONE fused Arrow kernel (:func:`edge_round_kernel`)
-    under the explode, the broadcast ``q -> query_id`` map, and one
-    ``repartition("query_id")``: its HashPartitioning satisfies both the
-    (query_id, edge_id) dedup (an edge registers under up to 4 cells) and
-    the top-k window, so the round pays one exchange of accepted hits.
+    re-runs a kernel), the SQL endpoint xyz and ONE ``mapInArrow`` node
+    (:func:`_round_frame`) that matches, scores, cuts, keeps each
+    (query, key)'s minimum and cuts each partition to its top-k: no
+    exchange, no window.
 
     ``score`` is the brute probe's scorer over the unregistered edge table
     (the same numpy scorer behind a pandas UDF): the index would score an
     edge once per registered cell."""
-    spark = registered.sparkSession
     ids = list(geom)
     score_np = scorer(list(geom.values()))
-    cols = [c for c in registered.columns if c != "ecell"]
+    cols = cols or [c for c in registered.columns if c != "ecell"]
     twin = edgepair.scorer_udf(score_np, "edge_dist2")
 
-    def candidates(coverings, qrows):
-        slot = {row[0]: (row[1], row[-1]) for row in qrows}
-        q, r2 = zip(*(slot[rc.region_id] for rc in coverings))
-        kernel = F.arrow_udf(edge_round_kernel(coverings, q, r2, score_np), _EDGE_HITS)
-        qmap = local_df(spark, [(row[1], row[0]) for row in qrows], ["q", "query_id"])
+    def candidates(coverings, qrows, **spec):
+        # each slot's index into the scorer's geometry
+        target = np.array([row[1] for row in qrows], dtype=np.int64)
         cond = coarse_prefix_filter(coverings, "ecell", two_way=True)
         src = registered if cond is None else registered.filter(cond)
-        return (
-            _with_edge_xyz(src)
-            .select(*cols, F.explode(kernel("ecell", *_EDGE_XYZ)).alias("_h"))
-            .select(*cols, "_h.q", "_h.dist2")
-            .join(F.broadcast(qmap), "q")
-            .select("query_id", *cols, "dist2")
-            .repartition("query_id")
-            .dropDuplicates(["query_id", edge_id_col])
+        return _round_frame(
+            _with_edge_xyz(src),
+            coverings,
+            [row[-1] for row in qrows],
+            lambda slot, *edge: score_np(target[slot], *edge),
+            cell_col="ecell",
+            geom=_EDGE_XYZ,
+            cols=cols,
+            two_way=True,
+            **spec,
         )
 
     def score(cand: DataFrame) -> DataFrame:
@@ -352,6 +455,8 @@ def _edge_search(registered: DataFrame, edge_id_col: str, geom: dict, scorer) ->
         "target": {qid: (i,) for i, qid in enumerate(ids)},
         "target_cols": ["_q"],
         "score": score,
+        "tie_col": key,
+        "key": key,
     }
 
 
@@ -420,6 +525,7 @@ def knn_join(
         # table, and re-running the covering/PIP lineage per round turned
         # a 2s query into minutes at sf0.1.  Cost is O(|in-region
         # points|), the same artifact the reference's region option builds.
+        # Freed once the search is done with it (below).
         points_df = (
             points_in_regions(
                 points_df, [("_knn_region", region)], lat_col=lat_col,
@@ -472,14 +578,34 @@ def knn_join(
     def score(cand):
         return cand.withColumn("dist2", _chord2_to_query_expr(lat_col, lng_col))
 
-    def candidates(coverings, qrows):
-        cand = candidate_match_kernel(points_df, coverings, cell_col=cell_col)
-        cand = cand.drop("is_interior").withColumnRenamed("region_id", "query_id")
-        qdf = local_df(spark, qrows, ["query_id", "qx", "qy", "qz", "r2"])
-        scored = score(cand.join(F.broadcast(qdf), "query_id"))
-        return scored.filter(F.col("dist2") <= F.col("r2"))
+    def candidates(coverings, qrows, **spec):
+        qxyz = np.array([row[1:4] for row in qrows], dtype=np.float64).reshape(-1, 3)
 
-    return _ring_search(
+        def chord2(slot, px, py, pz):
+            # the trig ran in SQL ahead of the kernel: this is the rest of
+            # _chord2_to_query_expr, so dist2 keeps its bits
+            dx = px - qxyz[slot, 0]
+            dy = py - qxyz[slot, 1]
+            dz = pz - qxyz[slot, 2]
+            return dx * dx + dy * dy + dz * dz
+
+        src = points_df
+        if getattr(points_df, "_s2_cell_stored", False):
+            cond = coarse_prefix_filter(coverings, cell_col)
+            src = src if cond is None else src.filter(cond)
+        pxyz = [c.alias(n) for c, n in zip(_point_xyz(lat_col, lng_col), _POINT_XYZ)]
+        return _round_frame(
+            src.select("*", *pxyz),
+            coverings,
+            [row[-1] for row in qrows],
+            chord2,
+            cell_col=cell_col,
+            geom=_POINT_XYZ,
+            cols=points_df.columns,
+            **spec,
+        )
+
+    res = _ring_search(
         spark,
         [qid for qid, _, _ in queries],
         k,
@@ -497,6 +623,14 @@ def knn_join(
         max_error_deg=max_error_deg,
         complete=complete,
     )
+    if region is not None:
+        if res is not None and res._s2_ring["brute"]:
+            # the result's brute probe still reads the subset: the session
+            # store owns it until release_caches
+            shared(spark, None, ("knn_region", id(points_df)), lambda: points_df)
+        else:
+            free(points_df)
+    return res
 
 
 def _edge_cells(alat, alng, blat, blng, extra_rad) -> pd.Series:
@@ -744,8 +878,10 @@ def knn_edges_join(
       finer than the query-cap covering cells);
     * scoring is the closed-form point-to-edge chord^2 (functions.edgedist),
       evaluated by its bit-identical numpy twin inside the same Arrow
-      kernel as the covering match, so each ring round is one Python
-      stage and one exchange of ``dist2 <= r2`` hits (see _edge_search).
+      kernel as the covering match, which also keeps each (query, edge)'s
+      one row and each partition's top-k: a ring round is one Spark job
+      with no exchange, and the driver reads at most P x |pending| x k
+      rows of it, P the index's partitions (see _edge_search).
 
     Options parity with the reference (s2closest_edge_query.d:199-272):
     ``max_distance_deg`` bounds results to that distance (within-distance
@@ -785,7 +921,6 @@ def knn_edges_join(
             {qid: _xyz(lat, lng) for qid, (lat, lng) in geo.items()},
             edgepair.point_edge_scorer,
         ),
-        tie_col=edge_id_col,
         brute_df=edges_df,
         max_rounds=max_rounds,
         max_distance_deg=max_distance_deg,
@@ -934,7 +1069,6 @@ def knn_edges_to_edges(
         # edgepair._pair_dist2_np): the 62-intermediate SQL projection paid
         # seconds of Catalyst analysis per ring round
         **_edge_search(registered, edge_id_col, ends, edgepair.pair_scorer),
-        tie_col=edge_id_col,
         brute_df=edges_df,
         max_rounds=max_rounds,
         max_distance_deg=max_distance_deg,
@@ -1003,7 +1137,6 @@ def knn_edges_to_cells(
             {qid: (verts, norms) for qid, (_, _, _, verts, norms) in geom.items()},
             edgepair.cell_scorer,
         ),
-        tie_col=edge_id_col,
         brute_df=edges_df,
         max_rounds=max_rounds,
         max_distance_deg=max_distance_deg,
@@ -1107,8 +1240,9 @@ def knn_edges_join_tables(
     # round t otherwise NESTS round t-1's full scoring plan, and the
     # analyzed tree grows exponentially with rounds (observed as a
     # driver-side Catalyst OOM, not an executor problem).  pending is
-    # checkpointed LAZILY — the next round's coarse-level collect (or
-    # the straggler probe) materializes it, saving one job per round.
+    # checkpointed LAZILY — the round's closing count materializes it.
+    # A checkpoint no later plan reads is freed at once (free): nothing
+    # else would unpin it.
     pending = q.localCheckpoint(eager=True)
     # strategy chooser: with a broadcast-sized query side, the per-round
     # buffer-cell frames hash map-side against the big registered index
@@ -1117,6 +1251,7 @@ def knn_edges_join_tables(
     n_q = pending.count()
     bc_q = F.broadcast if n_q <= 100_000 else (lambda df: df)
     results = None
+    topks: list = []
     n_pending = n_q
     rounds = 0
     cutover = False
@@ -1176,6 +1311,9 @@ def knn_edges_join_tables(
 
         scored = _score(cand).filter(F.col("dist2") <= F.lit(r2))
         topk = _rank(scored, k, edge_id_col).localCheckpoint(eager=True)
+        # the round's answer is materialized: its buffer cells are done
+        free(cells)
+        topks.append(topk)
         # a query is certified complete when its k-th distance is inside
         # the ring (the buffer covering proves nothing nearer was missed)
         done_q = (
@@ -1186,7 +1324,7 @@ def knn_edges_join_tables(
         )
         finished = topk.join(done_q, "query_id", "left_semi")
         results = finished if results is None else results.unionByName(finished)
-        pending = pending.join(
+        superseded, pending = pending, pending.join(
             bc_q(done_q), "query_id", "left_anti"
         ).localCheckpoint(eager=False)
         # one tiny count materializes the lazy checkpoint (the next
@@ -1201,6 +1339,7 @@ def knn_edges_join_tables(
         # unaffordable index scan keeps ringing (the 100 TB path).
         rounds += 1
         n_pending = pending.count()
+        free(superseded)
         if n_pending == 0:
             break
         if (
@@ -1247,6 +1386,12 @@ def knn_edges_join_tables(
     out = results.select(
         "query_id", edge_id_col, "rank", "dist2"
     ).localCheckpoint(eager=True)
+    # out holds the answer: every round frame still pinned is freed, and
+    # out itself is handed to the session store, so release_caches frees
+    # it (keyed by its own id, unique while the store holds it)
+    for df in (q_xyz, pending, *topks):
+        free(df)
+    shared(spark, None, ("knn_tables_result", id(out)), lambda: out)
     record = {"rounds": rounds, "n_brute": n_pending, "cutover": cutover}
     out._s2_ring = {**record, "brute_rows": stats["rows"]}
     return out

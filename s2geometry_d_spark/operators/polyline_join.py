@@ -5,16 +5,20 @@ regions; a TABLE of polylines (each row group a different polyline) had no
 join path.  This generalizes the closest-edge machinery: the table arrives
 as edge rows carrying a ``polyline_id`` column, every edge registers under
 its bounding-cap cell-union bound (knn.register_edges — the shared index
-artifact), and a per-(query, polyline) MIN-aggregation collapses edge
-distances to polyline distances before the top-k window.
+artifact), and a per-(query, polyline) MIN reduction turns edge
+distances into polyline distances before the top-k.
 
 Reference analogue: S2ClosestEdgeQuery with ShapeIndex targets over a
 multi-shape index (s2closest_edge_query.d:199-272, one shape per polyline);
 distributed, "shape" becomes a group key, and the search is the shared
-ring search of ``knn._ring_search`` with that min as its ``collapse``
-hook.  Its completeness argument lifts through the min: every edge outside
-the ring is farther than the ring, so per-polyline minima over in-ring
-edges are exact whenever they are.
+ring search of ``knn._ring_search`` with ``polyline_id`` as its reduction
+``key``: each round's kernel keeps one row per (query, polyline), its
+minimum edge distance, inside every partition, and the driver keeps the
+minimum across partitions (``knn.topk_rows``).  The brute probe does the
+same with a ``groupBy`` min as its ``collapse`` hook.  The completeness
+argument lifts through the min: every edge outside the ring is farther
+than the ring, so per-polyline minima over in-ring edges are exact
+whenever they are.
 """
 
 from __future__ import annotations
@@ -40,7 +44,6 @@ def nearest_polyline_join(
     queries: list[tuple[str, float, float]],
     k: int,
     polyline_col: str = "polyline_id",
-    edge_id_col: str = "edge_id",
     max_rounds: int = 6,
     registered_df: DataFrame | None = None,
     max_distance_deg: float | None = None,
@@ -48,8 +51,8 @@ def nearest_polyline_join(
 ) -> DataFrame:
     """k nearest POLYLINES to each query point.
 
-    ``edges_df``: (polyline_id, edge_id, alat, alng, blat, blng) — one row
-    per polyline edge.  Returns (query_id, rank, polyline_id, dist2) with
+    ``edges_df``: (polyline_id, alat, alng, blat, blng) — one row per
+    polyline edge.  Returns (query_id, polyline_id, dist2, rank) with
     rank 1..k by (min edge dist2, polyline_id).
 
     ``max_distance_deg`` bounds results to that distance (the reference's
@@ -81,11 +84,11 @@ def nearest_polyline_join(
         cover=lambda q, ring: _cap_covering(q, *geo[q], ring),
         **_edge_search(
             registered,
-            edge_id_col,
+            polyline_col,
             {qid: _xyz(lat, lng) for qid, (lat, lng) in geo.items()},
             edgepair.point_edge_scorer,
+            cols=[polyline_col],
         ),
-        tie_col=polyline_col,
         collapse=lambda scored: scored.groupBy("query_id", polyline_col).agg(
             F.min("dist2").alias("dist2")
         ),

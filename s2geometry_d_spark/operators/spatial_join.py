@@ -161,25 +161,33 @@ def covering_match_udf(coverings: list[RegionCovering], two_way: bool = False):
     non-leaf cells (e.g. an edge index registered at adaptive levels) whose
     own cell may be coarser than a covering cell.
 
-    Returns a pandas UDF: cell_id (signed) -> array<int> of codes
-    ``region_idx * 2 + is_interior`` (empty for the vast majority of rows).
+    Returns an Arrow UDF: cell_id (signed) -> array<int> of codes
+    ``region_idx * 2 + is_interior`` (empty for the vast majority of rows),
+    built as one ``ListArray`` over the row-sorted hits with no per-row
+    Python.
     """
     tables = covering_tables(coverings)
     region_ids = [rc.region_id for rc in coverings]
 
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def match(cell_signed: pd.Series) -> pd.Series:
-        ids = cell_signed.to_numpy(dtype=np.int64)
-        n = ids.shape[0]
-        all_rows, all_codes = match_coverings(ids, tables, two_way)
-        out = [()] * n
-        starts = np.searchsorted(all_rows, np.arange(n), side="left")
-        ends = np.searchsorted(all_rows, np.arange(n), side="right")
-        for i in np.nonzero(ends > starts)[0]:
-            out[i] = tuple(int(c) for c in all_codes[starts[i] : ends[i]])
-        return pd.Series(out)
+    def match(cell_signed):
+        import pyarrow as pa
 
-    return match, region_ids
+        ids = cell_signed.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+        rows, codes = match_coverings(ids, tables, two_way)
+        return hit_lists(rows, pa.array(codes.astype(np.int32)), ids.shape[0])
+
+    return F.arrow_udf(match, T.ArrayType(T.IntegerType())), region_ids
+
+
+def hit_lists(rows: np.ndarray, values, n: int):
+    """An Arrow kernel's list output for ``n`` input rows: row i's list
+    holds the ``values`` of the hits whose (ascending) ``rows`` entry is i,
+    built from offsets with no per-row Python."""
+    import pyarrow as pa
+
+    offsets = np.zeros(n + 1, dtype=np.int32)
+    offsets[1:] = np.cumsum(np.bincount(rows, minlength=n))
+    return pa.ListArray.from_arrays(pa.array(offsets), values)
 
 
 def covering_tables(coverings: list[RegionCovering]) -> list:

@@ -37,9 +37,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # The session store: every frame a session shares — the derived points, the
 # entry's edge and index fixtures, the registrations operators build for
 # their callers — is owned here, under (application id, sf_dir or None,
-# name), and ``__spark_entry__.release_caches`` unpersists what it holds.
-# Values are DataFrames only.  (The name predates the store: benchmark
-# release code reads it.)
+# name), and ``__spark_entry__.release_caches`` frees what it holds (see
+# ``free``).  Values are DataFrames only.  (The name predates the store:
+# benchmark release code reads it.)
 _POINTS_CACHE: dict = {}
 
 
@@ -64,6 +64,17 @@ def evict(spark: SparkSession | None = None) -> list[DataFrame]:
     when given.  The caller unpersists them."""
     app = None if spark is None else _app(spark)
     return [_POINTS_CACHE.pop(k) for k in list(_POINTS_CACHE) if app in (None, k[0])]
+
+
+def free(df: DataFrame) -> None:
+    """Release the storage ``df`` pins: its cache, or — for a frame made by
+    ``localCheckpoint`` — the checkpointed RDD it reads, which
+    ``DataFrame.unpersist`` leaves pinned for the application's lifetime.
+    A freed checkpoint cannot be read again: its blocks are its only copy."""
+    df.unpersist()
+    plan = df._jdf.logicalPlan()
+    if plan.nodeName() == "LogicalRDD" and plan.rdd().isLocallyCheckpointed():
+        plan.rdd().unpersist(False)
 
 
 def memo(obj, attr: str, build):

@@ -8,8 +8,8 @@ compared with its Spark mirror (``edgedist.with_dist2``,
 ``edgepair.with_pair_dist2``, ``edgepair.with_cell_dist2``) as raw int64
 bit patterns over a seeded edge set carrying the degenerate cases: a == b,
 antipodal endpoints, queries on an endpoint, on the arc interior and at a
-pole.  The fused ring-round kernel (``knn.edge_round_kernel``) is pinned
-the same way, plus its list layout against a per-row reference.
+pole.  The ring-round kernel (``knn.round_kernel``) is pinned the same
+way, plus its per-partition top-k rows against a per-row reference.
 """
 
 import numpy as np
@@ -154,11 +154,9 @@ def _cell_geom(cid):
 
 
 def _kernel_dist2(spark, a, b, score):
-    """Runs the fused round kernel through Spark with row i registered
-    under its own leaf cell and covered only by query i (infinite r2):
-    one hit per row, (row, dist2) sorted by row."""
-    from pyspark.sql import functions as F
-
+    """Runs the ring-round kernel through Spark with row i registered under
+    its own leaf cell and covered only by query i (infinite r2): one hit
+    per query, (row, dist2) sorted by row."""
     from s2geometry_d_spark.operators import knn
     from s2geometry_d_spark.operators.spatial_join import RegionCovering
     from s2geometry_d_spark.s2core import cellid as ci
@@ -166,15 +164,22 @@ def _kernel_dist2(spark, a, b, score):
     n = len(a)
     leaf = (2 * np.arange(n) + 1).astype(np.uint64)  # distinct face-0 leaves
     coverings = [RegionCovering(i, None, [(int(leaf[i]), False)]) for i in range(n)]
-    kernel = knn.edge_round_kernel(coverings, np.arange(n), np.full(n, np.inf), score)
     pdf = pd.DataFrame({"row": np.arange(n), "ecell": ci.to_signed(leaf)})
     for name, col in {**_named(_A, a), **_named(_B, b)}.items():
         pdf[name] = col
-    udf = F.arrow_udf(kernel, knn._EDGE_HITS)
     out = (
-        spark.createDataFrame(pdf)
-        .select("row", F.explode(udf("ecell", *_A, *_B)).alias("h"))
-        .select("row", "h.q", "h.dist2")
+        knn._round_frame(
+            spark.createDataFrame(pdf).repartition(3),
+            coverings,
+            np.full(n, np.inf),
+            score,
+            cell_col="ecell",
+            geom=(*_A, *_B),
+            cols=["row"],
+            k=1,
+            tie="row",
+            two_way=True,
+        )
         .toPandas()
         .sort_values("row")
     )
@@ -183,7 +188,7 @@ def _kernel_dist2(spark, a, b, score):
 
 
 def test_fused_kernel_dist2_is_bit_identical(spark):
-    """The fused kernel's dist2 equals the SQL fragment bit for bit for the
+    """The round kernel's dist2 equals the SQL fragment bit for bit for the
     point, pair and cell scorers, Arrow round trip included."""
     a, b, q = _cases(seed=9)
     df = _frame(spark, **_named(_Q, q), **_named(_A, a), **_named(_B, b))
@@ -219,9 +224,10 @@ def test_fused_kernel_dist2_is_bit_identical(spark):
 
 
 def test_fused_kernel_lists_match_per_row_reference():
-    """The kernel's ListArray equals a per-row reference: zero-hit rows,
-    rows hitting several queries, a (row, query) pair reached through two
-    covering cells (emitted once), the r2 cut, and an empty batch."""
+    """The kernel's rows equal a per-row reference: zero-hit rows, rows
+    hitting several queries, a (row, query) pair reached through two
+    covering cells (emitted once), the r2 cut, the per-query top-k across
+    batches of one partition, and an empty batch."""
     import pyarrow as pa
 
     from s2geometry_d_spark.operators import knn
@@ -262,20 +268,37 @@ def test_fused_kernel_lists_match_per_row_reference():
     up = [d2(i, gidx[1]) for i, c in enumerate(row_cells) if hits(c, coverings[1])]
     r2 = np.array([np.inf, sorted(up)[1], np.inf])  # "up" keeps its two nearest rows
     want = [
-        [
-            {"q": int(g), "dist2": d2(i, g)}
-            for cov, g, r in zip(coverings, gidx, r2)
-            if hits(cell, cov) and d2(i, g) <= r
-        ]
+        {"q": s, "row": i, "dist2": d2(i, g)}
         for i, cell in enumerate(row_cells)
+        for s, (cov, g, r) in enumerate(zip(coverings, gidx, r2))
+        if hits(cell, cov) and d2(i, g) <= r
     ]
-    kernel = knn.edge_round_kernel(coverings, gidx, r2, score)
-    ecell = pa.array(ci.to_signed(np.array([c.id for c in row_cells], dtype=np.uint64)))
-    got = kernel(ecell, *[pa.array(c) for c in xyz])
-    assert got.type == pa.list_(pa.struct([("q", pa.int32()), ("dist2", pa.float64())]))
-    assert got.to_pylist() == want
-    assert want[3] == [] and len(want[0]) == 2 and len(up) > 2
-    assert sum(h["q"] == 7 for h in want[0]) == 1  # two covering cells, one hit
+    want.sort(key=lambda h: (h["q"], h["dist2"], h["row"]))
+    assert not any(h["row"] == 3 for h in want) and len(up) > 2
+    assert sum(h["row"] == 0 and h["q"] == 0 for h in want) == 1  # two cells, one hit
 
-    empty = kernel(pa.array([], pa.int64()), *[pa.array([], pa.float64())] * 6)
-    assert len(empty) == 0 and empty.type == got.type
+    ecell = ci.to_signed(np.array([c.id for c in row_cells], dtype=np.uint64))
+    names = ["ax", "ay", "az", "bx", "by", "bz"]
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(np.arange(len(row_cells))), pa.array(ecell), *map(pa.array, xyz)],
+        names=["row", "ecell", *names],
+    )
+
+    def run(batches, k):
+        kernel = knn.round_kernel(
+            coverings, r2, lambda s, *g: score(gidx[s], *g), cell_col="ecell",
+            geom=names, cols=["row"], k=k, tie="row", two_way=True,
+        )
+        out = list(kernel(iter(batches)))
+        return pa.Table.from_batches(out) if out else None
+
+    got = run([batch], k=10)
+    assert got.schema.types == [pa.int32(), pa.int64(), pa.float64()]
+    assert got.to_pylist() == want
+    # one partition's batches fold into ONE running top-k per query
+    best = [h for h in want if not any(
+        o["q"] == h["q"] and (o["dist2"], o["row"]) < (h["dist2"], h["row"]) for o in want
+    )]
+    assert run([batch.slice(0, 2), batch.slice(2, 0), batch.slice(2)], k=1).to_pylist() == best
+    # an empty batch and an empty partition send nothing
+    assert run([batch.slice(0, 0)], k=5) is None and run([], k=5) is None

@@ -314,29 +314,31 @@ def _operators(df) -> list[tuple[str, list[str]]]:
     return out
 
 
-@pytest.mark.parametrize("query", ["knn_edges_join", "knn_edge_targets"])
+@pytest.mark.parametrize("query", ["knn_edges_join", "knn_edge_targets", "knn_join"])
 def test_knn_edge_round_is_one_fused_kernel_below_one_exchange(
     spark, entrymod, monkeypatch, query
 ):
-    """One registered-edge ring round: the covering match, the numpy-twin
-    scorer and the r2 cut run as ONE ArrowEvalPython (edge_candidates)
-    over the prefiltered index, below the round's only hash exchange, the
-    probe's repartition(query_id), which the (query_id, edge_id) dedup and
-    the top-k window share.  No separate match or point_edge_dist2 stage
-    remains, nor the SQL fragment (CASE WHEN nn > 1e-60 ...) whose chained
-    intermediates cost seconds of Catalyst optimization per round; the
-    q -> query_id map is a driver-built local relation, not a pickled RDD."""
+    """One ring round is one map-only job: the covering match, the numpy
+    scorer, the r2 cut, the per-key reduction and the per-partition top-k
+    run as ONE MapInArrow over the prefiltered persisted table, with no
+    Exchange, Window or broadcast join anywhere in the round's plan (the
+    driver reduces the partitions' rows itself).  No separate match or
+    point_edge_dist2 stage remains, nor the SQL fragment (CASE WHEN nn >
+    1e-60 ...) whose chained intermediates cost seconds of Catalyst
+    optimization per round."""
     from s2geometry_d_spark.operators import knn
 
     rounds = []
-    rank = knn._rank
+    search = knn._ring_search
 
-    def spy(*args, **kwargs):
-        out = rank(*args, **kwargs)
-        rounds.append(out)
-        return out
+    def spy(*args, candidates, **kwargs):
+        def spied(*a, **kw):
+            rounds.append(candidates(*a, **kw))
+            return rounds[-1]
 
-    monkeypatch.setattr(knn, "_rank", spy)
+        return search(*args, candidates=spied, **kwargs)
+
+    monkeypatch.setattr(knn, "_ring_search", spy)
     # an earlier clearCache() leaves the entry's fixture frames unpersisted,
     # and the round would re-plan the whole index build: start from fresh,
     # persisted fixtures
@@ -345,16 +347,14 @@ def test_knn_edge_round_is_one_fused_kernel_below_one_exchange(
     assert rounds
     plan = _plan(rounds[0])
     ops = _operators(rounds[0])
-    python = [(op, up) for op, up in ops if "ArrowEvalPython" in op]
-    exchanges = [op for op, _ in ops if op.startswith("Exchange hashpartitioning")]
-    assert len(python) == 1 and python[0][0].startswith("ArrowEvalPython [edge_candidates("), plan
-    assert len(exchanges) == 1 and exchanges[0].startswith(
-        "Exchange hashpartitioning(query_id"
-    ) and "REPARTITION_BY_COL" in exchanges[0], plan
-    assert exchanges[0] in python[0][1], plan  # the exchange is an ancestor
-    # the native coarse-prefix filter sits between the kernel and the index
-    below = [op for op, up in ops if python[0][0] in up]
+    kernels = [(op, up) for op, up in ops if op.startswith("MapInArrow")]
+    assert len(kernels) == 1 and kernels[0][0].startswith("MapInArrow ring_round("), plan
+    for name in ("EvalPython", "Exchange", "Window", "BroadcastHashJoin", "SortMergeJoin"):
+        assert not any(name in op for op, _ in ops), plan
+    # the native coarse-prefix filter sits between the kernel and the table
+    below = [op for op, up in ops if kernels[0][0] in up]
     assert any(op.startswith("Filter") and "INSET" in op for op in below), plan
+    assert any(op.startswith("InMemoryTableScan") for op in below), plan
     assert "match(" not in plan and "point_edge_dist2(" not in plan, plan
     assert "1.0E-60" not in plan and "CASE WHEN" not in plan, plan
     assert "Scan ExistingRDD" not in plan, plan

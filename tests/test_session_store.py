@@ -141,3 +141,37 @@ def test_store_returns_one_frame_per_key(spark, entrymod):
 
     assert entrymod.release_caches(spark) >= 3
     assert tables.shared(spark, "/data/a", "frame", build) is not a
+
+
+def test_knn_checkpoints_do_not_survive_release(spark, entrymod):
+    """The table-to-table kNN frees its round checkpoints as it goes and
+    hands its result's checkpoint to the store; the region kNN frees its
+    in-region subset, or hands it to the store when its result still reads
+    it.  After three table-join calls and two region calls, one release
+    leaves as many persisted RDDs as there were before."""
+    from s2geometry_d_spark.functions import kernels
+    from s2geometry_d_spark.operators import knn
+    from s2geometry_d_spark.s2core.regions import Cap
+    from pyspark.sql import functions as F
+
+    entrymod.release_caches(spark)
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    for seed in range(3):
+        e = _edges(spark, 30 + seed).select(*COLS)
+        q = e.select("alat", "alng", "blat", "blng", e.edge_id.alias("query_id"))
+        out = knn.knn_edges_join_tables(q, e, k=3)
+        assert out.count() == 40 * 3
+    pts = (
+        _edges(spark, 40)
+        .select(F.col("edge_id").alias("point_id"), F.col("alat").alias("lat"),
+                F.col("alng").alias("lng"))
+        .withColumn("cell_id", kernels.cell_from_latlng(F.col("lat"), F.col("lng")))
+    )
+    cap = Cap.from_latlng_radius(-20.0, -65.0, 3.0)
+    # the cap's antipode: its points lie in the clamped ring's antipodal
+    # gap, so the result's brute probe still reads the in-region subset
+    for queries, brute in ((QUERIES, []), ([("anti", 20.0, 115.0)], ["anti"])):
+        res = knn.knn_join(pts, queries, k=3, region=cap)
+        assert res._s2_ring["brute"] == brute and res.count() > 0
+    entrymod.release_caches(spark)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
