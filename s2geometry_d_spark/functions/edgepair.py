@@ -272,7 +272,7 @@ def pair_dist2_udf():
 # Per-query scorers: ``score(q, ax, ay, az, bx, by, bz) -> dist2`` scores
 # table-edge arrays against query ``q`` (an int array indexing the query
 # geometry held in the closure) with the twins above, so every kNN ring
-# round and brute probe stays bit-identical to the SQL fragments.
+# round, the brute round included, stays bit-identical to the SQL fragments.
 
 
 def point_edge_scorer(points):
@@ -309,22 +309,6 @@ def cell_scorer(cells):
         return out
 
     return score
-
-
-def scorer_udf(score, name: str):
-    """(q int, ax..bz) -> dist2 pandas UDF over a per-query scorer, the
-    brute probe's twin of the ring rounds' fused kernel; nondeterministic
-    for the reason given at :func:`_twin_udf`."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    def body(q: pd.Series, *edge: pd.Series) -> pd.Series:
-        return pd.Series(
-            score(q.to_numpy(dtype=np.int64), *[s.to_numpy(dtype=np.float64) for s in edge])
-        )
-
-    body.__name__ = name
-    return F.pandas_udf(body, T.DoubleType()).asNondeterministic()
 
 
 def pair_dist2_select_sql(inner: str, keep: str) -> str:

@@ -20,21 +20,17 @@ Each variant supplies only its target hooks:
   the query's slot in ``qrows``.  ``qrows`` holds (query_id, *target, r2)
   per pending query.  Point targets score ``dx*dx + dy*dy + dz*dz`` over
   the SQL-computed point xyz; every registered-edge variant scores with
-  its numpy twin of the engine's SQL fragment (:func:`_edge_search`);
+  its numpy twin of the engine's SQL fragment (:func:`_edge_search`).
+  With ``coverings`` None the same pass runs over ``brute_df`` instead,
+  every row a candidate of every query;
 * ``key`` / ``tie_col`` — the reduction key (edge id, polyline id, or
   None for points) and the tie column of the ``ORDER BY dist2, tie``
   top-k;
-* ``target`` / ``target_cols`` — the per-query columns of ``qrows`` and of
-  the brute probe's broadcast query frame: the query xyz for points, the
-  query's index into the numpy scorer's geometry (``_q``) for edges;
-* ``score(cand)`` — the brute probe's exact squared-chord ``dist2`` over
-  the probe table crossed with that frame: natively for point targets,
-  and for every edge variant by a pandas UDF over the same numpy scorer
-  the round kernel runs, bit-identical to the engine's SQL fragment
-  (functions/edgepair.py; the SQL form costs seconds of Catalyst
-  optimization per round);
-* ``collapse(scored)`` — optional per-group reduction ahead of the brute
-  probe's top-k window (the polyline variant's per-polyline min).
+* ``target`` — the per-query columns of ``qrows``: the query xyz for
+  points, the query's index into the numpy scorer's geometry for edges;
+* ``brute_df`` — the table the brute round scans and the cutover gate
+  counts: the points table, or the unregistered edge table, one row per
+  edge (the index would offer an edge once per registered cell).
 
 Each round is cover -> ONE Spark job with no exchange -> ``toArrow()`` of
 at most P x |pending| x k rows (P: the probe table's partitions) -> the
@@ -44,21 +40,26 @@ unseen can beat them), or once its ring reaches its completion radius —
 the ``max_distance_deg`` limit, or the far side of a ``knn_join`` region
 cap — where fewer than k rows IS the complete answer.  Otherwise its
 ring doubles.  A ring clamped at 170 deg with no limit and still short of
-k goes to the one exact brute cross join: points in the antipodal gap are
-never candidates.
+k goes to the brute round: points in the antipodal gap are never
+candidates.  The brute round is one more round of the same kernel over
+``brute_df``, every row a candidate, cut at the distance limit (if any),
+collected and ranked by the same driver code, so every answer comes from
+one execution path and the result is always one driver-built frame.
 
 Straggler cutover, fail closed: once at most max(2, n/8) queries remain
-they go straight to that brute probe — the same exact answer as more
+they go straight to that brute round — the same exact answer as more
 rings, minus their fixed job overhead — but only when the probe's own
 table, counted once by :func:`frame_rows`, holds at most
 ``_BRUTE_SCAN_ROWS`` rows.  A larger table keeps ringing.  Sizes are
 measured, never passed in: the first ring is seeded from the same count
 (the reference likewise reads its index's own size, maxBruteForceIndexSize).
 
-Every result frame carries its decision record as ``_s2_ring``: rounds
-run, the rows each round collected (``round_rows``), the ids of the
-brute-probed queries, whether the cutover fired and the ``brute_rows`` it
-was judged on (None when no cutover was due, so nothing was counted).
+Every result frame carries its decision record as ``_s2_ring``: ring
+rounds run (``rounds``), the rows each round collected (``round_rows``;
+a brute round adds one last entry, so it holds ``rounds`` + 1 entries
+when ``brute`` is non-empty), the ids of the brute-probed queries,
+whether the cutover fired and the ``brute_rows`` it was judged on (None
+when no cutover was due, so nothing was counted).
 :func:`knn_edges_join_tables` keeps its own loop (its pending set is a
 DataFrame) under the same gate, and records the straggler count as
 ``n_brute`` instead of ids.
@@ -93,6 +94,9 @@ from .spatial_join import (
 
 # the largest table the straggler cutover may scan in full
 _BRUTE_SCAN_ROWS = 10_000_000
+
+# the most (row, query) pairs one scorer call of the brute round sees
+_BRUTE_PAIRS = 1 << 16
 
 # first ring (deg) of the edge-, cell- and table-target variants
 _TARGET_SEED_DEG = 1.0
@@ -136,9 +140,7 @@ def frame_rows(df: DataFrame, key: str | None = None) -> int:
     )
 
 
-def _rank(scored: DataFrame, k: int, tie_col: str, collapse=None) -> DataFrame:
-    if collapse is not None:
-        scored = collapse(scored)
+def _rank(scored: DataFrame, k: int, tie_col: str) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(F.col("dist2").asc(), F.col(tie_col).asc())
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
@@ -184,8 +186,6 @@ def _ring_search(
     cover,
     candidates,
     target: dict,
-    target_cols: list[str],
-    score,
     tie_col: str,
     brute_df: DataFrame,
     max_rounds: int,
@@ -193,7 +193,6 @@ def _ring_search(
     max_error_deg: float = 0.0,
     complete: dict | None = None,
     key: str | None = None,
-    collapse=None,
 ) -> DataFrame | None:
     """The shared ring search (hooks and rules in the module docstring).
 
@@ -214,35 +213,17 @@ def _ring_search(
     cutover = False
     brute_rows = None
 
-    for _ in range(max_rounds):
-        if not pending:
-            break
-        rounds += 1
-        slots = list(pending)
-        coverings = [cover(q, min(radius[q], max_r)) for q in slots]
-        # acceptance radius widened by max_error, never past the distance
-        # limit: candidates are only COMPLETE within the ring, but anything
-        # unseen is farther than ring >= accepted kth - max_error, which is
-        # exactly the approximation contract
-        qrows = [
-            (
-                q,
-                *target[q],
-                chord2_from_radians(math.radians(min(radius[q] + max_error_deg, max_r))),
-            )
-            for q in slots
-        ]
-        frame = candidates(coverings, qrows, k=k, tie=tie_col, key=key)
+    def run(slots: list, coverings, r2: list) -> pa.Table:
         # the round's one job: each partition's top-k, at most P x
         # |slots| x k rows, read ONCE and reduced here by the same
         # topk_rows — the final result is assembled driver-side, since
         # keeping the lineage alive would re-run every round's probe when
-        # the result is finally consumed.  Completeness: the dist2 <= r2
-        # cut already bounds the k-th distance by the ring radius, so k
-        # rows collected == proof the true top-k lies inside the ring.
+        # the result is finally consumed
+        nonlocal schema
+        qrows = [(q, *target[q], r) for q, r in zip(slots, r2)]
+        frame = candidates(coverings, qrows, k=k, tie=tie_col, key=key)
         table = frame.toArrow()
         round_rows.append(table.num_rows)
-        table = topk_rows(table, k, tie_col, key)
         if schema is None:
             qtype = from_arrow_type(pa.array(list(ids)).type)
             schema = T.StructType(
@@ -252,8 +233,39 @@ def _ring_search(
                     T.StructField("rank", T.IntegerType(), False),
                 ]
             )
+        return topk_rows(table, k, tie_col, key)
+
+    def keep(table: pa.Table, slots: list, retired) -> None:
+        # the retired slots' rows, ranked 1.. within their slot
         slot = table.column("q").to_numpy()
-        got = np.bincount(slot, minlength=len(slots))
+        rank = np.arange(slot.shape[0]) - np.searchsorted(slot, slot) + 1
+        rows = np.nonzero(retired[slot])[0]
+        done_rows.extend(
+            zip(
+                [slots[i] for i in slot[rows]],
+                *(table.column(c).take(rows).to_pylist() for c in table.column_names[1:]),
+                rank[rows].tolist(),
+            )
+        )
+
+    for _ in range(max_rounds):
+        if not pending:
+            break
+        rounds += 1
+        slots = list(pending)
+        coverings = [cover(q, min(radius[q], max_r)) for q in slots]
+        # acceptance radius widened by max_error, never past the distance
+        # limit: candidates are only COMPLETE within the ring, but anything
+        # unseen is farther than ring >= accepted kth - max_error, which is
+        # exactly the approximation contract.  Completeness: the dist2 <= r2
+        # cut bounds the k-th distance by the ring radius, so k rows
+        # collected == proof the true top-k lies inside the ring.
+        r2 = [
+            chord2_from_radians(math.radians(min(radius[q] + max_error_deg, max_r)))
+            for q in slots
+        ]
+        table = run(slots, coverings, r2)
+        got = np.bincount(table.column("q").to_numpy(), minlength=len(slots))
         retired = np.zeros(len(slots), dtype=bool)
         for i, q in enumerate(slots):
             done_r = min(limit_r, complete.get(q, math.inf))
@@ -269,22 +281,13 @@ def _ring_search(
             else:
                 # no point growing past the completion radius
                 radius[q] = min(radius[q] * 2.0, done_r)
-        rank = np.arange(slot.shape[0]) - np.searchsorted(slot, slot) + 1
-        keep = np.nonzero(retired[slot])[0]
-        done_rows.extend(
-            zip(
-                [slots[i] for i in slot[keep]],
-                *(table.column(c).take(keep).to_pylist() for c in table.column_names[1:]),
-                rank[keep].tolist(),
-            )
-        )
+        keep(table, slots, retired)
         # straggler cutover: a leftover handful is cheaper as one exact
-        # brute probe than as more ring rounds of fixed job overhead (the
-        # brute branch below is the SAME code the post-max_rounds path
-        # runs, so results are identical).  Fail closed: only a
-        # scan-affordable probe table cuts over, so a 100 TB table keeps
-        # ringing.  The count comes last: it is taken only once a cutover
-        # is otherwise due.
+        # brute round than as more ring rounds of fixed job overhead (the
+        # SAME round the post-max_rounds path runs, so results are
+        # identical).  Fail closed: only a scan-affordable probe table
+        # cuts over, so a 100 TB table keeps ringing.  The count comes
+        # last: it is taken only once a cutover is otherwise due.
         if pending and len(pending) <= max(2, len(ids) // 8):
             brute_rows = frame_rows(brute_df)
             if brute_rows <= _BRUTE_SCAN_ROWS:
@@ -293,24 +296,23 @@ def _ring_search(
                 pending.clear()
 
     brute = [*pending, *brute]
-    results = local_df(spark, done_rows, schema) if schema is not None else None
     if brute:
-        qdf = local_df(spark, [(q, *target[q]) for q in brute], ["query_id", *target_cols])
-        scored = score(brute_df.crossJoin(F.broadcast(qdf)))
+        # the brute round: every brute_df row a candidate, cut only at
+        # the distance limit
+        r2 = math.inf
         if max_distance_deg is not None:
-            scored = scored.filter(
-                F.col("dist2") <= F.lit(chord2_from_radians(math.radians(max_distance_deg)))
-            )
-        topk = _rank(scored, k, tie_col, collapse).drop(*target_cols)
-        results = topk if results is None else results.unionByName(topk)
-    if results is not None:
-        results._s2_ring = {
-            "rounds": rounds,
-            "round_rows": round_rows,
-            "brute": brute,
-            "cutover": cutover,
-            "brute_rows": brute_rows,
-        }
+            r2 = chord2_from_radians(math.radians(max_distance_deg))
+        keep(run(brute, None, [r2] * len(brute)), brute, np.ones(len(brute), dtype=bool))
+    if schema is None:
+        return None
+    results = local_df(spark, done_rows, schema)
+    results._s2_ring = {
+        "rounds": rounds,
+        "round_rows": round_rows,
+        "brute": brute,
+        "cutover": cutover,
+        "brute_rows": brute_rows,
+    }
     return results
 
 
@@ -324,7 +326,7 @@ _POINT_XYZ = ("_px", "_py", "_pz")
 
 
 def round_kernel(
-    coverings: list[RegionCovering],
+    coverings: list[RegionCovering] | None,
     r2,
     score,
     *,
@@ -344,24 +346,42 @@ def round_kernel(
     its acceptance radius; ``score(slots, *geom)`` is the variant's numpy
     scorer over the rows' ``geom`` columns.  Each batch's ``cell_col`` is
     matched against the coverings (``two_way`` for registered edge cells,
-    which may be coarser or finer than a covering cell), its (row, slot)
-    hits deduplicated, scored and cut to ``dist2 <= r2``; the hits are
-    folded into the partition's running :func:`topk_rows` batch by batch,
-    so at most |slots| x k rows leave the partition."""
+    which may be coarser or finer than a covering cell) and its (row, slot)
+    hits deduplicated; with ``coverings`` None (the brute round) every row
+    pairs with every slot instead, in slices of at most ``_BRUTE_PAIRS``
+    pairs, so one scorer call stays bounded whatever the slot count.  The
+    pairs are scored, cut to ``dist2 <= r2`` and folded into the
+    partition's running :func:`topk_rows` one slice at a time, so at most
+    |slots| x k rows leave the partition."""
     from .spatial_join import covering_tables, match_coverings
 
-    tables = covering_tables(coverings)
     r2 = np.asarray(r2, dtype=np.float64)
-    nreg = max(len(coverings), 1)
+    nslot = max(r2.shape[0], 1)
+    if coverings is None:
+        # read here, on the driver: the closure carries the bound
+        per_call = _BRUTE_PAIRS
 
-    def hits(batch) -> pa.Table:
-        ids = batch.column(cell_col).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-        rows, codes = match_coverings(ids, tables, two_way)
-        # one hit per (row, slot): a row reaches a query through every
-        # covering cell it overlaps
-        pair = np.unique(rows * nreg + (codes >> 1))
-        rows, slot = pair // nreg, pair % nreg
-        dist2 = score(slot, *(batch.column(c).to_numpy(zero_copy_only=False)[rows] for c in geom))
+        def pairs(batch):
+            # slot-major: a slice holds few slots, each against many rows
+            n = batch.num_rows
+            total = n * r2.shape[0]
+            for start in range(0, total, per_call):
+                p = np.arange(start, min(start + per_call, total))
+                yield p % n, p // n
+
+    else:
+        tables = covering_tables(coverings)
+
+        def pairs(batch):
+            ids = batch.column(cell_col).to_numpy(zero_copy_only=False)
+            rows, codes = match_coverings(ids.astype(np.int64, copy=False), tables, two_way)
+            # one hit per (row, slot): a row reaches a query through every
+            # covering cell it overlaps
+            pair = np.unique(rows * nslot + (codes >> 1))
+            yield pair // nslot, pair % nslot
+
+    def hits(batch, arrays, rows, slot) -> pa.Table:
+        dist2 = score(slot, *(a[rows] for a in arrays))
         keep = dist2 <= r2[slot]
         out = batch.select(cols).take(pa.array(rows[keep]))
         return pa.Table.from_arrays(
@@ -372,10 +392,12 @@ def round_kernel(
     def ring_round(batches):
         best = None
         for batch in batches:
-            found = hits(batch)
-            if best is not None:
-                found = pa.concat_tables([best, found])
-            best = topk_rows(found, k, tie, key)
+            arrays = [batch.column(c).to_numpy(zero_copy_only=False) for c in geom]
+            for rows, slot in pairs(batch):
+                found = hits(batch, arrays, rows, slot)
+                if best is not None:
+                    found = pa.concat_tables([best, found])
+                best = topk_rows(found, k, tie, key)
         if best is not None:
             yield from best.to_batches()
 
@@ -385,9 +407,10 @@ def round_kernel(
 def _round_frame(
     src: DataFrame, coverings, r2, score, *, cell_col, geom, cols, **spec
 ) -> DataFrame:
-    """One ring round over ``src`` (the probe table, already prefiltered,
-    with its ``geom`` scorer columns) as ONE map-only ``mapInArrow`` node
-    of :func:`round_kernel`: no exchange, so reading it is one Spark job.
+    """One round over ``src`` (the probe table, already prefiltered, with
+    its ``geom`` scorer columns; or, with ``coverings`` None, the whole
+    brute table) as ONE map-only ``mapInArrow`` node of
+    :func:`round_kernel`: no exchange, so reading it is one Spark job.
     Returns (q int, <cols>, dist2 double); ``spec`` is the kernel's ``k``,
     ``tie``, ``key`` and ``two_way``."""
     kernel = round_kernel(coverings, r2, score, cell_col=cell_col, geom=geom, cols=cols, **spec)
@@ -398,11 +421,17 @@ def _round_frame(
             T.StructField("dist2", T.DoubleType()),
         ]
     )
-    return src.select(*dict.fromkeys([cell_col, *geom, *cols])).mapInArrow(kernel, schema)
+    read = [*geom, *cols] if coverings is None else [cell_col, *geom, *cols]
+    return src.select(*dict.fromkeys(read)).mapInArrow(kernel, schema)
 
 
 def _edge_search(
-    registered: DataFrame, key: str, geom: dict, scorer, cols: list[str] | None = None
+    registered: DataFrame,
+    edges: DataFrame,
+    key: str,
+    geom: dict,
+    scorer,
+    cols: list[str] | None = None,
 ) -> dict:
     """The hooks of every registered-edge variant of :func:`_ring_search`.
     ``key`` is the edge id column — or the polyline id, whose rounds keep
@@ -416,26 +445,25 @@ def _edge_search(
     re-runs a kernel), the SQL endpoint xyz and ONE ``mapInArrow`` node
     (:func:`_round_frame`) that matches, scores, cuts, keeps each
     (query, key)'s minimum and cuts each partition to its top-k: no
-    exchange, no window.
-
-    ``score`` is the brute probe's scorer over the unregistered edge table
-    (the same numpy scorer behind a pandas UDF): the index would score an
-    edge once per registered cell."""
+    exchange, no window.  The brute round is the same node over
+    ``edges``, the unregistered table (``brute_df``): the index would
+    offer an edge once per registered cell."""
     ids = list(geom)
-    score_np = scorer(list(geom.values()))
+    score = scorer(list(geom.values()))
     cols = cols or [c for c in registered.columns if c != "ecell"]
-    twin = edgepair.scorer_udf(score_np, "edge_dist2")
 
     def candidates(coverings, qrows, **spec):
         # each slot's index into the scorer's geometry
         target = np.array([row[1] for row in qrows], dtype=np.int64)
-        cond = coarse_prefix_filter(coverings, "ecell", two_way=True)
-        src = registered if cond is None else registered.filter(cond)
+        src = edges
+        if coverings is not None:
+            cond = coarse_prefix_filter(coverings, "ecell", two_way=True)
+            src = registered if cond is None else registered.filter(cond)
         return _round_frame(
             _with_edge_xyz(src),
             coverings,
             [row[-1] for row in qrows],
-            lambda slot, *edge: score_np(target[slot], *edge),
+            lambda slot, *edge: score(target[slot], *edge),
             cell_col="ecell",
             geom=_EDGE_XYZ,
             cols=cols,
@@ -443,20 +471,12 @@ def _edge_search(
             **spec,
         )
 
-    def score(cand: DataFrame) -> DataFrame:
-        return (
-            _with_edge_xyz(cand)
-            .withColumn("dist2", twin("_q", *_EDGE_XYZ))
-            .drop(*_EDGE_XYZ)
-        )
-
     return {
         "candidates": candidates,
         "target": {qid: (i,) for i, qid in enumerate(ids)},
-        "target_cols": ["_q"],
-        "score": score,
         "tie_col": key,
         "key": key,
+        "brute_df": edges,
     }
 
 
@@ -495,7 +515,7 @@ def knn_join(
     which is inflated by an epsilon to absorb the ulp-level center gap).
     The first ring is sized from the measured row count of ``points_df``
     (:func:`frame_rows`, before any ``region`` filter); the straggler
-    cutover is gated on the count of the table the brute probe scans.
+    cutover is gated on the count of the table the brute round scans.
 
     Options parity with S2ClosestPointQuery
     (s2closest_point_query.d:58-111 setMaxDistance/setMaxError, the same
@@ -509,7 +529,7 @@ def knn_join(
     ``region`` (setRegion, s2closest_point_query.d Options): restrict
     results to points inside the given S2 region (Cap/LatLngRect/Polygon)
     — applied as a PIP pre-filter on the candidate table, so the covering
-    probe, ring growth and brute fallback all see only in-region points
+    probe, ring growth and the brute round all see only in-region points
     and the <k-at-exhaustion answer stays complete.
     """
     spark = points_df.sparkSession
@@ -521,7 +541,7 @@ def knn_join(
         from .spatial_join import points_in_regions
 
         # materialize the region-filtered subset ONCE (localCheckpoint):
-        # every ring round and the brute fallback re-scan the candidate
+        # every ring round and the brute round re-scan the candidate
         # table, and re-running the covering/PIP lineage per round turned
         # a 2s query into minutes at sf0.1.  Cost is O(|in-region
         # points|), the same artifact the reference's region option builds.
@@ -549,7 +569,7 @@ def knn_join(
     # cap, so rings smaller than dist(query, cap) provably find nothing —
     # start at that distance instead of doubling up to it from
     # the seed (a far query otherwise burned all max_rounds and
-    # fell through to the brute scan).  Dually, once the ring covers the
+    # fell through to the brute round).  Dually, once the ring covers the
     # WHOLE cap (radius >= dist(query, center) + cap angle, so by the
     # triangle inequality every in-region point is a candidate and passes
     # the r2 filter), the round's answer is complete even with < k rows —
@@ -571,12 +591,9 @@ def knn_join(
             # pad absorbs the trig ulps in ang/cap_ang; when the bound
             # exceeds the ring clamp the certification is unavailable
             # (antipodal-gap points could be missed) — keep the brute
-            # fallback for that query by leaving the bound infinite
+            # round for that query by leaving the bound infinite
             far = ang + cap_ang + 1e-6
             complete[qid] = far if far <= max_r else math.inf
-
-    def score(cand):
-        return cand.withColumn("dist2", _chord2_to_query_expr(lat_col, lng_col))
 
     def candidates(coverings, qrows, **spec):
         qxyz = np.array([row[1:4] for row in qrows], dtype=np.float64).reshape(-1, 3)
@@ -590,7 +607,7 @@ def knn_join(
             return dx * dx + dy * dy + dz * dz
 
         src = points_df
-        if getattr(points_df, "_s2_cell_stored", False):
+        if coverings is not None and getattr(points_df, "_s2_cell_stored", False):
             cond = coarse_prefix_filter(coverings, cell_col)
             src = src if cond is None else src.filter(cond)
         pxyz = [c.alias(n) for c, n in zip(_point_xyz(lat_col, lng_col), _POINT_XYZ)]
@@ -613,8 +630,6 @@ def knn_join(
         cover=lambda q, ring: _cap_covering(q, *geo[q], min(ring + cap_pad, max_r)),
         candidates=candidates,
         target=xyz,
-        target_cols=["qx", "qy", "qz"],
-        score=score,
         tie_col=tie_col,
         # with a region set the brute side is the in-region subset
         brute_df=points_df,
@@ -624,12 +639,8 @@ def knn_join(
         complete=complete,
     )
     if region is not None:
-        if res is not None and res._s2_ring["brute"]:
-            # the result's brute probe still reads the subset: the session
-            # store owns it until release_caches
-            shared(spark, None, ("knn_region", id(points_df)), lambda: points_df)
-        else:
-            free(points_df)
+        # the result is driver-built: nothing reads the subset any more
+        free(points_df)
     return res
 
 
@@ -917,15 +928,34 @@ def knn_edges_join(
         cover=lambda q, ring: _cap_covering(q, *geo[q], ring),
         **_edge_search(
             registered,
+            edges_df,
             edge_id_col,
             {qid: _xyz(lat, lng) for qid, (lat, lng) in geo.items()},
             edgepair.point_edge_scorer,
         ),
-        brute_df=edges_df,
         max_rounds=max_rounds,
         max_distance_deg=max_distance_deg,
         max_error_deg=max_error_deg,
     )
+
+
+def _interiors_first(
+    res: DataFrame, zero: DataFrame | None, k: int, edge_id_col: str
+) -> DataFrame:
+    """The include_interiors merge: the edge result ``res`` with a null
+    ``shape_id``, plus the (query_id, shape_id) interior hits ``zero`` at
+    dist2 0, ranked 1..k per query.  Interior hits sort first (dist2 0,
+    shape_id set); among equals the shape order, then edges by
+    (dist2, edge_id)."""
+    res = res.drop("rank").withColumn("shape_id", F.lit(None).cast("string"))
+    if zero is not None:
+        res = res.unionByName(zero.withColumn("dist2", F.lit(0.0)), allowMissingColumns=True)
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("dist2").asc(),
+        F.col("shape_id").asc_nulls_last(),
+        F.col(edge_id_col).asc_nulls_last(),
+    )
+    return res.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def knn_edges_join_with_interiors(
@@ -954,24 +984,11 @@ def knn_edges_join_with_interiors(
             if poly.contains_point(p):
                 zero_rows.append((qid, sid))
 
-    res = knn_edges_join(edges_df, queries, k, **kwargs).withColumn(
-        "shape_id", F.lit(None).cast("string")
-    )
+    zero = None
     if zero_rows:
-        zdf = local_df(spark, zero_rows, ["query_id", "shape_id"]).withColumn(
-            "dist2", F.lit(0.0)
-        )
-        res = res.drop("rank").unionByName(zdf, allowMissingColumns=True)
-    else:
-        res = res.drop("rank")
-    # interior hits sort first (dist2 0, shape_id set); among equals the
-    # shape order, then edges by (dist2, edge_id)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist2").asc(),
-        F.col("shape_id").asc_nulls_last(),
-        F.col(kwargs.get("edge_id_col", "edge_id")).asc_nulls_last(),
-    )
-    return res.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+        zero = local_df(spark, zero_rows, ["query_id", "shape_id"])
+    res = knn_edges_join(edges_df, queries, k, **kwargs)
+    return _interiors_first(res, zero, k, kwargs.get("edge_id_col", "edge_id"))
 
 
 def knn_edges_join_with_interiors_table(
@@ -998,22 +1015,11 @@ def knn_edges_join_with_interiors_table(
     qdf = local_df(spark, queries, ["query_id", "lat", "lng"]).withColumn(
         "cell_id", kernels.cell_from_latlng(F.col("lat"), F.col("lng"))
     )
-    zero = (
-        points_in_polygons_table(qdf, index_df, join_level=join_level)
-        .select("query_id", F.col("poly_id").alias("shape_id"))
-        .withColumn("dist2", F.lit(0.0))
+    zero = points_in_polygons_table(qdf, index_df, join_level=join_level).select(
+        "query_id", F.col("poly_id").alias("shape_id")
     )
-
-    res = knn_edges_join(edges_df, queries, k, **kwargs).withColumn(
-        "shape_id", F.lit(None).cast("string")
-    )
-    res = res.drop("rank").unionByName(zero, allowMissingColumns=True)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist2").asc(),
-        F.col("shape_id").asc_nulls_last(),
-        F.col(kwargs.get("edge_id_col", "edge_id")).asc_nulls_last(),
-    )
-    return res.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    res = knn_edges_join(edges_df, queries, k, **kwargs)
+    return _interiors_first(res, zero, k, kwargs.get("edge_id_col", "edge_id"))
 
 
 def knn_edges_to_edges(
@@ -1068,8 +1074,7 @@ def knn_edges_to_edges(
         # numpy pair scorer (bit-identical twin of the SQL fragment, see
         # edgepair._pair_dist2_np): the 62-intermediate SQL projection paid
         # seconds of Catalyst analysis per ring round
-        **_edge_search(registered, edge_id_col, ends, edgepair.pair_scorer),
-        brute_df=edges_df,
+        **_edge_search(registered, edges_df, edge_id_col, ends, edgepair.pair_scorer),
         max_rounds=max_rounds,
         max_distance_deg=max_distance_deg,
         max_error_deg=max_error_deg,
@@ -1133,11 +1138,11 @@ def knn_edges_to_cells(
         # per ring round; cell_dist2_np is its bit-identical IEEE twin
         **_edge_search(
             registered,
+            edges_df,
             edge_id_col,
             {qid: (verts, norms) for qid, (_, _, _, verts, norms) in geom.items()},
             edgepair.cell_scorer,
         ),
-        brute_df=edges_df,
         max_rounds=max_rounds,
         max_distance_deg=max_distance_deg,
     )
@@ -1361,25 +1366,15 @@ def knn_edges_join_tables(
         # empty query table: no round certified and no stragglers —
         # emit an empty frame with id types taken from the inputs so the
         # schema matches the non-empty path exactly
-        from pyspark.sql.types import (
-            DoubleType,
-            IntegerType,
-            StructField,
-            StructType,
-        )
-
-        results = local_df(spark, 
+        results = local_df(
+            spark,
             [],
-            StructType(
+            T.StructType(
                 [
-                    StructField(
-                        "query_id", q.schema["query_id"].dataType
-                    ),
-                    StructField(
-                        edge_id_col, idx_geom.schema[edge_id_col].dataType
-                    ),
-                    StructField("rank", IntegerType()),
-                    StructField("dist2", DoubleType()),
+                    T.StructField("query_id", q.schema["query_id"].dataType),
+                    T.StructField(edge_id_col, idx_geom.schema[edge_id_col].dataType),
+                    T.StructField("rank", T.IntegerType()),
+                    T.StructField("dist2", T.DoubleType()),
                 ]
             ),
         )
@@ -1412,7 +1407,7 @@ def furthest_points_join(
     Exact antipodal reduction: chord2(p, q) + chord2(p, -q) = 4 for unit
     vectors, so the k furthest points from q are the k nearest to -q, with
     identical ordering and tie-breaks — one line on top of knn_join, reusing
-    its ring expansion, completeness proof and brute-force fallback.
+    its ring expansion, completeness proof and brute round.
     Returns (query_id, rank, dist2, <point columns>) with dist2 the TRUE
     (furthest) squared chord, rank 1..k by (dist2 desc, tie asc).
     """

@@ -14,8 +14,9 @@ distributed, "shape" becomes a group key, and the search is the shared
 ring search of ``knn._ring_search`` with ``polyline_id`` as its reduction
 ``key``: each round's kernel keeps one row per (query, polyline), its
 minimum edge distance, inside every partition, and the driver keeps the
-minimum across partitions (``knn.topk_rows``).  The brute probe does the
-same with a ``groupBy`` min as its ``collapse`` hook.  The completeness
+minimum across partitions (``knn.topk_rows``).  The brute round is the
+same kernel over the unregistered edge table, so it keeps the same
+per-polyline minimum.  The completeness
 argument lifts through the min: every edge outside the ring is farther
 than the ring, so per-polyline minima over in-ring edges are exact
 whenever they are.
@@ -64,7 +65,7 @@ def nearest_polyline_join(
     max_error — the contract lifts through the per-polyline min.
     The first ring is sized from the measured number of distinct polylines
     (``knn.frame_rows``); the straggler cutover is gated on the edge rows
-    the brute probe scans, as in every ring search.
+    the brute round scans, as in every ring search.
     """
     registered = registration(edges_df, registered_df)
     # exact unbounded search: the ring schedule cannot change results —
@@ -84,15 +85,12 @@ def nearest_polyline_join(
         cover=lambda q, ring: _cap_covering(q, *geo[q], ring),
         **_edge_search(
             registered,
+            edges_df,
             polyline_col,
             {qid: _xyz(lat, lng) for qid, (lat, lng) in geo.items()},
             edgepair.point_edge_scorer,
             cols=[polyline_col],
         ),
-        collapse=lambda scored: scored.groupBy("query_id", polyline_col).agg(
-            F.min("dist2").alias("dist2")
-        ),
-        brute_df=edges_df,
         max_rounds=max_rounds,
         max_distance_deg=max_distance_deg,
         max_error_deg=max_error_deg,

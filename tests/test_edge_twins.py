@@ -92,21 +92,6 @@ def test_point_edge_twin_is_bit_identical(spark):
     assert got[_N + 1] == 0.0 and got[_N + 4] == 0.0 and got[_N + 5] == 0.0
 
 
-def test_point_edge_udf_is_bit_identical(spark):
-    """The brute probe's scorer (the per-query point scorer behind a pandas
-    UDF, row i against query i) returns the same bits as the SQL fragment,
-    Arrow round trip included."""
-    from pyspark.sql import functions as F
-
-    a, b, q = _cases(seed=8)
-    df = _frame(spark, **_named(_Q, q), **_named(_A, a), **_named(_B, b))
-    want = _sql_dist2(edgedist.with_dist2(df))
-    udf = edgepair.scorer_udf(edgepair.point_edge_scorer(q), "edge_dist2")
-    got = _sql_dist2(df.withColumn("dist2", udf(F.col("row"), *_A, *_B)))
-    _assert_bits(got, want)
-    assert np.isfinite(want).all()
-
-
 def test_pair_twin_is_bit_identical(spark):
     a, b, q = _cases()
     # the query edge runs from q to the next row's a: long, short, shared

@@ -358,3 +358,36 @@ def test_knn_edge_round_is_one_fused_kernel_below_one_exchange(
     assert "match(" not in plan and "point_edge_dist2(" not in plan, plan
     assert "1.0E-60" not in plan and "CASE WHEN" not in plan, plan
     assert "Scan ExistingRDD" not in plan, plan
+
+
+def test_knn_brute_round_is_one_kernel_without_cross_join(spark, entrymod, monkeypatch):
+    """The brute round is one more round of the same kernel: ONE
+    MapInArrow ``ring_round`` over the whole edge table, every row a
+    candidate, and no cross or nested-loop join, window, exchange or
+    Python UDF.  ``knn_cell_targets`` takes it: its straggler cutover
+    fires at this scale."""
+    from s2geometry_d_spark.operators import knn
+
+    rounds = []
+    search = knn._ring_search
+
+    def spy(*args, candidates, **kwargs):
+        def spied(coverings, *a, **kw):
+            rounds.append((coverings, candidates(coverings, *a, **kw)))
+            return rounds[-1][1]
+
+        return search(*args, candidates=spied, **kwargs)
+
+    monkeypatch.setattr(knn, "_ring_search", spy)
+    entrymod.release_caches(spark)
+    entrymod.queries()["knn_cell_targets"](spark, SF_DIR)
+    brute = [frame for coverings, frame in rounds if coverings is None]
+    assert len(brute) == 1 and rounds[-1][0] is None
+    plan = _plan(brute[0])
+    ops = _operators(brute[0])
+    kernels = [op for op, _ in ops if op.startswith("MapInArrow")]
+    assert len(kernels) == 1 and kernels[0].startswith("MapInArrow ring_round("), plan
+    for name in (
+        "CartesianProduct", "BroadcastNestedLoopJoin", "Window", "Exchange", "EvalPython"
+    ):
+        assert not any(name in op for op, _ in ops), plan

@@ -95,7 +95,7 @@ def test_knn_points_straggler_cutover_matches_bruteforce(spark, monkeypatch, bou
 def test_edge_and_cell_targets_cut_over_on_measured_size(spark):
     """The edge- and cell-target variants gate their straggler cutover on
     the measured edge count: an antipodal query finds nothing in round 1
-    and goes straight to the brute probe, whose answer equals the
+    and goes straight to the brute round, whose answer equals the
     max_rounds=0 brute reference."""
     from s2geometry_d_spark.s2core.cellid import CellId
 
@@ -125,7 +125,7 @@ def test_knn_table_join_closed_gate_keeps_ringing(spark, monkeypatch):
     variant's straggler handful keeps ringing instead of cutting over; the
     antipodal query still reaches the post-max_rounds brute probe and the
     answer equals the exact cross join (the driver-list variant with no
-    ring rounds, i.e. its brute probe alone)."""
+    ring rounds, i.e. its brute round alone)."""
     monkeypatch.setattr(knn, "_BRUTE_SCAN_ROWS", 0)
     edges = _clustered_edges(spark)
     qlist = [

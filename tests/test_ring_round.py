@@ -3,12 +3,14 @@ replaced.
 
 A round used to plan the candidate match, the scorer, a broadcast query
 join, a (query, edge) dedup or per-polyline min, and a ``row_number``
-window per query.  Now it is one ``mapInArrow`` pass that keeps each
-partition's top-k, reduced again on the driver by the same
+window per query; the brute probe was a cross join with the same window.
+Now every round, the brute round included, is one ``mapInArrow`` pass
+that keeps each partition's top-k, reduced again on the driver by the same
 ``knn.topk_rows``.  Each test below rebuilds the old window round in
-Spark for the exact coverings and acceptance radii of the new round and
-asserts the same rows, ranks and ``dist2`` bits, for all five ring-search
-variants.
+Spark, with the engine's SQL distance fragments as its scorers, for the
+exact coverings and acceptance radii of the new round (or the whole brute
+table and the distance limit) and asserts the same rows, ranks and
+``dist2`` bits, for all five ring-search variants.
 """
 
 import numpy as np
@@ -17,11 +19,12 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from s2geometry_d_spark.functions import kernels
+from s2geometry_d_spark.functions import edgedist, edgepair, kernels
 from s2geometry_d_spark.functions.localdf import local_df
 from s2geometry_d_spark.operators import knn, polyline_join
 from s2geometry_d_spark.operators.spatial_join import candidate_match_kernel
 from s2geometry_d_spark.s2core.cellid import CellId
+from s2geometry_d_spark.s2core.regions import Cell, chord2_from_radians, latlng_point
 
 K = 3
 # two queries inside the data and one far from it: round 1 finds nothing
@@ -76,26 +79,74 @@ def _points(spark, seed=4, n=40):
     return df
 
 
-def _window_round(probe, cell_col, two_way, coverings, qrows, hooks, k):
-    """The old round: candidate match, broadcast query join, the variant's
-    scorer, the r2 cut, the (query, edge) dedup or the polyline min, and a
-    row_number window over (dist2, tie)."""
+def _geometry(spark, variant):
+    """(query_id, <target columns>) of every query of ``variant``, as the
+    engine's SQL distance fragments read them."""
+    if variant.startswith("edge_targets"):
+        rows = [(q, *latlng_point(*a), *latlng_point(*b)) for q, a, b in TARGET_EDGES]
+        return local_df(spark, rows, ["query_id", "cx", "cy", "cz", "dx", "dy", "dz"])
+    if variant == "cell_targets":
+        rows = []
+        for q, cid in TARGET_CELLS:
+            cell = Cell(cid)
+            verts = [cell.get_vertex(i) for i in range(4)]
+            norms = [cell.get_edge_raw(i) for i in range(4)]
+            rows.append((q, *(float(x) for v in verts + norms for x in v)))
+        names = [f"{p}{i}{a}" for p in "vn" for i in range(4) for a in "xyz"]
+        return local_df(spark, rows, ["query_id", *names])
+    return local_df(spark, [(q, *knn._xyz(la, ln)) for q, la, ln in QUERIES],
+                    ["query_id", "qx", "qy", "qz"])
+
+
+def _score(variant, cand):
+    """The variant's SQL ``dist2``: the point chord, or a fragment over the
+    edge endpoints' SQL xyz.  The scored rows come back as a local
+    relation: a filter planned over the pair and cell fragments' hundreds
+    of intermediates exhausts the optimizer's constraint inference."""
+    if variant.startswith("points"):
+        scored = cand.withColumn("dist2", knn._chord2_to_query_expr("lat", "lng"))
+    else:
+        cand = knn._with_edge_xyz(cand)
+        if variant.startswith("edge_targets"):
+            scored = edgepair.with_pair_dist2(cand)
+        elif variant == "cell_targets":
+            scored = edgepair.with_cell_dist2(cand)
+        else:
+            scored = edgedist.with_dist2(cand)
+        scored = scored.drop(*knn._EDGE_XYZ)
+    return cand.sparkSession.createDataFrame(scored.toArrow())
+
+
+def _window_round(probe, brute, cell_col, two_way, r, variant, limit, k):
+    """The old round: candidate match (or, for the brute round, the brute
+    table crossed with every query and cut at the distance limit only),
+    broadcast query join, the SQL scorer, the r2 cut, the (query, edge)
+    dedup or the polyline min, and a row_number window over (dist2, tie)."""
     spark = probe.sparkSession
-    cand = (
-        candidate_match_kernel(probe, coverings, cell_col=cell_col, two_way=two_way)
-        .drop("is_interior")
-        .withColumnRenamed("region_id", "query_id")
+    qrows = r["qrows"]
+    qdf = local_df(spark, [(row[0], row[-1]) for row in qrows], ["query_id", "r2"]).join(
+        _geometry(spark, variant), "query_id"
     )
-    qdf = local_df(spark, qrows, ["query_id", *hooks["target_cols"], "r2"])
-    scored = hooks["score"](cand.join(F.broadcast(qdf), "query_id"))
-    scored = scored.filter(F.col("dist2") <= F.col("r2"))
-    if hooks.get("collapse") is not None:
-        scored = hooks["collapse"](scored)
-    elif hooks.get("key") is not None:
-        scored = scored.dropDuplicates(["query_id", hooks["key"]])
-    w = Window.partitionBy("query_id").orderBy(F.col("dist2").asc(), F.col(hooks["tie_col"]).asc())
-    ranked = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    return ranked.drop(*hooks["target_cols"], "r2", "ecell")
+    if r["coverings"] is None:
+        scored = _score(variant, brute.crossJoin(F.broadcast(qdf)))
+        if limit is not None:
+            scored = scored.filter(
+                F.col("dist2") <= F.lit(chord2_from_radians(np.radians(limit)))
+            )
+    else:
+        cand = (
+            candidate_match_kernel(probe, r["coverings"], cell_col=cell_col, two_way=two_way)
+            .drop("is_interior")
+            .withColumnRenamed("region_id", "query_id")
+        )
+        scored = _score(variant, cand.join(F.broadcast(qdf), "query_id"))
+        scored = scored.filter(F.col("dist2") <= F.col("r2"))
+    if variant == "polylines":
+        scored = scored.groupBy("query_id", "polyline_id").agg(F.min("dist2").alias("dist2"))
+    elif r.get("key") is not None:
+        scored = scored.dropDuplicates(["query_id", r["key"]])
+    w = Window.partitionBy("query_id").orderBy(F.col("dist2").asc(), F.col(r["tie_col"]).asc())
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def _normal(rows, cols, tie):
@@ -133,15 +184,24 @@ def _spied_rounds(monkeypatch):
     return rounds
 
 
-VARIANTS = ["points_cell_tie", "points_string_tie", "edges", "edge_targets", "cell_targets", "polylines"]
+VARIANTS = [
+    "points_cell_tie",
+    "points_string_tie",
+    "edges",
+    "edge_targets",
+    "edge_targets_limit",
+    "cell_targets",
+    "polylines",
+]
 
 
 @pytest.mark.parametrize("variant", VARIANTS)
 def test_round_matches_window_round(spark, monkeypatch, variant):
     rounds = _spied_rounds(monkeypatch)
     frames = []
+    limit = None
     if variant.startswith("points"):
-        probe = _points(spark)
+        probe = brute = _points(spark)
         frames.append(probe)
         leaf = probe.filter(F.col("name").startswith("leaf")).select("cell_id").distinct()
         assert leaf.count() == 1  # the two leaf points share their leaf
@@ -149,25 +209,35 @@ def test_round_matches_window_round(spark, monkeypatch, variant):
         knn.knn_join(probe, QUERIES, K, tie_col=tie)
         cell_col, two_way = "cell_id", False
     else:
-        edges = _edges(spark)
+        brute = _edges(spark)
         if variant != "polylines":
-            edges = edges.drop("polyline_id")
+            brute = brute.drop("polyline_id")
         # the index hashed on its cell: an edge's registered cells land in
         # different partitions, so one (query, edge) may leave several
-        reg = knn.register_edges(edges)
+        reg = knn.register_edges(brute)
         probe = reg.repartition(4, "ecell").persist()
         probe._s2_cell_stored = True
         frames += [reg, probe]
         cell_col, two_way = "ecell", True
         if variant == "edges":
-            knn.knn_edges_join(edges, QUERIES, K, registered_df=probe)
-        elif variant == "edge_targets":
-            knn.knn_edges_to_edges(edges, TARGET_EDGES, K, registered_df=probe)
+            knn.knn_edges_join(brute, QUERIES, K, registered_df=probe)
+        elif variant.startswith("edge_targets"):
+            # the limit sits between the near targets' k-th edge and the
+            # far target's nearest: the brute round's cut leaves it nothing
+            limit = 4.0 if variant == "edge_targets_limit" else None
+            knn.knn_edges_to_edges(
+                brute, TARGET_EDGES, K, registered_df=probe, max_distance_deg=limit
+            )
         elif variant == "cell_targets":
-            knn.knn_edges_to_cells(edges, TARGET_CELLS, K, registered_df=probe)
+            knn.knn_edges_to_cells(brute, TARGET_CELLS, K, registered_df=probe)
         else:
-            polyline_join.nearest_polyline_join(edges, QUERIES, K, registered_df=probe)
+            polyline_join.nearest_polyline_join(brute, QUERIES, K, registered_df=probe)
     assert rounds
+    # the far query goes to the brute round, the search's last round
+    assert rounds[-1]["coverings"] is None and rounds[-1]["brute_df"] is brute
+    assert all(r["coverings"] is not None for r in rounds[:-1])
+    assert [row[0] for row in rounds[-1]["qrows"]] == rounds[0]["record"]["brute"]
+    assert rounds[0]["record"]["brute"][-1] in {"far", "tfar", "cfar"}
     repeats = 0
     collected = []
     for r in rounds:
@@ -175,7 +245,7 @@ def test_round_matches_window_round(spark, monkeypatch, variant):
         collected.append(raw.num_rows)
         # the round's one collect: at most P x pending x k rows
         parts = r["frame"].rdd.getNumPartitions()
-        assert raw.num_rows <= parts * len(r["coverings"]) * K
+        assert raw.num_rows <= parts * len(r["qrows"]) * K
         if r.get("key") is not None:
             pairs = list(zip(raw.column("q").to_pylist(), raw.column(r["key"]).to_pylist()))
             repeats += len(pairs) - len(set(pairs))
@@ -188,14 +258,19 @@ def test_round_matches_window_round(spark, monkeypatch, variant):
             zip([slots[s] for s in slot], *(best.column(c).to_pylist() for c in cols[1:-1]),
                 rank.tolist())
         )
-        old_df = _window_round(probe, cell_col, two_way, r["coverings"], r["qrows"], r, K)
+        old_df = _window_round(probe, brute, cell_col, two_way, r, variant, limit, K)
         old = [tuple(row[c] for c in cols) for row in old_df.collect()]
         assert _normal(new, cols, r["tie_col"]) == _normal(old, cols, r["tie_col"])
         # zero hits: the far query has no row in round 1
         if r is rounds[0]:
             assert slots[-1] not in {row[0] for row in new}
+        if r is rounds[-1]:
+            # the brute round finds the far query's rows, unless the
+            # distance limit cuts them all
+            assert (slots[-1] in {row[0] for row in new}) == (limit is None)
     # the decision record lists each round's collected rows
     assert rounds[0]["record"]["round_rows"] == collected
+    assert rounds[0]["record"]["rounds"] == len(rounds) - 1
     if variant == "edges":
         assert repeats > 0  # a (query, edge) did arrive from two partitions
     for df in frames:
@@ -242,3 +317,73 @@ def test_topk_rows_orders_like_spark_window(spark):
                 )
                 got = knn.topk_rows(table, k, tie, "key" if use_key else None)
                 assert got.to_pylist() == [r.asDict() for r in want], (tie, k, use_key)
+
+
+def test_brute_kernel_bounds_pairs_per_scorer_call(monkeypatch):
+    """With no coverings the kernel pairs every row with every slot, in
+    slices of at most ``knn._BRUTE_PAIRS`` (row, slot) pairs per scorer
+    call, even when one row's slots alone exceed it; its rows equal an
+    all-pairs reference with the r2 cut and the per-slot top-k."""
+    monkeypatch.setattr(knn, "_BRUTE_PAIRS", 7)
+    rng = np.random.default_rng(12)
+    nq, k = 10, 2
+    points = rng.normal(size=(nq, 3))
+    xyz = rng.normal(size=(9, 3))
+    r2 = np.full(nq, np.inf)
+    r2[3] = 0.0  # a cut that leaves slot 3 nothing
+    calls = []
+
+    def score(slot, x, y, z):
+        calls.append(slot.size)
+        d = np.stack([x, y, z], axis=1) - points[slot]
+        return (d * d).sum(axis=1)
+
+    def batch(lo, hi):
+        return pa.RecordBatch.from_arrays(
+            [pa.array(np.arange(lo, hi)), *(pa.array(c) for c in xyz[lo:hi].T)],
+            names=["row", "x", "y", "z"],
+        )
+
+    kernel = knn.round_kernel(
+        None, r2, score, cell_col=None, geom=["x", "y", "z"], cols=["row"], k=k, tie="row"
+    )
+    got = pa.Table.from_batches(list(kernel(iter([batch(0, 5), batch(5, 5), batch(5, 9)]))))
+    assert calls and max(calls) <= 7 and sum(calls) == 9 * nq
+    want = []
+    for s in range(nq):
+        d = ((xyz - points[s]) ** 2).sum(axis=1)
+        hits = sorted((float(d[i]), i) for i in range(9) if d[i] <= r2[s])[:k]
+        want += [{"q": s, "row": i, "dist2": v} for v, i in hits]
+    assert got.to_pylist() == want
+
+
+def test_brute_round_with_more_queries_than_pairs_bound(spark, monkeypatch):
+    """Every query of a ``max_rounds=0`` search takes the brute round; with
+    the pairs bound below the query count, one row's pairs span several
+    scorer calls, and the answers still equal the brute-force oracles."""
+    monkeypatch.setattr(knn, "_BRUTE_PAIRS", 5)
+    rng = np.random.default_rng(21)
+    queries = [
+        (f"b{i}", float(-20.0 + la), float(-65.0 + ln))
+        for i, (la, ln) in enumerate(rng.uniform(-8.0, 8.0, (8, 2)))
+    ]
+    edges = _edges(spark)
+    res = knn.knn_edges_join(edges, queries, K, max_rounds=0)
+    assert res._s2_ring["brute"] == [q for q, _, _ in queries]
+    assert res._s2_ring["rounds"] == 0 and len(res._s2_ring["round_rows"]) == 1
+    got = sorted((r["query_id"], r["rank"], r["edge_id"], r["dist2"]) for r in res.collect())
+    want = sorted(
+        (r["query_id"], r["rank"], r["edge_id"], r["dist2"])
+        for r in knn.knn_edges_brute_force(edges, queries, K).collect()
+    )
+    assert got == want and len(got) == 8 * K
+
+    points = _points(spark)
+    res = knn.knn_join(points, queries, K, tie_col="point_id", max_rounds=0)
+    got = sorted((r["query_id"], r["rank"], r["point_id"], r["dist2"]) for r in res.collect())
+    want = sorted(
+        (r["query_id"], r["rank"], r["point_id"], r["dist2"])
+        for r in knn.knn_brute_force(points, queries, K, tie_col="point_id").collect()
+    )
+    assert got == want and len(got) == 8 * K
+    points.unpersist()

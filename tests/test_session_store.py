@@ -35,6 +35,20 @@ def _edges(spark, seed, n=40):
     return spark.createDataFrame(rows, COLS + ["polyline_id", "seq"])
 
 
+def _points(spark):
+    """The starting points of ``_edges(spark, 40)`` as a point table."""
+    from pyspark.sql import functions as F
+
+    from s2geometry_d_spark.functions import kernels
+
+    return (
+        _edges(spark, 40)
+        .select(F.col("edge_id").alias("point_id"), F.col("alat").alias("lat"),
+                F.col("alng").alias("lng"))
+        .withColumn("cell_id", kernels.cell_from_latlng(F.col("lat"), F.col("lng")))
+    )
+
+
 def _persisted(spark) -> set:
     """Ids of the persisted RDDs that back DataFrame caches: local
     checkpoints (an operator's own round frames) are persisted RDDs too,
@@ -146,13 +160,12 @@ def test_store_returns_one_frame_per_key(spark, entrymod):
 def test_knn_checkpoints_do_not_survive_release(spark, entrymod):
     """The table-to-table kNN frees its round checkpoints as it goes and
     hands its result's checkpoint to the store; the region kNN frees its
-    in-region subset, or hands it to the store when its result still reads
-    it.  After three table-join calls and two region calls, one release
-    leaves as many persisted RDDs as there were before."""
-    from s2geometry_d_spark.functions import kernels
+    in-region subset once the search is done, brute round or not (its
+    result is driver-built).  After three table-join calls and two region
+    calls, one release leaves as many persisted RDDs as there were
+    before."""
     from s2geometry_d_spark.operators import knn
     from s2geometry_d_spark.s2core.regions import Cap
-    from pyspark.sql import functions as F
 
     entrymod.release_caches(spark)
     before = spark.sparkContext._jsc.getPersistentRDDs().size()
@@ -161,17 +174,33 @@ def test_knn_checkpoints_do_not_survive_release(spark, entrymod):
         q = e.select("alat", "alng", "blat", "blng", e.edge_id.alias("query_id"))
         out = knn.knn_edges_join_tables(q, e, k=3)
         assert out.count() == 40 * 3
-    pts = (
-        _edges(spark, 40)
-        .select(F.col("edge_id").alias("point_id"), F.col("alat").alias("lat"),
-                F.col("alng").alias("lng"))
-        .withColumn("cell_id", kernels.cell_from_latlng(F.col("lat"), F.col("lng")))
-    )
+    pts = _points(spark)
     cap = Cap.from_latlng_radius(-20.0, -65.0, 3.0)
     # the cap's antipode: its points lie in the clamped ring's antipodal
-    # gap, so the result's brute probe still reads the in-region subset
+    # gap, so only the brute round finds them
     for queries, brute in ((QUERIES, []), ([("anti", 20.0, 115.0)], ["anti"])):
         res = knn.knn_join(pts, queries, k=3, region=cap)
         assert res._s2_ring["brute"] == brute and res.count() > 0
     entrymod.release_caches(spark)
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
+def test_brute_region_result_survives_release(spark, entrymod):
+    """A region kNN result whose query took the brute round holds its rows
+    itself: read after ``release_caches`` (which frees every checkpoint the
+    search made) it still returns them, equal to the brute-force oracle
+    over the in-region points."""
+    from s2geometry_d_spark.operators import knn
+    from s2geometry_d_spark.operators.spatial_join import points_in_regions
+    from s2geometry_d_spark.s2core.regions import Cap
+
+    pts = _points(spark)
+    cap = Cap.from_latlng_radius(-20.0, -65.0, 3.0)
+    anti = [("anti", 20.0, 115.0)]
+    res = knn.knn_join(pts, anti, k=3, region=cap)
+    assert res._s2_ring["brute"] == ["anti"]
+    entrymod.release_caches(spark)
+    got = [(r["rank"], r["point_id"]) for r in res.collect()]
+    inside = points_in_regions(pts, [("cap", cap)]).drop("region_id")
+    want = [(r["rank"], r["point_id"]) for r in knn.knn_brute_force(inside, anti, k=3).collect()]
+    assert res.count() == 3 and sorted(got) == sorted(want)
