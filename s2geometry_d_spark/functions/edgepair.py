@@ -2,11 +2,14 @@
 
 Same discipline as functions/edgedist.py: ONE expression text, embedded
 verbatim in the DuckDB oracle, with Spark mirrors (``with_pair_dist2``,
-``with_cell_dist2``) and the numpy twins the kNN scorers run
-(``_point_edge_dist2_np``, ``_pair_dist2_np``, ``cell_dist2_np``, behind
-the per-query scorers ``point_edge_scorer``, ``pair_scorer`` and
-``cell_scorer``).  All evaluate identical IEEE trees, so rankings agree
-bit-for-bit (tests/test_edge_twins.py).
+``with_cell_dist2``) and the numpy twins every kNN round scores with
+inside its Arrow kernel: ``_point_edge_dist2_np``, ``_pair_dist2_np`` and
+``cell_dist2_np``, behind the per-query scorers ``point_edge_scorer``,
+``pair_scorer`` and ``cell_scorer`` of the driver-list variants, and
+``_pair_dist2_np`` over both edges' columns in the table-to-table join
+(``knn._table_round``).  No Python UDF wraps them.  All evaluate
+identical IEEE trees, so rankings agree bit-for-bit
+(tests/test_edge_twins.py).
 
 Semantics (reference s2edge_distances.d:280-283, mirrored by
 s2core.measures.edge_pair_min_dist2): the distance between two geodesic
@@ -24,7 +27,6 @@ from __future__ import annotations
 import re
 
 import numpy as np
-import pandas as pd
 
 from . import edgedist
 
@@ -239,34 +241,6 @@ def cell_dist2_np(ax, ay, az, bx, by, bz, verts, norms):
     return np.where(
         inside(ax, ay, az) | inside(bx, by, bz), 0e0, dists
     )
-
-
-def _twin_udf(twin, name: str):
-    """DoubleType pandas UDF over a numpy twin: every argument Series goes
-    in as float64, the twin's array comes back as dist2.  Both join sides
-    stay DataFrames (no geometry in the closure), so it scales like any
-    Arrow kernel.
-
-    Marked nondeterministic only to keep Catalyst from pushing the
-    ``dist2 <= r2`` filter below the projection: a pushed filter inlines
-    the UDF, and every candidate row would be scored twice, by two
-    ArrowEvalPython nodes (one Python worker each)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    def body(*cols: pd.Series) -> pd.Series:
-        return pd.Series(twin(*[s.to_numpy(dtype=np.float64) for s in cols]))
-
-    body.__name__ = name
-    return F.pandas_udf(body, T.DoubleType()).asNondeterministic()
-
-
-def pair_dist2_udf():
-    """(ax..bz, cx..dz) -> dist2 pandas UDF — the vectorized numpy twin of
-    with_pair_dist2 (bit-identical IEEE tree, see _pair_dist2_np).  Used
-    where the 62-intermediate SQL projection's Catalyst analysis and
-    codegen dominate the round wall time."""
-    return _twin_udf(_pair_dist2_np, "pair_dist2")
 
 
 # Per-query scorers: ``score(q, ax, ay, az, bx, by, bz) -> dist2`` scores

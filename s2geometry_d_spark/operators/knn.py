@@ -60,9 +60,14 @@ a brute round adds one last entry, so it holds ``rounds`` + 1 entries
 when ``brute`` is non-empty), the ids of the brute-probed queries,
 whether the cutover fired and the ``brute_rows`` it was judged on (None
 when no cutover was due, so nothing was counted).
-:func:`knn_edges_join_tables` keeps its own loop (its pending set is a
-DataFrame) under the same gate, and records the straggler count as
-``n_brute`` instead of ids.
+
+:func:`knn_edges_join_tables` (the query side is a DataFrame) runs its
+rounds over a pending DataFrame, under the same cutover gate, and
+records the straggler count as ``n_brute`` instead of ids.  Its rounds
+score and rank with the same reducer: one ``mapInArrow`` pass keeps each
+partition's per-query top-k, and after one exchange by query id
+:func:`topk_rows` runs again, in place of the driver-side reduce
+(:func:`_table_round`).
 
 Correctness anchor: brute-force cross join comparison, the same oracle the
 reference tests use (s2closest_edge_query_test.d:380-416).
@@ -73,7 +78,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from ..functions.localdf import local_df
@@ -140,32 +144,40 @@ def frame_rows(df: DataFrame, key: str | None = None) -> int:
     )
 
 
-def _rank(scored: DataFrame, k: int, tie_col: str) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(F.col("dist2").asc(), F.col(tie_col).asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+def _runs(column) -> np.ndarray:
+    """Integer code of each value of a SORTED column, of any type: equal
+    values share a code and the codes never decrease (nulls, sorted first,
+    are -1), so a query's rows are one run of equal codes."""
+    codes = pc.dictionary_encode(column.combine_chunks()).indices
+    return pc.fill_null(codes, -1).to_numpy()
 
 
-def topk_rows(table: pa.Table, k: int, tie: str, key: str | None = None) -> pa.Table:
-    """The best ``k`` rows per query slot ``q`` of a round's candidate
-    table (q, <columns>, dist2), sorted by (q, dist2, ``tie``) — Spark's
-    ``ORDER BY dist2, tie`` (ascending, nulls first) within each q.  With
-    ``key``, each (q, key) first keeps only its best row: its minimum
-    dist2, the per-edge dedup (an edge registers under up to four cells)
-    and the per-polyline min.
+def topk_rows(
+    table: pa.Table, k: int, tie: str, key: str | None = None, by: str = "q"
+) -> pa.Table:
+    """The best ``k`` rows per query of a candidate table (``by``,
+    <columns>, dist2), sorted by (``by``, dist2, ``tie``) — Spark's
+    ``ORDER BY dist2, tie`` (ascending, nulls first) within each query.
+    ``by`` is the round's query slot ``q``, or the table variant's query
+    id of any type.  With ``key``, each (query, key) first keeps only its
+    best row: its minimum dist2, the per-edge dedup (an edge registers
+    under up to four cells, or reaches a query through several candidate
+    joins) and the per-polyline min.
 
-    One reducer for both halves of a round: :func:`round_kernel` runs it
-    per partition and :func:`_ring_search` over the partitions' union.
-    The per-partition cut is exact: every key ahead of a row in its
-    partition is ahead of it globally (a partition's per-key minimum is
-    never below the global one), so a row of the global top-k is in the
-    top-k of every partition that holds it."""
+    One reducer for both halves of every kNN round: :func:`round_kernel`
+    and :func:`_table_round` run it per partition, :func:`_ring_search`
+    over the partitions' union on the driver and :func:`_table_round`
+    after its exchange.  The per-partition cut is exact: every key ahead
+    of a row in its partition is ahead of it globally (a partition's
+    per-key minimum is never below the global one), so a row of the
+    global top-k is in the top-k of every partition that holds it."""
     order = pc.sort_indices(
         table,
-        sort_keys=[("q", "ascending"), ("dist2", "ascending"), (tie, "ascending")],
+        sort_keys=[(by, "ascending"), ("dist2", "ascending"), (tie, "ascending")],
         null_placement="at_start",
     )
     table = table.take(order)
-    q = table.column("q").to_numpy()
+    q = _runs(table.column(by))
     idx = np.arange(q.shape[0])
     if key is not None and q.shape[0]:
         # in this order the first row of each (q, key) is its best
@@ -175,6 +187,18 @@ def topk_rows(table: pa.Table, k: int, tie: str, key: str | None = None) -> pa.T
         idx = np.sort(np.unique(group, return_index=True)[1])
     first = np.searchsorted(q[idx], q[idx], side="left")
     return table.take(idx[np.arange(idx.shape[0]) - first < k])
+
+
+def _topk_fold(tables, k: int, tie: str, key: str | None = None, by: str = "q"):
+    """The :func:`topk_rows` of a stream of candidate tables, folded one
+    table at a time, so at most |queries| x k rows are held between
+    tables; None for an empty stream."""
+    best = None
+    for found in tables:
+        if best is not None:
+            found = pa.concat_tables([best, found])
+        best = topk_rows(found, k, tie, key, by)
+    return best
 
 
 def _ring_search(
@@ -389,15 +413,14 @@ def round_kernel(
             names=["q", *cols, "dist2"],
         )
 
-    def ring_round(batches):
-        best = None
+    def found(batches):
         for batch in batches:
             arrays = [batch.column(c).to_numpy(zero_copy_only=False) for c in geom]
             for rows, slot in pairs(batch):
-                found = hits(batch, arrays, rows, slot)
-                if best is not None:
-                    found = pa.concat_tables([best, found])
-                best = topk_rows(found, k, tie, key)
+                yield hits(batch, arrays, rows, slot)
+
+    def ring_round(batches):
+        best = _topk_fold(found(batches), k, tie, key)
         if best is not None:
             yield from best.to_batches()
 
@@ -644,23 +667,24 @@ def knn_join(
     return res
 
 
-def _edge_cells(alat, alng, blat, blng, extra_rad) -> pd.Series:
-    """Vectorized body of the two cell-bound UDFs: the <=4-cell (or 6-face)
-    cell-union bound of each edge's bounding cap expanded by ``extra_rad``
-    (scalar or per-row array, radians).  Bounding-cap level from the
-    MIN_WIDTH metric, then the (n, 4) vertex-neighbors column kernel; edges
-    too long for any single level register under their face cells.  With
-    ``extra_rad`` 0.0 the cap is unchanged bit for bit: its radius is at
-    most pi, so min(radius + 0.0, pi) == radius."""
+def _f64(values) -> np.ndarray:
+    return values.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+
+
+def _edge_cells(alat, alng, blat, blng, extra_rad=0.0):
+    """Vectorized body of the two cell-bound Arrow UDFs: the <=4-cell (or
+    6-face) cell-union bound of each edge's bounding cap expanded by
+    ``extra_rad`` (scalar or per-row array, radians).  Bounding-cap level
+    from the MIN_WIDTH metric, then the (n, 4) vertex-neighbors column
+    kernel; edges too long for any single level register under their face
+    cells.  With ``extra_rad`` 0.0 the cap is unchanged bit for bit: its
+    radius is at most pi, so min(radius + 0.0, pi) == radius.  The lists
+    are one offsets-built ``ListArray``, with no per-row Python."""
     from ..s2core import cellid as ci
     from ..s2core import coords, metrics
 
-    ax, ay, az = coords.latlng_to_xyz(
-        alat.to_numpy(dtype=np.float64), alng.to_numpy(dtype=np.float64)
-    )
-    bx, by, bz = coords.latlng_to_xyz(
-        blat.to_numpy(dtype=np.float64), blng.to_numpy(dtype=np.float64)
-    )
+    ax, ay, az = coords.latlng_to_xyz(_f64(alat), _f64(alng))
+    bx, by, bz = coords.latlng_to_xyz(_f64(blat), _f64(blng))
     mx, my, mz = ax + bx, ay + by, az + bz
     mn = np.sqrt(mx * mx + my * my + mz * mz)
     mn = np.where(mn == 0, 1.0, mn)  # antipodal: radius becomes ~pi anyway
@@ -677,23 +701,18 @@ def _edge_cells(alat, alng, blat, blng, extra_rad) -> pd.Series:
         np.frexp(metrics.MIN_WIDTH.deriv / safe)[1] - 1, 0, 30
     ).astype(np.int64) - 1
 
-    n = ax.shape[0]
-    out = np.empty(n, dtype=object)
     fine = lvl >= 0
+    offsets = np.zeros(fine.shape[0] + 1, dtype=np.int32)
+    np.cumsum(np.where(fine, 4, 6), out=offsets[1:])
+    values = np.empty(offsets[-1], dtype=np.int64)
+    start = offsets[:-1, None]
     if fine.any():
         leafs = ci.from_xyz(mx[fine], my[fine], mz[fine])
         neigh = ci.vertex_neighbors(leafs, np.minimum(lvl[fine], 29))
-        signed = ci.to_signed(neigh.reshape(-1)).reshape(-1, 4)
-        for k, idx in enumerate(np.nonzero(fine)[0]):
-            out[idx] = signed[k].tolist()
-    if (~fine).any():
-        faces = [
-            int(np.int64(np.uint64(ci.CellId.from_face(f).id) ^ np.uint64(1 << 63)))
-            for f in range(6)
-        ]
-        for idx in np.nonzero(~fine)[0]:
-            out[idx] = faces
-    return pd.Series(out)
+        values[start[fine] + np.arange(4)] = ci.to_signed(neigh.reshape(-1)).reshape(-1, 4)
+    faces = ci.to_signed([ci.CellId.from_face(f).id for f in range(6)])
+    values[start[~fine] + np.arange(6)] = faces
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(values))
 
 
 def edge_register_cells_udf():
@@ -702,12 +721,7 @@ def edge_register_cells_udf():
     a conservative cover of the whole edge, so covering-overlap candidate
     generation is complete (the shape-index registration analogue,
     mutable_s2shape_index.d:929-1050, via S2Cap.GetCellUnionBound)."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def reg(alat: pd.Series, alng: pd.Series, blat: pd.Series, blng: pd.Series) -> pd.Series:
-        return _edge_cells(alat, alng, blat, blng, 0.0)
-
-    return reg
+    return F.arrow_udf(_edge_cells, T.ArrayType(T.LongType()))
 
 
 def edge_buffer_cells_udf():
@@ -716,17 +730,10 @@ def edge_buffer_cells_udf():
     radius — the covering of "everything within r of this edge", used by
     the table-to-table kNN join's distributed ring expansion."""
 
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def reg(
-        alat: pd.Series,
-        alng: pd.Series,
-        blat: pd.Series,
-        blng: pd.Series,
-        extra_rad: pd.Series,
-    ) -> pd.Series:
-        return _edge_cells(alat, alng, blat, blng, extra_rad.to_numpy(dtype=np.float64))
+    def buffer_cells(alat, alng, blat, blng, extra_rad):
+        return _edge_cells(alat, alng, blat, blng, _f64(extra_rad))
 
-    return reg
+    return F.arrow_udf(buffer_cells, T.ArrayType(T.LongType()))
 
 
 def register_edges(edges_df: DataFrame) -> DataFrame:
@@ -1148,6 +1155,66 @@ def knn_edges_to_cells(
     )
 
 
+_IDX_ENDS = ("alat", "alng", "blat", "blng")
+_Q_ENDS = ("qalat", "qalng", "qblat", "qblng")
+_PAIR_XYZ = (*_EDGE_XYZ, "cx", "cy", "cz", "dx", "dy", "dz")
+
+
+def _table_round(cand: DataFrame, r2: float, k: int, edge_id_col: str) -> DataFrame:
+    """One round of :func:`knn_edges_join_tables` over its candidate pairs
+    ``cand`` (query_id, <edge id>, alat..blng, qalat..qblng), a (query,
+    edge) possibly more than once: the SQL xyz of both edges (edgedist, so
+    dist2 keeps the fragment's bits), ONE ``mapInArrow`` that scores with
+    the pair twin (edgepair), cuts at ``r2`` and cuts each partition to its
+    per-query top-k (:func:`topk_rows`, one row per (query, edge)), ONE
+    exchange by query_id of at most P x |queries| x k rows, and the same
+    reducer again, which ranks each query's rows and tags them with ``n``,
+    the query's row count.  Returns (query_id, <edge id>, dist2, rank, n)."""
+    xyz = cand.selectExpr(
+        "query_id",
+        edge_id_col,
+        *edgedist.xyz_exprs("alat", "alng", "a"),
+        *edgedist.xyz_exprs("blat", "blng", "b"),
+        *edgedist.xyz_exprs("qalat", "qalng", "c"),
+        *edgedist.xyz_exprs("qblat", "qblng", "d"),
+    )
+    ids = ["query_id", edge_id_col]
+
+    def topk(tables):
+        return _topk_fold(tables, k, edge_id_col, edge_id_col, by="query_id")
+
+    def table_topk(batches):
+        def found():
+            for batch in batches:
+                ends = (batch.column(c).to_numpy(zero_copy_only=False) for c in _PAIR_XYZ)
+                dist2 = edgepair._pair_dist2_np(*ends)
+                keep = pa.array(np.nonzero(dist2 <= r2)[0])
+                yield pa.Table.from_arrays(
+                    [*batch.select(ids).take(keep).columns, pa.array(dist2).take(keep)],
+                    names=[*ids, "dist2"],
+                )
+
+        best = topk(found())
+        if best is not None:
+            yield from best.to_batches()
+
+    def table_rank(batches):
+        best = topk(pa.Table.from_batches([batch]) for batch in batches)
+        if best is None:
+            return
+        q = _runs(best.column("query_id"))
+        first = np.searchsorted(q, q, side="left")
+        rank = np.arange(q.shape[0]) - first + 1
+        n = np.searchsorted(q, q, side="right") - first
+        best = best.append_column("rank", pa.array(rank.astype(np.int32)))
+        yield from best.append_column("n", pa.array(n.astype(np.int32))).to_batches()
+
+    fields = [*(xyz.schema[c] for c in ids), T.StructField("dist2", T.DoubleType())]
+    ranked = [*fields, T.StructField("rank", T.IntegerType()), T.StructField("n", T.IntegerType())]
+    scored = xyz.mapInArrow(table_topk, T.StructType(fields))
+    return scored.repartition("query_id").mapInArrow(table_rank, T.StructType(ranked))
+
+
 def knn_edges_join_tables(
     query_edges_df: DataFrame,
     index_edges_df: DataFrame,
@@ -1163,18 +1230,32 @@ def knn_edges_join_tables(
     of ``query_edges_df``, the k nearest edges of ``index_edges_df``.
 
     This is the 100 TB shape of the kNN family: both sides stay
-    DataFrames end to end.  Each round r buffers every still-pending query
-    edge by r (edge_buffer_cells_udf — a per-row <=4/6-cell covering of
-    "everything within r of the edge"), candidate-joins against the
-    registered index cells with a prefix equi-join at the index's min
-    registered level (+ per-level equi-joins for coarser buffer cells —
-    prefix sharing is complete for nested cells, over-generation is merely
-    scored away), scores the engine-shared pair fragment, and certifies a
-    query DONE when its k-th distance is <= r (the buffer covering proves
-    nothing nearer was missed).  Finished queries leave the pending set by
-    anti-join; the driver never holds geometry or results — only the round
-    counter.  Stragglers after max_rounds (antipodal-gap cases) fall back
-    to a broadcast cross join of the (small) remainder; a straggler handful
+    DataFrames end to end, and the pending set is a DataFrame, so the loop
+    is this function's own; its scoring and ranking are the driver-list
+    variants' (:func:`topk_rows`).  Each round r plans:
+
+    * the buffer cells of every still-pending query edge at r
+      (edge_buffer_cells_udf — a per-row <=4/6-cell covering of
+      "everything within r of the edge"), checkpointed with the query
+      endpoints;
+    * the candidate joins against the registered index cells: a prefix
+      equi-join at the index's min registered level, plus one equi-join
+      per coarser buffer-cell level (prefix sharing is complete for nested
+      cells; over-generation is merely scored away).  Each candidate row
+      carries both edges' endpoints, so no geometry table is joined;
+    * :func:`_table_round`: the SQL xyz, one ``mapInArrow`` that scores,
+      cuts at r and keeps each partition's per-query top-k, one exchange
+      by query_id of at most P x |pending| x k rows (P: the candidate
+      partitions), and the same reducer after it, ranking each query and
+      counting its rows.
+
+    A query with k rows is certified DONE (every row is inside r, and the
+    buffer covering proves nothing nearer was missed); the finished rows
+    are kept and the query leaves the pending set by anti-join.  The
+    driver never holds geometry or results, only the round counter and
+    counts.  Stragglers after max_rounds (antipodal-gap cases) take one
+    more :func:`_table_round` over their cross join with the index, with
+    no distance cut: it still scans the whole index.  A straggler handful
     cuts over to it early only when the registered index's row count is
     at most ``_BRUTE_SCAN_ROWS``.
 
@@ -1187,59 +1268,18 @@ def knn_edges_join_tables(
     # the registered frame (see registered_stats)
     stats = registered_stats(registered)
     jl = int(stats["min_level"])
-    # candidate rows CARRY the index-edge endpoints from the registered
-    # table (one persisted artifact) — the old shape joined candidates
-    # back to a separate checkpointed idx_xyz table on edge_id every
-    # round, a full index-sized shuffle join that the numpy scorer
-    # makes unnecessary (there is no 62-intermediate expression tree
-    # left for CollapseProject to blow up)
     keyed_idx = registered.withColumn(
         "_jk", kernels.parent_signed(F.col("ecell"), jl)
-    ).select("_jk", edge_id_col, "alat", "alng", "blat", "blng")
+    ).select("_jk", edge_id_col, *_IDX_ENDS)
 
     q = query_edges_df.select(
         F.col(query_id_col).alias("query_id"),
-        F.col("alat").alias("qalat"),
-        F.col("alng").alias("qalng"),
-        F.col("blat").alias("qblat"),
-        F.col("blng").alias("qblng"),
+        *(F.col(c).alias(qc) for c, qc in zip(_IDX_ENDS, _Q_ENDS)),
     )
-    idx_geom = index_edges_df.select(
-        edge_id_col, "alat", "alng", "blat", "blng"
-    )
-    # lazy: the first round's broadcast build materializes it (an eager
-    # checkpoint here was one extra pre-loop job per call)
-    q_xyz = q.selectExpr(
-        "query_id",
-        *edgedist.xyz_exprs("qalat", "qalng", "c"),
-        *edgedist.xyz_exprs("qblat", "qblng", "d"),
-    ).localCheckpoint(eager=False)
-
+    idx_geom = index_edges_df.select(edge_id_col, *_IDX_ENDS)
+    pair = ["query_id", edge_id_col, *_IDX_ENDS, *_Q_ENDS]
     buffer_cells = edge_buffer_cells_udf()
     qlvl = _cell_level("qcell")
-
-    # numpy pair scorer (bit-identical SQL twin, edgepair._pair_dist2_np)
-    # — replaces the 62-intermediate projection whose analysis cost once
-    # needed constraint propagation switched off; xyz endpoints remain
-    # SQL-computed checkpointed columns
-    pair_udf = edgepair.pair_dist2_udf()
-
-    def _score(cand: DataFrame) -> DataFrame:
-        # cand carries (query_id, edge_id, alat..blng); the query xyz
-        # rides in via a broadcast of the (small) checkpointed q_xyz,
-        # the index xyz is computed inline (same SQL trig exprs —
-        # bit-identical to a precomputed column)
-        cand = _with_edge_xyz(cand.join(bc_q(q_xyz), "query_id"))
-        scored = cand.withColumn(
-            "dist2",
-            pair_udf(
-                F.col("ax"), F.col("ay"), F.col("az"),
-                F.col("bx"), F.col("by"), F.col("bz"),
-                F.col("cx"), F.col("cy"), F.col("cz"),
-                F.col("dx"), F.col("dy"), F.col("dz"),
-            ),
-        )
-        return scored.select("query_id", edge_id_col, "dist2")
 
     # each round's pending/topk are localCheckpoint'ed: the anti-join of
     # round t otherwise NESTS round t-1's full scoring plan, and the
@@ -1262,24 +1302,15 @@ def knn_edges_join_tables(
     cutover = False
     radius = _TARGET_SEED_DEG
     for _ in range(max_rounds):
-        r2 = chord2_from_radians(math.radians(min(radius, 170.0)))
+        ring = math.radians(min(radius, 170.0))
+        r2 = chord2_from_radians(ring)
         # ONE evaluation of the buffer-cell kernel per round: the frame
         # feeds the fine join, the coarse-level collect and the
         # per-level joins, so checkpoint it (lazily — the coarse-level
         # collect below materializes it)
         cells = pending.select(
-            "query_id",
-            F.explode(
-                F.array_distinct(
-                    buffer_cells(
-                        F.col("qalat"),
-                        F.col("qalng"),
-                        F.col("qblat"),
-                        F.col("qblng"),
-                        F.lit(math.radians(min(radius, 170.0))),
-                    )
-                )
-            ).alias("qcell"),
+            "*",
+            F.explode(F.array_distinct(buffer_cells(*_Q_ENDS, F.lit(ring)))).alias("qcell"),
         ).withColumn("_ql", qlvl).localCheckpoint(eager=False)
 
         coarse_levels = [
@@ -1292,45 +1323,30 @@ def knn_edges_join_tables(
         fine = cells.filter(F.col("_ql") >= jl).withColumn(
             "_jk", kernels.parent_signed(F.col("qcell"), jl)
         )
-        cand = keyed_idx.join(bc_q(fine), "_jk").select(
-            "query_id", edge_id_col, "alat", "alng", "blat", "blng"
-        )
+        cand = keyed_idx.join(bc_q(fine), "_jk").select(*pair)
         for lvl in coarse_levels:
             cj = (
                 registered.withColumn(
                     "qcell", kernels.parent_signed(F.col("ecell"), lvl)
                 )
-                .select(
-                    "qcell", edge_id_col, "alat", "alng", "blat", "blng"
-                )
+                .select("qcell", edge_id_col, *_IDX_ENDS)
                 .join(bc_q(cells.filter(F.col("_ql") == lvl)), "qcell")
-                .select(
-                    "query_id", edge_id_col, "alat", "alng", "blat", "blng"
-                )
+                .select(*pair)
             )
             cand = cand.unionByName(cj)
-        # one exchange for dedup + window (see knn_edges_join)
-        cand = cand.repartition("query_id").dropDuplicates(
-            ["query_id", edge_id_col]
-        )
 
-        scored = _score(cand).filter(F.col("dist2") <= F.lit(r2))
-        topk = _rank(scored, k, edge_id_col).localCheckpoint(eager=True)
+        topk = _table_round(cand, r2, k, edge_id_col).localCheckpoint(eager=True)
         # the round's answer is materialized: its buffer cells are done
         free(cells)
         topks.append(topk)
-        # a query is certified complete when its k-th distance is inside
-        # the ring (the buffer covering proves nothing nearer was missed)
-        done_q = (
-            topk.groupBy("query_id")
-            .agg(F.count(F.lit(1)).alias("_n"), F.max("dist2").alias("_kth"))
-            .filter((F.col("_n") >= k) & (F.col("_kth") <= F.lit(r2)))
-            .select("query_id")
-        )
-        finished = topk.join(done_q, "query_id", "left_semi")
+        # a query is certified complete with k rows: each is inside the
+        # ring (the r2 cut), and the buffer covering proves nothing nearer
+        # was missed
+        finished = topk.filter(F.col("n") >= k)
         results = finished if results is None else results.unionByName(finished)
+        done_ids = finished.filter(F.col("rank") == 1).select("query_id")
         superseded, pending = pending, pending.join(
-            bc_q(done_q), "query_id", "left_anti"
+            bc_q(done_ids), "query_id", "left_anti"
         ).localCheckpoint(eager=False)
         # one tiny count materializes the lazy checkpoint (the next
         # round's coarse-level collect would have paid it anyway) and
@@ -1357,10 +1373,9 @@ def knn_edges_join_tables(
         if radius > 180.0 * 2:
             break
 
-    # stragglers: broadcast the (small) remainder against the full index
+    # stragglers: the (small) remainder against the full index, uncut
     if n_pending > 0:
-        cand = pending.select("query_id").crossJoin(idx_geom)
-        topk = _rank(_score(cand), k, edge_id_col)
+        topk = _table_round(pending.crossJoin(idx_geom), math.inf, k, edge_id_col)
         results = topk if results is None else results.unionByName(topk)
     if results is None:
         # empty query table: no round certified and no stragglers —
@@ -1384,7 +1399,7 @@ def knn_edges_join_tables(
     # out holds the answer: every round frame still pinned is freed, and
     # out itself is handed to the session store, so release_caches frees
     # it (keyed by its own id, unique while the store holds it)
-    for df in (q_xyz, pending, *topks):
+    for df in (pending, *topks):
         free(df)
     shared(spark, None, ("knn_tables_result", id(out)), lambda: out)
     record = {"rounds": rounds, "n_brute": n_pending, "cutover": cutover}

@@ -274,7 +274,7 @@ def write_bucketed_index(
     tests/test_plan_shapes.py).  Returns the join_level baked into the
     stored ``join_key`` column."""
     if join_level is None:
-        join_level = int(index_df.agg(F.min("cov_level")).collect()[0][0])
+        join_level = min_cov_level(index_df)
     keyed = index_df.withColumn(
         "join_key", kernels.parent_signed(F.col("cell_signed"), join_level)
     )

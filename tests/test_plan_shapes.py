@@ -391,3 +391,55 @@ def test_knn_brute_round_is_one_kernel_without_cross_join(spark, entrymod, monke
         "CartesianProduct", "BroadcastNestedLoopJoin", "Window", "Exchange", "EvalPython"
     ):
         assert not any(name in op for op, _ in ops), plan
+
+
+def test_knn_table_round_is_two_kernels_around_one_exchange(spark, entrymod, monkeypatch):
+    """Every round of the table-to-table join, the straggler round
+    included, scores and ranks with the shared reducer: one MapInArrow
+    ``table_topk`` (score, r2 cut, per-partition top-k) above the
+    candidate joins or the cross join, ONE Exchange hashpartitioning on
+    query_id, and one MapInArrow ``table_rank`` (the same reducer, ranking
+    and counting) on top.  No window, no Python UDF evaluation, no dedup
+    aggregate, and no join on query_id against a query-geometry frame.
+    ``knn_table_join`` takes both kinds of round at this scale: one ring
+    round, then the straggler cutover."""
+    from s2geometry_d_spark.operators import knn
+
+    rounds = []
+    table_round = knn._table_round
+
+    def spy(cand, r2, *args, **kwargs):
+        rounds.append((r2, table_round(cand, r2, *args, **kwargs)))
+        return rounds[-1][1]
+
+    monkeypatch.setattr(knn, "_table_round", spy)
+    entrymod.release_caches(spark)
+    entrymod.queries()["knn_table_join"](spark, SF_DIR).collect()
+    assert [r2 < float("inf") for r2, _ in rounds] == [True, False]
+    for r2, frame in rounds:
+        plan = _plan(frame)
+        ops = _operators(frame)
+        kernels = [(op, up) for op, up in ops if op.startswith("MapInArrow")]
+        assert [op.split("(")[0] for op, _ in kernels] == [
+            "MapInArrow table_rank",
+            "MapInArrow table_topk",
+        ], plan
+        (rank, _), (topk, topk_up) = kernels
+        shuffles = [
+            (op, up) for op, up in ops if "Exchange" in op and "Broadcast" not in op
+        ]
+        assert len(shuffles) == 1, plan
+        exchange, exchange_up = shuffles[0]
+        assert exchange.startswith("Exchange hashpartitioning(query_id"), plan
+        assert rank in exchange_up and exchange in topk_up, plan
+        below = [op for op, up in ops if topk in up]
+        joins = [op for op in below if "Join" in op or "CartesianProduct" in op]
+        if r2 < float("inf"):
+            assert joins and all(op.startswith("BroadcastHashJoin") for op in joins), plan
+        else:
+            assert len(joins) == 1, plan
+            assert joins[0].startswith(("BroadcastNestedLoopJoin", "CartesianProduct")), plan
+        # the candidate joins key on cells; nothing joins on query_id
+        assert not any("query_id" in op for op in joins), plan
+        for name in ("Window", "EvalPython", "HashAggregate", "SortMergeJoin"):
+            assert not any(name in op for op, _ in ops), plan

@@ -10,7 +10,9 @@ that keeps each partition's top-k, reduced again on the driver by the same
 Spark, with the engine's SQL distance fragments as its scorers, for the
 exact coverings and acceptance radii of the new round (or the whole brute
 table and the distance limit) and asserts the same rows, ranks and
-``dist2`` bits, for all five ring-search variants.
+``dist2`` bits, for all five ring-search variants, and for the round of
+the table-to-table join, whose second reduce runs after an exchange by
+query id instead of on the driver.
 """
 
 import numpy as np
@@ -387,3 +389,75 @@ def test_brute_round_with_more_queries_than_pairs_bound(spark, monkeypatch):
     )
     assert got == want and len(got) == 8 * K
     points.unpersist()
+
+
+def _table_pairs(spark):
+    """Candidate pairs of the table-to-table join in two branches, one
+    partition each: branch 1 pairs every query with every edge, branch 2
+    (a coarse-level join) again with every third edge, so those pairs
+    arrive twice, from two partitions.  String query ids; ``sparse`` lies
+    west of the cluster with one edge (id 99) near it."""
+    rng = np.random.default_rng(14)
+    edges = []
+    for i in range(30):
+        la, ln = rng.uniform(-6.0, 6.0, 2)
+        da, dn = rng.uniform(-1.0, 1.0, 2)
+        ends = (-20.0 + la, -65.0 + ln, -20.0 + la + da, -65.0 + ln + dn)
+        edges.append((i, *map(float, ends)))
+    edges.append((99, -20.0, -79.5, -20.5, -79.0))
+    queries = [
+        ("q0", -20.0, -65.0, -19.0, -64.0),
+        ("q1", -23.0, -61.0, -23.5, -60.0),
+        ("sparse", -20.0, -80.0, -20.2, -80.5),
+    ]
+    names = ["query_id", "qalat", "qalng", "qblat", "qblng",
+             "edge_id", "alat", "alng", "blat", "blng"]
+
+    def branch(keep):
+        rows = [(*q, *e) for q in queries for e in edges if keep(e[0])]
+        return spark.sparkContext.parallelize(rows, 1).toDF(names)
+
+    return branch(lambda e: True).unionByName(branch(lambda e: e % 3 == 0))
+
+
+@pytest.mark.parametrize("ring_deg", [3.0, None])
+def test_table_round_matches_window_round(spark, ring_deg):
+    """``knn._table_round``, the table-to-table join's round (the straggler
+    round with no cut), against the window round it replaced: the SQL pair
+    fragment over the SQL xyz, the r2 cut, the (query, edge) dedup, a
+    ``row_number`` window over (dist2, edge_id) and each query's row count.
+    Same rows, ranks, counts and ``dist2`` bits; a pair arriving from both
+    branches is kept once, and ``sparse`` keeps its fewer than k rows."""
+    k = 3
+    cand = _table_pairs(spark)
+    assert cand.rdd.getNumPartitions() == 2
+    r2 = np.inf if ring_deg is None else chord2_from_radians(np.radians(ring_deg))
+    got = knn._table_round(cand, r2, k, "edge_id").collect()
+
+    scored = edgepair.with_pair_dist2(
+        knn._with_edge_xyz(
+            cand.selectExpr(
+                "*",
+                *edgedist.xyz_exprs("qalat", "qalng", "c"),
+                *edgedist.xyz_exprs("qblat", "qblng", "d"),
+            )
+        )
+    ).select("query_id", "edge_id", "dist2")
+    # a local relation, as in _score: the fragment's intermediates exhaust
+    # the optimizer's constraint inference under a filter
+    scored = spark.createDataFrame(scored.toArrow())
+    best = Window.partitionBy("query_id").orderBy(F.col("dist2").asc(), F.col("edge_id").asc())
+    want = (
+        scored.filter(F.col("dist2") <= F.lit(float(r2)))
+        .dropDuplicates(["query_id", "edge_id"])
+        .withColumn("rank", F.row_number().over(best))
+        .filter(F.col("rank") <= k)
+        .withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("query_id")))
+        .collect()
+    )
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    n = {r["query_id"]: r["n"] for r in want}
+    assert n["q0"] == n["q1"] == k
+    assert n["sparse"] == (k if ring_deg is None else 1)
+    # a pair of both branches is in the answer
+    assert any(r["edge_id"] % 3 == 0 for r in want)
