@@ -36,11 +36,11 @@ def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return tables.load_table(spark, sf_dir, "documents")
 
 
 def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return tables.load_table(spark, sf_dir, "embeddings")
 
 
 # deterministic edge fixture shared with the SQL oracle: chain points in
@@ -87,13 +87,14 @@ def _edges_registered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def release_caches(spark: SparkSession | None = None) -> int:
-    """Free and evict every frame the session store owns: the fixtures
-    (points, edges, polylines, chords, polygon and shape indexes), the
-    edge registrations operators built for their callers and the local
-    checkpoints that kNN results still read (``tables.free``).  Long-
-    lived sessions touching many sf_dirs or ad-hoc edge tables would
-    otherwise accumulate pinned storage for the application lifetime.  The
-    crossing payload broadcasts memoized on a frame are destroyed with it.
+    """Free and evict every frame the session store owns: the reads of
+    stored tables, the fixtures (points, edges, polylines, chords, polygon
+    and shape indexes), the edge registrations operators built for their
+    callers and the local checkpoints that kNN results still read
+    (``tables.free``).  Long-lived sessions touching many sf_dirs or
+    ad-hoc edge tables would otherwise accumulate pinned storage for the
+    application lifetime.  The crossing payload broadcasts memoized on a
+    frame are destroyed with it.
     Pass a SparkSession to release only that application's frames.
     Returns the number of frames released."""
     frames = tables.evict(spark)
@@ -971,7 +972,7 @@ def _q_text_format_roundtrip(spark, sf_dir):
     # DuckDB libm on ~0.5% of rows — invisible to the 9-digit float hash,
     # but the 15-digit formatted TEXT is itself the data here.
     pts = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        tables.load_table(spark, sf_dir, "orders")
         .select(F.col("o_orderkey").alias("point_id"))
         # the test parquet is one split: without a spread the whole %.15g
         # format+parse pipeline runs as a single task (guide §2.6; job
@@ -1129,9 +1130,7 @@ def _q_cell_area_stats(spark, sf_dir):
 
 
 def _q_tile_assignment(spark, sf_dir):
-    imgs = synth_images(spark, sf_dir)
-    extents = [0.5 + k / 10.0 for k in range(10)]  # generation rule, known
-    assigned = tiling.image_tile_assignment(imgs, known_extents=extents)
+    assigned = tiling.image_tile_assignment(synth_images(spark, sf_dir))
     return assigned.select(
         "image_id",
         "tile_x",
@@ -1147,9 +1146,7 @@ def _q_tile_assignment_stats(spark, sf_dir):
     mirroring the reference's published covering-ratio discipline
     (s2region_coverer.d:102-106).  Pinned by a pytest bound; quiet
     over-assignment regressions become visible here."""
-    imgs = synth_images(spark, sf_dir)
-    extents = [0.5 + k / 10.0 for k in range(10)]
-    stats = tiling.tile_assignment_stats(imgs, known_extents=extents)
+    stats = tiling.tile_assignment_stats(synth_images(spark, sf_dir))
     return stats.select(
         "image_id",
         "tile_x",
@@ -1167,9 +1164,7 @@ def _q_tile_containment(spark, sf_dir):
     cells.  The oracle states the expected invariant (81 probes, 0 missed
     per tile) from the image-id derivation alone, fully independent of the
     engine's geometry."""
-    imgs = synth_images(spark, sf_dir)
-    extents = [0.5 + k / 10.0 for k in range(10)]
-    return tiling.tile_containment_check(imgs, known_extents=extents)
+    return tiling.tile_containment_check(synth_images(spark, sf_dir))
 
 
 def _q_image_verify(spark, sf_dir):
@@ -1388,7 +1383,7 @@ def _q_event_chains(spark, sf_dir):
 
     from s2geometry_d_spark.operators import chains
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = tables.load_table(spark, sf_dir, "events").select(
         "event_id", "user_id"
     )
     w = Window.partitionBy("user_id").orderBy("event_id")

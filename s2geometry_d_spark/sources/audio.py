@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import tables
+
 N_SAMPLES = 4096
 SAMPLE_RATE = 16000
 _MULT1 = np.uint32(2654435761)
@@ -73,7 +75,7 @@ def decode_audio(data: bytes, fmt_hint: str = "pcm") -> np.ndarray:
 def synth_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One clip per document row (seed = doc_id), generated parallel in
     Arrow batches — same derivation the SQL oracle states."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = tables.load_table(spark, sf_dir, "documents").select("doc_id")
 
     def gen(batches):
         for pdf in batches:

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import tables
+
 W = H = 64
 _MULT1 = 2654435761
 _MULT2 = 2246822519
@@ -82,7 +84,7 @@ def synth_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parallelize generation: the documents parquet is a single file/split,
     # which would serialize the python generator on one core
     n_parts = spark.sparkContext.defaultParallelism
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(n_parts)
+    docs = tables.load_table(spark, sf_dir, "documents").repartition(n_parts)
 
     def gen(batches):
         for pdf in batches:
@@ -122,9 +124,10 @@ def synth_images(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def synth_images_cached(spark: SparkSession, sf_dir: str, cache_root: str | None = None) -> DataFrame:
     """Materialized image table (parquet) — the fact table is *stored*, not
-    regenerated per query; generation happens once per sf_dir.  The default
-    ``cache_root`` is ``.cache/images`` in the checkout holding this
-    package."""
+    regenerated per query; generation happens once per sf_dir, and the
+    table is read once per session (``tables.stored``) until it has to be
+    written again.  The default ``cache_root`` is ``.cache/images`` in the
+    checkout holding this package."""
     import os
 
     if cache_root is None:
@@ -134,8 +137,9 @@ def synth_images_cached(spark: SparkSession, sf_dir: str, cache_root: str | None
     path = os.path.join(cache_root, key)
     marker = os.path.join(path, "_SUCCESS")
     if not os.path.exists(marker):
+        tables.forget(spark, path)
         synth_images(spark, sf_dir).write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return tables.stored(spark, path)
 
 
 VIDEO_SCHEMA = T.StructType(
@@ -175,7 +179,7 @@ def synth_videos(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video table derived 1:1 from ``documents``: 6..12 deterministic
     frames per row (frame t = fake_pixels(video_frame_seed(doc_id, t)))."""
     n_parts = spark.sparkContext.defaultParallelism
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(n_parts)
+    docs = tables.load_table(spark, sf_dir, "documents").repartition(n_parts)
 
     def gen(batches):
         for pdf in batches:

@@ -42,16 +42,18 @@ SECTIONS = [
     ),
     (
         "tile_assignment",
-        "round-5 shape: per-tile area level (pure expressions, no lookup "
-        "join) and ONE ArrowEvalPython for tile_cells — the explode consumes "
+        "map-only: per-tile area level (pure expressions, no lookup join) "
+        "and ONE ArrowEvalPython for tile_cells, which returns each tile's "
+        "cells deduplicated, so no exchange follows it; the explode consumes "
         "the UDF call inline, so InferFiltersFromGenerate cannot split it "
         "into a doubled kernel (the round-4 finding)",
     ),
     (
         "tile_containment_check",
-        "single-exchange ancestor equi-join, no interpreted exists(), no "
-        "per-probe array duplication; the per-tile aggregate subtree is "
-        "localCheckpointed so three consumers read it once",
+        "the assignment kernel evaluates once, under one per-tile "
+        "collect_list; the tile's cell array rides through the 81x probe "
+        "explode and coverage is an in-row exists()/array_contains test, "
+        "with one more ArrowEvalPython (cell_from_latlng) per probe",
     ),
     (
         "edge_face_span",

@@ -42,9 +42,7 @@ class TestTiling:
         from s2geometry_d_spark.sources.images import synth_images_cached
 
         imgs = synth_images_cached(spark, SF_DIR)
-        assigned = image_tile_assignment(
-            imgs, known_extents=[0.5 + k / 10.0 for k in range(10)]
-        ).cache()
+        assigned = image_tile_assignment(imgs).cache()
         # every (image, tile) pair has at least one cell
         n_tiles = assigned.select("image_id", "tile_x", "tile_y").distinct().count()
         n_images = imgs.count()
@@ -72,9 +70,7 @@ class TestTiling:
         rnd = random.Random(7)
         imgs = synth_images_cached(spark, SF_DIR)
         sample_imgs = imgs.select("image_id", "lat", "lng", "extent_deg").limit(5).collect()
-        assigned = image_tile_assignment(
-            imgs, known_extents=[0.5 + k / 10.0 for k in range(10)]
-        )
+        assigned = image_tile_assignment(imgs)
         for img in sample_imgs:
             cells = {
                 (r.tile_x, r.tile_y, r.cell_id)
@@ -146,7 +142,8 @@ class TestReleaseCaches:
         bare = tables.spatial_points(spark, SF_DIR, with_cell=False)
         pts.count()
         assert pts.is_cached and bare.is_cached
-        assert entrymod.release_caches(spark) == 2
+        # the two points frames and the orders read they are built from
+        assert entrymod.release_caches(spark) == 3
         assert not [k for k in tables._POINTS_CACHE if k[0] == app]
         assert not pts.is_cached and not bare.is_cached
 

@@ -234,6 +234,11 @@ def test_tile_assignment_evaluates_kernel_once(spark, entrymod):
         df = entrymod.queries()[q](spark, SF_DIR)
         plan = _plan(df)
         assert plan.count("tile_cells(") == 1, (q, plan)
+        if q == "tile_assignment":
+            # the kernel deduplicates each tile's cells itself: the
+            # assignment is map-only, one Python node and no shuffle
+            assert plan.count("ArrowEvalPython") == 1, plan
+            assert "Exchange hashpartitioning" not in plan, plan
 
 
 def test_edge_face_span_evaluates_kernel_once(spark, entrymod):

@@ -204,3 +204,62 @@ def test_brute_region_result_survives_release(spark, entrymod):
     inside = points_in_regions(pts, [("cap", cap)]).drop("region_id")
     want = [(r["rank"], r["point_id"]) for r in knn.knn_brute_force(inside, anti, k=3).collect()]
     assert res.count() == 3 and sorted(got) == sorted(want)
+
+
+def test_stored_table_is_read_once_until_released(spark, entrymod):
+    """A stored table resolves its file listing once per session: every
+    later read is the same frame, until ``release_caches`` drops it."""
+    from s2geometry_d_spark.sources import tables
+
+    docs = entrymod._docs(spark, SF_DIR)
+    assert tables.load_table(spark, SF_DIR, "documents") is docs
+    assert entrymod._docs(spark, SF_DIR) is docs
+    assert entrymod._embeddings(spark, SF_DIR) is entrymod._embeddings(spark, SF_DIR)
+    assert entrymod._embeddings(spark, SF_DIR) is not docs
+    assert any(df is docs for df in tables._POINTS_CACHE.values())
+
+    assert entrymod.release_caches(spark) >= 2
+    assert not any(df is docs for df in tables._POINTS_CACHE.values())
+    fresh = entrymod._docs(spark, SF_DIR)
+    assert fresh is not docs and fresh.count() == docs.count()
+
+
+def test_rewritten_image_table_is_read_again(spark, tmp_path):
+    """When the image table has to be written again (its cache directory
+    is gone), the frame read before is replaced: the next read lists the
+    new files, never the deleted ones."""
+    import os
+    import shutil
+    from urllib.parse import urlparse
+
+    from s2geometry_d_spark.sources.images import synth_images_cached
+
+    root = str(tmp_path / "images")
+    first = synth_images_cached(spark, SF_DIR, cache_root=root)
+    assert synth_images_cached(spark, SF_DIR, cache_root=root) is first
+    n, old = first.count(), set(first.inputFiles())
+
+    shutil.rmtree(root)
+    again = synth_images_cached(spark, SF_DIR, cache_root=root)
+    assert again is not first
+    new = set(again.inputFiles())
+    assert new and not new & old
+    assert all(os.path.exists(urlparse(f).path) for f in new)
+    assert again.count() == n
+    assert synth_images_cached(spark, SF_DIR, cache_root=root) is again
+
+
+def test_streaming_output_reads_are_not_memoized(spark, tmp_path):
+    """A streaming sink grows between batches, so each read of it lists
+    the files there now."""
+    from s2geometry_d_spark.sources import tables
+    from s2geometry_d_spark.streaming.crossing_stream import read_crossing_pairs
+
+    out = str(tmp_path)
+    spark.createDataFrame([(1, 2)], ["a", "b"]).write.parquet(f"{out}/pairs")
+    first = read_crossing_pairs(spark, out)
+    assert first.count() == 1
+    spark.createDataFrame([(3, 4)], ["a", "b"]).write.mode("append").parquet(f"{out}/pairs")
+    second = read_crossing_pairs(spark, out)
+    assert second is not first and second.count() == 2
+    assert not any(out in str(k[1]) for k in tables._POINTS_CACHE)

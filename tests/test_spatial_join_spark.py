@@ -100,7 +100,7 @@ def test_tile_assignment_covers_face_seams(spark):
 
     rows = [(1, 0.0, 45.0, 8.0), (2, 35.264, 45.0, 8.0), (3, 88.0, 10.0, 8.0), (4, 0.0, 180.0, 8.0)]
     imgs = spark.createDataFrame(rows, ["image_id", "lat", "lng", "extent_deg"])
-    out = tiling.image_tile_assignment(imgs, known_extents=[8.0]).toPandas()
+    out = tiling.image_tile_assignment(imgs).toPandas()
     for img_id, clat, clng, ext in rows:
         sub = out[out.image_id == img_id]
         cells = ci.from_signed(sub["cell_id"].to_numpy())

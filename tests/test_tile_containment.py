@@ -38,7 +38,6 @@ def adversarial_images(spark):
 def test_adversarial_footprints_fully_covered(spark, adversarial_images):
     chk = tiling.tile_containment_check(
         adversarial_images,
-        known_extents=sorted({r[3] for r in ADVERSARIAL}),
         probes_per_axis=17,  # 289 probes/tile, 4x finer than the kernel grid
     )
     rows = chk.collect()
@@ -65,7 +64,6 @@ def test_huge_extent_footprints_fully_covered(spark):
     imgs = spark.createDataFrame(HUGE, ["image_id", "lat", "lng", "extent_deg"])
     chk = tiling.tile_containment_check(
         imgs,
-        known_extents=sorted({r[3] for r in HUGE}),
         probes_per_axis=17,
     )
     rows = chk.collect()
@@ -82,10 +80,7 @@ def test_assignment_levels_do_not_exceed_requested(spark, adversarial_images):
     (coarser than or equal to) the requested level."""
     from s2geometry_d_spark.functions import kernels
 
-    extents = sorted({r[3] for r in ADVERSARIAL})
-    assigned = tiling.image_tile_assignment(
-        adversarial_images, known_extents=extents
-    )
+    assigned = tiling.image_tile_assignment(adversarial_images)
     lvl = assigned.withColumn("cell_level", kernels.cell_level(F.col("cell_id")))
     bad = lvl.filter(F.col("cell_level") > F.col("level")).count()
     assert bad == 0
