@@ -83,3 +83,14 @@ def xyz_exprs(lat: str, lng: str, prefix: str) -> list[str]:
         XYZ_FROM_LATLNG[axis].format(lat=lat, lng=lng) + f" AS {prefix}{axis}"
         for axis in ("x", "y", "z")
     ]
+
+
+def xyz_columns(lat: str, lng: str) -> tuple:
+    """(x, y, z) Columns of the same lat/lng -> xyz: the expression tree of
+    ``cos(radians(lng)) * cos(radians(lat))`` etc. built from Columns."""
+    from pyspark.sql import functions as F
+
+    return tuple(
+        F.expr(XYZ_FROM_LATLNG[axis].format(lat=f"`{lat}`", lng=f"`{lng}`"))
+        for axis in ("x", "y", "z")
+    )

@@ -41,6 +41,19 @@ def parent_signed(cell: Column, level: int) -> Column:
     return cell.bitwiseAND(F.lit(-nl)).bitwiseOR(F.lit(nl))
 
 
+def cell_level_sql(col: str) -> str:
+    """SQL text of the level of the signed cell id in ``col``, from its
+    lowest set bit (2.0D: Spark would parse 2.0 as DECIMAL)."""
+    c = f"`{col}`"
+    return f"({MAX_LEVEL} - CAST((log2(CAST(({c} & -{c}) AS DOUBLE)) / 2.0D) AS INT))"
+
+
+def cell_level_expr(col: str) -> Column:
+    """:func:`cell_level_sql` as a native Column (the tree built from
+    Columns: ``30 - cast(log2(double(col & -col)) / 2.0 as int)``)."""
+    return F.expr(cell_level_sql(col))
+
+
 def cell_token(cell_signed: Column | str) -> Column:
     """Token of a signed-flipped cell id column (``cellid.token_of``): the
     unsigned id as 16 lower-case hex digits with its trailing zero nibbles

@@ -23,8 +23,10 @@ over a broadcast cell table:
 
 The plan is the persisted index scan, one ArrowEvalPython and one hash
 exchange of crossings only.  Tables whose smaller side is above the gate
-keep the shuffle path: an ancestor equi-join on cell keys, a pair distinct
-and the pair predicate behind the id joins.
+keep the shuffle path: the ancestor equi-join on cell keys shared with
+every join of two cell tables on nesting (``spatial_join.ancestor_keys``
+and ``spatial_join.nesting_join``), a pair distinct and the pair
+predicate behind the id joins.
 
 This is the door to polygon overlays: boolean ops need exactly "which
 edges of A cross edges of B".
@@ -48,10 +50,13 @@ from . import knn, spatial_join
 from .knn import registered_stats
 from .spatial_join import (
     RegionCovering,
+    ancestor_keys,
     cell_tables,
     covering_tables,
+    distinct_levels,
     hit_lists,
     match_coverings,
+    nesting_join,
 )
 
 # registered tables at or below this many (edge, cell) rows may be the
@@ -386,7 +391,7 @@ def crossing_pairs_self(
 
     reg = _reg_with_level(registered, edge_id_col)
     a_side = reg.select(F.col("ecell").alias("_key"), F.col(edge_id_col).alias("_ida"))
-    b_side = _ancestor_keys(reg, edge_id_col, "_idb", stats["levels"])
+    b_side = ancestor_keys(reg, "ecell", stats["levels"], F.col(edge_id_col).alias("_idb"))
     cand = (
         a_side.join(b_side, "_key")
         .filter(F.col("_ida") != F.col("_idb"))
@@ -399,39 +404,8 @@ def crossing_pairs_self(
     return _filter_pairs(cand, edges_df, edge_id_col, edges_df, edge_id_col, crossing_type)
 
 
-def _level_sql(col: str) -> str:
-    """SQL text of the level of the signed cell id in ``col`` — the same
-    expression tree as ``knn._cell_level`` (double literal marked D, which
-    Spark would otherwise parse as DECIMAL)."""
-    c = f"`{col}`"
-    return f"(30 - CAST((log2(CAST(({c} & -{c}) AS DOUBLE)) / 2.0D) AS INT))"
-
-
 def _reg_with_level(registered: DataFrame, id_col: str) -> DataFrame:
-    return registered.select(id_col, "ecell", F.expr(_level_sql("ecell")).alias("_lvl"))
-
-
-def _distinct_levels(reg: DataFrame) -> list[int]:
-    """Distinct registration levels of a derived (pruned) ``reg`` frame,
-    whose level set is not a function of the shared registered table —
-    that table's own levels come from ``registered_stats``."""
-    return sorted(int(r["_lvl"]) for r in reg.select("_lvl").distinct().collect())
-
-
-def _ancestor_keys(reg: DataFrame, id_col: str, out_id: str, levels: list[int]) -> DataFrame:
-    """(out_id, _key): each registered cell exploded to its ancestor at every
-    level in ``levels`` that is <= the cell's own level (incl. itself).
-    The array is parsed from ONE SQL text with BIGINT literals: built from
-    Columns it cost ~8 py4j calls per level."""
-    anc = ", ".join(
-        f"CASE WHEN (`_lvl` >= {l}) THEN ((`ecell` & {-n}L) | {n}L) END"
-        for l in levels
-        for n in [kernels.lsb_for_level(l)]
-    )
-    return (
-        reg.select(F.col(id_col).alias(out_id), F.explode(F.expr(f"array({anc})")).alias("_key"))
-        .filter(F.col("_key").isNotNull())
-    )
+    return registered.select(id_col, "ecell", kernels.cell_level_expr("ecell").alias("_lvl"))
 
 
 def crossing_pairs_join(
@@ -516,17 +490,9 @@ def crossing_pairs_join(
             .drop("_pk")
         )
     # the pruned frame's level set is input-dependent: collect it directly
-    b_levels = _distinct_levels(b_reg) if prune_b_by_a else b_stats["levels"]
-
-    dir1 = a_reg.select(F.col("ecell").alias("_key"), F.col(a_id_col).alias("id_a")).join(
-        _ancestor_keys(b_reg, b_id_col, "id_b", a_levels), "_key"
-    )
-    cand = dir1.select("id_a", "id_b")
-    if b_levels:
-        dir2 = _ancestor_keys(a_reg, a_id_col, "id_a", b_levels).join(
-            b_reg.select(F.col("ecell").alias("_key"), F.col(b_id_col).alias("id_b")),
-            "_key",
-        )
-        cand = cand.unionByName(dir2.select("id_a", "id_b"))
-    cand = cand.distinct()
+    b_levels = distinct_levels(b_reg) if prune_b_by_a else b_stats["levels"]
+    cand = nesting_join(
+        a_reg, "ecell", a_levels, [F.col(a_id_col).alias("id_a")],
+        b_reg, "ecell", b_levels, [F.col(b_id_col).alias("id_b")],
+    ).distinct()
     return _filter_pairs(cand, a_edges, a_id_col, b_edges, b_id_col, crossing_type)

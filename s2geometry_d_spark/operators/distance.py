@@ -19,6 +19,7 @@ from ..functions.localdf import local_df
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import edgedist
 from ..s2core.regions import Cap, chord2_from_radians
 from .spatial_join import candidate_match_kernel, compute_coverings
 
@@ -50,11 +51,7 @@ def within_distance_join(
         )
     qdf = local_df(spark, qrows, ["query_id", "qx", "qy", "qz"])
     cand = cand.join(F.broadcast(qdf), "query_id")
-    lat_r = F.radians(F.col(lat_col))
-    lng_r = F.radians(F.col(lng_col))
-    px = F.cos(lng_r) * F.cos(lat_r)
-    py = F.sin(lng_r) * F.cos(lat_r)
-    pz = F.sin(lat_r)
+    px, py, pz = edgedist.xyz_columns(lat_col, lng_col)
     d2 = (
         (px - F.col("qx")) * (px - F.col("qx"))
         + (py - F.col("qy")) * (py - F.col("qy"))
@@ -86,7 +83,6 @@ def within_distance_polyline(
     engine-shared closed-form point-to-edge distance — the same fragment
     the SQL oracle evaluates.
     """
-    from ..functions import edgedist
     from ..s2core.polyline import BufferedRegion, Polyline
     from .spatial_join import candidate_join_auto
 
@@ -299,11 +295,7 @@ def group_cap_bounds(
     Two native aggregation passes (partial aggregation both times; the
     second pass re-joins the tiny centroid table, broadcast).
     """
-    lat_r = F.radians(F.col(lat_col))
-    lng_r = F.radians(F.col(lng_col))
-    px = F.cos(lng_r) * F.cos(lat_r)
-    py = F.sin(lng_r) * F.cos(lat_r)
-    pz = F.sin(lat_r)
+    px, py, pz = edgedist.xyz_columns(lat_col, lng_col)
     with_xyz = points_df.withColumn("_px", px).withColumn("_py", py).withColumn("_pz", pz)
 
     sums = with_xyz.groupBy(group_col).agg(

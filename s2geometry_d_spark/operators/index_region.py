@@ -47,6 +47,7 @@ from pyspark.sql import types as T
 from ..functions import kernels
 from ..s2core.cellid import CellId
 from ..s2core.regions import Cell, chord2_between
+from .spatial_join import ancestor_keys, distinct_levels
 
 _FLIP = 1 << 63
 _MASK = (1 << 64) - 1
@@ -169,22 +170,19 @@ def cells_region_relation(
 
     Plan: one prefix equi-join at ``join_level`` captures every
     overlapping (T, C) pair for targets at level >= join_level (nested
-    cells share every coarser ancestor); coarser targets get one extra
-    equi-join per distinct coarse level, where only SUBDIVIDED is possible
-    (covering cells are all >= join_level).  Python kernels run only on
-    the dim>=1 boundary C ⊇ T slice; every other branch is pure bit math.
+    cells share every coarser ancestor); coarser targets, where only
+    SUBDIVIDED is possible (covering cells are all >= join_level), get one
+    more equi-join against the covering cells' distinct ancestors at the
+    coarse target levels (``spatial_join.ancestor_keys``).  Python kernels
+    run only on the dim>=1 boundary C ⊇ T slice; every other branch is
+    pure bit math.
     """
     if join_level is None:
         from .poly_index import min_cov_level
 
         join_level = min_cov_level(index_df)
 
-    t_lsb = F.col(cell_col).bitwiseAND(-F.col(cell_col))
-    t_level = (
-        F.lit(kernels.MAX_LEVEL)
-        - (F.log2(t_lsb.cast("double")) / F.lit(2.0)).cast("int")
-    )
-    targets = targets_df.withColumn("_t_level", t_level)
+    targets = targets_df.withColumn("_lvl", kernels.cell_level_expr(cell_col))
 
     keyed_idx = index_df.withColumn(
         "_jk", kernels.parent_signed(F.col("cell_signed"), join_level)
@@ -195,7 +193,7 @@ def cells_region_relation(
         # and kernel branches below re-execute only a map-side join
         keyed_idx = F.broadcast(keyed_idx)
 
-    fine = targets.filter(F.col("_t_level") >= join_level).withColumn(
+    fine = targets.filter(F.col("_lvl") >= join_level).withColumn(
         "_jk", kernels.parent_signed(F.col(cell_col), join_level)
     )
     cand = fine.join(keyed_idx, "_jk", "inner")
@@ -255,32 +253,22 @@ def cells_region_relation(
     pieces = [plain, kerned]
 
     # coarse targets (level < join_level): every covering cell is finer, so
-    # the only possible relation is SUBDIVIDED — equi-join per level on the
-    # covering cell's ancestor AT the target's level.
-    coarse = targets.filter(F.col("_t_level") < join_level)
-    coarse_levels = [
-        int(r["_t_level"]) for r in coarse.select("_t_level").distinct().collect()
-    ]
-    for lvl in coarse_levels:
-        lvl_idx = (
-            index_df.withColumn(
-                cell_col, kernels.parent_signed(F.col("cell_signed"), lvl)
-            )
-            .select(cell_col)
-            .distinct()
-        )
+    # the only possible relation is SUBDIVIDED — one equi-join on the
+    # covering cells' ancestors at the coarse targets' levels.
+    coarse = targets.filter(F.col("_lvl") < join_level)
+    coarse_levels = distinct_levels(coarse)
+    if coarse_levels:
+        idx = index_df.select("cell_signed", kernels.cell_level_expr("cell_signed").alias("_lvl"))
+        idx_keys = ancestor_keys(idx, "cell_signed", coarse_levels).toDF(cell_col).distinct()
         if broadcast_index:
-            lvl_idx = F.broadcast(lvl_idx)
-        cj = (
-            coarse.filter(F.col("_t_level") == lvl)
-            .join(lvl_idx, cell_col, "inner")
-            .select(
+            idx_keys = F.broadcast(idx_keys)
+        pieces.append(
+            coarse.join(idx_keys, cell_col).select(
                 *base_cols,
                 F.lit(False).alias("_contains"),
                 F.lit(True).alias("_may"),
             )
         )
-        pieces.append(cj)
 
     flags = pieces[0]
     for p in pieces[1:]:
@@ -289,5 +277,5 @@ def cells_region_relation(
         F.max("_contains").alias("contains"),
         F.max("_may").alias("may_intersect"),
     )
-    out = targets.drop("_t_level").join(agg, cell_col, "left")
+    out = targets.drop("_lvl").join(agg, cell_col, "left")
     return out.fillna(False, subset=["contains", "may_intersect"])

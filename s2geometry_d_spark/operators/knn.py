@@ -63,10 +63,12 @@ when no cutover was due, so nothing was counted).
 
 :func:`knn_edges_join_tables` (the query side is a DataFrame) runs its
 rounds over a pending DataFrame, under the same cutover gate, and
-records the straggler count as ``n_brute`` instead of ids.  Its rounds
-score and rank with the same reducer: one ``mapInArrow`` pass keeps each
-partition's per-query top-k, and after one exchange by query id
-:func:`topk_rows` runs again, in place of the driver-side reduce
+records the straggler count as ``n_brute`` instead of ids.  Its
+candidates are the nested (buffer cell, registered cell) pairs of the
+shared two-way ancestor-key join (``spatial_join.nesting_join``), and its
+rounds score and rank with the same reducer: one ``mapInArrow`` pass
+keeps each partition's per-query top-k, and after one exchange by query
+id :func:`topk_rows` runs again, in place of the driver-side reduce
 (:func:`_table_round`).
 
 Correctness anchor: brute-force cross join comparison, the same oracle the
@@ -94,6 +96,8 @@ from .spatial_join import (
     buffered_segment_covering,
     coarse_prefix_filter,
     compute_coverings,
+    distinct_levels,
+    nesting_join,
 )
 
 # the largest table the straggler cutover may scan in full
@@ -106,15 +110,8 @@ _BRUTE_PAIRS = 1 << 16
 _TARGET_SEED_DEG = 1.0
 
 
-def _point_xyz(lat_col: str, lng_col: str):
-    """The engine's SQL xyz of a lat/lng point: (px, py, pz) columns."""
-    lat_r = F.radians(F.col(lat_col))
-    lng_r = F.radians(F.col(lng_col))
-    return F.cos(lng_r) * F.cos(lat_r), F.sin(lng_r) * F.cos(lat_r), F.sin(lat_r)
-
-
 def _chord2_to_query_expr(lat_col: str, lng_col: str):
-    px, py, pz = _point_xyz(lat_col, lng_col)
+    px, py, pz = edgedist.xyz_columns(lat_col, lng_col)
     dx = px - F.col("qx")
     dy = py - F.col("qy")
     dz = pz - F.col("qz")
@@ -123,13 +120,6 @@ def _chord2_to_query_expr(lat_col: str, lng_col: str):
 
 def _max_ring(max_distance_deg: float | None) -> float:
     return 170.0 if max_distance_deg is None else min(max_distance_deg, 170.0)
-
-
-def _cell_level(col: str):
-    """Level of the signed cell id in ``col``, from its lowest set bit."""
-    return F.lit(30) - (
-        F.log2(F.col(col).bitwiseAND(-F.col(col)).cast("double")) / F.lit(2.0)
-    ).cast("int")
 
 
 def frame_rows(df: DataFrame, key: str | None = None) -> int:
@@ -633,7 +623,8 @@ def knn_join(
         if coverings is not None and getattr(points_df, "_s2_cell_stored", False):
             cond = coarse_prefix_filter(coverings, cell_col)
             src = src if cond is None else src.filter(cond)
-        pxyz = [c.alias(n) for c, n in zip(_point_xyz(lat_col, lng_col), _POINT_XYZ)]
+        xyz = edgedist.xyz_columns(lat_col, lng_col)
+        pxyz = [c.alias(n) for c, n in zip(xyz, _POINT_XYZ)]
         return _round_frame(
             src.select("*", *pxyz),
             coverings,
@@ -807,10 +798,10 @@ def registered_stats(registered: DataFrame) -> dict:
       (performance-conservative, never correctness-relevant — ring
       doubling proves completeness for ANY seed).  A crossing-only cell
       table (id, ecell) has no endpoint columns, and no span;
-    * ``min_level`` — the coarsest registered cell level, the prefix-join
-      level of :func:`knn_edges_join_tables`;
+    * ``min_level`` — the coarsest registered cell level;
     * ``levels`` — every registered cell level, ascending: the ancestor
-      levels of the crossing pair sweeps;
+      levels of the nesting joins (``spatial_join.nesting_join``) of
+      :func:`knn_edges_join_tables` and the crossing pair sweeps;
     * ``rows`` — ``count(*)``.  Every edge registers under at least one
       cell, so this bounds the edge table the table variant's brute probe
       scans; the crossing sweeps pick broadcast or shuffle joins by it.
@@ -819,7 +810,7 @@ def registered_stats(registered: DataFrame) -> dict:
 
 
 def _registered_stats(registered: DataFrame) -> dict:
-    level = _cell_level("ecell")
+    level = kernels.cell_level_expr("ecell")
     bounds = []
     if {"alat", "alng", "blat", "blng"} <= set(registered.columns):
         bounds = [
@@ -1238,10 +1229,12 @@ def knn_edges_join_tables(
       (edge_buffer_cells_udf — a per-row <=4/6-cell covering of
       "everything within r of the edge"), checkpointed with the query
       endpoints;
-    * the candidate joins against the registered index cells: a prefix
-      equi-join at the index's min registered level, plus one equi-join
-      per coarser buffer-cell level (prefix sharing is complete for nested
-      cells; over-generation is merely scored away).  Each candidate row
+    * the nested (buffer cell, registered cell) pairs of
+      ``spatial_join.nesting_join``: an index edge within r of a query
+      edge has a point in a buffer cell of the query and in a registered
+      cell of its own, and cells sharing a point are nested, so no
+      candidate is missed and no pair that is not nested is scored (an
+      equal-cell pair comes twice; the reducer folds it).  Each candidate row
       carries both edges' endpoints, so no geometry table is joined;
     * :func:`_table_round`: the SQL xyz, one ``mapInArrow`` that scores,
       cuts at r and keeps each partition's per-query top-k, one exchange
@@ -1264,22 +1257,20 @@ def knn_edges_join_tables(
     """
     spark = query_edges_df.sparkSession
     registered = registration(index_edges_df, registered_df)
-    # min registered level and row count: one tiny aggregate cached on
-    # the registered frame (see registered_stats)
+    # registered levels and row count: one tiny aggregate cached on the
+    # registered frame (see registered_stats)
     stats = registered_stats(registered)
-    jl = int(stats["min_level"])
-    keyed_idx = registered.withColumn(
-        "_jk", kernels.parent_signed(F.col("ecell"), jl)
-    ).select("_jk", edge_id_col, *_IDX_ENDS)
+    # the index side of every round's nesting join
+    idx_cells = registered.select(
+        "ecell", kernels.cell_level_expr("ecell").alias("_lvl"), edge_id_col, *_IDX_ENDS
+    )
 
     q = query_edges_df.select(
         F.col(query_id_col).alias("query_id"),
         *(F.col(c).alias(qc) for c, qc in zip(_IDX_ENDS, _Q_ENDS)),
     )
     idx_geom = index_edges_df.select(edge_id_col, *_IDX_ENDS)
-    pair = ["query_id", edge_id_col, *_IDX_ENDS, *_Q_ENDS]
     buffer_cells = edge_buffer_cells_udf()
-    qlvl = _cell_level("qcell")
 
     # each round's pending/topk are localCheckpoint'ed: the anti-join of
     # round t otherwise NESTS round t-1's full scoring plan, and the
@@ -1305,35 +1296,17 @@ def knn_edges_join_tables(
         ring = math.radians(min(radius, 170.0))
         r2 = chord2_from_radians(ring)
         # ONE evaluation of the buffer-cell kernel per round: the frame
-        # feeds the fine join, the coarse-level collect and the
-        # per-level joins, so checkpoint it (lazily — the coarse-level
-        # collect below materializes it)
+        # feeds the level collect and both directions of the nesting join,
+        # so checkpoint it (lazily — the level collect materializes it)
         cells = pending.select(
             "*",
             F.explode(F.array_distinct(buffer_cells(*_Q_ENDS, F.lit(ring)))).alias("qcell"),
-        ).withColumn("_ql", qlvl).localCheckpoint(eager=False)
-
-        coarse_levels = [
-            int(r["_ql"])
-            for r in cells.filter(F.col("_ql") < jl)
-            .select("_ql")
-            .distinct()
-            .collect()
-        ]
-        fine = cells.filter(F.col("_ql") >= jl).withColumn(
-            "_jk", kernels.parent_signed(F.col("qcell"), jl)
+        ).withColumn("_lvl", kernels.cell_level_expr("qcell")).localCheckpoint(eager=False)
+        cand = nesting_join(
+            cells, "qcell", distinct_levels(cells), ["query_id", *_Q_ENDS],
+            idx_cells, "ecell", stats["levels"], [edge_id_col, *_IDX_ENDS],
+            hint=bc_q,
         )
-        cand = keyed_idx.join(bc_q(fine), "_jk").select(*pair)
-        for lvl in coarse_levels:
-            cj = (
-                registered.withColumn(
-                    "qcell", kernels.parent_signed(F.col("ecell"), lvl)
-                )
-                .select("qcell", edge_id_col, *_IDX_ENDS)
-                .join(bc_q(cells.filter(F.col("_ql") == lvl)), "qcell")
-                .select(*pair)
-            )
-            cand = cand.unionByName(cj)
 
         topk = _table_round(cand, r2, k, edge_id_col).localCheckpoint(eager=True)
         # the round's answer is materialized: its buffer cells are done
@@ -1349,7 +1322,7 @@ def knn_edges_join_tables(
             bc_q(done_ids), "query_id", "left_anti"
         ).localCheckpoint(eager=False)
         # one tiny count materializes the lazy checkpoint (the next
-        # round's coarse-level collect would have paid it anyway) and
+        # round's level collect would have paid it anyway) and
         # steers the loop: with NOTHING pending the loop used to burn
         # every remaining round on empty frames (observed: 4 of 5
         # rounds with 1-task jobs, half the query's wall time), and a

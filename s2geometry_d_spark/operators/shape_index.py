@@ -33,7 +33,7 @@ from ..functions.localdf import local_df
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import kernels
+from ..functions import edgedist, kernels
 from ..sources.tables import memo
 from .knn import edge_register_cells_udf
 from .poly_index import build_polygon_index, points_in_polygons_table
@@ -93,25 +93,11 @@ def polygons_index_rows(polys_df: DataFrame, max_edges_per_cell: int = 16) -> Da
     )
 
 
-def _level_of(cell_col: str):
-    """cov_level from a signed cell id's trailing bit (pure expressions)."""
-    lsb = F.col(cell_col).bitwiseAND(-F.col(cell_col))
-    return (
-        F.lit(30) - (F.log2(lsb.cast("double")) / F.lit(2.0)).cast("int")
-    ).cast("int")
-
-
 def polyline_edges_index_rows(
     edges_df: DataFrame, edge_id_col: str = "edge_id"
 ) -> DataFrame:
     """dim=1 family: one row per (edge, registered cell); the edge's xyz
     endpoints ride as the clipped-edge payload (single-edge arrays)."""
-    ax = F.cos(F.radians("alng")) * F.cos(F.radians("alat"))
-    ay = F.sin(F.radians("alng")) * F.cos(F.radians("alat"))
-    az = F.sin(F.radians("alat"))
-    bx = F.cos(F.radians("blng")) * F.cos(F.radians("blat"))
-    by = F.sin(F.radians("blng")) * F.cos(F.radians("blat"))
-    bz = F.sin(F.radians("blat"))
     reg = edge_register_cells_udf()
     rows = (
         edges_df.withColumn(
@@ -122,9 +108,9 @@ def polyline_edges_index_rows(
             F.col(edge_id_col).cast("string").alias("shape_id"),
             F.lit(1).alias("dim"),
             "cell_signed",
-            _level_of("cell_signed").alias("cov_level"),
-            F.array(F.array(ax, ay, az)).alias("ea"),
-            F.array(F.array(bx, by, bz)).alias("eb"),
+            kernels.cell_level_expr("cell_signed").alias("cov_level"),
+            F.array(F.array(*edgedist.xyz_columns("alat", "alng"))).alias("ea"),
+            F.array(F.array(*edgedist.xyz_columns("blat", "blng"))).alias("eb"),
         )
     )
     return _conform(rows)
@@ -137,15 +123,12 @@ def points_index_rows(
     lng_col: str = "lng",
 ) -> DataFrame:
     """dim=0 family: one row per point at its leaf cell."""
-    px = F.cos(F.radians(lng_col)) * F.cos(F.radians(lat_col))
-    py = F.sin(F.radians(lng_col)) * F.cos(F.radians(lat_col))
-    pz = F.sin(F.radians(lat_col))
     rows = points_df.select(
         F.col(id_col).cast("string").alias("shape_id"),
         F.lit(0).alias("dim"),
         kernels.cell_from_latlng(F.col(lat_col), F.col(lng_col)).alias("cell_signed"),
         F.lit(30).alias("cov_level"),
-        F.array(F.array(px, py, pz)).alias("ea"),
+        F.array(F.array(*edgedist.xyz_columns(lat_col, lng_col))).alias("ea"),
     )
     return _conform(rows)
 

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions import kernels
+from ..functions import edgedist, kernels
 from ..s2core import cellid as ci
 from ..s2core.cellid import CellId
 from ..s2core.coverer import CovererOptions, RegionCoverer
@@ -257,6 +257,73 @@ def match_coverings(ids: np.ndarray, tables: list, two_way: bool = False):
     all_rows = np.concatenate(hit_rows)
     order = np.argsort(all_rows, kind="stable")
     return all_rows[order], np.concatenate(hit_codes)[order]
+
+
+def distinct_levels(cells: DataFrame) -> list[int]:
+    """The distinct values of the ``_lvl`` column of ``cells``, ascending:
+    one small collect."""
+    return sorted(int(r["_lvl"]) for r in cells.select("_lvl").distinct().collect())
+
+
+def _ancestor_sql(cell: str, levels: list[int]) -> list[str]:
+    """SQL text, per level in ``levels``, of the ancestor of the cell in
+    column ``cell`` (its level in ``_lvl``) at that level, NULL where the
+    cell is coarser; BIGINT literals."""
+    return [
+        f"CASE WHEN (`_lvl` >= {l}) THEN ((`{cell}` & {-n}L) | {n}L) END"
+        for l in levels
+        for n in [kernels.lsb_for_level(l)]
+    ]
+
+
+def ancestor_keys(cells: DataFrame, cell: str, levels: list[int], *keep) -> DataFrame:
+    """(*keep, _key): each row of ``cells`` exploded to the ancestor of its
+    cell (column ``cell``, its level in column ``_lvl``) at every level in
+    ``levels`` that is no finer than the cell, the cell itself included.
+    The array is parsed from ONE SQL text with BIGINT literals: built from
+    Columns it cost ~8 py4j calls per level."""
+    anc = ", ".join(_ancestor_sql(cell, levels))
+    return (
+        cells.select(*keep, F.explode(F.expr(f"array({anc})")).alias("_key"))
+        .filter(F.col("_key").isNotNull())
+    )
+
+
+def _tagged_keys(cells: DataFrame, cell: str, levels: list[int], keep: list, own: bool):
+    """(*keep, _key, _own): each row's own cell, tagged ``own``, and its
+    :func:`ancestor_keys` at ``levels``, tagged ``not own``, from one
+    explode."""
+    keys = [f"named_struct('_key', {k}, '_own', {not own})" for k in _ancestor_sql(cell, levels)]
+    keys.append(f"named_struct('_key', `{cell}`, '_own', {own})")
+    return (
+        cells.select(*keep, F.inline(F.expr(f"array({', '.join(keys)})")))
+        .filter(F.col("_key").isNotNull())
+    )
+
+
+def nesting_join(
+    a: DataFrame,
+    a_cell: str,
+    a_levels: list[int],
+    a_keep: list,
+    b: DataFrame,
+    b_cell: str,
+    b_levels: list[int],
+    b_keep: list,
+    hint=lambda df: df,
+) -> DataFrame:
+    """(*a_keep, *b_keep) for every pair of an ``a`` row and a ``b`` row
+    whose cells (named column; level in ``_lvl``; ``*_levels`` every level
+    on that side) are nested, i.e. meet.  ONE equi-join on (cell key, tag)
+    covers both directions: A's own cells meet B's ancestors at A's levels,
+    A's ancestors at B's levels meet B's own cells, and the tag keeps an
+    ancestor from meeting an ancestor.  Each side is one explode, so B is
+    read once.  An equal-cell pair comes out once per direction; no
+    ``distinct`` is applied.  ``hint`` wraps the A side (``F.broadcast``
+    for a small A)."""
+    a_keys = _tagged_keys(a, a_cell, b_levels, a_keep, own=False)
+    b_keys = _tagged_keys(b, b_cell, a_levels, b_keep, own=True)
+    return hint(a_keys).join(b_keys, ["_key", "_own"]).drop("_key", "_own")
 
 
 # Above this many covering cells the coarse-prefix InSet literal list stops
@@ -547,9 +614,7 @@ def points_in_regions(
     # (a union of interior/boundary branches would recompute it per branch).
     lat_r = F.radians(F.col(lat_col))
     lng_r = F.radians(F.col(lng_col))
-    px = F.cos(lng_r) * F.cos(lat_r)
-    py = F.sin(lng_r) * F.cos(lat_r)
-    pz = F.sin(lat_r)
+    px, py, pz = edgedist.xyz_columns(lat_col, lng_col)
 
     accept = F.col("is_interior")
     for rid, cap in caps.items():

@@ -45,7 +45,7 @@ from pyspark.sql import types as T
 from ..functions import kernels
 from ..s2core import cellid as ci
 from ..s2core import coords, metrics
-from .knn import _cell_level, _f64
+from .knn import _f64
 from .spatial_join import hit_lists
 
 GRID = 4
@@ -321,7 +321,8 @@ def tile_containment_check(
     # the whole check's cost in round 4.)
     per_tile = (
         assigned.select(
-            id_col, "tile_x", "tile_y", "cell_id", _cell_level("cell_id").alias("_lvl")
+            id_col, "tile_x", "tile_y", "cell_id",
+            kernels.cell_level_expr("cell_id").alias("_lvl"),
         )
         .groupBy(id_col, "tile_x", "tile_y")
         .agg(

@@ -65,22 +65,27 @@ SECTIONS = [
         "index_region_check",
         "round-5: index-as-region contains/mayIntersect for a 3-level "
         "target-cell table — broadcast-hash index joins (the target side "
-        "never exchanges), Arrow kernels only on the boundary slice, one "
-        "exploded pass for all levels",
+        "never exchanges), Arrow kernels only on the boundary slice; the "
+        "coarse targets join ONE ancestor explode of the index cells over "
+        "all coarse levels (spatial_join.ancestor_keys), made distinct",
     ),
     (
         "knn_table_join",
         "round-5: table-to-table closest-edge join result — the round "
         "pipeline retires queries by anti-join with per-round lineage "
         "truncation, so the returned plan reads checkpointed round outputs, "
-        "not a re-executable probe cascade",
+        "not a re-executable probe cascade; each round's candidates are the "
+        "nested cell pairs of spatial_join.nesting_join (plan-pinned in "
+        "tests/test_plan_shapes.py)",
     ),
     (
         "crossing_pairs_self",
-        "round-5: single-TABLE crossing sweep (visit_crossing_edge_pairs) — "
-        "candidates from ONE cell/ancestor equi-join over the registered "
-        "index, unordered distinct, ONE exact pair kernel; no cartesian "
-        "or nested-loop pair join anywhere",
+        "single-TABLE crossing sweep (visit_crossing_edge_pairs) — at this "
+        "scale the registered index is the broadcast side of ONE fused "
+        "crosses kernel scanning the same index, then one hash exchange of "
+        "crossings; above BROADCAST_REG_ROWS the candidates come from the "
+        "ancestor equi-join of spatial_join.ancestor_keys.  No cartesian or "
+        "nested-loop pair join anywhere",
     ),
     (
         "assemble_polylines",

@@ -400,48 +400,3 @@ def test_kernel_path_equals_shuffle_path(spark, monkeypatch):
             crossing.release_payloads(reg)
             reg.unpersist()
     assert rega._s2_cross_payload == {}
-
-
-def test_ancestor_keys_sql_keeps_the_column_built_plan(spark):
-    """The shuffle path's level column and ancestor arrays, parsed from one
-    SQL text each, optimize to the same plan as the Column-built
-    expressions they replace."""
-    import re
-
-    from pyspark.sql import functions as F
-
-    from s2geometry_d_spark.functions import kernels
-    from s2geometry_d_spark.operators import crossing
-    from s2geometry_d_spark.operators.knn import _cell_level, register_edges
-
-    edges = spark.createDataFrame(
-        _random_edges(40, seed=5), ["edge_id", "alat", "alng", "blat", "blng"]
-    )
-    reg = register_edges(edges)
-    levels = [0, 3, 7, 12, 15, 16, 22, 30]
-
-    def column_built():
-        lvl = reg.select("edge_id", "ecell").withColumn("_lvl", _cell_level("ecell"))
-        anc = F.array(
-            *[
-                F.when(F.col("_lvl") >= l, kernels.parent_signed(F.col("ecell"), l))
-                for l in levels
-            ]
-        )
-        return (
-            lvl.select(F.col("edge_id").alias("id_b"), F.explode(anc).alias("_key"))
-            .filter(F.col("_key").isNotNull())
-        )
-
-    def optimized(df):
-        text = df._jdf.queryExecution().optimizedPlan().toString()
-        return re.sub(r"#\d+L?", "#", text)
-
-    try:
-        sql_built = crossing._ancestor_keys(
-            crossing._reg_with_level(reg, "edge_id"), "edge_id", "id_b", levels
-        )
-        assert optimized(sql_built) == optimized(column_built())
-        assert sorted(sql_built.collect()) == sorted(column_built().collect())
-    finally:
-        reg.unpersist()

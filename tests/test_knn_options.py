@@ -525,3 +525,54 @@ def test_knn_table_join_empty_query_table(spark, edges):
     # id columns keep the input (long) type, matching the non-empty path
     assert out.schema["query_id"].dataType == edges.schema["edge_id"].dataType
     assert out.schema["edge_id"].dataType == edges.schema["edge_id"].dataType
+
+
+def test_knn_table_join_nesting_join_both_directions(spark, monkeypatch):
+    """The table rounds' nesting join against an index whose coarsest
+    registration is a whole face (one long edge registers under the six
+    face cells) and whose short edges register finer than the query
+    rings' buffer cells, so both join directions carry candidates: the
+    result equals the exact cross-join top-k, with every query answered
+    by a ring round (the straggler cutover is closed).  The queries are
+    points (a degenerate edge), the brute-force oracle's query form."""
+    monkeypatch.setattr(knn, "_BRUTE_SCAN_ROWS", 0)
+    rnd = random.Random(7)
+    rows = [(0, 5.0, 0.0, 15.0, 80.0)]  # ~80 deg long: face-registered
+    for i in range(1, 400):
+        lat, lng = rnd.uniform(10.0, 14.0), rnd.uniform(20.0, 24.0)
+        d_lat, d_lng = rnd.uniform(-0.02, 0.02), rnd.uniform(-0.02, 0.02)
+        rows.append((i, lat, lng, lat + d_lat, lng + d_lng))
+    index = spark.createDataFrame(rows, ["edge_id", "alat", "alng", "blat", "blng"])
+    # c lies between the cluster and the long edge
+    queries = [("a", 12.0, 22.0), ("b", 10.5, 23.5), ("c", 8.6, 22.0), ("d", 13.9, 20.1)]
+    qdf = spark.createDataFrame(
+        [(qid, lat, lng, lat, lng) for qid, lat, lng in queries],
+        ["query_id", "alat", "alng", "blat", "blng"],
+    )
+    levels = knn.registered_stats(knn.registration(index))["levels"]
+    ring = math.radians(knn._TARGET_SEED_DEG)
+    buffer_levels = {
+        r[0]
+        for r in qdf.select(
+            F.explode(
+                knn.edge_buffer_cells_udf()("alat", "alng", "blat", "blng", F.lit(ring))
+            ).alias("c")
+        )
+        .select(kernels.cell_level_expr("c"))
+        .collect()
+    }
+    assert levels[0] == 0 and max(levels) > max(buffer_levels) > 0
+
+    out = knn.knn_edges_join_tables(qdf, index, k=4)
+    assert out._s2_ring["n_brute"] == 0
+    got = out.collect()
+    want = knn.knn_edges_brute_force(index, queries, k=4).collect()
+    assert {(r["query_id"], r["rank"]): r["edge_id"] for r in got} == {
+        (r["query_id"], r["rank"]): r["edge_id"] for r in want
+    }
+    assert len(want) == 4 * len(queries) and 0 in {r["edge_id"] for r in got}
+    # the oracle's query xyz comes from Python math, the table join's from
+    # SQL: the distances agree to rounding
+    dist = {(r["query_id"], r["rank"]): r["dist2"] for r in want}
+    for r in got:
+        assert r["dist2"] == pytest.approx(dist[r["query_id"], r["rank"]], rel=1e-9)

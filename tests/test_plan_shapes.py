@@ -448,3 +448,54 @@ def test_knn_table_round_is_two_kernels_around_one_exchange(spark, entrymod, mon
         assert not any("query_id" in op for op in joins), plan
         for name in ("Window", "EvalPython", "HashAggregate", "SortMergeJoin"):
             assert not any(name in op for op, _ in ops), plan
+
+
+def test_knn_table_round_candidates_are_the_nested_cell_pairs(spark, entrymod, monkeypatch):
+    """Round 1 of ``knn_table_join`` sends the scorer exactly the (query,
+    edge) pairs whose cells nest: some buffer cell of the query's 1-degree
+    ring and some registered cell of the edge overlap in leaf range (2,869
+    pairs at sf0.001).  The count is taken independently, by range overlap
+    on the driver.  A prefix join at the index's coarsest registered level
+    sends more: one face-registered edge makes that key a whole face."""
+    import math
+
+    import numpy as np
+
+    from s2geometry_d_spark.operators import knn
+
+    counts = []
+    table_round = knn._table_round
+
+    def spy(cand, r2, *args, **kwargs):
+        # counted before the round frees its checkpointed buffer cells
+        counts.append(cand.select("query_id", "edge_id").distinct().count())
+        return table_round(cand, r2, *args, **kwargs)
+
+    monkeypatch.setattr(knn, "_table_round", spy)
+    entrymod.release_caches(spark)
+    entrymod.queries()["knn_table_join"](spark, SF_DIR).collect()
+
+    edges = entrymod._edges(spark, SF_DIR)
+    ring = math.radians(knn._TARGET_SEED_DEG)
+    buffers = (
+        edges.filter(F.col("edge_id") % 300 == 0)
+        .select(
+            F.col("edge_id").alias("query_id"),
+            F.explode(
+                knn.edge_buffer_cells_udf()("alat", "alng", "blat", "blng", F.lit(ring))
+            ).alias("cell"),
+        )
+        .collect()
+    )
+    registered = knn.registration(edges).select("edge_id", "ecell").collect()
+
+    def ranges(cells):
+        c = np.array(cells, dtype=np.int64)
+        lsb = c & -c
+        return c - (lsb - 1), c + (lsb - 1)
+
+    q_lo, q_hi = ranges([r["cell"] for r in buffers])
+    e_lo, e_hi = ranges([r["ecell"] for r in registered])
+    qi, ei = np.nonzero((q_lo[:, None] <= e_hi[None, :]) & (e_lo[None, :] <= q_hi[:, None]))
+    nested = {(buffers[i]["query_id"], registered[j]["edge_id"]) for i, j in zip(qi, ei)}
+    assert nested and counts[0] == len(nested)

@@ -220,3 +220,97 @@ def test_cell_token_expression_matches_token_of(spark):
     want = {s: ci.token_of(c) for s, c in zip(ids, cells)}
     assert got == want
     assert want[ids[-1]] == "X" and len(set(len(t) for t in want.values())) > 10
+
+
+def _optimized(df) -> str:
+    import re
+
+    return re.sub(r"#\d+L?", "#", df._jdf.queryExecution().optimizedPlan().toString())
+
+
+def _column_level(col):
+    """The cell-level tree built from Columns: the form the shared SQL text
+    replaced."""
+    return F.lit(30) - (
+        F.log2(F.col(col).bitwiseAND(-F.col(col)).cast("double")) / F.lit(2.0)
+    ).cast("int")
+
+
+def _column_xyz(lat, lng):
+    """The lat/lng -> xyz tree built from Columns, as the callers wrote it."""
+    lat_r, lng_r = F.radians(F.col(lat)), F.radians(F.col(lng))
+    return F.cos(lng_r) * F.cos(lat_r), F.sin(lng_r) * F.cos(lat_r), F.sin(lat_r)
+
+
+def test_ancestor_keys_sql_keeps_the_column_built_plan(spark, monkeypatch):
+    """The level column and the ancestor arrays of the nesting join, parsed
+    from one SQL text each, optimize to the same plan as the Column-built
+    expressions they replace; so does the one aggregate of the registered
+    index statistics, whose level now comes from the same SQL text."""
+    import numpy as np
+
+    from s2geometry_d_spark.functions import kernels
+    from s2geometry_d_spark.operators.spatial_join import ancestor_keys
+
+    rng = np.random.default_rng(5)
+    ends = rng.uniform(-8.0, 8.0, (40, 4)) + [20.0, 30.0, 20.0, 30.0]
+    edges = spark.createDataFrame(
+        [(i, *map(float, e)) for i, e in enumerate(ends)],
+        ["edge_id", "alat", "alng", "blat", "blng"],
+    )
+    reg = knn_ops.register_edges(edges)
+    levels = [0, 3, 7, 12, 15, 16, 22, 30]
+
+    def column_built():
+        lvl = reg.select("edge_id", "ecell").withColumn("_lvl", _column_level("ecell"))
+        anc = F.array(
+            *[
+                F.when(F.col("_lvl") >= l, kernels.parent_signed(F.col("ecell"), l))
+                for l in levels
+            ]
+        )
+        return (
+            lvl.select(F.col("edge_id").alias("id_b"), F.explode(anc).alias("_key"))
+            .filter(F.col("_key").isNotNull())
+        )
+
+    try:
+        sql_built = ancestor_keys(
+            reg.select("edge_id", "ecell", kernels.cell_level_expr("ecell").alias("_lvl")),
+            "ecell",
+            levels,
+            F.col("edge_id").alias("id_b"),
+        )
+        assert _optimized(sql_built) == _optimized(column_built())
+        assert sorted(sql_built.collect()) == sorted(column_built().collect())
+
+        plans = []
+        agg = type(reg).agg
+
+        def spy(df, *cols):
+            plans.append(_optimized(agg(df, *cols)))
+            return agg(df, *cols)
+
+        monkeypatch.setattr(type(reg), "agg", spy)
+        stats = knn_ops._registered_stats(reg)
+        monkeypatch.setattr(kernels, "cell_level_expr", _column_level)
+        assert knn_ops._registered_stats(reg) == stats
+        assert len(plans) == 2 and plans[0] == plans[1]
+    finally:
+        reg.unpersist()
+
+
+def test_point_xyz_helper_keeps_the_pip_accept_plan(spark, monkeypatch):
+    """``edgedist.xyz_columns`` is the Column-built lat/lng -> xyz tree:
+    the PIP join's single-pass accept filter (its cap test reads the point
+    xyz) optimizes to the same plan through either."""
+    from s2geometry_d_spark.functions import edgedist, kernels
+
+    pts = spark.createDataFrame(
+        [(i, 40.0 + i * 0.5, -5.0 + i * 0.7) for i in range(40)],
+        ["point_id", "lat", "lng"],
+    ).withColumn("cell_id", kernels.cell_from_latlng(F.col("lat"), F.col("lng")))
+    shared = _optimized(points_in_regions(pts, REGIONS[:2]))
+    monkeypatch.setattr(edgedist, "xyz_columns", _column_xyz)
+    assert _optimized(points_in_regions(pts, REGIONS[:2])) == shared
+    assert "COS(RADIANS(lng" in shared
