@@ -1013,7 +1013,7 @@ def _q_cell_roundtrip(spark, sf_dir):
     )
     return rt.select(
         "point_id",
-        kernels.cell_token(F.col("cell_id")).alias("token"),
+        kernels.cell_token("cell_id").alias("token"),
         (F.col("cell2") == F.col("cell_id")).alias("roundtrip_ok"),
     )
 
@@ -1029,7 +1029,7 @@ def _q_covering_cells(spark, sf_dir):
     return df.select(
         "region_id",
         "cov_level",
-        kernels.cell_token(F.col("cov_cell")).alias("cell_token"),
+        kernels.cell_token("cov_cell").alias("cell_token"),
         "is_interior",
     )
 
@@ -1102,7 +1102,7 @@ def _q_cell_partition_stats(spark, sf_dir):
         pts.withColumn("parent5", kernels.parent_signed(F.col("cell_id"), 5))
         .groupBy("parent5")
         .agg(F.count("*").alias("n_points"))
-        .select(kernels.cell_token(F.col("parent5")).alias("cell_token"), "n_points")
+        .select(kernels.cell_token("parent5").alias("cell_token"), "n_points")
     )
 
 
@@ -1121,7 +1121,7 @@ def _q_cell_area_stats(spark, sf_dir):
             "density", F.round(F.col("n_points") / F.col("area_sr"), 6)
         )
         .select(
-            kernels.cell_token(F.col("parent5")).alias("cell_token"),
+            kernels.cell_token("parent5").alias("cell_token"),
             "n_points",
             "area_sr",
             "density",
@@ -1136,7 +1136,7 @@ def _q_tile_assignment(spark, sf_dir):
         "tile_x",
         "tile_y",
         "level",
-        kernels.cell_token(F.col("cell_id")).alias("cell_token"),
+        kernels.cell_token("cell_id").alias("cell_token"),
     )
 
 

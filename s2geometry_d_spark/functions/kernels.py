@@ -41,6 +41,19 @@ def parent_signed(cell: Column, level: int) -> Column:
     return cell.bitwiseAND(F.lit(-nl)).bitwiseOR(F.lit(nl))
 
 
+def sql_double(x: float) -> str:
+    """SQL text of a DOUBLE literal with the bits of ``x``: its shortest
+    round-trip ``repr`` plus the ``D`` suffix (a bare ``2.0`` would parse as
+    DECIMAL)."""
+    return f"{float(x)!r}D"
+
+
+def sql_string(s: str) -> str:
+    """SQL text of a STRING literal holding ``s``, quotes and backslashes
+    escaped."""
+    return "'" + str(s).replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def cell_level_sql(col: str) -> str:
     """SQL text of the level of the signed cell id in ``col``, from its
     lowest set bit (2.0D: Spark would parse 2.0 as DECIMAL)."""
@@ -54,13 +67,27 @@ def cell_level_expr(col: str) -> Column:
     return F.expr(cell_level_sql(col))
 
 
+def cell_token_sql(cell: str) -> str:
+    """SQL text of :func:`cell_token` over the signed cell id in column
+    ``cell``."""
+    unsigned = f"(`{cell}` ^ {-(1 << 63)}L)"
+    digits = f"lpad(hex({unsigned}), 16, '0')"
+    return (
+        f"CASE WHEN ({unsigned} = 0) THEN 'X' "
+        f"ELSE lower(regexp_replace({digits}, '0+$', '')) END"
+    )
+
+
 def cell_token(cell_signed: Column | str) -> Column:
     """Token of a signed-flipped cell id column (``cellid.token_of``): the
     unsigned id as 16 lower-case hex digits with its trailing zero nibbles
     stripped, ``"X"`` for id 0.  Native string functions over the flipped
-    bits, so no row crosses into Python."""
-    cell = F.col(cell_signed) if isinstance(cell_signed, str) else cell_signed
-    unsigned = cell.bitwiseXOR(F.lit(-(1 << 63)))
+    bits, so no row crosses into Python.  A column name is parsed from ONE
+    SQL text (:func:`cell_token_sql`); a Column gets the same tree built
+    from Columns, ~60 py4j calls more."""
+    if isinstance(cell_signed, str):
+        return F.expr(cell_token_sql(cell_signed))
+    unsigned = cell_signed.bitwiseXOR(F.lit(-(1 << 63)))
     digits = F.lpad(F.hex(unsigned), 16, "0")
     return F.when(unsigned == 0, F.lit("X")).otherwise(
         F.lower(F.regexp_replace(digits, "0+$", ""))

@@ -18,7 +18,7 @@ The distributed plan (SURVEY.md §2.4):
 
 from __future__ import annotations
 
-import math
+import dataclasses
 from dataclasses import dataclass
 
 import numpy as np
@@ -70,22 +70,52 @@ def buffered_segment_covering(
     )
 
 
+def _covering_cells(region, max_cells: int) -> tuple:
+    """A fresh covering of ``region``: its (cell_id, is_interior) tuples."""
+    coverer = RegionCoverer(CovererOptions(max_cells=max_cells))
+    return tuple(
+        (cid, region.contains_cell(Cell(CellId(cid))))
+        for cid in coverer.get_covering(region)
+    )
+
+
+# Coverings of value-typed regions, keyed by the region's value at call
+# time: a region changed later (``Cap.add_point``) gets a new key.
+_COVERINGS: dict = {}
+_COVERINGS_MAX = 4096
+
+
+def region_cells(region, max_cells: int) -> tuple:
+    """The (cell_id, is_interior) tuples of ``region``'s covering.  A
+    ``Cap`` or ``LatLngRect`` is looked up by value, ``(type,
+    dataclasses.astuple(region), max_cells)``, in a bounded memo, so an
+    equal region built again (the same query caps on every evaluation, the
+    same ring radii of a kNN search) costs no RegionCoverer run; other
+    regions are covered afresh."""
+    if not isinstance(region, (Cap, LatLngRect)):
+        return _covering_cells(region, max_cells)
+    key = (type(region), dataclasses.astuple(region), max_cells)
+    cells = _COVERINGS.get(key)
+    if cells is None:
+        cells = _covering_cells(region, max_cells)
+        if len(_COVERINGS) >= _COVERINGS_MAX:
+            _COVERINGS.pop(next(iter(_COVERINGS)), None)  # oldest first
+        _COVERINGS[key] = cells
+    return cells
+
+
 def compute_coverings(regions: list[tuple[str, object]], max_cells: int = 64) -> list[RegionCovering]:
-    """Exterior covering per region; each cell classified interior/boundary.
+    """Exterior covering per region; each cell classified interior/boundary
+    (:func:`region_cells`).
 
     Interior cells admit points with no exact test, so more covering cells
     (deeper max_cells) trades driver time for executor work — the analogue
     of the reference's index-once-reuse-everywhere tradeoff
     (s2loop.d:1078-1093: index build ~50x one query)."""
-    out = []
-    for rid, region in regions:
-        coverer = RegionCoverer(CovererOptions(max_cells=max_cells))
-        cov = coverer.get_covering(region)
-        cells = []
-        for cid in cov:
-            cells.append((cid, region.contains_cell(Cell(CellId(cid)))))
-        out.append(RegionCovering(rid, region, cells))
-    return out
+    return [
+        RegionCovering(rid, region, list(region_cells(region, max_cells)))
+        for rid, region in regions
+    ]
 
 
 def covering_dataframe(spark, coverings: list[RegionCovering]) -> DataFrame:
@@ -415,11 +445,11 @@ def candidate_match_kernel(
     # explode makes Spark evaluate the Arrow kernel TWICE per fact row (it
     # cannot deduplicate a Python UDF across the Filter barrier; round-3
     # verdict finding #1).  test_plan_shapes asserts a single ArrowEvalPython.
-    cand = (
-        points_df.withColumn("_code", F.explode(match(F.col(cell_col))))
-        .withColumn("_ridx", (F.col("_code") / 2).cast("int"))
-        .withColumn("is_interior", (F.col("_code") % 2) == 1)
-        .drop("_code")
+    # the codes decode in ONE projection: every withColumn is one more
+    # eager analysis of the whole plan
+    keep = [f"`{c}`" for c in points_df.columns]
+    cand = points_df.select("*", F.explode(match(cell_col)).alias("_code")).selectExpr(
+        *keep, "CAST((`_code` / 2) AS INT) AS `_ridx`", "((`_code` % 2) = 1) AS `is_interior`"
     )
     return cand.join(F.broadcast(mapping), "_ridx").drop("_ridx")
 
@@ -577,6 +607,33 @@ def _polygon_pip_udf(indexes: dict[str, PolygonCellIndex], vertex_model: str = "
     return pip_exact
 
 
+def _accept_predicate(caps: dict, rects: dict, lat_col: str, lng_col: str):
+    """The acceptance test of a cap/rect candidate row: an interior hit, or
+    a boundary hit that passes its region's exact test (squared chord to
+    the cap center, or the rect's lat and lng intervals; an inverted lng
+    interval wraps through 180 degrees).  Each region's term is parsed from
+    ONE SQL text, every double with its bits (``kernels.sql_double``), and
+    OR-ed on in order.  Built from Columns, a term cost ~200 py4j calls,
+    paid on every evaluation; one text for every region would nest the ORs
+    past the SQL parser's depth limit (~250 regions)."""
+    lat, lng = f"`{lat_col}`", f"`{lng_col}`"
+    xyz = [f"({edgedist.XYZ_FROM_LATLNG[a].format(lat=lat, lng=lng)})" for a in "xyz"]
+    lat_r, lng_r = f"radians({lat})", f"radians({lng})"
+    d = kernels.sql_double
+    accept = F.expr("`is_interior`")
+    for rid, cap in caps.items():
+        d2 = " + ".join(f"(({p} - {d(c)}) * ({p} - {d(c)}))" for p, c in zip(xyz, cap.center))
+        is_rid = f"(`region_id` = {kernels.sql_string(rid)})"
+        accept = accept | F.expr(f"({is_rid} AND ({d2} <= {d(cap.radius2)}))")
+    for rid, rect in rects.items():
+        lat_ok = f"(({lat_r} >= {d(rect.lat_lo)}) AND ({lat_r} <= {d(rect.lat_hi)}))"
+        join = "OR" if rect.lng.is_inverted() else "AND"
+        lng_ok = f"(({lng_r} >= {d(rect.lng.lo)}) {join} ({lng_r} <= {d(rect.lng.hi)}))"
+        is_rid = f"(`region_id` = {kernels.sql_string(rid)})"
+        accept = accept | F.expr(f"(({is_rid} AND {lat_ok}) AND {lng_ok})")
+    return accept
+
+
 def points_in_regions(
     points_df: DataFrame,
     regions: list[tuple[str, object]],
@@ -612,31 +669,13 @@ def points_in_regions(
     # the exact predicate for their region kind — all in one filter so the
     # point subtree (parquet scan + cell-id UDF) is evaluated exactly once
     # (a union of interior/boundary branches would recompute it per branch).
-    lat_r = F.radians(F.col(lat_col))
-    lng_r = F.radians(F.col(lng_col))
-    px, py, pz = edgedist.xyz_columns(lat_col, lng_col)
-
-    accept = F.col("is_interior")
-    for rid, cap in caps.items():
-        cx, cy, cz = cap.center
-        d2 = (
-            (px - F.lit(cx)) * (px - F.lit(cx))
-            + (py - F.lit(cy)) * (py - F.lit(cy))
-            + (pz - F.lit(cz)) * (pz - F.lit(cz))
-        )
-        accept = accept | ((F.col("region_id") == rid) & (d2 <= F.lit(cap.radius2)))
-    for rid, rect in rects.items():
-        lat_ok = (lat_r >= F.lit(rect.lat_lo)) & (lat_r <= F.lit(rect.lat_hi))
-        if rect.lng.is_inverted():
-            lng_ok = (lng_r >= F.lit(rect.lng.lo)) | (lng_r <= F.lit(rect.lng.hi))
-        else:
-            lng_ok = (lng_r >= F.lit(rect.lng.lo)) & (lng_r <= F.lit(rect.lng.hi))
-        accept = accept | ((F.col("region_id") == rid) & lat_ok & lng_ok)
+    accept = _accept_predicate(caps, rects, lat_col, lng_col)
     if polys:
         pip = _polygon_pip_udf(poly_indexes, vertex_model=vertex_model)
+        in_polys = ", ".join(kernels.sql_string(rid) for rid in polys)
         accept = accept | (
-            F.col("region_id").isin(list(polys))
-            & pip(F.col("region_id"), F.col(cell_col), F.col(lat_col), F.col(lng_col))
+            F.expr(f"`region_id` IN ({in_polys})")
+            & pip("region_id", cell_col, lat_col, lng_col)
         )
 
     return cand.filter(accept).drop("is_interior")

@@ -259,24 +259,42 @@ def tile_cells(lat0, lat1, lng0, lng1, level):
     return hit_lists(rows, pa.array(cells, type=pa.int64()), lvl.shape[0])
 
 
+# The constant expression trees below are each parsed from ONE SQL text,
+# every double rendered with its bits (kernels.sql_double): built from
+# Columns, every operator costs ~10 py4j calls, paid on every evaluation.
+_D = kernels.sql_double
+
+
+def _tile_grid() -> Column:
+    """The GRID x GRID (tile_x, tile_y) structs, for one ``inline``."""
+    return F.expr(
+        "array("
+        + ", ".join(
+            f"named_struct('tile_x', {x}, 'tile_y', {y})" for x in range(GRID) for y in range(GRID)
+        )
+        + ")"
+    )
+
+
 def _tile_rect(lat_col: str, lng_col: str, extent_col: str) -> list[Column]:
     """(lat0, lat1, lng0, lng1) of tile (tile_x, tile_y): the [tx/G,
     (tx+1)/G) x [ty/G, (ty+1)/G) fraction of the footprint rect centered at
     (lat, lng), its lats clamped short of the poles."""
-    g = F.lit(float(GRID))
-    extent = F.col(extent_col)
-    half = extent / 2.0
-    lat0 = F.col(lat_col) - half + extent * F.col("tile_y") / g
-    lng0 = F.col(lng_col) - half + extent * F.col("tile_x") / g
+    g = _D(GRID)
+    extent = f"`{extent_col}`"
+    half = f"({extent} / {_D(2.0)})"
+    step = f"({extent} / {g})"
+    lat0 = f"((`{lat_col}` - {half}) + (({extent} * `tile_y`) / {g}))"
+    lng0 = f"((`{lng_col}` - {half}) + (({extent} * `tile_x`) / {g}))"
 
     def clamp(c):
-        return F.greatest(F.lit(-89.9), F.least(F.lit(89.9), c))
+        return f"greatest({_D(-89.9)}, least({_D(89.9)}, {c}))"
 
     return [
-        clamp(lat0).alias("lat0"),
-        clamp(lat0 + extent / g).alias("lat1"),
-        lng0.alias("lng0"),
-        (lng0 + extent / g).alias("lng1"),
+        F.expr(f"{clamp(lat0)} AS lat0"),
+        F.expr(f"{clamp(f'({lat0} + {step})')} AS lat1"),
+        F.expr(f"{lng0} AS lng0"),
+        F.expr(f"({lng0} + {step}) AS lng1"),
     ]
 
 
@@ -287,12 +305,25 @@ def _tile_bounds(df: DataFrame, lat_col: str, lng_col: str, extent_col: str) -> 
     return df.select("*", *_tile_rect(lat_col, lng_col, extent_col))
 
 
+_AREA_SQL = (
+    "(radians((`lng1` - `lng0`)) * (sin(radians(`lat1`)) - sin(radians(`lat0`))))"
+)
+
+
 def _tile_area() -> Column:
     """Exact spherical area of the lat/lng tile rect:
     dlng_rad * (sin(lat1) - sin(lat0))."""
-    return F.radians(F.col("lng1") - F.col("lng0")) * (
-        F.sin(F.radians(F.col("lat1"))) - F.sin(F.radians(F.col("lat0")))
-    )
+    return F.expr(_AREA_SQL)
+
+
+def _tile_level() -> Column:
+    """``level``: the tile's requested level L = ceil(log4(deriv * target
+    / tile_area)), clamped to [0, 30] — from the same exact tile area
+    tile_assignment_stats scores with."""
+    target = _D(float(metrics.AVG_AREA.deriv) * TARGET_CELLS)
+    area = f"greatest({_AREA_SQL}, {_D(1e-300)})"
+    raw = f"CAST(ceil((ln(({target} / {area})) / ln({_D(4.0)}))) AS INT)"
+    return F.expr(f"greatest(0, least(30, {raw})) AS level")
 
 
 def tile_containment_check(
@@ -354,7 +385,7 @@ def tile_containment_check(
     )
 
     fr = [i / (probes_per_axis - 1) for i in range(probes_per_axis)]
-    fr_arr = F.array(*[F.lit(float(f)) for f in fr])
+    fr_arr = F.expr(f"array({', '.join(_D(f) for f in fr)})")
     probes = (
         t.withColumn("fx", F.explode(fr_arr))
         .withColumn("fy", F.explode(fr_arr))
@@ -436,31 +467,15 @@ def image_tile_assignment(
     Map-only: the kernel returns each tile's cells deduplicated, so no
     exchange follows it.  ``id_col`` must be the key of ``images`` — two
     rows with one id would each emit that image's cells."""
-    grid = F.array(
-        *[
-            F.struct(F.lit(x).alias("tile_x"), F.lit(y).alias("tile_y"))
-            for x in range(GRID)
-            for y in range(GRID)
-        ]
-    )
     # project away payload columns (bytes!) BEFORE the 16x tile explode —
     # otherwise every tile row drags the full image binary through the plan
     tiles = _tile_bounds(
-        images.select(id_col, lat_col, lng_col, extent_col, F.inline(grid)),
+        images.select(id_col, lat_col, lng_col, extent_col, F.inline(_tile_grid())),
         lat_col,
         lng_col,
         extent_col,
     )
-    # L = ceil(log4(deriv * target / tile_area)), clamped — the same exact
-    # tile area tile_assignment_stats scores with
-    raw = F.ceil(
-        F.log(
-            F.lit(float(metrics.AVG_AREA.deriv) * TARGET_CELLS)
-            / F.greatest(_tile_area(), F.lit(1e-300))
-        )
-        / F.log(F.lit(4.0))
-    ).cast("int")
-    tiles = tiles.withColumn("level", F.greatest(F.lit(0), F.least(F.lit(30), raw)))
+    tiles = tiles.select("*", _tile_level())
 
     # explode the UDF call INLINE: materializing it via withColumn first
     # lets InferFiltersFromGenerate slip a size()>0 Filter between the UDF
@@ -468,12 +483,12 @@ def image_tile_assignment(
     # TWICE per row (the round-3/4 doubled-kernel bug class; the rule skips
     # UDF-typed generator inputs, so this form stays single-eval — same
     # pattern as spatial_join.py's covering explode)
+    # (UDF arguments by name: an F.col costs ~13 py4j calls to record its
+    # call site, a name 3)
     return tiles.select(
-        F.col(id_col),
+        id_col,
         "tile_x",
         "tile_y",
         "level",
-        F.explode(
-            tile_cells(F.col("lat0"), F.col("lat1"), F.col("lng0"), F.col("lng1"), F.col("level"))
-        ).alias("cell_id"),
+        F.explode(tile_cells("lat0", "lat1", "lng0", "lng1", "level")).alias("cell_id"),
     )

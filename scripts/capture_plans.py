@@ -132,6 +132,9 @@ def main() -> None:
         f.write("\n".join(out))
     print("wrote docs/PLANS.md")
     spark.stop()
+    # os._exit skips the interpreter's stdout flush: a piped run would lose
+    # the line above
+    sys.stdout.flush()
     os._exit(0)
 
 

@@ -1,0 +1,155 @@
+"""Driver plan-build cost: value-memoized coverings and the py4j round trips
+of a warmed query build.
+
+Each evaluation of a query rebuilds its plan on the driver.  Pure driver
+artifacts (the RegionCoverer coverings of caps and rects) are memoized by
+value, and constant expression trees are parsed from one SQL text; these
+tests hold both by deterministic counts, not by timing.
+"""
+
+from __future__ import annotations
+
+import gc
+
+import pytest
+from py4j import clientserver
+
+from conftest import SF_DIR
+from s2geometry_d_spark.operators import knn as knn_ops
+from s2geometry_d_spark.operators import spatial_join
+from s2geometry_d_spark.s2core.cellid import CellId
+from s2geometry_d_spark.s2core.coverer import CovererOptions, RegionCoverer
+from s2geometry_d_spark.s2core.regions import Cap, Cell, LatLngRect, latlng_point
+from s2geometry_d_spark.sources import tables
+
+
+_GET_COVERING = RegionCoverer.get_covering
+
+
+@pytest.fixture
+def coverer_calls(monkeypatch):
+    """A fresh covering memo and a list that gets one entry per
+    ``RegionCoverer.get_covering`` run."""
+    calls = []
+
+    def counted(self, region):
+        calls.append(region)
+        return _GET_COVERING(self, region)
+
+    monkeypatch.setattr(spatial_join, "_COVERINGS", {})
+    monkeypatch.setattr(RegionCoverer, "get_covering", counted)
+    return calls
+
+
+def _fresh(region, max_cells):
+    """The covering of an independent RegionCoverer run, with interior
+    flags."""
+    cov = _GET_COVERING(RegionCoverer(CovererOptions(max_cells=max_cells)), region)
+    return [(cid, region.contains_cell(Cell(CellId(cid)))) for cid in cov]
+
+
+def test_equal_caps_share_one_covering(coverer_calls):
+    a = Cap.from_latlng_radius(37.5, -122.25, 0.8)
+    b = Cap.from_latlng_radius(37.5, -122.25, 0.8)
+    assert a is not b
+    ca, cb = spatial_join.compute_coverings([("a", a), ("b", b)], max_cells=24)
+    assert len(coverer_calls) == 1
+    assert (ca.region_id, ca.region, cb.region_id, cb.region) == ("a", a, "b", b)
+    assert ca.cells == cb.cells == _fresh(a, 24)
+    # another max_cells is another covering
+    spatial_join.compute_coverings([("a", a)], max_cells=8)
+    assert len(coverer_calls) == 2
+
+
+def test_grown_cap_gets_a_new_covering(coverer_calls):
+    cap = Cap.from_latlng_radius(-12.0, 40.0, 0.5)
+    before = spatial_join.compute_coverings([("c", cap)], max_cells=16)[0].cells
+    cap.add_point(latlng_point(-10.0, 40.0))
+    after = spatial_join.compute_coverings([("c", cap)], max_cells=16)[0].cells
+    assert len(coverer_calls) == 2
+    assert after != before
+    assert after == _fresh(cap, 16)
+    # the original value still maps to the original covering
+    again = Cap.from_latlng_radius(-12.0, 40.0, 0.5)
+    assert spatial_join.compute_coverings([("c", again)], max_cells=16)[0].cells == before
+    assert len(coverer_calls) == 2
+
+
+def test_inverted_rect_memoizes_by_value(coverer_calls):
+    """A dateline-crossing rect (inverted lng interval) and the rect with
+    the same two longitudes the other way round are distinct values with
+    distinct coverings; each is covered once and equals a fresh run."""
+    wrap = LatLngRect.from_degrees(-20.0, 25.0, 160.0, -160.0)
+    span = LatLngRect.from_degrees(-20.0, 25.0, -160.0, 160.0)
+    assert wrap.lng.is_inverted() and not span.lng.is_inverted()
+    for _ in range(2):
+        cw, cs = spatial_join.compute_coverings(
+            [("w", LatLngRect.from_degrees(-20.0, 25.0, 160.0, -160.0)), ("s", span)],
+            max_cells=32,
+        )
+    assert len(coverer_calls) == 2
+    assert cw.cells == _fresh(wrap, 32)
+    assert cs.cells == _fresh(span, 32)
+    assert cw.cells != cs.cells
+
+
+def test_memoized_cells_equal_a_fresh_coverer_run(coverer_calls):
+    regions = [
+        ("polar", Cap.from_latlng_radius(89.5, 0.0, 3.0)),
+        ("wide", Cap.from_latlng_radius(-40.0, 100.0, 40.0)),
+        ("tiny", Cap.from_latlng_radius(1e-7, -179.9999999, 1e-4)),
+        ("band", LatLngRect.from_degrees(-1.0, 1.0, -180.0, 180.0)),
+    ]
+    first = spatial_join.compute_coverings(regions, max_cells=24)
+    second = spatial_join.compute_coverings(regions, max_cells=24)
+    assert len(coverer_calls) == len(regions)
+    for (rid, region), a, b in zip(regions, first, second):
+        assert a.cells == b.cells == _fresh(region, 24), rid
+    flags = {inner for rc in first for _, inner in rc.cells}
+    assert flags == {False, True}
+
+
+def test_knn_join_second_evaluation_runs_no_coverer(spark, coverer_calls):
+    """The ring-search covering caps of ``knn_join`` come from the memo on
+    a second evaluation over the same queries: the same answer with no
+    RegionCoverer run."""
+    points = tables.spatial_points(spark, SF_DIR)
+    queries = [("q1", 48.85, 2.35), ("q2", -33.86, 151.21), ("q3", 10.0, 179.9)]
+    first = knn_ops.knn_join(points, queries, 5).collect()
+    assert coverer_calls
+    coverer_calls.clear()
+    second = knn_ops.knn_join(points, queries, 5).collect()
+    assert coverer_calls == []
+    assert second == first
+
+
+def _py4j_commands(build) -> int:
+    """The py4j commands sent while ``build()`` runs (cyclic garbage
+    collected first and held off, so no proxy release lands inside)."""
+    sent = [0]
+    send = clientserver.ClientServerConnection.send_command
+
+    def counted(self, *args, **kwargs):
+        sent[0] += 1
+        return send(self, *args, **kwargs)
+
+    gc.collect()
+    gc.disable()
+    clientserver.ClientServerConnection.send_command = counted
+    try:
+        build()
+    finally:
+        clientserver.ClientServerConnection.send_command = send
+        gc.enable()
+    return sent[0]
+
+
+@pytest.mark.parametrize("query", ["pip_cap_join", "tile_assignment"])
+def test_warmed_build_stays_within_py4j_budget(spark, query):
+    """One warmed build of the query's plan sends fewer than 250 py4j
+    commands (built from Columns, each sent over 800)."""
+    import __spark_entry__ as entry
+
+    build = entry.queries()[query]
+    build(spark, SF_DIR).count()
+    assert _py4j_commands(lambda: build(spark, SF_DIR)) < 250

@@ -192,9 +192,10 @@ def test_coarse_prefix_filter_keeps_the_column_built_rows(spark):
 
 
 def test_cell_token_expression_matches_token_of(spark):
-    """The native token expression gives ``cellid.token_of`` over seeded
-    cells at every level 0-30, the six face cells, level-30 leaves and id
-    0, and plans with no Python evaluation."""
+    """The native token expression, built from a Column or parsed from SQL
+    text for a column name, gives ``cellid.token_of`` over seeded cells at
+    every level 0-30, the six face cells, level-30 leaves and id 0, and
+    plans with no Python evaluation."""
     import numpy as np
 
     from s2geometry_d_spark.functions import kernels
@@ -214,11 +215,16 @@ def test_cell_token_expression_matches_token_of(spark):
     cells += [int(v) for v in leaves[:50]] + [0]
     ids = [int(v) for v in ci.to_signed(np.array(cells, dtype=np.uint64))]
     df = spark.createDataFrame([(i,) for i in ids], "cell long")
-    out = df.select("cell", kernels.cell_token(F.col("cell")).alias("token"))
+    out = df.select(
+        "cell",
+        kernels.cell_token(F.col("cell")).alias("token"),
+        kernels.cell_token("cell").alias("by_name"),
+    )
     assert "EvalPython" not in out._jdf.queryExecution().executedPlan().toString()
     got = {r["cell"]: r["token"] for r in out.collect()}
     want = {s: ci.token_of(c) for s, c in zip(ids, cells)}
     assert got == want
+    assert {r["cell"]: r["by_name"] for r in out.collect()} == want
     assert want[ids[-1]] == "X" and len(set(len(t) for t in want.values())) > 10
 
 
@@ -300,17 +306,155 @@ def test_ancestor_keys_sql_keeps_the_column_built_plan(spark, monkeypatch):
         reg.unpersist()
 
 
-def test_point_xyz_helper_keeps_the_pip_accept_plan(spark, monkeypatch):
-    """``edgedist.xyz_columns`` is the Column-built lat/lng -> xyz tree:
-    the PIP join's single-pass accept filter (its cap test reads the point
-    xyz) optimizes to the same plan through either."""
-    from s2geometry_d_spark.functions import edgedist, kernels
+def _column_accept(caps, rects, lat_col, lng_col):
+    """The cap/rect accept predicate of the PIP join built from Columns:
+    the reference form the one-SQL-text build must optimize to."""
+    lat_r, lng_r = F.radians(F.col(lat_col)), F.radians(F.col(lng_col))
+    px, py, pz = _column_xyz(lat_col, lng_col)
+    accept = F.col("is_interior")
+    for rid, cap in caps.items():
+        cx, cy, cz = cap.center
+        d2 = (
+            (px - F.lit(cx)) * (px - F.lit(cx))
+            + (py - F.lit(cy)) * (py - F.lit(cy))
+            + (pz - F.lit(cz)) * (pz - F.lit(cz))
+        )
+        accept = accept | ((F.col("region_id") == rid) & (d2 <= F.lit(cap.radius2)))
+    for rid, rect in rects.items():
+        lat_ok = (lat_r >= F.lit(rect.lat_lo)) & (lat_r <= F.lit(rect.lat_hi))
+        if rect.lng.is_inverted():
+            lng_ok = (lng_r >= F.lit(rect.lng.lo)) | (lng_r <= F.lit(rect.lng.hi))
+        else:
+            lng_ok = (lng_r >= F.lit(rect.lng.lo)) & (lng_r <= F.lit(rect.lng.hi))
+        accept = accept | ((F.col("region_id") == rid) & lat_ok & lng_ok)
+    return accept
+
+
+def _column_candidates(points_df, coverings, cell_col="cell_id", two_way=False):
+    """The candidate decode of ``candidate_match_kernel`` built with one
+    ``withColumn`` per column (for frames without a stored cell column)."""
+    from s2geometry_d_spark.functions.localdf import local_df
+    from s2geometry_d_spark.operators.spatial_join import covering_match_udf
+
+    match, region_ids = covering_match_udf(coverings, two_way=two_way)
+    mapping = local_df(
+        points_df.sparkSession, list(enumerate(region_ids)), ["_ridx", "region_id"]
+    )
+    cand = (
+        points_df.withColumn("_code", F.explode(match(F.col(cell_col))))
+        .withColumn("_ridx", (F.col("_code") / 2).cast("int"))
+        .withColumn("is_interior", (F.col("_code") % 2) == 1)
+        .drop("_code")
+    )
+    return cand.join(F.broadcast(mapping), "_ridx").drop("_ridx")
+
+
+def test_pip_accept_sql_keeps_the_column_built_plan(spark, monkeypatch):
+    """The PIP join over two caps, a dateline-crossing rect and a polygon
+    optimizes to the same plan whether its accept predicate and candidate
+    decode are parsed from SQL text or built from Columns (the polygon's
+    UDF term OR-ed on either way), and returns the same rows."""
+    from s2geometry_d_spark.functions import kernels
+    from s2geometry_d_spark.operators import spatial_join
 
     pts = spark.createDataFrame(
-        [(i, 40.0 + i * 0.5, -5.0 + i * 0.7) for i in range(40)],
+        [(i, -30.0 + i * 1.3, 150.0 + i * 0.9) for i in range(60)]
+        + [(100 + i, 48.0 + i * 0.1, 2.0 + i * 0.1) for i in range(20)]
+        + [(200 + i, -20.0 + i * 0.5, -65.0 + i * 0.3) for i in range(20)],
         ["point_id", "lat", "lng"],
     ).withColumn("cell_id", kernels.cell_from_latlng(F.col("lat"), F.col("lng")))
-    shared = _optimized(points_in_regions(pts, REGIONS[:2]))
-    monkeypatch.setattr(edgedist, "xyz_columns", _column_xyz)
-    assert _optimized(points_in_regions(pts, REGIONS[:2])) == shared
-    assert "COS(RADIANS(lng" in shared
+    sql_built = points_in_regions(pts, REGIONS)
+    with monkeypatch.context() as m:
+        m.setattr(spatial_join, "_accept_predicate", _column_accept)
+        m.setattr(spatial_join, "candidate_match_kernel", _column_candidates)
+        column_built = points_in_regions(pts, REGIONS)
+    plan = _optimized(sql_built)
+    assert plan == _optimized(column_built)
+    assert "COS(RADIANS(lng" in plan and "pip_exact(" in plan
+    got = sorted(sql_built.select("region_id", "point_id").collect())
+    assert got == sorted(column_built.select("region_id", "point_id").collect())
+    assert {r[0] for r in got} == {rid for rid, _ in REGIONS}
+
+
+def _column_tile_grid():
+    """The tile grid built from Columns; with ``_column_tile_rect``,
+    ``_column_tile_area`` and ``_column_tile_level``, the reference trees
+    the tiling SQL texts must optimize to."""
+    from s2geometry_d_spark.operators.tiling import GRID
+
+    return F.array(
+        *[
+            F.struct(F.lit(x).alias("tile_x"), F.lit(y).alias("tile_y"))
+            for x in range(GRID)
+            for y in range(GRID)
+        ]
+    )
+
+
+def _column_tile_rect(lat_col, lng_col, extent_col):
+    from s2geometry_d_spark.operators.tiling import GRID
+
+    g = F.lit(float(GRID))
+    extent = F.col(extent_col)
+    half = extent / 2.0
+    lat0 = F.col(lat_col) - half + extent * F.col("tile_y") / g
+    lng0 = F.col(lng_col) - half + extent * F.col("tile_x") / g
+
+    def clamp(c):
+        return F.greatest(F.lit(-89.9), F.least(F.lit(89.9), c))
+
+    return [
+        clamp(lat0).alias("lat0"),
+        clamp(lat0 + extent / g).alias("lat1"),
+        lng0.alias("lng0"),
+        (lng0 + extent / g).alias("lng1"),
+    ]
+
+
+def _column_tile_area():
+    return F.radians(F.col("lng1") - F.col("lng0")) * (
+        F.sin(F.radians(F.col("lat1"))) - F.sin(F.radians(F.col("lat0")))
+    )
+
+
+def _column_tile_level():
+    from s2geometry_d_spark.operators.tiling import TARGET_CELLS
+    from s2geometry_d_spark.s2core import metrics
+
+    raw = F.ceil(
+        F.log(
+            F.lit(float(metrics.AVG_AREA.deriv) * TARGET_CELLS)
+            / F.greatest(_column_tile_area(), F.lit(1e-300))
+        )
+        / F.log(F.lit(4.0))
+    ).cast("int")
+    return F.greatest(F.lit(0), F.least(F.lit(30), raw)).alias("level")
+
+
+def test_tiling_sql_keeps_the_column_built_plans(spark, monkeypatch):
+    """The tile grid, bounds, area and level, parsed from one SQL text
+    each, optimize to the same plans as the Column-built trees for the
+    assignment, its tightness stats and its containment check, and the
+    assignment returns the same rows."""
+    from s2geometry_d_spark.operators import tiling
+
+    imgs = spark.createDataFrame(
+        [(1, 0.0, 45.0, 8.0), (2, 35.264, 45.0, 8.0), (3, 88.0, 10.0, 8.0)]
+        + [(4, -12.5, 179.0, 0.75)],
+        ["image_id", "lat", "lng", "extent_deg"],
+    )
+    ops = (
+        tiling.image_tile_assignment,
+        tiling.tile_assignment_stats,
+        tiling.tile_containment_check,
+    )
+    sql_built = [op(imgs) for op in ops]
+    with monkeypatch.context() as m:
+        m.setattr(tiling, "_tile_grid", _column_tile_grid)
+        m.setattr(tiling, "_tile_rect", _column_tile_rect)
+        m.setattr(tiling, "_tile_area", _column_tile_area)
+        m.setattr(tiling, "_tile_level", _column_tile_level)
+        column_built = [op(imgs) for op in ops]
+    for got, want in zip(sql_built, column_built):
+        assert _optimized(got) == _optimized(want)
+    assert sorted(sql_built[0].collect()) == sorted(column_built[0].collect())
