@@ -259,6 +259,58 @@ def tile_cells(lat0, lat1, lng0, lng1, level):
     return hit_lists(rows, pa.array(cells, type=pa.int64()), lvl.shape[0])
 
 
+def _pair_keys(a, b):
+    """Each (a, b) pair of int64s as one 16-byte key, for ``np.isin``."""
+    return np.stack([a, b], axis=1).view(np.dtype((np.void, 16))).ravel()
+
+
+def probe_miss_counts(la0, la1, lo0, lo1, rows, cells, probes_per_axis):
+    """Per tile rect [la0, la1] x [lo0, lo1], how many points of its
+    ``probes_per_axis``^2 lattice (edges included) lie in no cell of the
+    tile — signed ``cells``, tile index ``rows``.  A leaf lies in a cell
+    exactly when its ancestor at the cell's level is that cell, so each
+    distinct cell level of the batch is one membership test of (tile,
+    ancestor) keys, over the probes of the tiles with cells at that level
+    (most tiles have one)."""
+    n = la0.shape[0]
+    f = np.arange(probes_per_axis) / (probes_per_axis - 1)
+    lats = la0[:, None, None] + (la1 - la0)[:, None, None] * f[None, :, None]
+    lngs = lo0[:, None, None] + (lo1 - lo0)[:, None, None] * f[None, None, :]
+    shape = (n, probes_per_axis, probes_per_axis)
+    leaf = ci.to_signed(
+        ci.from_latlng(np.broadcast_to(lats, shape).ravel(), np.broadcast_to(lngs, shape).ravel())
+    )
+    tile = np.repeat(np.arange(n), probes_per_axis * probes_per_axis)
+    covered = np.zeros(leaf.shape[0], dtype=bool)
+    lsb = cells & -cells
+    for low in np.unique(lsb):
+        at = lsb == low
+        has = np.zeros(n, dtype=bool)
+        has[rows[at]] = True
+        q = np.nonzero(has[tile] & ~covered)[0]
+        covered[q] = np.isin(
+            _pair_keys(tile[q], (leaf[q] & -low) | low), _pair_keys(rows[at], cells[at])
+        )
+    return np.bincount(tile[~covered], minlength=n)
+
+
+@F.arrow_udf(T.LongType())
+def probe_misses(lat0, lat1, lng0, lng1, cells, probes_per_axis):
+    """(lat0, lat1, lng0, lng1, array<long> cells, probes per axis) ->
+    long: :func:`probe_miss_counts` of each tile.  The lists are read
+    through their parent indices, so a sliced batch stays correct."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    misses = probe_miss_counts(
+        _f64(lat0), _f64(lat1), _f64(lng0), _f64(lng1),
+        pc.list_parent_indices(cells).to_numpy(),
+        pc.list_flatten(cells).to_numpy(),
+        probes_per_axis[0].as_py(),
+    )
+    return pa.array(misses, type=pa.int64())
+
+
 # The constant expression trees below are each parsed from ONE SQL text,
 # every double rendered with its bits (kernels.sql_double): built from
 # Columns, every operator costs ~10 py4j calls, paid on every evaluation.
@@ -298,13 +350,6 @@ def _tile_rect(lat_col: str, lng_col: str, extent_col: str) -> list[Column]:
     ]
 
 
-def _tile_bounds(df: DataFrame, lat_col: str, lng_col: str, extent_col: str) -> DataFrame:
-    """``df`` with the (lat0, lat1, lng0, lng1) tile bounds of its
-    (tile_x, tile_y) columns attached — the rects image_tile_assignment
-    assigns."""
-    return df.select("*", *_tile_rect(lat_col, lng_col, extent_col))
-
-
 _AREA_SQL = (
     "(radians((`lng1` - `lng0`)) * (sin(radians(`lat1`)) - sin(radians(`lat0`))))"
 )
@@ -326,6 +371,25 @@ def _tile_level() -> Column:
     return F.expr(f"greatest(0, least(30, {raw})) AS level")
 
 
+def _tile_rows(
+    images: DataFrame, lat_col: str, lng_col: str, extent_col: str, id_col: str, *extra: Column
+) -> DataFrame:
+    """One row per tile: (id, lat, lng, extent, tile_x, tile_y, lat0, lat1,
+    lng0, lng1, level) plus ``extra``, projected from the image table's
+    key and footprint only — a payload column (bytes!) never reaches the
+    16x tile fan-out."""
+    tiles = images.select(id_col, lat_col, lng_col, extent_col, F.inline(_tile_grid()))
+    tiles = tiles.select("*", *_tile_rect(lat_col, lng_col, extent_col))
+    return tiles.select("*", _tile_level(), *extra)
+
+
+def _cells() -> Column:
+    """The tile row's assigned cells: the ``tile_cells`` kernel call (UDF
+    arguments by name: an F.col costs ~13 py4j calls to record its call
+    site, a name 3)."""
+    return tile_cells("lat0", "lat1", "lng0", "lng1", "level")
+
+
 def tile_containment_check(
     images: DataFrame,
     lat_col: str = "lat",
@@ -343,74 +407,19 @@ def tile_containment_check(
     A complete assignment yields n_missed = 0 on every tile; any sliver the
     padded-bbox construction misses shows up as a nonzero count.  Returns
     (image_id, tile_x, tile_y, n_probes, n_missed).
-    """
-    assigned = image_tile_assignment(images, lat_col, lng_col, extent_col, id_col)
-    # ONE aggregation is the only consumer of the expensive tile_cells
-    # kernel subtree; the whole check hangs BELOW this exchange, so the
-    # assignment kernel evaluates exactly once.  (Branching directly on the
-    # map-only subtree re-evaluated the kernel once per branch — measured 3x
-    # the whole check's cost in round 4.)
-    per_tile = (
-        assigned.select(
-            id_col, "tile_x", "tile_y", "cell_id",
-            kernels.cell_level_expr("cell_id").alias("_lvl"),
-        )
-        .groupBy(id_col, "tile_x", "tile_y")
-        .agg(
-            F.collect_list("cell_id").alias("_cells"),
-            F.collect_set("_lvl").alias("_lvls"),
-        )
-    )
-    # Round 6 rewrite: the per-tile cell array RIDES THROUGH the 81x probe
-    # explode and coverage is an exists()/array_contains membership over it
-    # — pure codegen bit math on ~|cells-per-tile| longs per probe.  The old
-    # shape semi-joined 6.5M exploded probe-ancestor rows against 724k
-    # exploded cell rows and count-distinct'ed the hits: 3 extra exchanges
-    # over the check's biggest intermediate, all replaced by ONE map-side-
-    # combined aggregation (n_missed counted directly per tile).  per_tile
-    # now has a single consumer chain, so the round-4 localCheckpoint (then
-    # needed to stop 3 branches re-running the kernel) is obsolete; the
-    # repartition stays — AQE coalesces the 80k-row aggregate to very few
-    # partitions and the 81x fan-out + leaf kernel would inherit that near-
-    # serial layout (it moves only tiny per-tile rows, never probe rows).
-    n_parts = per_tile.sparkSession.sparkContext.defaultParallelism
-    per_tile = per_tile.repartition(n_parts)
-    attrs = images.select(id_col, lat_col, lng_col, extent_col)
-    # broadcast the per-image attrs explicitly: the planner's size estimate
-    # otherwise broadcasts the (bigger) per-tile side and the 81x fan-out +
-    # leaf kernel inherit the attrs scan's 1-partition layout, undoing the
-    # repartition above
-    t = _tile_bounds(
-        per_tile.join(F.broadcast(attrs), id_col), lat_col, lng_col, extent_col
-    )
 
-    fr = [i / (probes_per_axis - 1) for i in range(probes_per_axis)]
-    fr_arr = F.expr(f"array({', '.join(_D(f) for f in fr)})")
-    probes = (
-        t.withColumn("fx", F.explode(fr_arr))
-        .withColumn("fy", F.explode(fr_arr))
-        .withColumn("plat", F.col("lat0") + (F.col("lat1") - F.col("lat0")) * F.col("fy"))
-        .withColumn("plng", F.col("lng0") + (F.col("lng1") - F.col("lng0")) * F.col("fx"))
-        .withColumn("leaf", kernels.cell_from_latlng(F.col("plat"), F.col("plng")))
-        .select(id_col, "tile_x", "tile_y", "leaf", "_cells", "_lvls")
-    )
-    # covered iff the leaf's ancestor at one of the tile's ACTUAL cell
-    # levels equals an assigned cell — the same (level, ancestor) relation
-    # the old equi-join evaluated, now as an in-row membership probe
-    covered = F.expr(
-        "exists(_lvls, l -> array_contains(_cells,"
-        " (leaf & -shiftleft(cast(1 as bigint), cast((30 - l) * 2 as int)))"
-        " | shiftleft(cast(1 as bigint), cast((30 - l) * 2 as int))))"
-    )
-    return (
-        probes.withColumn("_cov", covered)
-        .groupBy(id_col, "tile_x", "tile_y")
-        .agg(
-            F.count(F.lit(1)).cast("int").alias("n_probes"),
-            # old shape's n_missed was int-minus-long => LongType; keep it
-            F.sum(F.when(F.col("_cov"), 0).otherwise(1)).alias("n_missed"),
-        )
-        .select(id_col, "tile_x", "tile_y", "n_probes", "n_missed")
+    Map-only: one projection per tile row, whose ``probe_misses`` kernel
+    reads the same ``tile_cells`` list that image_tile_assignment
+    explodes — no regroup, no join, no probe fan-out."""
+    if probes_per_axis < 2:
+        raise ValueError(f"probes_per_axis must be at least 2, got {probes_per_axis}")
+    misses = probe_misses("lat0", "lat1", "lng0", "lng1", _cells(), F.lit(probes_per_axis))
+    return _tile_rows(images, lat_col, lng_col, extent_col, id_col).select(
+        id_col,
+        "tile_x",
+        "tile_y",
+        F.expr(f"{probes_per_axis * probes_per_axis} AS n_probes"),
+        misses.alias("n_missed"),
     )
 
 
@@ -428,22 +437,23 @@ def tile_assignment_stats(
     (image_id, tile_x, tile_y, n_cells, area_ratio) where area_ratio =
     sum(exact cell areas) / spherical tile area.  A regression that quietly
     over-assigns (e.g. the cap backstop taking over for interior tiles)
-    shows up as a ratio blow-up long before anything is incorrect."""
-    assigned = image_tile_assignment(images, lat_col, lng_col, extent_col, id_col)
+    shows up as a ratio blow-up long before anything is incorrect.  The
+    tile area rides through the explode and the per-tile aggregate, so the
+    image table is scanned once."""
+    tiles = _tile_rows(
+        images, lat_col, lng_col, extent_col, id_col, _tile_area().alias("tile_area")
+    )
+    assigned = tiles.select(
+        id_col, "tile_x", "tile_y", "tile_area", F.explode(_cells()).alias("cell_id")
+    )
     per_tile = assigned.withColumn(
         "cell_area", kernels.cell_exact_area(F.col("cell_id"))
-    ).groupBy(id_col, "tile_x", "tile_y").agg(
+    ).groupBy(id_col, "tile_x", "tile_y", "tile_area").agg(
         F.count(F.lit(1)).alias("n_cells"),
         F.sum("cell_area").alias("covered_area"),
     )
-    attrs = images.select(id_col, lat_col, lng_col, extent_col)
-    t = _tile_bounds(per_tile.join(attrs, id_col), lat_col, lng_col, extent_col)
-    return t.select(
-        id_col,
-        "tile_x",
-        "tile_y",
-        "n_cells",
-        (F.col("covered_area") / _tile_area()).alias("area_ratio"),
+    return per_tile.select(
+        id_col, "tile_x", "tile_y", "n_cells", F.expr("covered_area / tile_area AS area_ratio")
     )
 
 
@@ -467,28 +477,12 @@ def image_tile_assignment(
     Map-only: the kernel returns each tile's cells deduplicated, so no
     exchange follows it.  ``id_col`` must be the key of ``images`` — two
     rows with one id would each emit that image's cells."""
-    # project away payload columns (bytes!) BEFORE the 16x tile explode —
-    # otherwise every tile row drags the full image binary through the plan
-    tiles = _tile_bounds(
-        images.select(id_col, lat_col, lng_col, extent_col, F.inline(_tile_grid())),
-        lat_col,
-        lng_col,
-        extent_col,
-    )
-    tiles = tiles.select("*", _tile_level())
-
     # explode the UDF call INLINE: materializing it via withColumn first
     # lets InferFiltersFromGenerate slip a size()>0 Filter between the UDF
     # and the Generate, and UDF extraction then evaluates the Arrow kernel
     # TWICE per row (the round-3/4 doubled-kernel bug class; the rule skips
     # UDF-typed generator inputs, so this form stays single-eval — same
     # pattern as spatial_join.py's covering explode)
-    # (UDF arguments by name: an F.col costs ~13 py4j calls to record its
-    # call site, a name 3)
-    return tiles.select(
-        id_col,
-        "tile_x",
-        "tile_y",
-        "level",
-        F.explode(tile_cells("lat0", "lat1", "lng0", "lng1", "level")).alias("cell_id"),
+    return _tile_rows(images, lat_col, lng_col, extent_col, id_col).select(
+        id_col, "tile_x", "tile_y", "level", F.explode(_cells()).alias("cell_id")
     )

@@ -50,10 +50,10 @@ SECTIONS = [
     ),
     (
         "tile_containment_check",
-        "the assignment kernel evaluates once, under one per-tile "
-        "collect_list; the tile's cell array rides through the 81x probe "
-        "explode and coverage is an in-row exists()/array_contains test, "
-        "with one more ArrowEvalPython (cell_from_latlng) per probe",
+        "map-only, one projection per tile row: the probe_misses kernel "
+        "reads the tile_cells list in place (two chained ArrowEvalPython "
+        "nodes) and counts the 81 lattice probes no cell of the tile "
+        "covers; no exchange, no join, no explode",
     ),
     (
         "edge_face_span",

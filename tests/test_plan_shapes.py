@@ -241,6 +241,22 @@ def test_tile_assignment_evaluates_kernel_once(spark, entrymod):
             assert "Exchange hashpartitioning" not in plan, plan
 
 
+def test_tile_containment_check_is_one_projection(spark, entrymod):
+    """The check reads each tile's ``tile_cells`` list in place: the kernel
+    evaluates once, the probe kernel is the second and last
+    ArrowEvalPython, and no exchange, join or explode follows; the grid
+    ``inline`` is the only Generate.  The tightness stats carry the tile
+    area through their aggregate instead of joining the image table back."""
+    plan = _plan(entrymod.queries()["tile_containment_check"](spark, SF_DIR))
+    assert plan.count("tile_cells(") == 1, plan
+    assert plan.count("ArrowEvalPython") == 2, plan
+    assert plan.count("Generate") == plan.count("Generate inline") == 1, plan
+    for node in ("Exchange", "Join", "Generate explode"):
+        assert node not in plan, (node, plan)
+    plan = _plan(entrymod.queries()["tile_assignment_stats"](spark, SF_DIR))
+    assert "Join" not in plan and "CartesianProduct" not in plan, plan
+
+
 def test_edge_face_span_evaluates_kernel_once(spark, entrymod):
     """The span kernel is a struct-returning pandas UDF projected into two
     fields — the explode-inline pattern must keep it at ONE ArrowEvalPython

@@ -7,10 +7,12 @@ keep."""
 
 from __future__ import annotations
 
+import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
 from s2geometry_d_spark.operators import tiling
+from s2geometry_d_spark.s2core import cellid as ci
 
 # cube-face geometry: seams at lng multiples of 90 (faces 0..3), corners at
 # lat = atan(1/sqrt(2)) ~ 35.264 deg; poles are faces 2/5
@@ -108,3 +110,151 @@ def test_tile_assignment_tightness_pinned(spark):
     assert row["max_cells"] <= tiling._K * tiling._K, row
     # a ratio below 1 would mean under-coverage — contradicts completeness
     assert row["min_ratio"] >= 1.0, row
+
+
+def _spark_containment_check(images, probes_per_axis):
+    """The check's earlier Spark formulation, kept as the reference for
+    ``tiling.probe_misses``: the exploded assignment regrouped per tile,
+    joined back to the image attributes, exploded to one row per probe, a
+    leaf per probe, and an ``exists(array_contains)`` test of the probe's
+    ancestor at each of the tile's cell levels."""
+    from s2geometry_d_spark.functions import kernels
+
+    per_tile = (
+        tiling.image_tile_assignment(images)
+        .select(
+            "image_id", "tile_x", "tile_y", "cell_id",
+            kernels.cell_level_expr("cell_id").alias("_lvl"),
+        )
+        .groupBy("image_id", "tile_x", "tile_y")
+        .agg(F.collect_list("cell_id").alias("_cells"), F.collect_set("_lvl").alias("_lvls"))
+    )
+    t = per_tile.join(images, "image_id").select(
+        "*", *tiling._tile_rect("lat", "lng", "extent_deg")
+    )
+    fr = F.array(*[F.lit(i / (probes_per_axis - 1)) for i in range(probes_per_axis)])
+    probes = (
+        t.withColumn("fx", F.explode(fr))
+        .withColumn("fy", F.explode(fr))
+        .withColumn("plat", F.col("lat0") + (F.col("lat1") - F.col("lat0")) * F.col("fy"))
+        .withColumn("plng", F.col("lng0") + (F.col("lng1") - F.col("lng0")) * F.col("fx"))
+        .withColumn("leaf", kernels.cell_from_latlng(F.col("plat"), F.col("plng")))
+    )
+    covered = F.expr(
+        "exists(_lvls, l -> array_contains(_cells,"
+        " (leaf & -shiftleft(cast(1 as bigint), cast((30 - l) * 2 as int)))"
+        " | shiftleft(cast(1 as bigint), cast((30 - l) * 2 as int))))"
+    )
+    return probes.groupBy("image_id", "tile_x", "tile_y").agg(
+        F.count(F.lit(1)).cast("int").alias("n_probes"),
+        F.sum(F.when(covered, 0).otherwise(1)).alias("n_missed"),
+    )
+
+
+@pytest.fixture(scope="module")
+def all_images(spark):
+    return spark.createDataFrame(ADVERSARIAL + HUGE, ["image_id", "lat", "lng", "extent_deg"])
+
+
+def test_kernel_counts_equal_the_spark_formulation(spark, all_images):
+    got = tiling.tile_containment_check(all_images, probes_per_axis=17).collect()
+    want = _spark_containment_check(all_images, 17).collect()
+    assert len(got) == len(ADVERSARIAL + HUGE) * tiling.GRID * tiling.GRID
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
+@pytest.fixture(scope="module")
+def tile_rows(spark, all_images):
+    """The (image_id, tile_x, tile_y) keys of every footprint's tiles, and
+    their rects and requested levels as numpy columns, in key order."""
+    rows = sorted(
+        tiling._tile_rows(all_images, "lat", "lng", "extent_deg", "image_id")
+        .select("image_id", "tile_x", "tile_y", "lat0", "lat1", "lng0", "lng1", "level")
+        .collect()
+    )
+    cols = [np.array([r[k] for r in rows], dtype=np.float64) for k in ("lat0", "lat1", "lng0", "lng1")]
+    lvl = np.array([r["level"] for r in rows], dtype=np.int64)
+    return [tuple(r[:3]) for r in rows], (*cols, lvl)
+
+
+def _lost_probes(rect, cells, dropped, probes_per_axis):
+    """Per-probe count of the tile's lattice points whose leaf lies in the
+    ``dropped`` cell and in no other of its signed ``cells``, by leaf-range
+    containment."""
+    la0, la1, lo0, lo1 = rect
+    ids = ci.from_signed(np.array([c for c in cells if c != dropped], dtype=np.int64))
+    lo_ids, hi_ids = ci.range_min(ids), ci.range_max(ids)
+    gone = ci.from_signed(np.array([dropped], dtype=np.int64))
+    lost = 0
+    for a in range(probes_per_axis):
+        for b in range(probes_per_axis):
+            fa, fb = a / (probes_per_axis - 1), b / (probes_per_axis - 1)
+            leaf = ci.from_latlng(
+                np.array([la0 + (la1 - la0) * fa]), np.array([lo0 + (lo1 - lo0) * fb])
+            )[0]
+            in_gone = ci.range_min(gone)[0] <= leaf <= ci.range_max(gone)[0]
+            lost += bool(in_gone and not ((lo_ids <= leaf) & (leaf <= hi_ids)).any())
+    return lost
+
+
+def _drop_one_cell(tiles, tile, probes_per_axis):
+    """(rows, cells) of the assignment of ``tiles`` with one cell of tile
+    index ``tile`` dropped — the first whose loss uncovers a probe — and
+    that loss, counted per probe."""
+    la0, la1, lo0, lo1, lvl = tiles
+    rows, cells = tiling.tile_cell_pairs(la0, la1, lo0, lo1, lvl)
+    own = cells[rows == tile]
+    rect = (la0[tile], la1[tile], lo0[tile], lo1[tile])
+    for dropped in own:
+        lost = _lost_probes(rect, own, dropped, probes_per_axis)
+        if lost:
+            keep = ~((rows == tile) & (cells == dropped))
+            return rows[keep], cells[keep], lost
+    raise AssertionError(f"no cell of tile {tile} holds a probe alone")
+
+
+# a tile near a cube corner with cells at two levels (grid and cap
+# cells), and a face-interior tile with cells at one level
+_DROP_TILES = [("t_corner", 1, 1), ("t_face_center", 1, 2)]
+
+
+@pytest.mark.parametrize("key", _DROP_TILES)
+def test_kernel_counts_the_probes_of_a_dropped_cell(tile_rows, key):
+    keys, tiles = tile_rows
+    tile = keys.index(key)
+    la0, la1, lo0, lo1, lvl = tiles
+    rows, cells = tiling.tile_cell_pairs(la0, la1, lo0, lo1, lvl)
+    assert not tiling.probe_miss_counts(la0, la1, lo0, lo1, rows, cells, 9).any()
+    rows, cells, lost = _drop_one_cell(tiles, tile, 9)
+    want = np.zeros(la0.shape[0], dtype=np.int64)
+    want[tile] = lost
+    got = tiling.probe_miss_counts(la0, la1, lo0, lo1, rows, cells, 9)
+    assert np.array_equal(got, want), (lost, got[tile])
+
+
+def test_kernel_reads_a_sliced_batch(tile_rows):
+    """A sliced list array (non-zero offset) gives the counts of the same
+    tiles in an unsliced batch."""
+    import pyarrow as pa
+
+    from s2geometry_d_spark.operators.spatial_join import hit_lists
+
+    keys, tiles = tile_rows
+    tile = keys.index(_DROP_TILES[1])
+    rows, cells, lost = _drop_one_cell(tiles, tile, 9)
+    n = len(keys)
+    want = tiling.probe_miss_counts(*tiles[:4], rows, cells, 9)
+    lists = hit_lists(rows, pa.array(cells, type=pa.int64()), n)
+    start = tile - 3
+    got = tiling.probe_misses.func(
+        *(pa.array(c).slice(start) for c in tiles[:4]),
+        lists.slice(start),
+        pa.array(np.full(n, 9, dtype=np.int32)).slice(start),
+    )
+    assert got.to_pylist() == want[start:].tolist()
+    assert got[3].as_py() == lost > 0
+
+
+def test_probes_per_axis_below_two_is_refused(adversarial_images):
+    with pytest.raises(ValueError, match="probes_per_axis"):
+        tiling.tile_containment_check(adversarial_images, probes_per_axis=1)
