@@ -19,7 +19,7 @@ from ..functions.localdf import local_df
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import edgedist
+from ..functions import edgedist, kernels
 from ..s2core.regions import Cap, chord2_from_radians
 from .spatial_join import candidate_match_kernel, compute_coverings
 
@@ -51,16 +51,18 @@ def within_distance_join(
         )
     qdf = local_df(spark, qrows, ["query_id", "qx", "qy", "qz"])
     cand = cand.join(F.broadcast(qdf), "query_id")
-    px, py, pz = edgedist.xyz_columns(lat_col, lng_col)
-    d2 = (
-        (px - F.col("qx")) * (px - F.col("qx"))
-        + (py - F.col("qy")) * (py - F.col("qy"))
-        + (pz - F.col("qz")) * (pz - F.col("qz"))
+    # dist2 and its cut are each ONE SQL text (a Column-built tree cost ~10
+    # py4j calls per operator on every evaluation); the doubles keep their
+    # bits (``kernels.sql_double``)
+    plat, plng = f"`{lat_col}`", f"`{lng_col}`"
+    d2 = " + ".join(
+        f"(({e} - `q{a}`) * ({e} - `q{a}`))"
+        for a in "xyz"
+        for e in [edgedist.XYZ_FROM_LATLNG[a].format(lat=plat, lng=plng)]
     )
-    return (
-        cand.withColumn("dist2", d2)
-        .filter(F.col("dist2") <= F.lit(r2))
-        .drop("qx", "qy", "qz")
+    keep = [f"`{c}`" for c in cand.columns if c not in ("qx", "qy", "qz")]
+    return cand.selectExpr(*keep, f"{d2} AS `dist2`").filter(
+        f"`dist2` <= {kernels.sql_double(r2)}"
     )
 
 

@@ -53,9 +53,10 @@ _YXC = (
 
 def fake_pixels(seed: int) -> np.ndarray:
     """Deterministic H x W x 3 uint8 'image' for a seed — pure integer hash
-    (vectorized; no RNG object per row)."""
-    v = (np.uint32(seed) * np.uint32(2654435761) + _YXC) * np.uint32(2246822519)
-    return ((v >> np.uint32(16)) & np.uint32(0xFF)).astype(np.uint8)
+    (vectorized; no RNG object per row).  The uint32 products wrap by
+    design; computed on arrays (:func:`fake_pixels_batch`), they wrap
+    without numpy's scalar-overflow warning."""
+    return fake_pixels_batch(np.asarray([seed]))[0]
 
 
 def fake_pixels_batch(seeds: np.ndarray) -> np.ndarray:

@@ -16,9 +16,23 @@ SF = "/root/testdata/sf0.001"
 SECTIONS = [
     (
         "pip_cap_join",
-        "the flagship covering join: broadcast membership probe, map-only on "
-        "the fact side; the match kernel evaluates ONCE (plan-pinned since "
-        "round 4)",
+        "the flagship covering join, map-only on the fact side: the "
+        "coarse-prefix InSet over the stored cell column, ONE explode of the "
+        "cell's ancestors at the covering levels and ONE broadcast hash join "
+        "on the signed cell id, with the accept predicate as its condition; "
+        "no Python stage (plan-pinned)",
+    ),
+    (
+        "pip_many_poly_join",
+        "1000 hexagons, 60,161 covering cells (past PREFILTER_CELL_LIMIT): "
+        "the candidates come from ONE evaluation of the Arrow match kernel "
+        "(plan-pinned since round 4), decoded and joined to the broadcast "
+        "region mapping; the boundary candidates run the pip_exact kernel",
+    ),
+    (
+        "within_distance_join",
+        "fixed-radius covering join through the match kernel; dist2 and its "
+        "cut are SQL texts whose optimized plan equals the Column-built tree",
     ),
     (
         "group_rect_bounds",

@@ -10,6 +10,7 @@ from s2geometry_d_spark.operators.multimodal import (
     image_checksum_stats,
     resize_images,
 )
+from s2geometry_d_spark.sources import images
 from s2geometry_d_spark.sources.images import (
     H,
     W,
@@ -126,3 +127,25 @@ def test_audio_chunk_stats_match_reference(spark):
                 1 for a, b in zip(c, c[1:]) if (a >= 0) != (b >= 0)
             )
             assert got[(f"aud{seed:012d}", k)] == (mean_abs, peak, zc)
+
+
+def test_fake_pixels_equals_the_batch_render_without_overflow_warning():
+    """``fake_pixels`` keeps the bytes of its uint32 hash, equal to
+    ``fake_pixels_batch`` row for row, and its intended wrap raises no
+    RuntimeWarning (seed 5 wraps the first product)."""
+    import warnings
+
+    from s2geometry_d_spark.sources.images import fake_pixels_batch
+
+    seeds = [0, 1, 5, 4_000_000, video_frame_seed(77, 3), 2**32 - 1]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        got = [fake_pixels(s) for s in seeds]
+    batch = fake_pixels_batch(np.asarray(seeds))
+    for s, g, b in zip(seeds, got, batch):
+        assert g.dtype == np.uint8 and g.shape == (H, W, 3)
+        assert g.tobytes() == b.tobytes(), s
+    # the scalar formula the function had, wrap and all
+    with np.errstate(over="ignore"):
+        v = (np.uint32(5) * np.uint32(2654435761) + images._YXC) * np.uint32(2246822519)
+    assert got[2].tobytes() == ((v >> np.uint32(16)) & np.uint32(0xFF)).astype(np.uint8).tobytes()

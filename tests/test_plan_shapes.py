@@ -60,8 +60,9 @@ def test_pip_join_evaluates_match_kernel_once(spark, entrymod):
     Arrow kernel and the explode made Spark evaluate the UDF TWICE per fact
     row (no UDF dedup across the Filter barrier).  The plan must contain
     exactly ONE evaluation of ``match`` — the explode alone drops the
-    empty-array rows."""
-    df = entrymod.queries()["pip_cap_join"](spark, SF_DIR)
+    empty-array rows.  The 1000-hexagon join (60,161 covering cells, past
+    ``PREFILTER_CELL_LIMIT``) is a PIP plan that still runs the kernel."""
+    df = entrymod.queries()["pip_many_poly_join"](spark, SF_DIR)
     plan = _plan(df)
     assert plan.count("match(") == 1, plan
 
@@ -72,6 +73,21 @@ def test_pip_join_uses_broadcast_hash_join(spark, entrymod):
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+@pytest.mark.parametrize("query", ["pip_cap_join", "pip_rect_join"])
+def test_small_covering_pip_join_has_no_python_stage(spark, entrymod, query):
+    """A cap or rect PIP join (well under ``PREFILTER_CELL_LIMIT`` covering
+    cells) generates its candidates natively: ONE broadcast hash join of
+    the exploded cell ancestors against the covering cells, with the accept
+    predicate as its condition, and no ArrowEvalPython, sort-merge or
+    nested-loop join (the persisted point fixture is a leaf here)."""
+    ops = [op for op, _ in _operators(entrymod.queries()[query](spark, SF_DIR))]
+    assert not any("ArrowEvalPython" in op for op in ops), ops
+    joins = [op for op in ops if "Join" in op]
+    assert len(joins) == 1 and joins[0].startswith("BroadcastHashJoin"), ops
+    assert "is_interior" in joins[0], joins
+    assert sum(op.startswith("Generate explode") for op in ops) == 1, ops
 
 
 def test_column_pruning_reaches_scan(spark):

@@ -1,6 +1,7 @@
 """End-to-end Spark spatial joins vs brute-force oracles on testdata
 (the reference cross-validation pattern, SURVEY.md §5.1)."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -330,30 +331,50 @@ def _column_accept(caps, rects, lat_col, lng_col):
     return accept
 
 
-def _column_candidates(points_df, coverings, cell_col="cell_id", two_way=False):
-    """The candidate decode of ``candidate_match_kernel`` built with one
-    ``withColumn`` per column (for frames without a stored cell column)."""
+def _column_candidates(points_df, coverings, cell_col="cell_id"):
+    """The native candidate join of ``candidate_join`` built from Columns,
+    for frames without a stored cell column: one ``F.when`` ancestor per
+    covering level, the array guarded by the coarse-prefix test, exploded
+    and joined to the broadcast cell table."""
+    from s2geometry_d_spark.functions import kernels
     from s2geometry_d_spark.functions.localdf import local_df
-    from s2geometry_d_spark.operators.spatial_join import covering_match_udf
+    from s2geometry_d_spark.s2core.cellid import CellId
 
-    match, region_ids = covering_match_udf(coverings, two_way=two_way)
-    mapping = local_df(
-        points_df.sparkSession, list(enumerate(region_ids)), ["_ridx", "region_id"]
+    cell = F.col(cell_col)
+    levels = sorted({CellId(cid).level() for rc in coverings for cid, _ in rc.cells})
+    anc = F.array(
+        *[
+            F.when(
+                cell.bitwiseAND(-cell) <= F.lit(kernels.lsb_for_level(lvl)),
+                kernels.parent_signed(cell, lvl),
+            )
+            for lvl in levels
+        ]
     )
-    cand = (
-        points_df.withColumn("_code", F.explode(match(F.col(cell_col))))
-        .withColumn("_ridx", (F.col("_code") / 2).cast("int"))
-        .withColumn("is_interior", (F.col("_code") % 2) == 1)
-        .drop("_code")
+    anc = F.when(_column_prefix_filter(coverings, cell_col, False), anc)
+    rows = [
+        (int(np.int64(np.uint64(cid) ^ np.uint64(1 << 63))), rc.region_id, bool(inner))
+        for rc in coverings
+        for cid, inner in rc.cells
+    ]
+    cells = local_df(
+        points_df.sparkSession,
+        rows,
+        "_key BIGINT NOT NULL, region_id STRING NOT NULL, is_interior BOOLEAN NOT NULL",
     )
-    return cand.join(F.broadcast(mapping), "_ridx").drop("_ridx")
+    return (
+        points_df.withColumn("_key", F.explode(anc))
+        .join(F.broadcast(cells), "_key")
+        .drop("_key")
+    )
 
 
 def test_pip_accept_sql_keeps_the_column_built_plan(spark, monkeypatch):
     """The PIP join over two caps, a dateline-crossing rect and a polygon
-    optimizes to the same plan whether its accept predicate and candidate
-    decode are parsed from SQL text or built from Columns (the polygon's
-    UDF term OR-ed on either way), and returns the same rows."""
+    optimizes to the same plan whether its accept predicate and the
+    ancestor array of its candidate join are parsed from SQL text or built
+    from Columns (the polygon's UDF term OR-ed on either way), and returns
+    the same rows."""
     from s2geometry_d_spark.functions import kernels
     from s2geometry_d_spark.operators import spatial_join
 
@@ -366,7 +387,7 @@ def test_pip_accept_sql_keeps_the_column_built_plan(spark, monkeypatch):
     sql_built = points_in_regions(pts, REGIONS)
     with monkeypatch.context() as m:
         m.setattr(spatial_join, "_accept_predicate", _column_accept)
-        m.setattr(spatial_join, "candidate_match_kernel", _column_candidates)
+        m.setattr(spatial_join, "candidate_join", _column_candidates)
         column_built = points_in_regions(pts, REGIONS)
     plan = _optimized(sql_built)
     assert plan == _optimized(column_built)
@@ -458,3 +479,111 @@ def test_tiling_sql_keeps_the_column_built_plans(spark, monkeypatch):
     for got, want in zip(sql_built, column_built):
         assert _optimized(got) == _optimized(want)
     assert sorted(sql_built[0].collect()) == sorted(column_built[0].collect())
+
+
+def _random_cells(rng, n: int, levels) -> np.ndarray:
+    """``n`` random unsigned cell ids, each at a level drawn from ``levels``."""
+    from s2geometry_d_spark.s2core import cellid as ci
+
+    face = rng.integers(0, 6, n).astype(np.uint64)
+    pos = rng.integers(0, 1 << 60, n).astype(np.uint64)
+    leaf = (face << np.uint64(61)) | (pos << np.uint64(1)) | np.uint64(1)
+    return ci.parent(leaf, rng.choice(levels, n))
+
+
+@pytest.mark.parametrize("stored", [False, True])
+def test_candidate_join_rows_equal_the_match_kernel(spark, stored):
+    """The native ancestor join gives the hits ``match_coverings`` gives,
+    compared as multisets of (row, region, interior), over random signed
+    ids at leaf, mid and face level, against coverings at several levels (a
+    face cell among them) with one cell shared by two regions; a stored
+    frame also takes the coarse-prefix filter first."""
+    from collections import Counter
+
+    from s2geometry_d_spark.functions.localdf import local_df
+    from s2geometry_d_spark.operators import spatial_join as sj
+    from s2geometry_d_spark.s2core import cellid as ci
+
+    rng = np.random.default_rng(16)
+    ids = _random_cells(rng, 600, [30, 30, 30, 22, 13, 6, 0])
+    # covering cells over the inputs at levels 7, 10 and 12, plus random
+    # ones; cells[5] (an input's level-7 ancestor) is shared by "a" and "b"
+    near = ci.parent(ids[:300][ci.level(ids[:300]) >= 12], 12)
+    cells = np.concatenate(
+        [ci.parent(near[:40], 7), ci.parent(near[40:80], 10), near[80:120],
+         _random_cells(rng, 30, [3, 16, 24])]
+    )
+    cov = list(dict.fromkeys(int(c) for c in cells))
+    shared = cov[5]
+    coverings = [
+        sj.RegionCovering("a", None, [(c, bool(i % 2)) for i, c in enumerate(cov[:60])]),
+        sj.RegionCovering("b", None, [(c, bool(i % 3 == 0)) for i, c in enumerate(cov[60:])] + [(shared, False)]),
+        sj.RegionCovering("face", None, [(int(ci.parent(ids[7:8], 0)[0]), True)]),
+    ]
+    signed = ci.to_signed(ids)
+    rows, codes = sj.match_coverings(signed, sj.covering_tables(coverings))
+    want = Counter(
+        (int(r), coverings[int(k) // 2].region_id, bool(k % 2)) for r, k in zip(rows, codes)
+    )
+    df = local_df(spark, [(i, int(c)) for i, c in enumerate(signed)], "row BIGINT, cell BIGINT")
+    if stored:
+        df = df.persist()
+        df._s2_cell_stored = True
+    got = Counter(
+        tuple(r)
+        for r in sj.candidate_join(df, coverings, cell_col="cell")
+        .select("row", "region_id", "is_interior")
+        .collect()
+    )
+    if stored:
+        df.unpersist()
+    assert got == want
+    shared_rows = {r for r, rid, _ in want if rid == "a"} & {r for r, rid, _ in want if rid == "b"}
+    assert shared_rows and {key[1] for key in want} == {"a", "b", "face"}
+
+
+def _column_within_distance(points_df, queries, radius_deg):
+    """``within_distance_join`` with its dist2 and cut built from Columns:
+    the reference tree the SQL texts must optimize to."""
+    import math
+
+    from s2geometry_d_spark.functions import edgedist
+    from s2geometry_d_spark.functions.localdf import local_df
+    from s2geometry_d_spark.operators.spatial_join import (
+        candidate_match_kernel,
+        compute_coverings,
+    )
+    from s2geometry_d_spark.s2core.regions import chord2_from_radians
+
+    regions = [(q, Cap.from_latlng_radius(la, ln, radius_deg)) for q, la, ln in queries]
+    cand = candidate_match_kernel(points_df, compute_coverings(regions, max_cells=24))
+    cand = cand.drop("is_interior").withColumnRenamed("region_id", "query_id")
+    qrows = []
+    for qid, lat, lng in queries:
+        la, ln = math.radians(lat), math.radians(lng)
+        qrows.append((qid, math.cos(ln) * math.cos(la), math.sin(ln) * math.cos(la), math.sin(la)))
+    qdf = local_df(points_df.sparkSession, qrows, ["query_id", "qx", "qy", "qz"])
+    cand = cand.join(F.broadcast(qdf), "query_id")
+    px, py, pz = edgedist.xyz_columns("lat", "lng")
+    d2 = (
+        (px - F.col("qx")) * (px - F.col("qx"))
+        + (py - F.col("qy")) * (py - F.col("qy"))
+        + (pz - F.col("qz")) * (pz - F.col("qz"))
+    )
+    r2 = chord2_from_radians(math.radians(radius_deg))
+    return cand.withColumn("dist2", d2).filter(F.col("dist2") <= F.lit(r2)).drop("qx", "qy", "qz")
+
+
+def test_within_distance_sql_keeps_the_column_built_plan(spark, points):
+    """``within_distance_join``'s dist2 and cut, parsed from SQL text,
+    optimize to the Column-built tree and give the same rows, dist2 bits
+    included."""
+    from s2geometry_d_spark.operators.distance import within_distance_join
+
+    queries = [("q1", 48.85, 2.35), ("q2", -10.0, 179.5), ("q3", 0.0, -60.0)]
+    sql_built = within_distance_join(points, queries, 8.0)
+    column_built = _column_within_distance(points, queries, 8.0)
+    assert sql_built.columns == column_built.columns
+    assert _optimized(sql_built) == _optimized(column_built)
+    got = sorted(sql_built.collect())
+    assert got and got == sorted(column_built.collect())
