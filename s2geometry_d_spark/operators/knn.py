@@ -12,16 +12,17 @@ Each variant supplies only its target hooks:
 * ``cover(qid, ring_deg)`` — a covering of everything within ``ring_deg``
   of the query: a cap for point queries, the buffered segment for edge
   targets, the ring-expanded circumcap for cell targets;
-* ``candidates(coverings, qrows, k=, tie=, key=)`` — one round as ONE
-  map-only ``mapInArrow`` pass over the probe table (:func:`_round_frame`,
-  :func:`round_kernel`): the two-way covering match, the numpy scorer, the
-  ``dist2 <= r2`` cut, the reduction to one row per (query, ``key``) and a
-  per-partition top-k, returning (q, <candidate columns>, dist2) with q
+* ``candidates(coverings, qrows, k=, tie=, key=)`` — one round planned
+  as a :class:`Round` (:func:`_plan_round`): the probe table after its
+  native coarse-prefix filter, and ONE kernel (:func:`round_kernel`) over
+  its Arrow batches that runs the two-way covering match, the numpy
+  scorer, the ``dist2 <= r2`` cut, the reduction to one row per (query,
+  ``key``) and a top-k, returning (q, <candidate columns>, dist2) with q
   the query's slot in ``qrows``.  ``qrows`` holds (query_id, *target, r2)
   per pending query.  Point targets score ``dx*dx + dy*dy + dz*dz`` over
   the SQL-computed point xyz; every registered-edge variant scores with
   its numpy twin of the engine's SQL fragment (:func:`_edge_search`).
-  With ``coverings`` None the same pass runs over ``brute_df`` instead,
+  With ``coverings`` None the same kernel runs over ``brute_df`` instead,
   every row a candidate of every query;
 * ``key`` / ``tie_col`` — the reduction key (edge id, polyline id, or
   None for points) and the tie column of the ``ORDER BY dist2, tie``
@@ -32,9 +33,19 @@ Each variant supplies only its target hooks:
   counts: the points table, or the unregistered edge table, one row per
   edge (the index would offer an edge once per registered cell).
 
-Each round is cover -> ONE Spark job with no exchange -> ``toArrow()`` of
-at most P x |pending| x k rows (P: the probe table's partitions) -> the
-same :func:`topk_rows` reduce on the driver.  A query retires once k
+Each round is cover -> the kernel in one of two venues
+(:func:`_collect_round`) -> the same :func:`topk_rows` reduce on the
+driver.  A covered round whose probe the native prefilter cut first
+reads that probe with one bounded JVM-only job,
+``limit(_DRIVER_ROUND_ROWS + 1).toArrow()``: at most
+``_DRIVER_ROUND_ROWS`` rows and the driver runs the kernel over them, so
+no Python task starts; more, and the round is ONE map-only
+``mapInArrow`` job of the same kernel, with no exchange, whose
+``toArrow()`` reads at most P x |pending| x k rows (P: the probe table's
+partitions).  The reference likewise picks its strategy by a measured
+size (maxBruteForceIndexSize).  The brute round, and a round with no
+prefilter (an unstored cell column), always run on the executors.  A
+query retires once k
 rows lie inside its ring (the ring bounds the k-th distance, so nothing
 unseen can beat them), or once its ring reaches its completion radius —
 the ``max_distance_deg`` limit, or the far side of a ``knn_join`` region
@@ -55,11 +66,15 @@ measured, never passed in: the first ring is seeded from the same count
 (the reference likewise reads its index's own size, maxBruteForceIndexSize).
 
 Every result frame carries its decision record as ``_s2_ring``: ring
-rounds run (``rounds``), the rows each round collected (``round_rows``;
-a brute round adds one last entry, so it holds ``rounds`` + 1 entries
-when ``brute`` is non-empty), the ids of the brute-probed queries,
-whether the cutover fired and the ``brute_rows`` it was judged on (None
-when no cutover was due, so nothing was counted).
+rounds run (``rounds``); per round, the rows it returned to the driver
+merge (``round_rows``), the venue it took (``venues``: "driver" or
+"executors") and the probe rows the venue was chosen by (``probe_rows``:
+the bounded read's count, so ``_DRIVER_ROUND_ROWS`` + 1 means "over the
+bound", or None when no probe was measured); a brute round adds one last
+entry to each list, so they hold ``rounds`` + 1 entries when ``brute`` is
+non-empty; then the ids of the brute-probed queries, whether the cutover
+fired and the ``brute_rows`` it was judged on (None when no cutover was
+due, so nothing was counted).
 
 :func:`knn_edges_join_tables` (the query side is a DataFrame) runs its
 rounds over a pending DataFrame, under the same cutover gate, and
@@ -78,6 +93,8 @@ reference tests use (s2closest_edge_query_test.d:380-416).
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -86,7 +103,7 @@ from ..functions.localdf import local_df
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import from_arrow_type
+from pyspark.sql.pandas.types import from_arrow_type, to_arrow_schema
 
 from ..functions import edgedist, edgepair, kernels
 from ..s2core.regions import Cap, chord2_from_radians
@@ -105,6 +122,16 @@ _BRUTE_SCAN_ROWS = 10_000_000
 
 # the most (row, query) pairs one scorer call of the brute round sees
 _BRUTE_PAIRS = 1 << 16
+
+# the most probe rows a covered round scores on the driver instead of in a
+# Python task (a few MB of the kernel's columns held by the driver).
+# Measured on one knn_join round (k=5, 8 queries, stored synthetic points;
+# local[2], 4-core host): the driver venue took 0.10 s at 1.6k probe rows,
+# 0.16 s at 71k and 0.32 s at 233k; the mapInArrow venue 0.20, 0.21 and
+# 0.29 s — crossover between 106k and 233k rows.  A probe over the bound
+# pays its read of bound + 1 rows for nothing: 0.07 s at 1k rows, 0.13 s
+# at this bound, 0.19 s at twice it.
+_DRIVER_ROUND_ROWS = 1 << 16
 
 # first ring (deg) of the edge-, cell- and table-target variants
 _TARGET_SEED_DEG = 1.0
@@ -212,7 +239,11 @@ def _ring_search(
 
     ``ids``: query ids in input order; ``radius``: initial ring per query
     (deg); ``complete``: per-query completion radius, tightening the
-    distance limit's.  Returns (query_id, <candidate columns>, dist2,
+    distance limit's.  Every round reads its rows through
+    :func:`_collect_round`: a prefiltered round whose probe holds at most
+    ``_DRIVER_ROUND_ROWS`` rows runs its kernel on the driver, any other
+    round as its ``mapInArrow`` job; ``_s2_ring`` records each round's
+    venue and probe rows.  Returns (query_id, <candidate columns>, dist2,
     rank) carrying ``_s2_ring``, or None for an empty query list."""
     max_r = _max_ring(max_distance_deg)
     limit_r = max_r if max_distance_deg is not None else math.inf
@@ -222,28 +253,31 @@ def _ring_search(
     done_rows: list = []
     schema = None
     round_rows: list = []
+    venues: list = []
+    probe_rows: list = []
     brute: list = []
     rounds = 0
     cutover = False
     brute_rows = None
 
     def run(slots: list, coverings, r2: list) -> pa.Table:
-        # the round's one job: each partition's top-k, at most P x
-        # |slots| x k rows, read ONCE and reduced here by the same
-        # topk_rows — the final result is assembled driver-side, since
-        # keeping the lineage alive would re-run every round's probe when
-        # the result is finally consumed
+        # the round's top-k rows, read ONCE (_collect_round) and reduced
+        # here by the same topk_rows — the final result is assembled
+        # driver-side, since keeping the lineage alive would re-run every
+        # round's probe when the result is finally consumed
         nonlocal schema
         qrows = [(q, *target[q], r) for q, r in zip(slots, r2)]
-        frame = candidates(coverings, qrows, k=k, tie=tie_col, key=key)
-        table = frame.toArrow()
+        rnd = candidates(coverings, qrows, k=k, tie=tie_col, key=key)
+        table, venue, probed = _collect_round(rnd)
         round_rows.append(table.num_rows)
+        venues.append(venue)
+        probe_rows.append(probed)
         if schema is None:
             qtype = from_arrow_type(pa.array(list(ids)).type)
             schema = T.StructType(
                 [
                     T.StructField("query_id", qtype),
-                    *frame.schema.fields[1:],
+                    *rnd.schema.fields[1:],
                     T.StructField("rank", T.IntegerType(), False),
                 ]
             )
@@ -323,6 +357,8 @@ def _ring_search(
     results._s2_ring = {
         "rounds": rounds,
         "round_rows": round_rows,
+        "venues": venues,
+        "probe_rows": probe_rows,
         "brute": brute,
         "cutover": cutover,
         "brute_rows": brute_rows,
@@ -352,9 +388,10 @@ def round_kernel(
     key: str | None = None,
     two_way: bool = False,
 ):
-    """The body of one ring round's ``mapInArrow`` kernel: an iterator of
-    the probe table's Arrow batches in, one partition's top-k rows
-    (q, <cols>, dist2) out.
+    """The body of one ring round's kernel: an iterator of the probe
+    table's Arrow batches in, their top-k rows (q, <cols>, dist2) out —
+    one partition's in the ``mapInArrow`` venue, the whole probe's on the
+    driver (:func:`_collect_round`).
 
     ``coverings[i]`` is pending query slot i's ring covering and ``r2[i]``
     its acceptance radius; ``score(slots, *geom)`` is the variant's numpy
@@ -417,15 +454,36 @@ def round_kernel(
     return ring_round
 
 
-def _round_frame(
-    src: DataFrame, coverings, r2, score, *, cell_col, geom, cols, **spec
-) -> DataFrame:
-    """One round over ``src`` (the probe table, already prefiltered, with
-    its ``geom`` scorer columns; or, with ``coverings`` None, the whole
-    brute table) as ONE map-only ``mapInArrow`` node of
-    :func:`round_kernel`: no exchange, so reading it is one Spark job.
-    Returns (q int, <cols>, dist2 double); ``spec`` is the kernel's ``k``,
-    ``tie``, ``key`` and ``two_way``."""
+class Round(NamedTuple):
+    """One ring round: ``probe``, the table the round reads (the probe
+    table after its native prefilter, or the whole brute table, projected
+    to the kernel's columns); ``kernel``, its :func:`round_kernel` body;
+    ``schema``, the kernel's rows (q int, <cols>, dist2 double); and
+    ``prefiltered``, whether the native prefilter cut the probe, so only
+    then may the round take the driver venue (:func:`_collect_round`)."""
+
+    probe: DataFrame
+    kernel: Callable
+    schema: T.StructType
+    prefiltered: bool = False
+
+    def frame(self) -> DataFrame:
+        """The executor venue: ONE map-only ``mapInArrow`` node of the
+        kernel over the probe.  No exchange, so reading it is one Spark
+        job returning at most P x |slots| x k rows (P: the probe's
+        partitions)."""
+        return self.probe.mapInArrow(self.kernel, self.schema)
+
+
+def _plan_round(
+    src: DataFrame, coverings, r2, score, *, prefiltered=False, cell_col, geom, cols, **spec
+) -> Round:
+    """One round of :func:`round_kernel` over ``src`` (the probe table,
+    already prefiltered, with its ``geom`` scorer columns; or, with
+    ``coverings`` None, the whole brute table; ``prefiltered`` says which
+    of them ``src`` is).  Nothing runs yet: :func:`_collect_round` picks
+    the venue.  ``spec`` is the kernel's ``k``, ``tie``, ``key`` and
+    ``two_way``."""
     kernel = round_kernel(coverings, r2, score, cell_col=cell_col, geom=geom, cols=cols, **spec)
     schema = T.StructType(
         [
@@ -435,7 +493,34 @@ def _round_frame(
         ]
     )
     read = [*geom, *cols] if coverings is None else [cell_col, *geom, *cols]
-    return src.select(*dict.fromkeys(read)).mapInArrow(kernel, schema)
+    return Round(src.select(*dict.fromkeys(read)), kernel, schema, prefiltered)
+
+
+def _collect_round(rnd: Round) -> tuple[pa.Table, str, int | None]:
+    """One round's top-k rows, from one of the two venues of its kernel,
+    with the venue taken and the probe rows it was chosen by.
+
+    A prefiltered round (its probe cut by the native coarse-prefix filter)
+    first reads its probe in one bounded JVM-only job,
+    ``probe.limit(_DRIVER_ROUND_ROWS + 1).toArrow()``.  At most
+    ``_DRIVER_ROUND_ROWS`` rows: the driver runs the kernel over those
+    batches ("driver"), as one partition holding the whole probe, and no
+    Python task starts.  More: the round runs :meth:`Round.frame`
+    ("executors").  Any other round — the brute round, or a covered round
+    over an unstored cell column, whose probe is the whole table and
+    whose read could re-run a cell UDF — takes the executors at once and
+    measures no probe (None).  Either venue's rows reduce to the same
+    :func:`topk_rows`, since the per-partition cut is exact."""
+    if not rnd.prefiltered:
+        return rnd.frame().toArrow(), "executors", None
+    rows = rnd.probe.limit(_DRIVER_ROUND_ROWS + 1).toArrow()
+    if rows.num_rows > _DRIVER_ROUND_ROWS:
+        return rnd.frame().toArrow(), "executors", rows.num_rows
+    # the schema toArrow() gives the executor venue's rows
+    schema = to_arrow_schema(rnd.schema)
+    out = list(rnd.kernel(rows.to_batches()))
+    table = pa.Table.from_batches(out).cast(schema) if out else schema.empty_table()
+    return table, "driver", rows.num_rows
 
 
 def _edge_search(
@@ -453,14 +538,14 @@ def _edge_search(
     ``geom`` maps query id -> target geometry, ``scorer`` builds the numpy
     ``score(q, ax..bz)`` over ``list(geom.values())`` (edgepair).
 
-    ``candidates`` plans one round as the persisted index, the native
-    coarse-prefix filter (``ecell`` is a stored column, so the InSet never
-    re-runs a kernel), the SQL endpoint xyz and ONE ``mapInArrow`` node
-    (:func:`_round_frame`) that matches, scores, cuts, keeps each
-    (query, key)'s minimum and cuts each partition to its top-k: no
-    exchange, no window.  The brute round is the same node over
-    ``edges``, the unregistered table (``brute_df``): the index would
-    offer an edge once per registered cell."""
+    ``candidates`` plans one round (:func:`_plan_round`) as the persisted
+    index, the native coarse-prefix filter (``ecell`` is a stored column,
+    so the InSet never re-runs a kernel), the SQL endpoint xyz and ONE
+    kernel that matches, scores, cuts, keeps each (query, key)'s minimum
+    and cuts its input to the top-k: no exchange, no window.  The brute
+    round is the same kernel over ``edges``, the unregistered table
+    (``brute_df``): the index would offer an edge once per registered
+    cell."""
     ids = list(geom)
     score = scorer(list(geom.values()))
     cols = cols or [c for c in registered.columns if c != "ecell"]
@@ -468,15 +553,16 @@ def _edge_search(
     def candidates(coverings, qrows, **spec):
         # each slot's index into the scorer's geometry
         target = np.array([row[1] for row in qrows], dtype=np.int64)
-        src = edges
+        src, cond = edges, None
         if coverings is not None:
             cond = coarse_prefix_filter(coverings, "ecell", two_way=True)
             src = registered if cond is None else registered.filter(cond)
-        return _round_frame(
+        return _plan_round(
             _with_edge_xyz(src),
             coverings,
             [row[-1] for row in qrows],
             lambda slot, *edge: score(target[slot], *edge),
+            prefiltered=cond is not None,
             cell_col="ecell",
             geom=_EDGE_XYZ,
             cols=cols,
@@ -567,6 +653,9 @@ def knn_join(
             .drop("region_id")
             .localCheckpoint(eager=True)
         )
+        # its cell column is materialized with it: the rounds keep their
+        # coarse-prefix prefilter (see candidates)
+        points_df._s2_cell_stored = True
 
     geo = {qid: (lat, lng) for qid, lat, lng in queries}
     xyz = {qid: queries_xyz.get(qid) or _xyz(lat, lng) for qid, (lat, lng) in geo.items()}
@@ -619,17 +708,16 @@ def knn_join(
             dz = pz - qxyz[slot, 2]
             return dx * dx + dy * dy + dz * dz
 
-        src = points_df
+        src, cond = points_df, None
         if coverings is not None and getattr(points_df, "_s2_cell_stored", False):
             cond = coarse_prefix_filter(coverings, cell_col)
             src = src if cond is None else src.filter(cond)
-        xyz = edgedist.xyz_columns(lat_col, lng_col)
-        pxyz = [c.alias(n) for c, n in zip(xyz, _POINT_XYZ)]
-        return _round_frame(
-            src.select("*", *pxyz),
+        return _plan_round(
+            src.selectExpr("*", *edgedist.xyz_exprs(f"`{lat_col}`", f"`{lng_col}`", "_p")),
             coverings,
             [row[-1] for row in qrows],
             chord2,
+            prefiltered=cond is not None,
             cell_col=cell_col,
             geom=_POINT_XYZ,
             cols=points_df.columns,
@@ -888,9 +976,10 @@ def knn_edges_join(
     * scoring is the closed-form point-to-edge chord^2 (functions.edgedist),
       evaluated by its bit-identical numpy twin inside the same Arrow
       kernel as the covering match, which also keeps each (query, edge)'s
-      one row and each partition's top-k: a ring round is one Spark job
-      with no exchange, and the driver reads at most P x |pending| x k
-      rows of it, P the index's partitions (see _edge_search).
+      one row and the top-k: a ring round runs it on the driver over a
+      small probe, or as one Spark job with no exchange, of which the
+      driver reads at most P x |pending| x k rows, P the index's
+      partitions (see _edge_search and _collect_round).
 
     Options parity with the reference (s2closest_edge_query.d:199-272):
     ``max_distance_deg`` bounds results to that distance (within-distance

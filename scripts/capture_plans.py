@@ -111,6 +111,63 @@ SECTIONS = [
     ),
 ]
 
+# queries whose first ring round is captured in both venues: the bounded
+# probe read of the driver venue and the executor venue's mapInArrow job
+ROUND_SECTIONS = [
+    (
+        "knn_join",
+        "the persisted points, the native coarse-prefix InSet over the "
+        "stored cell column and the SQL point xyz",
+    ),
+    (
+        "knn_edges_join",
+        "the persisted registered-edge index, the two-way coarse-prefix "
+        "InSet over ecell and the SQL endpoint xyz",
+    ),
+    (
+        "knn_edge_targets",
+        "edge targets: the same index probe under buffered-segment "
+        "coverings; the last round is the brute round, always on the "
+        "executors",
+    ),
+]
+
+
+def _rounds(entry, spark, name):
+    """The ``knn.Round`` of every round of one evaluation of ``name``."""
+    from s2geometry_d_spark.operators import knn
+
+    rounds = []
+    search = knn._ring_search
+
+    def spy(*args, candidates, **kwargs):
+        def spied(*a, **kw):
+            rounds.append(candidates(*a, **kw))
+            return rounds[-1]
+
+        return search(*args, candidates=spied, **kwargs)
+
+    knn._ring_search = spy
+    try:
+        entry.queries()[name](spark, SF)
+    finally:
+        knn._ring_search = search
+    return rounds
+
+
+def _plan_lines(df, cached_plans: bool = True) -> list[str]:
+    """The executed plan's lines, clipped (plans embed full literal
+    lists); without ``cached_plans``, each InMemoryRelation's own build
+    plan is left out."""
+    lines, cut = [], None
+    for ln in df._jdf.queryExecution().executedPlan().toString().splitlines():
+        depth = len(ln) - len(ln.lstrip(" +-:"))
+        if cut is not None and depth > cut:
+            continue
+        cut = None if cached_plans or "InMemoryRelation" not in ln else depth
+        lines.append(ln[:160])
+    return lines
+
 
 def main() -> None:
     from pyspark.sql import SparkSession
@@ -136,11 +193,34 @@ def main() -> None:
         "",
     ]
     for name, note in SECTIONS:
-        df = qs[name](spark, SF)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        # clip very long lines (plans embed full literal lists)
-        lines = [ln[:160] for ln in plan.splitlines()]
+        lines = _plan_lines(qs[name](spark, SF))
         out += [f"## {name}", f"*{note}*", "", "```", *lines, "```", ""]
+    from s2geometry_d_spark.operators import knn
+
+    bound = knn._DRIVER_ROUND_ROWS
+    for name, note in ROUND_SECTIONS:
+        first = _rounds(entry, spark, name)[0]
+        out += [
+            f"## {name} — ring round 1, both venues",
+            f"*{note}.  Driver venue (a probe of at most {bound:,} rows): "
+            f"one bounded JVM-only read, then the round kernel on the "
+            f"driver.  Executor venue (a larger probe): the same kernel as "
+            f"ONE MapInArrow over the same probe, no exchange.  The cached "
+            f"tables' build plans are left out*",
+            "",
+            "Driver venue, `probe.limit(_DRIVER_ROUND_ROWS + 1)`:",
+            "",
+            "```",
+            *_plan_lines(first.probe.limit(bound + 1), cached_plans=False),
+            "```",
+            "",
+            "Executor venue, `Round.frame()`:",
+            "",
+            "```",
+            *_plan_lines(first.frame(), cached_plans=False),
+            "```",
+            "",
+        ]
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(repo, "docs", "PLANS.md"), "w") as f:
         f.write("\n".join(out))

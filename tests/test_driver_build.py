@@ -13,6 +13,7 @@ import gc
 
 import pytest
 from py4j import clientserver
+from py4j import protocol as proto
 
 from conftest import SF_DIR
 from s2geometry_d_spark.operators import knn as knn_ops
@@ -123,15 +124,32 @@ def test_knn_join_second_evaluation_runs_no_coverer(spark, coverer_calls):
     assert second == first
 
 
+# the answer types of a py4j command that hand Python a new proxy
+_PROXY_TYPES = tuple(
+    proto.REFERENCE_TYPE + proto.LIST_TYPE + proto.SET_TYPE
+    + proto.ARRAY_TYPE + proto.MAP_TYPE + proto.ITERATOR_TYPE
+)
+_RELEASE = proto.MEMORY_COMMAND_NAME + proto.MEMORY_DEL_SUBCOMMAND_NAME
+
+
 def _py4j_commands(build) -> int:
-    """The py4j commands sent while ``build()`` runs (cyclic garbage
-    collected first and held off, so no proxy release lands inside)."""
+    """The py4j commands sent while ``build()`` runs.  Cyclic garbage is
+    collected first and held off; a proxy release (``m d``) counts only
+    for a proxy one of the build's own commands returned, so a refcount
+    drop of an earlier proxy that lands inside the build is not its."""
     sent = [0]
+    made = set()
     send = clientserver.ClientServerConnection.send_command
 
-    def counted(self, *args, **kwargs):
-        sent[0] += 1
-        return send(self, *args, **kwargs)
+    def counted(self, command, *args, **kwargs):
+        answer = send(self, command, *args, **kwargs)
+        if command.startswith(_RELEASE):
+            sent[0] += command[len(_RELEASE):].split("\n", 1)[0] in made
+        else:
+            sent[0] += 1
+            if answer[:1] == proto.SUCCESS and answer[1:2] in _PROXY_TYPES:
+                made.add(answer[2:])
+        return answer
 
     gc.collect()
     gc.disable()
@@ -144,12 +162,20 @@ def _py4j_commands(build) -> int:
     return sent[0]
 
 
-# py4j commands of one warmed build, measured on local[2] at sf0.001:
-# pip_cap_join 93 (its native candidate join memoizes the covering-cell
-# frame; 171 through the Arrow kernel, over 800 built from Columns),
+# py4j commands of one warmed build, measured on local[2] and local[8] at
+# sf0.001 (8 builds each, counts within +4): pip_cap_join 90 (its native
+# candidate join memoizes the covering-cell frame; 171 through the Arrow
+# kernel, over 800 built from Columns),
 # tile_assignment 167 (over 1,300 built from Columns), within_distance_join
-# 133 (401 with its dist2 built from Columns and a match UDF made per build)
-_PY4J_BUDGET = {"pip_cap_join": 110, "tile_assignment": 250, "within_distance_join": 150}
+# 133 (401 with its dist2 built from Columns and a match UDF made per build),
+# knn_join 106, its whole ring search (190 with the probe xyz built from
+# Columns and each round read through its mapInArrow job)
+_PY4J_BUDGET = {
+    "pip_cap_join": 110,
+    "tile_assignment": 250,
+    "within_distance_join": 150,
+    "knn_join": 125,
+}
 
 
 @pytest.mark.parametrize("query", list(_PY4J_BUDGET))

@@ -153,7 +153,7 @@ def _kernel_dist2(spark, a, b, score):
     for name, col in {**_named(_A, a), **_named(_B, b)}.items():
         pdf[name] = col
     out = (
-        knn._round_frame(
+        knn._plan_round(
             spark.createDataFrame(pdf).repartition(3),
             coverings,
             np.full(n, np.inf),
@@ -165,6 +165,7 @@ def _kernel_dist2(spark, a, b, score):
             tie="row",
             two_way=True,
         )
+        .frame()
         .toPandas()
         .sort_values("row")
     )

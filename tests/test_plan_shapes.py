@@ -355,14 +355,15 @@ def _operators(df) -> list[tuple[str, list[str]]]:
 def test_knn_edge_round_is_one_fused_kernel_below_one_exchange(
     spark, entrymod, monkeypatch, query
 ):
-    """One ring round is one map-only job: the covering match, the numpy
-    scorer, the r2 cut, the per-key reduction and the per-partition top-k
-    run as ONE MapInArrow over the prefiltered persisted table, with no
-    Exchange, Window or broadcast join anywhere in the round's plan (the
-    driver reduces the partitions' rows itself).  No separate match or
-    point_edge_dist2 stage remains, nor the SQL fragment (CASE WHEN nn >
-    1e-60 ...) whose chained intermediates cost seconds of Catalyst
-    optimization per round."""
+    """The executor venue of a ring round (a probe above
+    ``knn._DRIVER_ROUND_ROWS`` rows) is one map-only job: the covering
+    match, the numpy scorer, the r2 cut, the per-key reduction and the
+    per-partition top-k run as ONE MapInArrow over the prefiltered
+    persisted table, with no Exchange, Window or broadcast join anywhere
+    in the round's plan (the driver reduces the partitions' rows itself).
+    No separate match or point_edge_dist2 stage remains, nor the SQL
+    fragment (CASE WHEN nn > 1e-60 ...) whose chained intermediates cost
+    seconds of Catalyst optimization per round."""
     from s2geometry_d_spark.operators import knn
 
     rounds = []
@@ -382,8 +383,9 @@ def test_knn_edge_round_is_one_fused_kernel_below_one_exchange(
     entrymod.release_caches(spark)
     entrymod.queries()[query](spark, SF_DIR)
     assert rounds
-    plan = _plan(rounds[0])
-    ops = _operators(rounds[0])
+    frame = rounds[0].frame()
+    plan = _plan(frame)
+    ops = _operators(frame)
     kernels = [(op, up) for op, up in ops if op.startswith("MapInArrow")]
     assert len(kernels) == 1 and kernels[0][0].startswith("MapInArrow ring_round("), plan
     for name in ("EvalPython", "Exchange", "Window", "BroadcastHashJoin", "SortMergeJoin"):
@@ -398,11 +400,11 @@ def test_knn_edge_round_is_one_fused_kernel_below_one_exchange(
 
 
 def test_knn_brute_round_is_one_kernel_without_cross_join(spark, entrymod, monkeypatch):
-    """The brute round is one more round of the same kernel: ONE
-    MapInArrow ``ring_round`` over the whole edge table, every row a
-    candidate, and no cross or nested-loop join, window, exchange or
-    Python UDF.  ``knn_cell_targets`` takes it: its straggler cutover
-    fires at this scale."""
+    """The brute round is one more round of the same kernel, and always
+    takes the executor venue: ONE MapInArrow ``ring_round`` over the
+    whole edge table, every row a candidate, and no cross or nested-loop
+    join, window, exchange or Python UDF.  ``knn_cell_targets`` takes it:
+    its straggler cutover fires at this scale."""
     from s2geometry_d_spark.operators import knn
 
     rounds = []
@@ -418,7 +420,7 @@ def test_knn_brute_round_is_one_kernel_without_cross_join(spark, entrymod, monke
     monkeypatch.setattr(knn, "_ring_search", spy)
     entrymod.release_caches(spark)
     entrymod.queries()["knn_cell_targets"](spark, SF_DIR)
-    brute = [frame for coverings, frame in rounds if coverings is None]
+    brute = [rnd.frame() for coverings, rnd in rounds if coverings is None]
     assert len(brute) == 1 and rounds[-1][0] is None
     plan = _plan(brute[0])
     ops = _operators(brute[0])
@@ -428,6 +430,53 @@ def test_knn_brute_round_is_one_kernel_without_cross_join(spark, entrymod, monke
         "CartesianProduct", "BroadcastNestedLoopJoin", "Window", "Exchange", "EvalPython"
     ):
         assert not any(name in op for op, _ in ops), plan
+
+
+@pytest.mark.parametrize(
+    "query", ["knn_edges_join", "knn_edge_targets", "knn_join", "knn_region"]
+)
+def test_knn_driver_round_reads_a_native_probe(spark, entrymod, monkeypatch, query):
+    """The driver venue of a covered ring round: the round reads its probe
+    in one bounded job (CollectLimit of ``_DRIVER_ROUND_ROWS`` + 1 rows)
+    that keeps the native coarse-prefix filter over the stored table and
+    runs no Python node, and the kernel runs on the driver.  The stored
+    table is the persisted index or points (InMemoryTableScan), or for
+    ``knn_region`` the checkpointed in-region subset, whose cell column
+    is stored with it (its short covering lists give ``IN``, not
+    ``INSET``)."""
+    from s2geometry_d_spark.operators import knn
+
+    rounds = []
+    search = knn._ring_search
+
+    def spy(*args, candidates, **kwargs):
+        def spied(*a, **kw):
+            rounds.append(candidates(*a, **kw))
+            return rounds[-1]
+
+        res = search(*args, candidates=spied, **kwargs)
+        rounds.append(res._s2_ring)
+        return res
+
+    monkeypatch.setattr(knn, "_ring_search", spy)
+    entrymod.release_caches(spark)
+    entrymod.queries()[query](spark, SF_DIR)
+    record = rounds[-1]
+    assert record["venues"][0] == "driver", record
+    assert 0 < record["probe_rows"][0] <= knn._DRIVER_ROUND_ROWS, record
+    probe = rounds[0].probe.limit(knn._DRIVER_ROUND_ROWS + 1)
+    plan = _plan(probe)
+    ops = [op for op, _ in _operators(probe)]
+    assert ops[0] == f"CollectLimit {knn._DRIVER_ROUND_ROWS + 1}", plan
+    for name in ("MapInArrow", "ArrowEvalPython", "EvalPython", "Exchange", "Join"):
+        assert not any(name in op for op in ops), plan
+    prefilter = [i for i, op in enumerate(ops) if op.startswith("Filter")]
+    assert len(prefilter) == 1, plan
+    assert ("INSET" in ops[prefilter[0]]) == (query != "knn_region"), plan
+    assert " IN (" in ops[prefilter[0]] or "INSET" in ops[prefilter[0]], plan
+    scan = "Scan ExistingRDD" if query == "knn_region" else "InMemoryTableScan"
+    # the filter sits directly on the scan
+    assert len(ops) == prefilter[0] + 2 and ops[-1].startswith(scan), plan
 
 
 def test_knn_table_round_is_two_kernels_around_one_exchange(spark, entrymod, monkeypatch):

@@ -6,13 +6,15 @@ join, a (query, edge) dedup or per-polyline min, and a ``row_number``
 window per query; the brute probe was a cross join with the same window.
 Now every round, the brute round included, is one ``mapInArrow`` pass
 that keeps each partition's top-k, reduced again on the driver by the same
-``knn.topk_rows``.  Each test below rebuilds the old window round in
-Spark, with the engine's SQL distance fragments as its scorers, for the
-exact coverings and acceptance radii of the new round (or the whole brute
-table and the distance limit) and asserts the same rows, ranks and
-``dist2`` bits, for all five ring-search variants, and for the round of
-the table-to-table join, whose second reduce runs after an exchange by
-query id instead of on the driver.
+``knn.topk_rows``; a covered round whose probe is small enough runs the
+same kernel on the driver instead, over the probe's rows, and ranks the
+same rows as its ``mapInArrow`` pass.  Each test below rebuilds the old
+window round in Spark, with the engine's SQL distance fragments as its
+scorers, for the exact coverings and acceptance radii of the new round
+(or the whole brute table and the distance limit) and asserts the same
+rows, ranks and ``dist2`` bits, for all five ring-search variants, and
+for the round of the table-to-table join, whose second reduce runs after
+an exchange by query id instead of on the driver.
 """
 
 import numpy as np
@@ -166,15 +168,15 @@ def _normal(rows, cols, tie):
 
 def _spied_rounds(monkeypatch):
     """Captures every round of every ring search: its hooks, coverings,
-    query rows, round frame and collected table."""
+    query rows and planned round (``knn.Round``)."""
     rounds = []
     search = knn._ring_search
 
     def spy(*args, candidates, **hooks):
         def spied(coverings, qrows, **spec):
-            frame = candidates(coverings, qrows, **spec)
-            rounds.append(dict(hooks, coverings=coverings, qrows=qrows, frame=frame))
-            return frame
+            rnd = candidates(coverings, qrows, **spec)
+            rounds.append(dict(hooks, coverings=coverings, qrows=qrows, round=rnd))
+            return rnd
 
         res = search(*args, candidates=spied, **hooks)
         for r in rounds:
@@ -242,24 +244,39 @@ def test_round_matches_window_round(spark, monkeypatch, variant):
     assert rounds[0]["record"]["brute"][-1] in {"far", "tfar", "cfar"}
     repeats = 0
     collected = []
-    for r in rounds:
-        raw = r["frame"].toArrow()
-        collected.append(raw.num_rows)
-        # the round's one collect: at most P x pending x k rows
-        parts = r["frame"].rdd.getNumPartitions()
+    venues = rounds[0]["record"]["venues"]
+    for r, venue in zip(rounds, venues):
+        slots = [row[0] for row in r["qrows"]]
+
+        def ranked(table):
+            # (query_id, <cols>, rank) of the round's driver-side reduce
+            best = knn.topk_rows(table, K, r["tie_col"], r.get("key"))
+            slot = best.column("q").to_numpy()
+            rank = np.arange(slot.size) - np.searchsorted(slot, slot) + 1
+            return list(
+                zip([slots[s] for s in slot],
+                    *(best.column(c).to_pylist() for c in best.column_names[1:]),
+                    rank.tolist())
+            )
+
+        # the executor venue: at most P x pending x k rows
+        frame = r["round"].frame()
+        raw = frame.toArrow()
+        parts = frame.rdd.getNumPartitions()
         assert raw.num_rows <= parts * len(r["qrows"]) * K
         if r.get("key") is not None:
             pairs = list(zip(raw.column("q").to_pylist(), raw.column(r["key"]).to_pylist()))
             repeats += len(pairs) - len(set(pairs))
-        best = knn.topk_rows(raw, K, r["tie_col"], r.get("key"))
-        slot = best.column("q").to_numpy()
-        rank = np.arange(slot.size) - np.searchsorted(slot, slot) + 1
-        slots = [row[0] for row in r["qrows"]]
-        cols = ["query_id", *best.column_names[1:], "rank"]
-        new = list(
-            zip([slots[s] for s in slot], *(best.column(c).to_pylist() for c in cols[1:-1]),
-                rank.tolist())
-        )
+        cols = ["query_id", *raw.column_names[1:], "rank"]
+        new = ranked(raw)
+        collected.append(raw.num_rows)
+        if venue == "driver":
+            # the probe's one partition: at most pending x k rows, which
+            # rank as the executor venue's do
+            table, _, probed = knn._collect_round(r["round"])
+            assert probed <= knn._DRIVER_ROUND_ROWS and table.num_rows <= len(slots) * K
+            assert _normal(ranked(table), cols, r["tie_col"]) == _normal(new, cols, r["tie_col"])
+            collected[-1] = table.num_rows
         old_df = _window_round(probe, brute, cell_col, two_way, r, variant, limit, K)
         old = [tuple(row[c] for c in cols) for row in old_df.collect()]
         assert _normal(new, cols, r["tie_col"]) == _normal(old, cols, r["tie_col"])
@@ -270,7 +287,10 @@ def test_round_matches_window_round(spark, monkeypatch, variant):
             # the brute round finds the far query's rows, unless the
             # distance limit cuts them all
             assert (slots[-1] in {row[0] for row in new}) == (limit is None)
-    # the decision record lists each round's collected rows
+    # the decision record lists each round's venue and the rows it
+    # returned to the driver merge; at this size every covered round
+    # scores on the driver, and the brute round on the executors
+    assert venues == ["driver"] * (len(rounds) - 1) + ["executors"]
     assert rounds[0]["record"]["round_rows"] == collected
     assert rounds[0]["record"]["rounds"] == len(rounds) - 1
     if variant == "edges":
